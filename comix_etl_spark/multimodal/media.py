@@ -461,7 +461,7 @@ def audio_energy_fingerprint(df: DataFrame, *, id_col: str = "media_id",
     f in 0..62 — invariant under any positive gain, the same
     sign-of-delta construction as ``image_dhash`` so the SAME banded
     Hamming machinery downstream (``operators.dedup.hamming_fp_dedup``
-    / ``image_near_dup_pairs`` / ``image_probe_pairs``) pairs audio.
+    / ``hamming_band_pairs`` / ``hamming_band_probe``) pairs audio.
 
     Output: (media_id, afp, sample_rate, n_samples) — afp NULL for
     undecodable payloads. NULL ids are dropped before the decode stage

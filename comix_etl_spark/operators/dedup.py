@@ -815,51 +815,6 @@ def url_dedup(df: DataFrame, *, url_col: str, id_col: str,
     return keepers.drop("_q")
 
 
-def image_near_dup_pairs(fp: DataFrame, *, id_col: str = "media_id",
-                         fp_col: str = "dhash", max_hamming: int = 2,
-                         n_bands: int | None = None) -> DataFrame:
-    """Near-duplicate image pairs by banded Hamming LSH over 63-bit
-    perceptual fingerprints (``multimodal.media.image_dhash``) — the
-    LAION-style image-dedup pairing stage.
-
-    The 63 fingerprint bits split into ``n_bands`` contiguous bands
-    (floor(63/n) bits each, the final band taking the remainder); two
-    images become a CANDIDATE iff at least one band is bit-identical,
-    and a candidate is emitted iff ``bit_count(xor) <= max_hamming``.
-    Pigeonhole recall guarantee: d flipped bits touch at most d bands,
-    so every pair within Hamming ``n_bands - 1`` shares an intact band
-    — banding loses NOTHING vs all-pairs for the verified threshold,
-    it only prunes the candidate set. Keep ``max_hamming < n_bands``
-    to preserve the guarantee.
-
-    BAND-COUNT SIZING (measured r9, PLANS.md): the default is the
-    MINIMUM ``max_hamming + 1`` bands, which is also the scale-optimal
-    choice. Extra bands only add recall BEYOND the verified threshold
-    (wasted — verification drops those pairs anyway) while shrinking
-    each band's value space exponentially: at 7 bands a band is 9 bits
-    = 512 values, so a 1M-image corpus stuffs ~2000 fingerprints into
-    EVERY bucket and the candidate join goes quadratic (~7e9 pairs —
-    measured as a killed >18 min run); at the default 3 bands a band
-    is 21 bits = 2M values and buckets hold only true near-dup
-    clusters plus ~corpus/2^21 stragglers. General rule: need
-    ``2^(63/n_bands) >> corpus_size / n_bands``.
-
-    Output: (id_a < id_b, hamming) — verified pairs only.
-
-    100 TB shape: fingerprints are 8-byte ints, so the band explode is
-    ``n_bands`` slim rows per image; one shuffle keys candidates by
-    (band, band-value) — near-dup clusters collide, everything else
-    spreads — and verification is a JVM xor+popcount on the joined
-    rows, never a payload touch. A viral band value (e.g. millions of
-    flat-white thumbnails sharing low-gradient bands) degrades to that
-    bucket's pair count; mitigate upstream by quarantining degenerate
-    fingerprints (all-zero/all-one gradients) before pairing, exactly
-    as NULL (undecodable) fingerprints are dropped here.
-    """
-    return hamming_band_pairs(fp, id_col=id_col, fp_cols=[fp_col],
-                              max_hamming=max_hamming, n_bands=n_bands)
-
-
 def _limb_band_val(fp_cols: list[str], lo: int, hi: int,
                    col_of=F.col) -> Column:
     """Band value for concatenated bit range [lo, hi) over 63-bit
@@ -890,81 +845,113 @@ def _band_edges(total_bits: int, n_bands: int) -> list[tuple[int, int]]:
 def hamming_band_pairs(fp: DataFrame, *, id_col: str = "media_id",
                        fp_cols: list[str], max_hamming: int = 2,
                        n_bands: int | None = None) -> DataFrame:
-    """Banded Hamming LSH over a fingerprint of one OR MORE 63-bit
-    BIGINT limbs, banded over the CONCATENATED bit space — the shared
-    pairing core behind ``image_near_dup_pairs`` (one limb, 63 bits)
-    and the wide 126-bit path (``multimodal.media.image_dhash_wide``
-    limbs ``(dhash_h, dhash_v)``).
+    """Near-duplicate pairs by banded Hamming LSH over a fingerprint of
+    one OR MORE 63-bit BIGINT limbs (``multimodal.media.image_dhash``:
+    one limb; ``image_dhash_wide``: ``(dhash_h, dhash_v)``), banded over
+    the CONCATENATED bit space — the LAION-style image-dedup pairing
+    stage. Output: (id_a < id_b, hamming) — verified pairs only.
 
-    Semantics are all-pairs ``sum_k bit_count(xor(limb_k))`` ≤
-    ``max_hamming`` with the same pigeonhole recall guarantee as the
-    single-limb form: d flipped bits in the concatenated space touch
-    at most d of the ``n_bands`` contiguous bands, so every qualifying
-    pair shares an intact band. Keep ``max_hamming < n_bands``.
+    The bits split into ``n_bands`` contiguous bands (floor(bits/n)
+    each, the final band taking the remainder); two items become a
+    CANDIDATE iff at least one band is bit-identical, and a candidate
+    is emitted iff ``sum_k bit_count(xor(limb_k)) <= max_hamming``.
+    Pigeonhole recall guarantee: d flipped bits touch at most d bands,
+    so every pair within Hamming ``n_bands - 1`` shares an intact band
+    — banding loses NOTHING vs all-pairs for the verified threshold,
+    it only prunes the candidate set. ``max_hamming >= n_bands``
+    raises.
+
+    BAND-COUNT SIZING (measured r9, PLANS.md): the default is the
+    MINIMUM ``max_hamming + 1`` bands, which is also the scale-optimal
+    choice. Extra bands only add recall BEYOND the verified threshold
+    (wasted — verification drops those pairs anyway) while shrinking
+    each band's value space exponentially: at 7 bands a 63-bit band is
+    9 bits = 512 values, so a 1M-image corpus stuffs ~2000 fingerprints
+    into EVERY bucket and the candidate join goes quadratic (~7e9
+    pairs — measured as a killed >18 min run); at the default 3 bands
+    a band is 21 bits = 2M values and buckets hold only true near-dup
+    clusters plus ~corpus/2^21 stragglers. General rule: need
+    ``2^(bits/n_bands) >> corpus_size / n_bands``.
 
     WHY WIDE LIMBS SCALE (the r9 ceiling and its remedy, PLANS.md):
-    the accidental-candidate term of banded LSH is
-    ~``n_bands * n² / 2^band_width``. At 63 bits and the minimal 3
-    bands, band_width = 21 ⇒ the term passes the true-pair volume near
-    ~10M items. At 126 bits and 5 bands (the minimal banding for the
-    equal-RATE threshold max_hamming=4), band_width = 25 and — more
-    importantly — the same n² hits a value space that can grow with
-    the bit budget: each added limb adds 63 bits ⇒ band_width grows
-    ~63/n_bands per limb, dividing accidental candidates by ~2^(63/n).
-    Same machinery, same shuffle shape: n_bands slim (id, limbs, band,
-    bv) rows per item, one shuffle on (band, bv), JVM xor+popcount
-    verification.
+    the accidental-candidate term is ~``n_bands * n² / 2^band_width``;
+    each added limb adds 63 bits, so band_width grows ~63/n_bands per
+    limb and divides accidental candidates by ~2^(63/n). A band never
+    exceeds 63 bits (its value must fit a non-negative BIGINT join
+    key), which bounds ``n_limbs ≤ n_bands`` in practice; the minimal
+    banding satisfies it for any ``max_hamming ≥ n_limbs - 1``.
 
-    A band never exceeds 63 bits (raise otherwise — its value must fit
-    a non-negative BIGINT join key), which bounds ``n_limbs ≤ n_bands``
-    in practice; the minimal ``max_hamming + 1`` banding satisfies it
-    for any ``max_hamming ≥ n_limbs - 1``.
+    100 TB shape: ``n_bands`` slim (id, limbs, band, bv) rows per item
+    (``fingerprint_band_rows``), one shuffle keyed by (band, bv) —
+    near-dup clusters collide, everything else spreads — and a JVM
+    xor+popcount verify on the joined rows, never a payload touch. A
+    viral band value (e.g. flat-white thumbnails sharing low-gradient
+    bands) degrades to that bucket's pair count; quarantine degenerate
+    fingerprints upstream, as NULL (undecodable) ones are dropped here.
     """
-    n_limbs = len(fp_cols)
-    total = 63 * n_limbs
     if n_bands is None:
         n_bands = max_hamming + 1
-    if not 1 <= n_bands <= total:
-        raise ValueError(f"n_bands must be in [1, {total}], got {n_bands}")
+    rows = fingerprint_band_rows(fp, id_col=id_col, fp_cols=fp_cols,
+                                 n_bands=n_bands)
+    return _band_self_pairs(rows, id_col=id_col, fp_cols=fp_cols,
+                            n_bands=n_bands, max_hamming=max_hamming)
+
+
+def _band_side(rows: DataFrame, id_col: str, fp_cols: list[str],
+               out_id: str, pref: str) -> DataFrame:
+    """One join side over band rows: the id and limbs renamed apart so
+    both sides can share the (band, bv) key."""
+    return rows.select(F.col(id_col).alias(out_id),
+                       *[F.col(c).alias(f"{pref}{k}")
+                         for k, c in enumerate(fp_cols)], "band", "bv")
+
+
+def _verified(cand: DataFrame, ids: tuple[str, str], prefs: tuple[str, str],
+              n_limbs: int, n_bands: int, max_hamming: int) -> DataFrame:
+    """The Hamming verify both band joins share: summed per-limb
+    xor-popcount <= ``max_hamming``, under the pigeonhole precondition
+    that makes the banded candidates complete."""
     if max_hamming >= n_bands:
         raise ValueError(
             f"max_hamming={max_hamming} >= n_bands={n_bands} voids the "
-            "pigeonhole recall guarantee; raise n_bands")
-    edges = _band_edges(total, n_bands)
-    if max(hi - lo for lo, hi in edges) > 63:
-        raise ValueError(
-            f"{n_bands} bands over {total} bits makes a band wider than "
-            "63 bits (band values must fit a BIGINT); raise n_bands")
-    notnull = F.col(fp_cols[0]).isNotNull()
-    for c in fp_cols[1:]:
-        notnull = notnull & F.col(c).isNotNull()
-    f = fp.filter(notnull).select(
-        F.col(id_col).alias("_id"),
-        *[F.col(c).alias(f"_fp{k}") for k, c in enumerate(fp_cols)])
-    limbs = [f"_fp{k}" for k in range(n_limbs)]
+            "pigeonhole recall guarantee; raise n_bands (for a store: "
+            "rebuild it with more bands) or lower max_hamming")
+    a, b = prefs
+    ham = F.bit_count(F.col(f"{a}0").bitwiseXOR(F.col(f"{b}0")))
+    for k in range(1, n_limbs):
+        ham = ham + F.bit_count(F.col(f"{a}{k}").bitwiseXOR(F.col(f"{b}{k}")))
+    return (cand.withColumn("hamming", ham.cast("long"))
+            .filter(F.col("hamming") <= max_hamming)
+            .select(*ids, "hamming"))
 
-    bands = f.select(
-        "_id", *limbs,
-        F.explode(F.array(*[
-            F.struct(F.lit(bi).alias("band"),
-                     _limb_band_val(limbs, lo, hi).alias("bv"))
-            for bi, (lo, hi) in enumerate(edges)])).alias("bb")
-    ).select("_id", *limbs, "bb.band", "bb.bv")
-    a = bands.select(F.col("_id").alias("id_a"),
-                     *[F.col(l).alias(f"_fa{k}")
-                       for k, l in enumerate(limbs)], "band", "bv")
-    b = bands.select(F.col("_id").alias("id_b"),
-                     *[F.col(l).alias(f"_fb{k}")
-                       for k, l in enumerate(limbs)], "band", "bv")
+
+def _band_self_pairs(rows: DataFrame, *, id_col: str, fp_cols: list[str],
+                     n_bands: int, max_hamming: int) -> DataFrame:
+    """Verified (id_a < id_b, hamming) pairs from ONE frame of band
+    rows joined to itself on (band, bv). Over a bucketed store both
+    sides read the same bucketed, bucket-sorted layout, so the join
+    runs with zero Exchange."""
+    a = _band_side(rows, id_col, fp_cols, "id_a", "_fa")
+    b = _band_side(rows, id_col, fp_cols, "id_b", "_fb")
     cand = (a.join(b, ["band", "bv"])
             .filter(F.col("id_a") < F.col("id_b"))
             .dropDuplicates(["id_a", "id_b"]))
-    ham = F.bit_count(F.col("_fa0").bitwiseXOR(F.col("_fb0")))
-    for k in range(1, n_limbs):
-        ham = ham + F.bit_count(F.col(f"_fa{k}").bitwiseXOR(F.col(f"_fb{k}")))
-    return (cand.withColumn("hamming", ham.cast("long"))
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming"))
+    return _verified(cand, ("id_a", "id_b"), ("_fa", "_fb"), len(fp_cols),
+                     n_bands, max_hamming)
+
+
+def _band_cross_probe(corpus_rows: DataFrame, probe_rows: DataFrame, *,
+                      id_col: str, fp_cols: list[str], n_bands: int,
+                      max_hamming: int) -> DataFrame:
+    """Verified (corpus_id, probe_id, hamming) matches between two
+    frames of band rows: the probe side broadcasts, so the corpus side
+    is one scan with zero shuffle and never self-joins."""
+    c = _band_side(corpus_rows, id_col, fp_cols, "corpus_id", "_fc")
+    p = _band_side(probe_rows, id_col, fp_cols, "probe_id", "_fp")
+    cand = (c.join(F.broadcast(p), ["band", "bv"])
+            .dropDuplicates(["corpus_id", "probe_id"]))
+    return _verified(cand, ("corpus_id", "probe_id"), ("_fc", "_fp"),
+                     len(fp_cols), n_bands, max_hamming)
 
 
 def image_dedup(df: DataFrame, *, id_col: str = "media_id",
@@ -1025,10 +1012,7 @@ def hamming_fp_dedup(fps: DataFrame, *, fp_col: str | list[str],
     sides), bounded by the corpus's true near-dup volume.
     """
     fp_cols = [fp_col] if isinstance(fp_col, str) else list(fp_col)
-    notnull = F.col(fp_cols[0]).isNotNull()
-    for c in fp_cols[1:]:
-        notnull = notnull & F.col(c).isNotNull()
-    fps = fps.filter(notnull).localCheckpoint(eager=True)
+    fps = fps.filter(_all_limbs_present(fp_cols)).localCheckpoint(eager=True)
     pairs = hamming_band_pairs(fps, fp_cols=fp_cols,
                                max_hamming=max_hamming,
                                n_bands=n_bands).localCheckpoint(eager=True)
@@ -1047,11 +1031,13 @@ def hamming_fp_dedup(fps: DataFrame, *, fp_col: str | list[str],
 
 def fingerprint_band_rows(fps: DataFrame, *, id_col: str = "media_id",
                           fp_cols: list[str], n_bands: int) -> DataFrame:
-    """The persistable banded form of a fingerprint frame: one
-    (id, limbs..., band, bv) row per (item, band) — the exploded rows
-    ``hamming_band_pairs`` joins on, with USER-FACING column names so
-    they can be written to a table and reused across jobs. NULL-limb
-    rows drop (same quarantine as the pairing)."""
+    """The banded form of a fingerprint frame: one (id, limbs..., band,
+    bv) row per (item, band), with USER-FACING column names so they can
+    be written to a table (``persist_fingerprint_store``) and reused
+    across jobs. The ONE place a band layout is built: every pairing
+    and probe, in memory or against a store, joins these rows. Rows
+    with ANY NULL limb drop (undecodable payloads; limbs come from one
+    decode, so partial NULLs only arise from caller bugs)."""
     total = 63 * len(fp_cols)
     if not 1 <= n_bands <= total:
         raise ValueError(f"n_bands must be in [1, {total}], got {n_bands}")
@@ -1060,10 +1046,7 @@ def fingerprint_band_rows(fps: DataFrame, *, id_col: str = "media_id",
         raise ValueError(
             f"{n_bands} bands over {total} bits makes a band wider than "
             "63 bits (band values must fit a BIGINT); raise n_bands")
-    notnull = F.col(fp_cols[0]).isNotNull()
-    for c in fp_cols[1:]:
-        notnull = notnull & F.col(c).isNotNull()
-    return (fps.filter(notnull).select(id_col, *fp_cols)
+    return (fps.filter(_all_limbs_present(fp_cols)).select(id_col, *fp_cols)
             .select(
                 id_col, *fp_cols,
                 F.explode(F.array(*[
@@ -1071,6 +1054,13 @@ def fingerprint_band_rows(fps: DataFrame, *, id_col: str = "media_id",
                              _limb_band_val(fp_cols, lo, hi).alias("bv"))
                     for bi, (lo, hi) in enumerate(edges)])).alias("bb"))
             .select(id_col, *fp_cols, "bb.band", "bb.bv"))
+
+
+def _all_limbs_present(fp_cols: list[str]) -> Column:
+    notnull = F.col(fp_cols[0]).isNotNull()
+    for c in fp_cols[1:]:
+        notnull = notnull & F.col(c).isNotNull()
+    return notnull
 
 
 def persist_fingerprint_store(fps: DataFrame, table: str, *,
@@ -1093,16 +1083,14 @@ def persist_fingerprint_store(fps: DataFrame, table: str, *,
     reads; incremental ingest appends its batch's band rows with the
     same bucketing (``mode="append"`` — pytest-locked to pair
     identically to a one-shot rebuild over old∪new, still with zero
-    Exchange in the pairing join). An append validates its band
-    layout against the store's actual max(band) first: appending
-    rows banded differently would silently break the pigeonhole
-    recall guarantee for every later read. CONTRACT: the store bakes
-    in its band layout — read-side ``max_hamming`` must stay < the
-    ``n_bands`` used here or the pigeonhole recall guarantee is void
-    (the reader validates against the stored band count it
-    observes)."""
-    from comix_etl_spark.sinks.writers import (LAYOUT_UNVERIFIED,
-                                               clear_orphan_table_dir,
+    Exchange in the pairing join). The table is stamped with its band
+    layout (``comix.fp.n_bands`` / ``n_limbs``): an append validates
+    the caller's layout against the stamp first — rows banded
+    differently would silently break the pigeonhole recall guarantee
+    for every later read — and the readers take ``n_bands`` from it,
+    so read-side ``max_hamming`` must stay < the ``n_bands`` used
+    here. A table without the stamp is refused."""
+    from comix_etl_spark.sinks.writers import (clear_orphan_table_dir,
                                                save_bucketed_table,
                                                set_store_props,
                                                validate_store_props)
@@ -1114,25 +1102,15 @@ def persist_fingerprint_store(fps: DataFrame, table: str, *,
     # catalog-less directory refuses (writers.clear_orphan_table_dir)
     clear_orphan_table_dir(spark, table, mode)
     layout = {"n_bands": n_bands, "n_limbs": len(fp_cols)}
-    legacy_append = False
-    if mode == "append" and spark.catalog.tableExists(table):
-        # full-layout validation via table properties (n_limbs matters
-        # too: a different limb count silently changes every band value);
-        # pre-property stores fall back to the band-count check
-        if not validate_store_props(spark, table, "comix.fp", layout,
-                                     "persist_fingerprint_store(append)"):
-            legacy_append = True
-            stored_max = spark.table(table).agg(F.max("band")).first()[0]
-            if stored_max is not None and stored_max + 1 != n_bands:
-                raise ValueError(
-                    f"persist_fingerprint_store: append with "
-                    f"n_bands={n_bands} onto a store banded "
-                    f"{stored_max + 1} ways — mixed band layouts void "
-                    f"the recall guarantee; rebuild or match the "
-                    f"stored layout")
+    appending = mode == "append" and spark.catalog.tableExists(table)
+    if appending:
+        # n_limbs matters too: a different limb count silently changes
+        # every band value
+        validate_store_props(spark, table, "comix.fp", layout,
+                             "persist_fingerprint_store(append)")
     rows = fingerprint_band_rows(fps, id_col=id_col, fp_cols=fp_cols,
                                  n_bands=n_bands)
-    if mode == "append" and spark.catalog.tableExists(table):
+    if appending:
         # crash-window protocol (r14, symmetric with persist_bm25_store):
         # pending before the band-row write, committed only with the
         # final layout re-stamp — a crash between leaves an observable
@@ -1140,17 +1118,8 @@ def persist_fingerprint_store(fps: DataFrame, table: str, *,
         set_store_props(spark, table, "comix.fp", {"state": "pending"})
     save_bucketed_table(rows, table, ["band", "bv"], n_buckets,
                         sort_cols=["band", "bv"], mode=mode)
-    if legacy_append:
-        # the pre-existing rows were never layout-verified (only the
-        # weak band-count check ran) — stamping the CALLER's layout now
-        # would make a possibly mixed-limb store validate as clean
-        # forever; mark it unverified so probes keep the legacy check
-        set_store_props(spark, table, "comix.fp",
-                        {"layout": LAYOUT_UNVERIFIED,
-                         "state": "committed"})
-    else:
-        set_store_props(spark, table, "comix.fp",
-                        {**layout, "state": "committed"})
+    set_store_props(spark, table, "comix.fp",
+                    {**layout, "state": "committed"})
 
 
 def persist_minhash_store(corpus: DataFrame, table: str, *, id_col: str,
@@ -1174,9 +1143,9 @@ def persist_minhash_store(corpus: DataFrame, table: str, *, id_col: str,
     probe relies on, and a bands-only check cannot catch a mismatched
     num_hashes / n / hash_fn — so the FULL layout is stamped as table
     properties (``comix.minhash.*``) at build time and all four
-    parameters are validated on every append and probe."""
-    from comix_etl_spark.sinks.writers import (LAYOUT_UNVERIFIED,
-                                               clear_orphan_table_dir,
+    parameters are validated on every append and probe. A table
+    without the stamp is refused."""
+    from comix_etl_spark.sinks.writers import (clear_orphan_table_dir,
                                                save_bucketed_table,
                                                set_store_props,
                                                validate_store_props)
@@ -1185,28 +1154,17 @@ def persist_minhash_store(corpus: DataFrame, table: str, *, id_col: str,
     clear_orphan_table_dir(spark, table, mode)
     layout = {"num_hashes": num_hashes, "bands": bands, "n": n,
               "hash_fn": hash_fn}
-    legacy_append = False
-    if mode == "append" and spark.catalog.tableExists(table):
+    appending = mode == "append" and spark.catalog.tableExists(table)
+    if appending:
         # validate the FULL signature layout the store baked in, not
         # just the band count: a mismatched num_hashes / n / hash_fn
-        # passes a bands-only check yet makes buckets never collide.
-        # Pre-property stores fall back to the band-count check.
-        if not validate_store_props(spark, table, "comix.minhash",
-                                     layout,
-                                     "persist_minhash_store(append)"):
-            legacy_append = True
-            stored_max = spark.table(table).agg(F.max("band")).first()[0]
-            if stored_max is not None and stored_max + 1 != bands:
-                raise ValueError(
-                    f"persist_minhash_store: append with bands={bands} "
-                    f"onto a store banded {stored_max + 1} ways — mixed "
-                    f"band layouts change the collision probability "
-                    f"under every later probe; rebuild or match the "
-                    f"stored layout")
+        # passes a bands-only check yet makes buckets never collide
+        validate_store_props(spark, table, "comix.minhash", layout,
+                             "persist_minhash_store(append)")
     rows = minhash_band_rows(corpus, id_col, text_col,
                              num_hashes=num_hashes, bands=bands, n=n,
                              hash_fn=hash_fn)
-    if mode == "append" and spark.catalog.tableExists(table):
+    if appending:
         # crash-window protocol (r14, symmetric with persist_bm25_store):
         # pending before the band-row write, committed only with the
         # final layout re-stamp — a crash between leaves an observable
@@ -1215,19 +1173,8 @@ def persist_minhash_store(corpus: DataFrame, table: str, *, id_col: str,
                         {"state": "pending"})
     save_bucketed_table(rows, table, ["band", "bucket"], n_buckets,
                         sort_cols=["band", "bucket"], mode=mode)
-    if legacy_append:
-        # the pre-existing rows passed only the weak band-count check —
-        # their num_hashes / n / hash_fn were never verified. Stamping
-        # the CALLER's full layout here would make a mixed-signature
-        # store validate as clean on every future probe (the exact
-        # silent-never-collide failure the stamp exists to stop); mark
-        # the store unverified so probes keep using the legacy check.
-        set_store_props(spark, table, "comix.minhash",
-                        {"layout": LAYOUT_UNVERIFIED,
-                         "state": "committed"})
-    else:
-        set_store_props(spark, table, "comix.minhash",
-                        {**layout, "state": "committed"})
+    set_store_props(spark, table, "comix.minhash",
+                    {**layout, "state": "committed"})
 
 
 def fingerprint_store_stats(spark, table: str, *,
@@ -1319,21 +1266,15 @@ def dedup_against_store(batch: DataFrame, corpus: DataFrame, table: str, *,
     from comix_etl_spark.sinks.writers import validate_store_props
 
     spark = batch.sparkSession
-    ob = spark.table(table)
     # full-layout validation against the store's stamped properties —
     # bands alone can match while num_hashes / n / hash_fn diverge, in
     # which case buckets never collide and the probe would silently
-    # return empty matches; pre-property stores fall back to max(band)
-    if not validate_store_props(
-            spark, table, "comix.minhash",
-            {"num_hashes": num_hashes, "bands": bands, "n": n,
-             "hash_fn": hash_fn}, "dedup_against_store"):
-        stored_max = ob.agg(F.max("band")).first()[0]
-        if stored_max is not None and stored_max + 1 != bands:
-            raise ValueError(
-                f"dedup_against_store: probe with bands={bands} against "
-                f"a store banded {stored_max + 1} ways — buckets would "
-                f"never collide; match the stored layout")
+    # return empty matches
+    validate_store_props(
+        spark, table, "comix.minhash",
+        {"num_hashes": num_hashes, "bands": bands, "n": n,
+         "hash_fn": hash_fn}, "dedup_against_store")
+    ob = spark.table(table)
     nb = minhash_band_rows(batch, id_col, text_col, num_hashes=num_hashes,
                            bands=bands, n=n, hash_fn=hash_fn)
     return _probe_landed_bands(nb, ob, batch, corpus, id_col, text_col,
@@ -1369,14 +1310,32 @@ def _probe_landed_bands(nb: DataFrame, ob: DataFrame, batch: DataFrame,
     # ids restricts the shingle projection to candidate rows, and
     # Spark's runtime bloom-filter injection can push it into the scan.
     # (NOT a driver-side isin(): a 45k-literal In expression measured
-    # ~50 s of pure plan-construction overhead — scale_evidence_r11b's
-    # first pass. dedup_against_corpus can't skip the corpus pass at
-    # all — it has to shingle the corpus to sign it; here signing was
-    # paid once at build.)
+    # ~50 s of pure plan-construction overhead — PLANS.md "r11
+    # MinHash-store probe economics". dedup_against_corpus can't skip
+    # the corpus pass at all — it has to shingle the corpus to sign it;
+    # here signing was paid once at build.)
     old = candidates.select(F.col("id_old").alias(id_col)).distinct()
     corpus_cand = corpus.join(F.broadcast(old), id_col, "semi")
     return _best_match_verify(candidates, batch, corpus_cand, id_col,
                               text_col, n=n, threshold=threshold)
+
+
+def _fp_store_bands(spark, table: str, fp_cols: list[str],
+                    op: str) -> int:
+    """The band count a committed fingerprint store is stamped with,
+    after checking the caller's limb count against the stamp (a store
+    read with a different limb list would verify against the wrong
+    columns)."""
+    from comix_etl_spark.sinks.writers import require_store_committed
+
+    props = require_store_committed(spark, table, "comix.fp", op)
+    if props.get("n_limbs") != str(len(fp_cols)):
+        raise ValueError(
+            f"{op}: store {table!r} is stamped n_limbs="
+            f"{props.get('n_limbs')} but the caller passed "
+            f"{len(fp_cols)} fp_cols {fp_cols}; read it with the limb "
+            f"columns it was built with")
+    return int(props["n_bands"])
 
 
 def near_dup_pairs_from_store(spark, table: str, *,
@@ -1388,43 +1347,13 @@ def near_dup_pairs_from_store(spark, table: str, *,
     ``hamming_band_pairs`` on the same fingerprints (pytest-locked),
     but the corpus-scale (band, bv) self-join runs WITHOUT any
     Exchange: both join sides read the same bucketed, bucket-sorted
-    layout. Validates the recall contract against the band count
-    actually present in the store (one cheap max(band) read) instead
-    of trusting the caller."""
-    from comix_etl_spark.sinks.writers import require_store_committed
-
-    require_store_committed(spark, table, "comix.fp",
-                            "near_dup_pairs_from_store")
-    bands = spark.table(table)
-    max_band = bands.agg(F.max("band")).first()[0]
-    if max_band is None:  # empty store: no items, no pairs (not an error)
-        # derive the id type from the store schema — a hardcoded `long`
-        # would diverge from the non-empty path's types for string ids,
-        # breaking downstream unions only in the empty case
-        idt = bands.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"id_a {idt}, id_b {idt}, hamming long")
-    n_bands = max_band + 1
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= stored n_bands={n_bands} voids "
-            "the pigeonhole recall guarantee; rebuild the store with more "
-            "bands or lower max_hamming")
-    a = bands.select(F.col(id_col).alias("id_a"),
-                     *[F.col(c).alias(f"_fa{k}")
-                       for k, c in enumerate(fp_cols)], "band", "bv")
-    b = bands.select(F.col(id_col).alias("id_b"),
-                     *[F.col(c).alias(f"_fb{k}")
-                       for k, c in enumerate(fp_cols)], "band", "bv")
-    cand = (a.join(b, ["band", "bv"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-    ham = F.bit_count(F.col("_fa0").bitwiseXOR(F.col("_fb0")))
-    for k in range(1, len(fp_cols)):
-        ham = ham + F.bit_count(F.col(f"_fa{k}").bitwiseXOR(F.col(f"_fb{k}")))
-    return (cand.withColumn("hamming", ham.cast("long"))
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming"))
+    layout. The recall contract is checked against the store's
+    stamped band count, not the caller's."""
+    n_bands = _fp_store_bands(spark, table, fp_cols,
+                              "near_dup_pairs_from_store")
+    return _band_self_pairs(spark.table(table), id_col=id_col,
+                            fp_cols=fp_cols, n_bands=n_bands,
+                            max_hamming=max_hamming)
 
 
 def hamming_probe_from_store(spark, table: str, probe_fp: DataFrame, *,
@@ -1441,55 +1370,14 @@ def hamming_probe_from_store(spark, table: str, probe_fp: DataFrame, *,
     (``near_dup_pairs_from_store``), text probe
     (``dedup_against_store``), and this cross-set perceptual probe all
     read one one-time build. The probe side bands to the layout the
-    store actually has (max(band) read, not caller-trusted)."""
-    from comix_etl_spark.sinks.writers import require_store_committed
-
-    require_store_committed(spark, table, "comix.fp",
-                            "hamming_probe_from_store")
-    bands_df = spark.table(table)
-    max_band = bands_df.agg(F.max("band")).first()[0]
-    if max_band is None:  # empty store: no corpus, no collisions
-        # id types derived from each side's actual schema (store for
-        # corpus_id, probe frame for probe_id) so the empty-store result
-        # unions/joins cleanly with the non-empty path for non-long ids
-        cidt = bands_df.schema[id_col].dataType.simpleString()
-        pidt = probe_fp.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"corpus_id {cidt}, probe_id {pidt}, hamming long")
-    n_bands = max_band + 1
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= stored n_bands={n_bands} voids "
-            "the pigeonhole recall guarantee; rebuild the store with more "
-            "bands or lower max_hamming")
-    n_limbs = len(fp_cols)
-    edges = _band_edges(63 * n_limbs, n_bands)
-    notnull = F.col(fp_cols[0]).isNotNull()
-    for cc in fp_cols[1:]:
-        notnull = notnull & F.col(cc).isNotNull()
-    pf = probe_fp.filter(notnull).select(
-        F.col(id_col).alias("probe_id"),
-        *[F.col(cc).alias(f"_fp{k}") for k, cc in enumerate(fp_cols)])
-    plimbs = [f"_fp{k}" for k in range(n_limbs)]
-    p = pf.select(
-        "probe_id", *plimbs,
-        F.explode(F.array(*[
-            F.struct(F.lit(bi).alias("band"),
-                     _limb_band_val(plimbs, lo, hi).alias("bv"))
-            for bi, (lo, hi) in enumerate(edges)])).alias("bb")
-    ).select("probe_id", *plimbs, "bb.band", "bb.bv")
-    c = bands_df.select(F.col(id_col).alias("corpus_id"),
-                        *[F.col(cc).alias(f"_fc{k}")
-                          for k, cc in enumerate(fp_cols)],
-                        "band", "bv")
-    cand = (c.join(F.broadcast(p), ["band", "bv"])
-            .dropDuplicates(["corpus_id", "probe_id"]))
-    ham = F.bit_count(F.col("_fc0").bitwiseXOR(F.col("_fp0")))
-    for k in range(1, n_limbs):
-        ham = ham + F.bit_count(F.col(f"_fc{k}").bitwiseXOR(F.col(f"_fp{k}")))
-    return (cand.withColumn("hamming", ham.cast("long"))
-            .filter(F.col("hamming") <= max_hamming)
-            .select("corpus_id", "probe_id", "hamming"))
+    store is stamped with, not the caller's."""
+    n_bands = _fp_store_bands(spark, table, fp_cols,
+                              "hamming_probe_from_store")
+    probe = fingerprint_band_rows(probe_fp, id_col=id_col, fp_cols=fp_cols,
+                                  n_bands=n_bands)
+    return _band_cross_probe(spark.table(table), probe, id_col=id_col,
+                             fp_cols=fp_cols, n_bands=n_bands,
+                             max_hamming=max_hamming)
 
 
 def majority_fingerprint(fps: DataFrame, *, id_col: str = "media_id",
@@ -1578,91 +1466,34 @@ def video_dedup(frames: DataFrame, *, id_col: str = "media_id",
                             n_bands=n_bands)
 
 
-def image_probe_pairs(corpus_fp: DataFrame, probe_fp: DataFrame, *,
-                      id_col: str = "media_id", fp_col: str = "dhash",
-                      max_hamming: int = 2,
-                      n_bands: int | None = None) -> DataFrame:
-    """Cross-set perceptual matches: every (corpus image, probe image)
-    pair within ``max_hamming`` bits — the image-side eval-set
-    DECONTAMINATION screen (scrub benchmark images and their near-
-    duplicate recrawls/re-encodes out of a training corpus before
-    training; the pixel-space sibling of the registry's
-    ``embedding_decontaminate``) and equally the incremental-ingest
-    probe (batch-vs-corpus, like ``dedup_against_corpus`` for text).
-
-    Same banded-Hamming machinery and pigeonhole recall guarantee as
-    ``image_near_dup_pairs`` (every pair within ``n_bands - 1`` bits
-    shares an intact band), but across TWO framesets and without the
-    ``id <`` orientation — output is (corpus_id, probe_id, hamming).
-
-    100 TB shape: the corpus side never self-joins; its band rows
-    stream once against the probe side's band rows, and a real probe
-    set (a benchmark suite — thousands of images, n_bands rows each)
-    broadcasts, so the screen is one corpus scan + one broadcast-hash
-    probe with zero corpus shuffle. NULL fingerprints drop on both
-    sides. In production the corpus band rows are computed once and
-    PERSISTED bucketed-by-(band, band-value); each new benchmark then
-    probes without touching corpus pixels again.
-    """
-    return hamming_band_probe(corpus_fp, probe_fp, id_col=id_col,
-                              fp_cols=[fp_col], max_hamming=max_hamming,
-                              n_bands=n_bands)
-
-
 def hamming_band_probe(corpus_fp: DataFrame, probe_fp: DataFrame, *,
                        id_col: str = "media_id", fp_cols: list[str],
                        max_hamming: int = 2,
                        n_bands: int | None = None) -> DataFrame:
-    """Cross-set banded Hamming probe over one OR MORE 63-bit limbs —
-    the multi-limb core behind ``image_probe_pairs`` (one limb) and
-    the wide 126-bit decontamination path. Bands cover the
-    CONCATENATED bit space (same ``_band_edges``/``_limb_band_val``
-    machinery and pigeonhole recall guarantee as
-    ``hamming_band_pairs``); Hamming is the sum of per-limb xor
-    popcounts. Output: (corpus_id, probe_id, hamming), no ``id <``
-    orientation. The probe side's band rows broadcast; the corpus
+    """Cross-set perceptual matches: every (corpus item, probe item)
+    pair within ``max_hamming`` summed per-limb bits — the eval-set
+    DECONTAMINATION screen (scrub benchmark images and their
+    near-duplicate recrawls/re-encodes out of a training corpus; the
+    pixel-space sibling of the registry's ``embedding_decontaminate``)
+    and equally the incremental-ingest probe (batch vs corpus, like
+    ``dedup_against_corpus`` for text). One or more 63-bit limbs,
+    banded over the concatenated bit space with the same
+    ``fingerprint_band_rows`` layout and pigeonhole recall guarantee as
+    ``hamming_band_pairs``, but across TWO frames and without the
+    ``id <`` orientation. Output: (corpus_id, probe_id, hamming).
+
+    100 TB shape: the probe side's band rows broadcast (a benchmark
+    suite is thousands of items, ``n_bands`` rows each); the corpus
     never self-joins — one corpus scan + one broadcast-hash probe,
     zero corpus shuffle. Rows with ANY NULL limb drop on both sides.
+    In production the corpus band rows are persisted once
+    (``persist_fingerprint_store``) and each new benchmark probes them
+    (``hamming_probe_from_store``) without touching corpus pixels.
     """
-    n_limbs = len(fp_cols)
-    total = 63 * n_limbs
     if n_bands is None:
         n_bands = max_hamming + 1
-    if not 1 <= n_bands <= total:
-        raise ValueError(f"n_bands must be in [1, {total}], got {n_bands}")
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= n_bands={n_bands} voids the "
-            "pigeonhole recall guarantee; raise n_bands")
-    edges = _band_edges(total, n_bands)
-    if max(hi - lo for lo, hi in edges) > 63:
-        raise ValueError(
-            f"{n_bands} bands over {total} bits makes a band wider than "
-            "63 bits (band values must fit a BIGINT); raise n_bands")
-
-    def band_rows(fp: DataFrame, out_id: str, pref: str) -> DataFrame:
-        notnull = F.col(fp_cols[0]).isNotNull()
-        for c in fp_cols[1:]:
-            notnull = notnull & F.col(c).isNotNull()
-        f = fp.filter(notnull).select(
-            F.col(id_col).alias(out_id),
-            *[F.col(c).alias(f"{pref}{k}") for k, c in enumerate(fp_cols)])
-        limbs = [f"{pref}{k}" for k in range(n_limbs)]
-        return f.select(
-            out_id, *limbs,
-            F.explode(F.array(*[
-                F.struct(F.lit(bi).alias("band"),
-                         _limb_band_val(limbs, lo, hi).alias("bv"))
-                for bi, (lo, hi) in enumerate(edges)])).alias("bb")
-        ).select(out_id, *limbs, "bb.band", "bb.bv")
-
-    c = band_rows(corpus_fp, "corpus_id", "_fc")
-    p = band_rows(probe_fp, "probe_id", "_fp")
-    cand = (c.join(F.broadcast(p), ["band", "bv"])
-            .dropDuplicates(["corpus_id", "probe_id"]))
-    ham = F.bit_count(F.col("_fc0").bitwiseXOR(F.col("_fp0")))
-    for k in range(1, n_limbs):
-        ham = ham + F.bit_count(F.col(f"_fc{k}").bitwiseXOR(F.col(f"_fp{k}")))
-    return (cand.withColumn("hamming", ham.cast("long"))
-            .filter(F.col("hamming") <= max_hamming)
-            .select("corpus_id", "probe_id", "hamming"))
+    corpus, probe = (fingerprint_band_rows(f, id_col=id_col,
+                                           fp_cols=fp_cols, n_bands=n_bands)
+                     for f in (corpus_fp, probe_fp))
+    return _band_cross_probe(corpus, probe, id_col=id_col, fp_cols=fp_cols,
+                             n_bands=n_bands, max_hamming=max_hamming)

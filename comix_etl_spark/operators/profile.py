@@ -22,47 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-# Exact F.percentile buffers EVERY value of a group in that group's
-# single reducer aggregation buffer (it cannot partial-aggregate).
-# 10M doubles ≈ 80-160 MB of buffer — comfortably one task on a
-# standard executor; past it the sketch is the only safe route.
-PERCENTILE_EXACT_GROUP_LIMIT = 10_000_000
-
-
-def percentile_route(df: DataFrame, group_col: str, *,
-                     exact_group_limit: int = PERCENTILE_EXACT_GROUP_LIMIT,
-                     accuracy: int = 10_000):
-    """Decide exact-vs-approx percentile ONCE per input — the
-    operator-side routing that removes the caller-chosen-route misuse
-    hazard (r9 verdict advisory #1): exact ``F.percentile`` cannot
-    partial-aggregate, so the hazard variable is the MAX per-group row
-    volume (the biggest group's values all buffer in one reducer task).
-
-    Measures it with a slim count-only pre-pass: a groupBy COUNT
-    partial-aggregates map-side, so the pre-pass shuffles one long per
-    group — at 100 TB it costs a scan but never buffers values, which
-    is exactly the failure mode being routed around. (An
-    ``approx_count_distinct``-based average-volume estimate would skip
-    nothing — the scan dominates either way — and misses skew, which
-    is the actual hazard.)
-
-    Returns ``(pct, route)`` — ``pct(col, p)`` builds the chosen
-    aggregate expression (`F.percentile` when the max group fits
-    ``exact_group_limit``, else ``F.approx_percentile`` with
-    ``accuracy``, whose t-digest-style state partial-aggregates and is
-    bounded per group), ``route`` is ``"exact"`` | ``"approx"`` for
-    logging/tests. Both routes are oracle-checked in the registry
-    (exact: winsorize / percentile_profile / mad_outliers at test SF;
-    approx: approx_percentiles_check).
-    """
-    max_vol = (df.groupBy(group_col)
-               .agg(F.count(F.lit(1)).alias("_n"))
-               .agg(F.max("_n").alias("_m")).first()[0]) or 0
-    if max_vol <= exact_group_limit:
-        return (lambda col, p: F.percentile(col, p)), "exact"
-    return (lambda col, p: F.approx_percentile(col, p, accuracy)), "approx"
-
-
 def grouped_percentile_cont(df: DataFrame, group_col: str, value_col: str,
                             probs: Sequence[float], *,
                             carry_first: Sequence[str] = (),
@@ -70,8 +29,8 @@ def grouped_percentile_cont(df: DataFrame, group_col: str, value_col: str,
     """Exact interpolated percentiles per group WITHOUT the
     one-buffer-per-group reducer (r15) — bit-identical to
     ``F.percentile`` / ANSI ``percentile_cont`` / DuckDB
-    ``quantile_cont``, but every stage partial-aggregates or
-    range-partitions, so no task ever buffers a group's values:
+    ``quantile_cont``, but no stage buffers a group's values in one
+    aggregation buffer:
 
     1. one row per non-NULL value with a running COUNT per group via
        the scale-routed grouped prefix sum
@@ -103,6 +62,11 @@ def grouped_percentile_cont(df: DataFrame, group_col: str, value_col: str,
     from comix_etl_spark.operators.relational import grouped_running_sum
 
     probs = [float(p) for p in probs]
+    bad = [p for p in probs if not 0.0 <= p <= 1.0]
+    if bad:
+        # F.percentile raises on these; the rank picks below would
+        # silently return NULL instead
+        raise ValueError(f"percentile probs must be in [0, 1], got {bad}")
     carry = list(carry_first)
     rows = (df.select(F.col(group_col).alias("_g"),
                       F.col(value_col).cast("double").alias("_v"), *carry)
@@ -155,33 +119,16 @@ def grouped_percentile_cont(df: DataFrame, group_col: str, value_col: str,
 
 def grouped_percentiles(df: DataFrame, group_col: str, value_col: str, *,
                         probs: Sequence[float] = (0.25, 0.5, 0.75, 0.95),
-                        ndigits: int = 6,
-                        exact_group_limit: int | None = None
-                        ) -> DataFrame:
+                        ndigits: int = 6) -> DataFrame:
     """Interpolated percentiles per group, one column per prob.
 
-    Since r15 the DEFAULT exact route is ``grouped_percentile_cont`` —
-    the distributed exact form (histogram-balanced grouped prefix sum
-    + conditional-max rank selection), which produces bit-identical
-    values to ``F.percentile`` with NO one-buffer-per-group reducer
-    and NO count pre-pass job, so it is safe at any group volume and
-    the r10 exact/approx routing hazard is structurally gone.
-
-    ``exact_group_limit`` is kept for callers that explicitly want the
-    sketch route above a volume bound: when set, the r10
-    ``percentile_route`` pre-pass runs and wide groups use
-    ``F.approx_percentile`` exactly as before (that path stays
-    oracle-checked by ``approx_percentiles_check``).
+    Exact, through ``grouped_percentile_cont`` — the distributed form
+    (grouped running count + conditional-max rank selection), which
+    produces bit-identical values to ``F.percentile`` with NO
+    one-buffer-per-group reducer and NO count pre-pass job, so it is
+    safe at any group volume. A sketch is ``F.approx_percentile``
+    (oracle-checked by ``approx_percentiles_check``).
     """
-    if exact_group_limit is not None:
-        pct, route = percentile_route(df, group_col,
-                                      exact_group_limit=exact_group_limit)
-        if route == "approx":
-            aggs = [F.round(pct(value_col, float(p)), ndigits)
-                    .alias(f"p{int(p * 100):02d}")
-                    for p in probs]
-            aggs.append(F.count(F.lit(1)).cast("long").alias("n_rows"))
-            return df.groupBy(group_col).agg(*aggs)
     probs = [float(p) for p in probs]
     # n_rows counts ALL rows (NULL values included, as the old
     # aggregate did); groups whose values are all NULL surface with

@@ -644,8 +644,8 @@ def persist_bm25_store(df: DataFrame, table: str, *, id_col: str = "doc_id",
     Σdl += ΔΣdl — exact integer adds, so a probe after append is
     bit-identical to a one-shot build over old∪new; oracle-checked by
     the ``bm25_store_append`` registry query and pytest-locked). The
-    append validates the store's stamped id_col/tokenizer/n_buckets
-    first and REFUSES a store without stamped stats (nothing sound to
+    append validates the store's stamped id_col/analyzer/n_buckets
+    first and REFUSES a table without the stamp (nothing sound to
     merge into). CONTRACT (same as persist_minhash_store): the delta
     must be NEW docs — re-appending a landed doc double-counts its
     postings and its dl. A crash between the postings append and the
@@ -669,43 +669,16 @@ def persist_bm25_store(df: DataFrame, table: str, *, id_col: str = "doc_id",
     appending = mode == "append" and spark.catalog.tableExists(table)
     prior_n = prior_sum_dl = 0
     if appending:
-        from comix_etl_spark.sinks.writers import get_store_props
-
-        stored = get_store_props(spark, table, "comix.bm25")
-        if stored and "analyzer" not in stored:
-            # pre-r13 stamp: the layout key was named "tokenizer",
-            # which Spark's TBLPROPERTIES redaction regex matches — it
-            # reads back as *(redacted)*, so the actual analyzer can
-            # NEVER be verified from this stamp. Refuse with a targeted
-            # error instead of the generic layout-mismatch (which would
-            # confusingly report store=None for keys the old stamp
-            # never had) — ADVICE r13. Appending unverifiable-analyzer
-            # postings risks the silent never-collide failure the stamp
-            # exists to stop, so migration-in-place is not offered.
-            raise ValueError(
-                f"persist_bm25_store: append onto {table!r} with a "
-                f"pre-r13 property stamp (no 'comix.bm25.analyzer' "
-                f"key; the old 'tokenizer' key is redacted by Spark "
-                f"and cannot be verified) — rebuild the store with "
-                f"mode='overwrite' to re-stamp the current layout")
-        validate_store_props(spark, table, "comix.bm25",
-                             {"id_col": id_col,
-                              # key deliberately NOT named "tokenizer":
-                              # SHOW TBLPROPERTIES redacts keys matching
-                              # spark.sql.redaction.string.regex (which
-                              # includes "token"), so that value would
-                              # read back as *(redacted) and never
-                              # validate
-                              "analyzer": "whitespace_v1",
-                              "n_buckets": n_buckets},
-                             "persist_bm25_store(append)")
-        props = get_store_props(spark, table, "comix.bm25")
-        if not {"n", "sum_dl"} <= props.keys():
-            raise ValueError(
-                f"persist_bm25_store: append onto {table!r} without "
-                f"stamped corpus stats (comix.bm25.n / sum_dl) — there "
-                f"is nothing sound to merge the delta stats into; "
-                f"rebuild with mode='overwrite'")
+        props = validate_store_props(
+            spark, table, "comix.bm25",
+            {"id_col": id_col,
+             # key deliberately NOT named "tokenizer": SHOW
+             # TBLPROPERTIES redacts keys matching
+             # spark.sql.redaction.string.regex (which includes
+             # "token"), so that value would read back as *(redacted)
+             # and never validate
+             "analyzer": "whitespace_v1", "n_buckets": n_buckets},
+            "persist_bm25_store(append)")
         prior_n, prior_sum_dl = int(props["n"]), int(props["sum_dl"])
     toks = tokens(text_col)
     # tokenize ONCE per document: `dl` must be projected in a SEPARATE
@@ -769,17 +742,10 @@ def bm25_scores_from_store(spark, table: str, terms: list[str], *,
     exactly 0.0 there, and +0.0 is exact), so the 6dp rounds agree
     bit-for-bit (the mixture_plan r11 lesson: summation ORDER is part
     of the contract when an oracle hashes the output)."""
-    from comix_etl_spark.sinks.writers import (get_store_props,
-                                               require_store_committed)
+    from comix_etl_spark.sinks.writers import require_store_committed
 
-    require_store_committed(spark, table, "comix.bm25",
-                            "bm25_scores_from_store")
-    props = get_store_props(spark, table, "comix.bm25")
-    if not {"n", "sum_dl"} <= props.keys():
-        raise ValueError(
-            f"bm25_scores_from_store: store {table!r} lacks stamped "
-            f"corpus stats (comix.bm25.n / sum_dl) — was it built by "
-            f"persist_bm25_store?")
+    props = require_store_committed(spark, table, "comix.bm25",
+                                    "bm25_scores_from_store")
     n = int(props["n"])
     sum_dl = int(props["sum_dl"])
     id_col = props.get("id_col", "doc_id")

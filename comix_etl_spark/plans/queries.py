@@ -1610,7 +1610,7 @@ WITH fp AS (
          CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT) AS h
   FROM documents WHERE text IS NOT NULL
 ), bands AS (
-  -- _band_edges(63, 3): [0,21) [21,42) [42,63) — 21-bit slices
+  -- 3 bands over 63 bits: [0,21) [21,42) [42,63) — 21-bit slices
   SELECT doc_id, b.b AS band, (h >> (b.b * 21)) & 2097151 AS bv
   FROM fp, range(3) b(b)
 ), per_bucket AS (
@@ -3247,15 +3247,15 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The fences are EXACT percentiles computed DISTRIBUTED since r15
     (operators/profile.py::grouped_percentile_cont — r14 verdict #1):
-    value-collapse with map-side combine, range-partitioned per-group
-    prefix sum, broadcast rank probes, then Spark's own Percentile
+    a per-row running count per group (relational.grouped_running_sum:
+    one window, split into histogram buckets at scale), conditional-max
+    rank picks in one aggregate, then Spark's own Percentile
     interpolation arithmetic verbatim — bit-identical fences (oracle
     parity sees quantile_cont values at test SF) with NO
-    one-buffer-per-group reducer and NO r10 count pre-pass job, at any
-    per-group volume. The r10 exact/approx routing this replaced is
-    still available for callers that want the sketch
-    (profile.percentile_route; oracle-checked by
-    ``approx_percentiles_check``). See PLANS.md "Percentile routing"."""
+    one-buffer-per-group reducer and NO count pre-pass job, at any
+    per-group volume. The sketch is ``F.approx_percentile``
+    (oracle-checked by ``approx_percentiles_check``). See PLANS.md
+    "Percentile routing"."""
     from comix_etl_spark.operators.profile import grouped_percentile_cont
 
     t = _t(spark, sf_dir, "lineitem")
@@ -4026,9 +4026,9 @@ def q_percentile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/profile.py::grouped_percentiles) — the describe-a-measure
     profile the reference approximates with top-k counts
     (comixcatalog_starter.zip!etl/etl.py:56-67). Since r15 the exact
-    route is DISTRIBUTED (grouped_percentile_cont: value-collapse with
-    map-side combine → range-partitioned per-group prefix sum →
-    broadcast rank probes → Spark's own Percentile interpolation
+    route is DISTRIBUTED (grouped_percentile_cont: per-row running
+    count per group via relational.grouped_running_sum → conditional-
+    max rank picks → Spark's own Percentile interpolation
     arithmetic) — no one-buffer-per-group reducer, no count pre-pass
     job, and DuckDB's quantile_cont still reproduces values
     bit-exactly (r14 verdict #1)."""
@@ -4765,10 +4765,10 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every doc's score in ONE reducer buffer when exact) — since r15
     it runs through the DISTRIBUTED exact percentile
     (operators/profile.py::grouped_percentile_cont over a constant
-    group, r14 verdict #1): value-collapse + range-partitioned prefix
-    sum + broadcast rank probes with Spark's own Percentile
-    interpolation arithmetic, bit-identical fences at any corpus size
-    and no r10 routing pre-pass job. Fences land strictly
+    group, r14 verdict #1): a per-row running count
+    (relational.grouped_running_sum) + conditional-max rank picks with
+    Spark's own Percentile interpolation arithmetic, bit-identical
+    fences at any corpus size. Fences land strictly
     between adjacent order statistics (or exactly ON a tied one), so
     the >= comparisons are robust to fence-interpolation LSB noise.
     One token explode feeds the LM aggregates; scores are one slim
@@ -4784,10 +4784,13 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (bigram_lm_scores(t["documents"], "doc_id", "text")
          .localCheckpoint(eager=True))
     scored = s.filter(F.col("n_bigrams") > 0)
+    # the global aggregate always emits ONE fence row: NULL fences when
+    # no document scores, so every document still comes out 'unscored'
+    # instead of the cross join dropping them all
     fences = (grouped_percentile_cont(
         scored.withColumn("_g", F.lit(1)), "_g", "lm_score_e6",
         (2.0 / 3, 1.0 / 3))
-        .select(F.col("_q0").alias("_hi"), F.col("_q1").alias("_lo")))
+        .agg(F.max("_q0").alias("_hi"), F.max("_q1").alias("_lo")))
     bucket = (F.when(F.col("lm_score_e6").isNull(), F.lit("unscored"))
               .when(F.col("lm_score_e6") >= F.col("_hi"), F.lit("head"))
               .when(F.col("lm_score_e6") >= F.col("_lo"), F.lit("middle"))
@@ -6085,8 +6088,9 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Both medians are EXACT and DISTRIBUTED since r15
     (operators/profile.py::grouped_percentile_cont — r14 verdict #1):
-    value-collapse + range-partitioned prefix sum + broadcast rank
-    probes, interpolated with Spark's own Percentile arithmetic, so
+    a per-row running count per group (relational.grouped_running_sum)
+    + conditional-max rank picks, interpolated with Spark's own
+    Percentile arithmetic, so
     the values are bit-identical to ``F.percentile`` with NO
     one-buffer-per-group reducer (3 l_returnflag groups ⇒ ~n/3 values
     per buffer at 100× — the funnel this removes) and NO r10 count
@@ -11247,7 +11251,7 @@ def q_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the n_bands (= max_hamming + 1 = 3) bands, so every qualifying pair
 # keeps an intact band and is
 # guaranteed a candidate (pigeonhole recall — see
-# operators/dedup.py::image_near_dup_pairs); candidates beyond the
+# operators/dedup.py::hamming_band_pairs); candidates beyond the
 # Hamming cap are filtered by both engines.
 # shared analytic-dHash CTE chain (docs → block pixel values → bit
 # values → 63-bit hashes), composed by ORACLE_IMAGE_DEDUP and
@@ -11516,6 +11520,18 @@ ORDER BY media_id
 """
 
 
+def _bench_hits(pairs: DataFrame) -> DataFrame:
+    """The shared tail of the perceptual decontamination screens: per
+    corpus item of a (corpus_id, probe_id, hamming) probe, how many
+    benchmark items it matches and its closest distance."""
+    return (pairs.groupBy("corpus_id")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_bench_hits"),
+                 F.min("hamming").cast("long").alias("min_hamming"))
+            .select(F.col("corpus_id").alias("media_id"),
+                    "n_bench_hits", "min_hamming")
+            .orderBy("media_id"))
+
+
 def q_video_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-side eval-set decontamination: every 50th document's video
     stands in as a benchmark suite; the screen reports each corpus
@@ -11525,11 +11541,11 @@ def q_video_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the same vote-margin robustness pytest-proven for video_dedup.
     Composition only: majority_fingerprint feeds the SAME broadcast
     cross-set band probe as images (operators/dedup.py::
-    image_probe_pairs, fp_col='vfp') — corpus never self-joins, the
-    tiny benchmark band rows broadcast."""
+    hamming_band_probe, fp_cols=['vfp']) — corpus never self-joins,
+    the tiny benchmark band rows broadcast."""
     from comix_etl_spark.multimodal.media import image_dhash
     from comix_etl_spark.operators.dedup import (
-        image_probe_pairs, majority_fingerprint)
+        hamming_band_probe, majority_fingerprint)
 
     t = _t(spark, sf_dir, "documents")
     d = t["documents"]
@@ -11540,13 +11556,9 @@ def q_video_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = vfps(d)
     probe = vfps(d.filter(F.col("doc_id") % 50 == 0))
-    pairs = image_probe_pairs(corpus, probe, fp_col="vfp", max_hamming=2)
-    return (pairs.groupBy("corpus_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_bench_hits"),
-                 F.min("hamming").cast("long").alias("min_hamming"))
-            .select(F.col("corpus_id").alias("media_id"),
-                    "n_bench_hits", "min_hamming")
-            .orderBy("media_id"))
+    pairs = hamming_band_probe(corpus, probe, fp_cols=["vfp"],
+                               max_hamming=2)
+    return _bench_hits(pairs)
 
 
 # all-pairs Hamming <= 2 over majority fingerprints == banded cross-set
@@ -11596,21 +11608,17 @@ def q_image_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     perceptual match (Hamming ≤ 2 over 63-bit dHash) to ANY benchmark
     image, with its hit count and closest distance. The corpus side
     never self-joins; the small benchmark band rows broadcast
-    (operators/dedup.py::image_probe_pairs)."""
+    (operators/dedup.py::hamming_band_probe)."""
     from comix_etl_spark.multimodal.media import image_dhash
-    from comix_etl_spark.operators.dedup import image_probe_pairs
+    from comix_etl_spark.operators.dedup import hamming_band_probe
 
     t = _t(spark, sf_dir, "documents")
     d = t["documents"]
     corpus = image_dhash(_synthetic_images(d))
     probe = image_dhash(_synthetic_images(d.filter(F.col("doc_id") % 50 == 0)))
-    pairs = image_probe_pairs(corpus, probe, max_hamming=2)
-    return (pairs.groupBy("corpus_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_bench_hits"),
-                 F.min("hamming").cast("long").alias("min_hamming"))
-            .select(F.col("corpus_id").alias("media_id"),
-                    "n_bench_hits", "min_hamming")
-            .orderBy("media_id"))
+    pairs = hamming_band_probe(corpus, probe, fp_cols=["dhash"],
+                               max_hamming=2)
+    return _bench_hits(pairs)
 
 
 # all-pairs Hamming <= 2 == banded-LSH + verify, by the same pigeonhole
@@ -11637,8 +11645,8 @@ def q_image_dedup_xwide(spark: SparkSession, sf_dir: str) -> DataFrame:
     PLANS.md ladder claim in code: moving up the width ladder costs
     ONE new fingerprint function and zero new pairing code, and each
     rung multiplies the accidental-candidate crossover (~3M narrow,
-    ~30M wide, ~120M here — measured curve in
-    scripts/scale_evidence_r10b_results.json). All three limbs stay
+    ~30M wide, ~120M here — measured curve in PLANS.md "r10
+    scale-evidence run"). All three limbs stay
     BIGINTs, so DuckDB recomputes them analytically and the whole
     decode+banding+election pipeline is value-hash-gated."""
     from comix_etl_spark.multimodal.media import image_dhash_xwide
@@ -11784,8 +11792,8 @@ def q_stream_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Watermark bounds it in a 24/7 deployment once rows carry event
     time). Near-dup (Hamming > 0) pairing stays a batch/foreachBatch
     concern: its self-join is the part streaming can't express
-    unbounded — the incremental route is ``image_probe_pairs`` against
-    the persisted fingerprint store per micro-batch.
+    unbounded — the incremental route is ``hamming_probe_from_store``
+    against the persisted fingerprint store per micro-batch.
 
     Batch/stream parity by construction: DuckDB recomputes the dHash
     analytically from the pixel-generator formula and replays the
@@ -12004,12 +12012,7 @@ def q_image_decontaminate_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = hamming_band_probe(corpus, probe,
                                fp_cols=["dhash_h", "dhash_v"],
                                max_hamming=4)
-    return (pairs.groupBy("corpus_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_bench_hits"),
-                 F.min("hamming").cast("long").alias("min_hamming"))
-            .select(F.col("corpus_id").alias("media_id"),
-                    "n_bench_hits", "min_hamming")
-            .orderBy("media_id"))
+    return _bench_hits(pairs)
 
 
 # all-pairs summed-limb Hamming <= 4 == banded cross-set probe over the
@@ -12052,12 +12055,7 @@ def q_image_decontaminate_qwide(spark: SparkSession, sf_dir: str) -> DataFrame:
                                fp_cols=["dhash_h", "dhash_v",
                                         "dhash_d", "dhash_a"],
                                max_hamming=8)
-    return (pairs.groupBy("corpus_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_bench_hits"),
-                 F.min("hamming").cast("long").alias("min_hamming"))
-            .select(F.col("corpus_id").alias("media_id"),
-                    "n_bench_hits", "min_hamming")
-            .orderBy("media_id"))
+    return _bench_hits(pairs)
 
 
 # all-pairs summed-limb Hamming <= 8 == banded cross-set probe over
@@ -12364,9 +12362,9 @@ def q_audio_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariance pytest-proven for audio_dedup. Pure composition:
     audio_energy_fingerprint feeds the SAME broadcast cross-set band
     probe as every other modality (operators/dedup.py::
-    image_probe_pairs, fp_col='afp'); corpus never self-joins."""
+    hamming_band_probe, fp_cols=['afp']); corpus never self-joins."""
     from comix_etl_spark.multimodal.media import audio_energy_fingerprint
-    from comix_etl_spark.operators.dedup import image_probe_pairs
+    from comix_etl_spark.operators.dedup import hamming_band_probe
 
     t = _t(spark, sf_dir, "documents")
     d = t["documents"]
@@ -12377,13 +12375,9 @@ def q_audio_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = afps(d)
     probe = afps(d.filter(F.col("doc_id") % 50 == 0))
-    pairs = image_probe_pairs(corpus, probe, fp_col="afp", max_hamming=2)
-    return (pairs.groupBy("corpus_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_bench_hits"),
-                 F.min("hamming").cast("long").alias("min_hamming"))
-            .select(F.col("corpus_id").alias("media_id"),
-                    "n_bench_hits", "min_hamming")
-            .orderBy("media_id"))
+    pairs = hamming_band_probe(corpus, probe, fp_cols=["afp"],
+                               max_hamming=2)
+    return _bench_hits(pairs)
 
 
 # contour CTE chain identical to ORACLE_AUDIO_DEDUP; all-pairs

@@ -237,11 +237,6 @@ def save_bucketed_table(df: DataFrame, name: str, bucket_cols: list[str],
     writer.saveAsTable(name)
 
 
-# Marker value for <prefix>.layout on stores that were appended onto
-# while un-stamped: their pre-existing rows were never layout-verified,
-# so probes must keep using the legacy derived check, not trust a stamp.
-LAYOUT_UNVERIFIED = "migrated-unverified"
-
 # <prefix>.state values for the append crash-window protocol (r14 —
 # VERDICT r13 #5). An append is two non-atomic steps: the data write,
 # then the stats/layout re-stamp. A crash between them used to leave
@@ -249,9 +244,7 @@ LAYOUT_UNVERIFIED = "migrated-unverified"
 # docstrings deferred to "a production metastore transaction"). Now the
 # appender stamps state=pending BEFORE the write and state=committed
 # only WITH the final re-stamp, so the window is observable: probes and
-# appends refuse a pending store instead of serving from it. A missing
-# state key (pre-r14 store) reads as committed — the protocol gates
-# writes made under it, not history.
+# appends refuse a pending store instead of serving from it.
 STORE_PENDING = "pending"
 STORE_COMMITTED = "committed"
 
@@ -300,15 +293,22 @@ def get_store_props(spark: SparkSession, table: str,
 
 
 def require_store_committed(spark: SparkSession, table: str, prefix: str,
-                            op: str) -> None:
-    """Refuse to serve from (or append onto) a store whose last append
-    crashed mid-protocol: ``<prefix>.state=pending`` means data landed
-    but the stats/layout re-stamp never ran, so the stamped scalars are
-    stale for the delta (e.g. BM25 N/Σdl too low — scores silently
-    wrong while every plan looks healthy). Missing state (pre-r14
-    store) passes — see STORE_PENDING."""
-    state = get_store_props(spark, table, prefix).get("state")
-    if state == STORE_PENDING:
+                            op: str) -> dict[str, str]:
+    """Return a store's stamp (``<prefix>.*`` properties), refusing a
+    table that has none — every store is built by a ``persist_*``
+    function that stamps it, so an unstamped table was not built as
+    this store and nothing read from it can be trusted — and a store
+    whose last append crashed mid-protocol: ``<prefix>.state=pending``
+    means data landed but the stats/layout re-stamp never ran, so the
+    stamped scalars are stale for the delta (e.g. BM25 N/Σdl too low —
+    scores silently wrong while every plan looks healthy)."""
+    props = get_store_props(spark, table, prefix)
+    if not props:
+        raise ValueError(
+            f"{op}: table {table!r} has no stamped {prefix}.* layout, so "
+            f"it was not built by this store's persist function; rebuild "
+            f"it with mode='overwrite'")
+    if props.get("state") == STORE_PENDING:
         raise ValueError(
             f"{op}: store {table!r} is PENDING — a previous append "
             f"crashed between its data write and its stats/layout "
@@ -316,37 +316,19 @@ def require_store_committed(spark: SparkSession, table: str, prefix: str,
             f"appended delta. Rebuild with mode='overwrite' (or restore "
             f"from a snapshot); refusing to serve silently-wrong "
             f"results")
+    return props
 
 
 def validate_store_props(spark: SparkSession, table: str, prefix: str,
-                         expected: dict, op: str) -> bool:
+                         expected: dict, op: str) -> dict[str, str]:
     """Validate EVERY layout parameter a store baked in against what the
     caller is about to append/probe with — not just a count that happens
     to be cheap to re-derive. A mismatched num_hashes / shingle n /
     hash_fn passes a bands-only check yet makes buckets (almost) never
     collide: the probe silently returns empty matches while looking
-    verified. Returns True when properties were present and checked;
-    False when the table predates property stamping (caller falls back
-    to its legacy derived check so old stores keep working, just with
-    the weaker guarantee)."""
-    stored = get_store_props(spark, table, prefix)
-    if stored.get("state") == STORE_PENDING:
-        # every stamped-store append/probe funnels through here — the
-        # crash-window check lives at the funnel so no caller can skip
-        # it (require_store_committed covers the stat-reading probes
-        # that don't validate a layout)
-        require_store_committed(spark, table, prefix, op)
-    if not stored or stored.get("layout") == LAYOUT_UNVERIFIED:
-        # no properties (pre-stamping store), or a store that was
-        # APPENDED onto in its un-stamped state: its existing rows were
-        # never checked against any layout, so the append path marks it
-        # LAYOUT_UNVERIFIED rather than stamping the appending caller's
-        # layout as if it were authoritative (a legacy store signed with
-        # a different num_hashes/n/hash_fn would otherwise validate as
-        # clean forever — the silent-never-collide failure this guard
-        # exists to stop). Both cases fall back to the caller's weaker
-        # legacy check.
-        return False
+    verified. Refuses unstamped and pending stores
+    (``require_store_committed``); returns the stamp."""
+    stored = require_store_committed(spark, table, prefix, op)
     mismatch = {k: (stored.get(k), str(v)) for k, v in expected.items()
                 if stored.get(k) != str(v)}
     if mismatch:
@@ -356,7 +338,7 @@ def validate_store_props(spark: SparkSession, table: str, prefix: str,
             f"{op}: layout mismatch against store {table!r} ({detail}) — "
             f"mixed signature layouts make buckets silently never "
             f"collide; match the stored layout or rebuild the store")
-    return True
+    return stored
 
 
 def clear_orphan_table_dir(spark: SparkSession, table: str,

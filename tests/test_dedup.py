@@ -362,7 +362,7 @@ def test_audio_fingerprint_null_ids_dropped(spark):
 def test_image_near_dup_pairs_banding_recall(spark):
     """Pigeonhole guarantee: every pair within Hamming <= n_bands-1 is
     found through the band join; far fingerprints yield no pair."""
-    from comix_etl_spark.operators.dedup import image_near_dup_pairs
+    from comix_etl_spark.operators.dedup import hamming_band_pairs
 
     base = (1 << 50) | (1 << 30) | (1 << 3)
     rows = [(0, base),
@@ -372,13 +372,14 @@ def test_image_near_dup_pairs_banding_recall(spark):
             (4, None)]                        # undecodable, dropped
     df = spark.createDataFrame(rows, "media_id long, dhash long")
     got = {(r.id_a, r.id_b): r.hamming
-           for r in image_near_dup_pairs(df, max_hamming=2).collect()}
+           for r in hamming_band_pairs(df, fp_cols=["dhash"],
+                                       max_hamming=2).collect()}
     assert got[(0, 1)] == 1 and got[(0, 2)] == 2 and got[(1, 2)] == 1
     assert all(3 not in p and 4 not in p for p in got), got
     # guard rails: voiding the pigeonhole guarantee is an error
     import pytest as _pt
     with _pt.raises(ValueError):
-        image_near_dup_pairs(df, max_hamming=7, n_bands=7)
+        hamming_band_pairs(df, fp_cols=["dhash"], max_hamming=7, n_bands=7)
 
 
 def test_image_dedup_keeper_election(spark):
@@ -457,21 +458,6 @@ def test_hamming_band_pairs_two_limb_pigeonhole(spark):
         hamming_band_pairs(df, fp_cols=["h", "v"], max_hamming=5, n_bands=5)
 
 
-def test_hamming_band_pairs_single_limb_matches_legacy(spark):
-    """One-limb hamming_band_pairs is exactly image_near_dup_pairs
-    (the legacy path now delegates; outputs must be identical)."""
-    from comix_etl_spark.operators.dedup import (
-        hamming_band_pairs, image_near_dup_pairs)
-
-    base = (1 << 50) | (1 << 30) | 3
-    rows = [(i, base ^ (1 << i)) for i in range(8)] + [(99, (1 << 62) - 7)]
-    df = spark.createDataFrame(rows, "media_id long, dhash long")
-    a = sorted(map(tuple, image_near_dup_pairs(df, max_hamming=2).collect()))
-    b = sorted(map(tuple, hamming_band_pairs(df, fp_cols=["dhash"],
-                                             max_hamming=2).collect()))
-    assert a == b and len(a) > 0
-
-
 def test_fingerprint_store_no_exchange_pairing(spark):
     """The persisted bucketed fingerprint store: the (band, bv)
     self-join runs with ZERO Exchange (the shuffle was paid once at
@@ -513,53 +499,73 @@ def test_fingerprint_store_no_exchange_pairing(spark):
         spark.sql("DROP TABLE IF EXISTS fp_store_t")
 
 
+_LIMB_BASES = ((1 << 55) | (1 << 21) | 9, (1 << 44) | (1 << 12) | 5,
+               (1 << 60) | (1 << 33) | 3, (1 << 50) | (1 << 7) | 17)
+
+
+def _limb_fps(spark, n_limbs, ids=(), base=(), far=(), null=(), const=()):
+    """(media_id, fp0..fp{n-1}) fingerprints: each id in ``ids`` is one
+    flipped bit per limb away from the base (so two of them are 2·n
+    bits apart), ``base`` ids are the base itself, ``far`` ids sit far
+    from every base, ``null`` ids have a NULL first limb, and
+    ``const`` maps ids to one value used for every limb."""
+    rows = ([(i, *[_LIMB_BASES[k] ^ (1 << ((3 * i + 5 * k) % 63))
+                   for k in range(n_limbs)]) for i in ids]
+            + [(i, *_LIMB_BASES[:n_limbs]) for i in base]
+            + [(i, *[((1 << 61) - 77) ^ k for k in range(n_limbs)])
+               for i in far]
+            + [(i, None, *_LIMB_BASES[1:n_limbs]) for i in null]
+            + [(i, *[v] * n_limbs) for i, v in const])
+    cols = ", ".join(f"fp{k} long" for k in range(n_limbs))
+    return (spark.createDataFrame(rows, f"media_id long, {cols}"),
+            [f"fp{k}" for k in range(n_limbs)])
+
+
 def test_fingerprint_store_incremental_append(spark):
-    """Incremental index growth: build the store on corpus A, APPEND
-    batch B's band rows, and the pairing must equal a one-shot build
-    over A∪B — including the cross A↔B pairs only the append can see —
-    while the corpus-scale join still runs with ZERO Exchange (old and
-    appended files share the bucketed layout). Appending a mismatched
-    band layout refuses before writing anything."""
+    """Incremental index growth over 1, 2 and 4 limbs: build the store
+    on corpus A, APPEND batch B's band rows, and the pairing must equal
+    a one-shot in-memory pairing over A∪B — including the cross A↔B
+    pairs only the append can see — while the corpus-scale join still
+    runs with ZERO Exchange (old and appended files share the bucketed
+    layout). Appending a mismatched band layout refuses before writing
+    anything."""
     import pytest as _pt
 
     from comix_etl_spark.operators.dedup import (
         hamming_band_pairs, near_dup_pairs_from_store,
         persist_fingerprint_store)
 
-    base = (1 << 55) | (1 << 21) | 9
-    rows_a = [(i, base ^ (1 << (i * 3))) for i in range(8)]
-    rows_b = ([(i, base ^ (1 << (i * 3))) for i in range(8, 12)]
-              + [(50, (1 << 61) - 77), (51, None)])
-    fa = spark.createDataFrame(rows_a, "media_id long, dhash long")
-    fb = spark.createDataFrame(rows_b, "media_id long, dhash long")
-    persist_fingerprint_store(fa, "fp_inc_t", fp_cols=["dhash"],
-                              max_hamming=2)
-    try:
-        with _pt.raises(ValueError, match="layout mismatch"):
-            persist_fingerprint_store(fb, "fp_inc_t", fp_cols=["dhash"],
-                                      max_hamming=2, n_bands=5,
-                                      mode="append")
-        persist_fingerprint_store(fb, "fp_inc_t", fp_cols=["dhash"],
-                                  max_hamming=2, mode="append")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out = near_dup_pairs_from_store(spark, "fp_inc_t",
-                                        fp_cols=["dhash"], max_hamming=2)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        join_sub = plan[plan.index("SortMergeJoin"):]
-        assert "Exchange" not in join_sub, join_sub
-        both = spark.createDataFrame(rows_a + rows_b,
-                                     "media_id long, dhash long")
-        direct = sorted(map(tuple,
-                            hamming_band_pairs(both, fp_cols=["dhash"],
-                                               max_hamming=2).collect()))
-        stored = sorted(map(tuple, out.collect()))
-        assert direct == stored and len(stored) > 0
-        # the cross old↔new pairs are present — the whole point of append
-        assert any(a < 8 <= b for a, b, _ in stored)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS fp_inc_t")
+    for n_limbs in (1, 2, 4):
+        ham = 2 * n_limbs  # the equal-rate threshold: 2 bits per limb
+        fa, cols = _limb_fps(spark, n_limbs, ids=range(8))
+        fb, _ = _limb_fps(spark, n_limbs, ids=range(8, 12), far=(50,),
+                          null=(51,))
+        persist_fingerprint_store(fa, "fp_inc_t", fp_cols=cols,
+                                  max_hamming=ham)
+        try:
+            with _pt.raises(ValueError, match="layout mismatch"):
+                persist_fingerprint_store(fb, "fp_inc_t", fp_cols=cols,
+                                          max_hamming=ham, n_bands=ham + 3,
+                                          mode="append")
+            persist_fingerprint_store(fb, "fp_inc_t", fp_cols=cols,
+                                      max_hamming=ham, mode="append")
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            out = near_dup_pairs_from_store(spark, "fp_inc_t",
+                                            fp_cols=cols, max_hamming=ham)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            join_sub = plan[plan.index("SortMergeJoin"):]
+            assert "Exchange" not in join_sub, join_sub
+            direct = sorted(map(tuple, hamming_band_pairs(
+                fa.unionAll(fb), fp_cols=cols,
+                max_hamming=ham).collect()))
+            stored = sorted(map(tuple, out.collect()))
+            assert direct == stored and len(stored) > 0, n_limbs
+            # the cross old↔new pairs are present — the whole point of append
+            assert any(a < 8 <= b for a, b, _ in stored)
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                           str(64 * 1024 * 1024))
+            spark.sql("DROP TABLE IF EXISTS fp_inc_t")
 
 
 def test_band_store_append_crash_window_pending_refusal(spark, monkeypatch):
@@ -621,43 +627,49 @@ def test_band_store_append_crash_window_pending_refusal(spark, monkeypatch):
 
 
 def test_hamming_probe_from_store_matches_direct(spark):
-    """The fingerprint store's cross-set probe: decontaminating an eval
-    set against the PERSISTED store must return exactly
-    hamming_band_probe's output on the same fingerprints (no corpus
-    work per benchmark — band rows AND limbs come from the store), and
-    a max_hamming that voids the stored layout refuses."""
+    """The fingerprint store's cross-set probe over 1, 2 and 4 limbs:
+    decontaminating an eval set against the PERSISTED store must return
+    exactly hamming_band_probe's output on the same fingerprints (no
+    corpus work per benchmark — band rows AND limbs come from the
+    store). A max_hamming that voids the stored layout refuses, and so
+    does a limb list whose length differs from the stamped n_limbs."""
     import pytest as _pt
 
     from comix_etl_spark.operators.dedup import (
         hamming_band_probe, hamming_probe_from_store,
-        persist_fingerprint_store)
+        near_dup_pairs_from_store, persist_fingerprint_store)
 
-    base = (1 << 55) | (1 << 21) | 9
-    corpus = spark.createDataFrame(
-        [(i, base ^ (1 << (i * 3))) for i in range(12)]
-        + [(50, (1 << 61) - 77), (51, None)],
-        "media_id long, dhash long")
-    probe = spark.createDataFrame(
-        [(100, base), (101, (1 << 61) - 77 ^ 1), (102, 12345), (103, None)],
-        "media_id long, dhash long")
-    persist_fingerprint_store(corpus, "fp_probe_t", fp_cols=["dhash"],
-                              max_hamming=2)
-    try:
-        direct = sorted(map(tuple,
-                            hamming_band_probe(corpus, probe,
-                                               fp_cols=["dhash"],
-                                               max_hamming=2).collect()))
-        stored = sorted(map(tuple,
-                            hamming_probe_from_store(
-                                spark, "fp_probe_t", probe,
-                                fp_cols=["dhash"],
-                                max_hamming=2).collect()))
-        assert direct == stored and len(stored) > 0
-        with _pt.raises(ValueError, match="pigeonhole"):
-            hamming_probe_from_store(spark, "fp_probe_t", probe,
-                                     fp_cols=["dhash"], max_hamming=5)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS fp_probe_t")
+    for n_limbs in (1, 2, 4):
+        ham = 2 * n_limbs
+        corpus, cols = _limb_fps(spark, n_limbs, ids=range(12), far=(50,),
+                                 null=(51,))
+        probe, _ = _limb_fps(spark, n_limbs, base=(100,), null=(103,),
+                             const=((101, ((1 << 61) - 77) ^ 1),
+                                    (102, 12345)))
+        persist_fingerprint_store(corpus, "fp_probe_t", fp_cols=cols,
+                                  max_hamming=ham)
+        try:
+            direct = sorted(map(tuple, hamming_band_probe(
+                corpus, probe, fp_cols=cols, max_hamming=ham).collect()))
+            stored = sorted(map(tuple, hamming_probe_from_store(
+                spark, "fp_probe_t", probe, fp_cols=cols,
+                max_hamming=ham).collect()))
+            assert direct == stored, n_limbs
+            # the base probe matches every near item, the far probe the
+            # far item; nothing else is within the threshold
+            assert {p for _, p, _ in stored} == {100, 101}, stored
+            with _pt.raises(ValueError, match="pigeonhole"):
+                hamming_probe_from_store(spark, "fp_probe_t", probe,
+                                         fp_cols=cols, max_hamming=ham + 1)
+            wrong = cols[:-1] if n_limbs > 1 else cols * 2
+            with _pt.raises(ValueError, match="n_limbs"):
+                hamming_probe_from_store(spark, "fp_probe_t", probe,
+                                         fp_cols=wrong, max_hamming=ham)
+            with _pt.raises(ValueError, match="n_limbs"):
+                near_dup_pairs_from_store(spark, "fp_probe_t",
+                                          fp_cols=wrong, max_hamming=ham)
+        finally:
+            spark.sql("DROP TABLE IF EXISTS fp_probe_t")
 
 
 def test_minhash_store_probe_matches_direct(spark, sf_small):
@@ -774,54 +786,63 @@ def test_minhash_store_stats_finds_planted_hot_bucket(spark):
         spark.sql("DROP TABLE IF EXISTS mh_health_t")
 
 
-def test_legacy_append_marks_store_unverified_not_authoritative(spark, sf_small):
-    """Appending onto a PRE-STAMPING (legacy) store must NOT stamp the
-    appending caller's layout as authoritative: the legacy rows only
-    ever passed the weak band-count check, so their num_hashes/n/hash_fn
-    may differ from the caller's — a full-layout stamp would make that
-    mixed-signature store validate as clean on every future probe (the
-    silent-never-collide failure). The append instead marks the store
-    ``migrated-unverified`` and validation keeps falling back to the
-    legacy check."""
-    from comix_etl_spark.operators.dedup import persist_minhash_store
-    from comix_etl_spark.sinks.writers import (LAYOUT_UNVERIFIED,
-                                               get_store_props,
-                                               validate_store_props)
+def test_unstamped_store_append_and_probe_refuse(spark, sf_small):
+    """A MinHash or fingerprint table WITHOUT its layout stamp was not
+    built by persist_*: appending to it, probing it, pairing from it
+    and its health report all raise instead of guessing the layout
+    from the rows, and the refused append writes nothing."""
+    import pytest as _pt
+
+    from comix_etl_spark.operators.dedup import (
+        dedup_against_store, fingerprint_store_stats,
+        hamming_probe_from_store, minhash_store_stats,
+        near_dup_pairs_from_store, persist_fingerprint_store,
+        persist_minhash_store)
+    from comix_etl_spark.sinks.writers import get_store_props
 
     docs = spark.read.parquet(f"{sf_small}/documents.parquet")
+    batch = docs.filter(F.col("doc_id") % 10 == 0)
     common = dict(id_col="doc_id", text_col="text", num_hashes=16,
                   bands=4, n=3, hash_fn="md5")
-    persist_minhash_store(docs.filter(F.col("doc_id") % 10 <= 4),
-                          "mh_legacy_t", **common)
+    fps, cols = _limb_fps(spark, 1, ids=range(6))
     try:
-        # simulate a pre-r12 store: strip the stamped layout
-        spark.sql("ALTER TABLE mh_legacy_t UNSET TBLPROPERTIES "
+        persist_minhash_store(docs.filter(F.col("doc_id") % 10 <= 4),
+                              "mh_unstamped_t", **common)
+        persist_fingerprint_store(fps, "fp_unstamped_t", fp_cols=cols)
+        spark.sql("ALTER TABLE mh_unstamped_t UNSET TBLPROPERTIES "
                   "('comix.minhash.num_hashes', 'comix.minhash.bands', "
                   "'comix.minhash.n', 'comix.minhash.hash_fn', "
-                  "'comix.minhash.state')")  # pre-stamping ⇒ no state either
-        assert get_store_props(spark, "mh_legacy_t", "comix.minhash") == {}
-        # legacy append with a DIFFERENT num_hashes but matching bands:
-        # the band-count fallback cannot catch it (documented weakness)
-        persist_minhash_store(docs.filter(F.col("doc_id") % 10 >= 5),
-                              "mh_legacy_t", mode="append",
-                              **{**common, "num_hashes": 32})
-        props = get_store_props(spark, "mh_legacy_t", "comix.minhash")
-        # r14: the append protocol also stamps state=committed
-        assert props == {"layout": LAYOUT_UNVERIFIED, "state": "committed"}
-        # the marker must read as NOT-verified — probes keep the legacy
-        # check instead of trusting a stamp over unverified rows
-        assert validate_store_props(
-            spark, "mh_legacy_t", "comix.minhash",
-            {"num_hashes": 32, "bands": 4, "n": 3, "hash_fn": "md5"},
-            "probe") is False
-        # a LATER append onto the marked store stays on the legacy path
-        # too (must not raise a layout mismatch against the marker)
-        persist_minhash_store(docs.filter(F.col("doc_id") % 10 == 0),
-                              "mh_legacy_t", mode="append", **common)
-        assert get_store_props(spark, "mh_legacy_t", "comix.minhash") \
-            == {"layout": LAYOUT_UNVERIFIED, "state": "committed"}
+                  "'comix.minhash.state')")
+        spark.sql("ALTER TABLE fp_unstamped_t UNSET TBLPROPERTIES "
+                  "('comix.fp.n_bands', 'comix.fp.n_limbs', "
+                  "'comix.fp.state')")
+        assert get_store_props(spark, "mh_unstamped_t", "comix.minhash") == {}
+        assert get_store_props(spark, "fp_unstamped_t", "comix.fp") == {}
+        n_mh = spark.table("mh_unstamped_t").count()
+        n_fp = spark.table("fp_unstamped_t").count()
+        refused = [
+            lambda: persist_minhash_store(
+                docs.filter(F.col("doc_id") % 10 >= 5), "mh_unstamped_t",
+                mode="append", **common),
+            lambda: dedup_against_store(batch, docs, "mh_unstamped_t",
+                                        **common),
+            lambda: minhash_store_stats(spark, "mh_unstamped_t"),
+            lambda: persist_fingerprint_store(
+                fps, "fp_unstamped_t", fp_cols=cols, mode="append"),
+            lambda: near_dup_pairs_from_store(spark, "fp_unstamped_t",
+                                              fp_cols=cols),
+            lambda: hamming_probe_from_store(spark, "fp_unstamped_t", fps,
+                                             fp_cols=cols),
+            lambda: fingerprint_store_stats(spark, "fp_unstamped_t"),
+        ]
+        for call in refused:
+            with _pt.raises(ValueError, match="no stamped"):
+                call()
+        assert spark.table("mh_unstamped_t").count() == n_mh
+        assert spark.table("fp_unstamped_t").count() == n_fp
     finally:
-        spark.sql("DROP TABLE IF EXISTS mh_legacy_t")
+        spark.sql("DROP TABLE IF EXISTS mh_unstamped_t")
+        spark.sql("DROP TABLE IF EXISTS fp_unstamped_t")
 
 
 def test_store_props_quote_roundtrip(spark, sf_small):
@@ -916,13 +937,11 @@ def test_image_dhash_qwide_four_limbs(spark):
 
 def test_hamming_band_probe_two_limb_cross_set(spark):
     """126-bit cross-set probe: near pairs found across the limb
-    boundary, far and partial-NULL rows drop, no corpus self-pairs,
-    single-limb form equals the legacy image_probe_pairs; guards on
-    band width and recall hold."""
+    boundary, far and partial-NULL rows drop, no corpus self-pairs;
+    guards on band width and recall hold."""
     import pytest as _pt
 
-    from comix_etl_spark.operators.dedup import (
-        hamming_band_probe, image_probe_pairs)
+    from comix_etl_spark.operators.dedup import hamming_band_probe
 
     h0, v0 = (1 << 45) | 17, (1 << 29) | (1 << 4)
     corpus = spark.createDataFrame(
@@ -942,13 +961,9 @@ def test_hamming_band_probe_two_limb_cross_set(spark):
     with _pt.raises(ValueError):
         hamming_band_probe(corpus, probe, fp_cols=["h", "v"],
                            max_hamming=0, n_bands=1)
-    # single-limb delegation: identical to legacy probe output
-    c1 = corpus.select("media_id", F.col("h").alias("dhash"))
-    p1 = probe.select("media_id", F.col("h").alias("dhash"))
-    a = sorted(map(tuple, image_probe_pairs(c1, p1, max_hamming=2).collect()))
-    b = sorted(map(tuple, hamming_band_probe(c1, p1, fp_cols=["dhash"],
-                                             max_hamming=2).collect()))
-    assert a == b
+    with _pt.raises(ValueError, match="pigeonhole"):
+        hamming_band_probe(corpus, probe, fp_cols=["h", "v"],
+                           max_hamming=5, n_bands=5)
 
 
 def test_hamming_fp_dedup_wide_keeper_election(spark):
@@ -1029,7 +1044,7 @@ def test_image_probe_pairs_cross_set(spark):
     """Corpus-vs-probe banded matches: near pairs found, far pairs and
     NULLs dropped, no corpus self-pairs, both orientations of closeness
     covered (probe id smaller AND larger than corpus id)."""
-    from comix_etl_spark.operators.dedup import image_probe_pairs
+    from comix_etl_spark.operators.dedup import hamming_band_probe
 
     base = (1 << 40) | (1 << 22) | 7
     corpus = spark.createDataFrame(
@@ -1040,8 +1055,8 @@ def test_image_probe_pairs_cross_set(spark):
         [(1, base), (2, base ^ (1 << 9) ^ (1 << 33)), (3, None)],
         "media_id long, dhash long")
     got = {(r.corpus_id, r.probe_id): r.hamming
-           for r in image_probe_pairs(corpus, probe,
-                                      max_hamming=2).collect()}
+           for r in hamming_band_probe(corpus, probe, fp_cols=["dhash"],
+                                       max_hamming=2).collect()}
     assert got[(100, 1)] == 0 and got[(100, 2)] == 2
     assert got[(101, 1)] == 1 and got[(101, 2)] == 1
     assert not any(c == 102 or c == 103 or p == 3 for c, p in got), got
@@ -1055,13 +1070,13 @@ def test_image_probe_pairs_broadcasts_probe_side(spark):
     import io
     from contextlib import redirect_stdout
 
-    from comix_etl_spark.operators.dedup import image_probe_pairs
+    from comix_etl_spark.operators.dedup import hamming_band_probe
 
     corpus = spark.range(1000).selectExpr(
         "id AS media_id", "xxhash64(id) & 9223372036854775807 AS dhash")
     probe = spark.range(20).selectExpr(
         "id AS media_id", "xxhash64(id + 7) & 9223372036854775807 AS dhash")
-    out = image_probe_pairs(corpus, probe)
+    out = hamming_band_probe(corpus, probe, fp_cols=["dhash"])
     buf = io.StringIO()
     with redirect_stdout(buf):
         out.explain("formatted")

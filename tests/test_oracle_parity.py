@@ -32,3 +32,31 @@ def test_rows_only_runs(spark, sf_small, name):
     df = q.builder(spark, sf_small)
     assert df.count() >= 0
     assert len(df.columns) > 0
+
+
+def test_ccnet_buckets_no_scored_document_matches_oracle(spark, sf_small,
+                                                         tmp_path):
+    """When no document has >= 2 tokens the fence frame has no input:
+    the query must still produce one NULL fence row so every document
+    comes out 'unscored', as the DuckDB oracle does — not drop them
+    all through an empty cross join."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{sf_small}/documents.parquet").slice(0, 20)
+    texts = [["single", "", None, "  word  "][i % 4]
+             for i in range(docs.num_rows)]
+    docs = docs.set_column(docs.schema.get_field_index("text"), "text",
+                           pa.array(texts, pa.string()))
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{tmp_path / 'documents.parquet'}')")
+    try:
+        q = QUERIES["ccnet_buckets"]
+        out = q.builder(spark, str(tmp_path))
+        assert {r.bucket for r in out.collect()} == {"unscored"}
+        compare(out, con, q.oracle)
+    finally:
+        con.close()

@@ -138,41 +138,22 @@ def test_grouped_percentiles_interpolation(spark):
     assert row["n_rows"] == 4
 
 
-def test_percentile_route_flips_on_wide_group(spark):
-    """Explicit exact/approx routing (r9 advisory #1, narrowed r15):
-    with an explicit ``exact_group_limit`` the route still flips to
-    the approx sketch past the measured max per-group volume; the
-    exact side now runs the DISTRIBUTED exact form (no Percentile
-    aggregate, no approx_percentile in the plan) and still matches
-    F.percentile interpolation; the approx route lands within sketch
-    tolerance and partial-aggregates as ApproximatePercentile."""
-    from comix_etl_spark.operators.profile import (
-        grouped_percentiles, percentile_route)
+def test_grouped_percentile_cont_rejects_probs_outside_unit_interval(spark):
+    """A prob outside [0, 1] raises, as F.percentile does, instead of
+    silently returning NULL quantiles — on both the single-prob and
+    the multi-prob route."""
+    from comix_etl_spark.operators.profile import (grouped_percentile_cont,
+                                                   grouped_percentiles)
 
-    # skewed input: group 'wide' has 40 rows, 'slim' has 4
-    rows = ([("wide", float(v)) for v in range(40)]
-            + [("slim", float(v)) for v in (1, 2, 3, 4)])
-    df = spark.createDataFrame(rows, "g string, v double")
-    _, route_hi = percentile_route(df, "g", exact_group_limit=100)
-    _, route_lo = percentile_route(df, "g", exact_group_limit=10)
-    assert route_hi == "exact" and route_lo == "approx"
-    # the flip is driven by the MAX group, not the average (22 here)
-    _, route_mid = percentile_route(df, "g", exact_group_limit=30)
-    assert route_mid == "approx"
-    exact = grouped_percentiles(df, "g", "v", probs=(0.5,),
-                                exact_group_limit=100)
-    approx = grouped_percentiles(df, "g", "v", probs=(0.5,),
-                                 exact_group_limit=10)
-    assert "approx_percentile(" not in \
-        exact._jdf.queryExecution().analyzed().toString()
-    assert "approx_percentile(" in \
-        approx._jdf.queryExecution().analyzed().toString()
-    ex = {r["g"]: r["p50"] for r in exact.collect()}
-    ap = {r["g"]: r["p50"] for r in approx.collect()}
-    assert ex["wide"] == pytest.approx(19.5) and ex["slim"] == pytest.approx(2.5)
-    # approx_percentile returns an observed value, not an interpolation:
-    # within one rank of the true median at this accuracy
-    assert abs(ap["wide"] - 19.5) <= 1.0 and abs(ap["slim"] - 2.5) <= 1.0
+    df = spark.createDataFrame([("a", 1.0), ("a", 2.0), ("b", 3.0)],
+                               "g string, v double")
+    for probs in ((1.5,), (0.5, -0.1), (float("nan"),)):
+        with pytest.raises(ValueError, match=r"\[0, 1\]"):
+            grouped_percentile_cont(df, "g", "v", probs)
+    with pytest.raises(ValueError, match=r"\[0, 1\]"):
+        grouped_percentiles(df, "g", "v", probs=(0.5, 95))
+    assert {r["g"]: r["_q0"] for r in grouped_percentile_cont(
+        df, "g", "v", (0.0, 1.0)).collect()} == {"a": 1.0, "b": 3.0}
 
 
 def test_grouped_percentile_cont_matches_percentile_bitwise(spark):

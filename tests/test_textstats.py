@@ -500,7 +500,7 @@ def test_bm25_store_delta_append_matches_one_shot_build(spark, sf_small):
     other half, and the probe must be bit-identical to (a) a one-shot
     build over the union and (b) the direct bm25_scores on the union —
     N/Σdl are exact integer adds, df falls out of the unioned postings.
-    Append validates layout and refuses a stats-less store."""
+    Append validates layout and refuses an unstamped table."""
     import pytest as _pt
     from pyspark.sql import functions as F
 
@@ -532,11 +532,13 @@ def test_bm25_store_delta_append_matches_one_shot_build(spark, sf_small):
             TS.persist_bm25_store(delta, "bm25_app_t", id_col="doc_id",
                                   text_col="text", n_buckets=8,
                                   mode="append")
-        # stats-less store (props stripped) → loud refusal: nothing
+        # unstamped table (props stripped) → loud refusal: nothing
         # sound to merge the delta stats into
         spark.sql("ALTER TABLE bm25_app_t UNSET TBLPROPERTIES "
-                  "('comix.bm25.n', 'comix.bm25.sum_dl')")
-        with _pt.raises(ValueError, match="nothing sound"):
+                  "('comix.bm25.n', 'comix.bm25.sum_dl', "
+                  "'comix.bm25.id_col', 'comix.bm25.analyzer', "
+                  "'comix.bm25.n_buckets', 'comix.bm25.state')")
+        with _pt.raises(ValueError, match="no stamped"):
             TS.persist_bm25_store(delta, "bm25_app_t", id_col="doc_id",
                                   text_col="text", mode="append")
     finally:
@@ -598,11 +600,11 @@ def test_bm25_store_append_crash_window_leaves_pending_and_probes_refuse(
 
 
 def test_bm25_store_append_refuses_pre_r13_stamp(spark, sf_small):
-    """r14 (ADVICE r13): a store stamped by the pre-r13 layout (key
-    'tokenizer' — redacted by Spark, so never verifiable — and no
-    'analyzer'/'n_buckets') must refuse an append with a TARGETED
-    'pre-r13 stamp, rebuild' error, not a generic layout mismatch
-    reporting store=None for keys the old stamp never had."""
+    """A store stamped by the pre-r13 layout (key 'tokenizer' —
+    redacted by Spark, so never verifiable — and no 'analyzer' /
+    'n_buckets') refuses an append with a layout mismatch, and a table
+    with NO stamp refuses appends and probes alike: every store reads
+    its layout from the stamp, never from a guess."""
     import pytest as _pt
     from pyspark.sql import functions as F
 
@@ -617,9 +619,23 @@ def test_bm25_store_append_refuses_pre_r13_stamp(spark, sf_small):
                   "('comix.bm25.analyzer', 'comix.bm25.n_buckets')")
         spark.sql("ALTER TABLE bm25_legacy_t SET TBLPROPERTIES "
                   "('comix.bm25.tokenizer'='whitespace_v1')")
-        with _pt.raises(ValueError, match="pre-r13"):
+        with _pt.raises(ValueError, match="layout mismatch"):
             TS.persist_bm25_store(delta, "bm25_legacy_t", id_col="doc_id",
                                   text_col="text", mode="append")
+        # no stamp at all
+        spark.sql("ALTER TABLE bm25_legacy_t UNSET TBLPROPERTIES "
+                  "('comix.bm25.tokenizer', 'comix.bm25.n', "
+                  "'comix.bm25.sum_dl', 'comix.bm25.id_col', "
+                  "'comix.bm25.state')")
+        n_rows = spark.table("bm25_legacy_t").count()
+        with _pt.raises(ValueError, match="no stamped"):
+            TS.persist_bm25_store(delta, "bm25_legacy_t", id_col="doc_id",
+                                  text_col="text", mode="append")
+        with _pt.raises(ValueError, match="no stamped"):
+            TS.bm25_scores_from_store(spark, "bm25_legacy_t", ["spark"])
+        with _pt.raises(ValueError, match="no stamped"):
+            TS.bm25_store_stats(spark, "bm25_legacy_t")
+        assert spark.table("bm25_legacy_t").count() == n_rows
     finally:
         spark.sql("DROP TABLE IF EXISTS bm25_legacy_t")
 
