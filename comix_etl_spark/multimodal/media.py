@@ -144,37 +144,69 @@ def _area_resize(img, out_h: int, out_w: int):
     return s / rc[:, None] / cc[None, :]
 
 
-def image_dhash(df: DataFrame, *, id_col: str = "media_id",
+def image_dhash(df: DataFrame, *, n_limbs: int = 1,
+                id_col: str = "media_id",
                 payload_col: str = "payload") -> DataFrame:
-    """63-bit difference hash (dHash) per image — the perceptual
-    fingerprint behind LAION-style image dedup (recrawled /
-    re-encoded / brightness-shifted copies of a picture hash close in
-    Hamming distance while distinct pictures land far apart).
+    """Difference-hash (dHash) perceptual fingerprint per image, as
+    ``n_limbs`` 63-bit BIGINT limbs — the fingerprint behind LAION-style
+    image dedup (recrawled / re-encoded / brightness-shifted copies of
+    a picture hash close in Hamming distance while distinct pictures
+    land far apart).
+
+    Output: ``(media_id, dhash)`` for ``n_limbs=1``; for 2–4 the prefix
+    of ``(dhash_h, dhash_v, dhash_d, dhash_a)`` — 126, 189 or 252 bits.
+    Any other ``n_limbs`` raises ``ValueError``.
 
     Per payload: decode to grayscale (``_decode_gray``), area-mean
-    resize to 9×8, then bit b = r*8+c is 1 iff cell (r, c+1) > (r, c) —
-    the standard dHash gradient sign, invariant under any monotone
-    global brightness/contrast shift. Bit 63 is skipped (int64 sign
-    bit — the same convention as this repo's ``simhash``), so the
-    fingerprint is a non-negative BIGINT that any engine can band,
-    xor and popcount. Undecodable payloads yield NULL (callers drop or
+    resize to the 9×8 grid ``g``, then pack each limb's 63 gradient
+    signs (bit i = 1 iff the i-th comparison holds). Every limb is a
+    strict comparison of two cells, so all are invariant under any
+    monotone global brightness/contrast shift. Bit 63 is never used
+    (int64 sign bit — the convention of this repo's ``simhash``), so
+    every limb is a non-negative BIGINT that any engine can band, xor
+    and popcount. The limbs, all over the same grid:
+      h: bit r*8+c = g(r, c+1) > g(r, c) (8 rows × 8 comparisons, bit
+         63 skipped) — the standard dHash, and the one-limb ``dhash``;
+      v: bit r*9+c = g(r+1, c) > g(r, c), r∈0..6 (7 × 9 = 63 bits);
+      d: bit r*8+c = g(r+1, c+1) > g(r, c), r∈0..6, c∈0..7, plus
+         bit 56+c = g(1, c) > g(0, c+1), c∈0..6;
+      a: bit r*8+c = g(r+1, c) > g(r, c+1), r∈0..6, c∈0..7, plus
+         bit 56+c = g(0, c+2) > g(0, c), c∈0..6.
+
+    WHY MORE LIMBS (measured r9/r10, PLANS.md "image_dedup at 10×" and
+    "r10 scale-evidence run"): banded LSH over one 63-bit limb caps out
+    near ~10M items — at minimal banding (3 × 21-bit bands) the
+    accidental-candidate term grows as ~n²/2²¹ and the band value space
+    can't be widened without voiding the pigeonhole guarantee. Each
+    limb adds 63 bits to the concatenated space that
+    ``operators.dedup.hamming_band_pairs`` bands (Hamming distance is
+    the SUM of per-limb xor popcounts), so at an equal-rate threshold
+    the bands widen: 63 bits at Hamming ≤ 2 → 3 × 21-bit bands
+    (accidental candidates cross true pairs near ~3M items); 126 at
+    ≤ 4 → 5 × 25-bit (~30M); 189 at ≤ 6 → 7 × 27-bit (~120M); 252 at
+    ≤ 6 → 7 × 36-bit, which by the crossover rule
+    (2^band_bits ≫ corpus/n_bands) reaches the 10⁹ LAION regime. The
+    decode and resize — the real work — are shared by every limb;
+    each extra limb costs one gradient pass over the 9×8 grid.
+
+    Quarantine: undecodable payloads yield NULL limbs (callers drop or
     quarantine them; silently hashing garbage would cluster all broken
-    files together). Images SMALLER than the 9×8 dHash grid are
-    quarantined to NULL too: ``_area_resize`` would assign some target
-    cells zero-width source blocks (repeated reduceat edges), whose
-    0/0 means are inf/nan — distinct tiny images would collapse onto
-    similar nan-driven bit patterns and get deleted as "near-dups".
-    NULL ids are dropped before the decode stage (an id-less payload
-    can't participate in keeper election anyway, and ``int(mid)``
-    on a NULL would fail the whole Arrow batch).
+    files together). Images SMALLER than the 9×8 grid are quarantined
+    to NULL too: ``_area_resize`` would assign some target cells
+    zero-width source blocks (repeated reduceat edges), whose 0/0 means
+    are inf/nan — distinct tiny images would collapse onto similar
+    nan-driven bit patterns and get deleted as "near-dups". NULL ids
+    are dropped before the decode stage (an id-less payload can't
+    participate in keeper election anyway, and ``int(mid)`` on a NULL
+    would fail the whole Arrow batch).
 
     Plan shape: one projected (id, payload) scan through an
     Arrow-batched ``mapInPandas`` — the decode stage pattern of
     ``decode_image_features``. No shuffle; pair finding happens
-    downstream on the 8-byte fingerprints ONLY, so at 100 TB the image
-    bytes are read exactly once and never leave their scan tasks.
-    The decode body is a deliberate per-item numpy loop: at thumbnail
-    sizes (~300 B payloads) it measures ~23 µs/image, and a
+    downstream on the 8-byte limbs ONLY, so at 100 TB the image bytes
+    are read exactly once and never leave their scan tasks. The decode
+    body is a deliberate per-item numpy loop: at thumbnail sizes
+    (~300 B payloads) it measures ~23 µs/image, and a
     same-shape-stacking vectorized variant was built and measured
     SLOWER (3.8 s vs 2.3 s per 100k — the gather/scatter around the
     batch outweighs the trivial per-image numpy win), so the simple
@@ -185,197 +217,41 @@ def image_dhash(df: DataFrame, *, id_col: str = "media_id",
     """
     import numpy as np
 
-    def dh(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        shifts = np.arange(63, dtype=np.uint64)
-        for pdf in batches:
-            ids, fps = [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                img = _decode_gray(bytes(payload)) if payload is not None else None
-                if img is None or img.shape[0] < DHASH_H or img.shape[1] < DHASH_W:
-                    ids.append(int(mid)); fps.append(None)
-                    continue
-                g = _area_resize(img, DHASH_H, DHASH_W)
-                bits = (g[:, 1:] > g[:, :-1]).flatten()[:63]
-                fp = int((bits.astype(np.uint64) << shifts).sum())
-                ids.append(int(mid)); fps.append(fp)
-            yield pd.DataFrame({"media_id": ids,
-                                "dhash": pd.array(fps, dtype="Int64")})
-
-    return (df.filter(F.col(id_col).isNotNull())
-            .select(F.col(id_col).alias(id_col),
-                    F.col(payload_col).alias(payload_col))
-            .mapInPandas(dh, schema="media_id long, dhash long"))
-
-
-def image_dhash_wide(df: DataFrame, *, id_col: str = "media_id",
-                     payload_col: str = "payload") -> DataFrame:
-    """126-bit wide perceptual fingerprint — two 63-bit limbs
-    ``(dhash_h, dhash_v)``: the horizontal dHash of ``image_dhash``
-    plus its vertical sibling over the SAME 9×8 area-mean grid
-    (bit r*9+c of the v-limb is 1 iff cell (r+1, c) > (r, c) —
-    7 comparison rows × 9 columns = exactly 63 bits, no skip needed).
-
-    WHY WIDE (measured r9, PLANS.md "image_dedup at 10×"): banded LSH
-    over a 63-bit fingerprint caps out near ~10M items — at minimal
-    banding (3 × 21-bit bands) the accidental-candidate term grows as
-    ~n²/2²¹ and the band value space can't be widened without voiding
-    the pigeonhole guarantee. Doubling the bit space squares the
-    per-band value space at equal band COUNT (126/5 ⇒ 25-bit bands =
-    33M values vs 21-bit = 2M), pushing the same machinery to ~10⁹
-    items (LAION scale). Downstream banding treats the two limbs as
-    one concatenated 126-bit space (``operators.dedup.
-    hamming_band_pairs``); Hamming distance is the SUM of per-limb
-    xor popcounts — still pure JVM codegen on two BIGINT columns.
-
-    Cost: one extra gradient pass over the already-computed 9×8 grid —
-    the decode and resize (the real work) are shared with the 63-bit
-    path. Same quarantine contract as ``image_dhash``: undecodable or
-    sub-9×8 payloads → NULL limbs; NULL ids dropped.
-    """
-    import numpy as np
+    if n_limbs not in (1, 2, 3, 4):
+        raise ValueError(f"n_limbs={n_limbs!r}: must be 1, 2, 3 or 4")
+    names = (["dhash"] if n_limbs == 1
+             else [f"dhash_{k}" for k in "hvda"[:n_limbs]])
+    limbs = (
+        lambda g: (g[:, 1:] > g[:, :-1]).ravel()[:63],
+        lambda g: (g[1:, :] > g[:-1, :]).ravel(),
+        lambda g: np.concatenate(((g[1:, 1:] > g[:-1, :-1]).ravel(),
+                                  g[1, :7] > g[0, 1:8])),
+        lambda g: np.concatenate(((g[1:, :-1] > g[:-1, 1:]).ravel(),
+                                  g[0, 2:9] > g[0, 0:7])),
+    )[:n_limbs]
 
     def dh(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         shifts = np.arange(63, dtype=np.uint64)
         for pdf in batches:
-            ids, hs, vs = [], [], []
+            ids, cols = [], [[] for _ in limbs]
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
                 img = _decode_gray(bytes(payload)) if payload is not None else None
-                if img is None or img.shape[0] < DHASH_H or img.shape[1] < DHASH_W:
-                    ids.append(int(mid)); hs.append(None); vs.append(None)
-                    continue
-                g = _area_resize(img, DHASH_H, DHASH_W)
-                hbits = (g[:, 1:] > g[:, :-1]).flatten()[:63]
-                vbits = (g[1:, :] > g[:-1, :]).flatten()[:63]
-                hs.append(int((hbits.astype(np.uint64) << shifts).sum()))
-                vs.append(int((vbits.astype(np.uint64) << shifts).sum()))
                 ids.append(int(mid))
-            yield pd.DataFrame({"media_id": ids,
-                                "dhash_h": pd.array(hs, dtype="Int64"),
-                                "dhash_v": pd.array(vs, dtype="Int64")})
-
-    return (df.filter(F.col(id_col).isNotNull())
-            .select(F.col(id_col).alias(id_col),
-                    F.col(payload_col).alias(payload_col))
-            .mapInPandas(dh, schema="media_id long, dhash_h long, dhash_v long"))
-
-
-def image_dhash_xwide(df: DataFrame, *, id_col: str = "media_id",
-                      payload_col: str = "payload") -> DataFrame:
-    """189-bit THREE-limb perceptual fingerprint ``(dhash_h, dhash_v,
-    dhash_d)`` — the next rung of the width ladder measured in the r10
-    crossover sweep (PLANS.md: narrow63 accidental candidates cross
-    true pairs near ~3M items, wide126 near ~30M; three limbs at
-    max_hamming=6 give 7 × 27-bit bands ⇒ crossover ~120M). The
-    pairing/probe/election machinery is the SAME N-limb code
-    (``hamming_band_pairs`` / ``hamming_band_probe`` /
-    ``hamming_fp_dedup``) — this function is the ONLY new code a rung
-    costs, exactly as the ladder note claims.
-
-    Limbs over the shared 9×8 area-mean grid: h and v exactly as
-    ``image_dhash_wide``; the d-limb packs 56 main-diagonal gradient
-    signs (bit r*8+c = cell (r+1, c+1) > cell (r, c), r∈0..6, c∈0..7)
-    plus 7 anti-diagonal signs from the top rows (bit 56+c =
-    cell (1, c) > cell (0, c+1), c∈0..6) — 63 used bits, no sign bit,
-    all invariant under monotone brightness shifts like the other
-    limbs. Same quarantine contract: undecodable / sub-9×8 payloads →
-    all limbs NULL; NULL ids dropped.
-    """
-    import numpy as np
-
-    def dh(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        shifts = np.arange(63, dtype=np.uint64)
-        d_shifts = np.arange(56, dtype=np.uint64)
-        a_shifts = np.arange(56, 63, dtype=np.uint64)
-        for pdf in batches:
-            ids, hs, vs, ds = [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                img = _decode_gray(bytes(payload)) if payload is not None else None
                 if img is None or img.shape[0] < DHASH_H or img.shape[1] < DHASH_W:
-                    ids.append(int(mid))
-                    hs.append(None); vs.append(None); ds.append(None)
+                    for col in cols:
+                        col.append(None)
                     continue
                 g = _area_resize(img, DHASH_H, DHASH_W)
-                hbits = (g[:, 1:] > g[:, :-1]).flatten()[:63]
-                vbits = (g[1:, :] > g[:-1, :]).flatten()[:63]
-                dbits = (g[1:, 1:] > g[:-1, :-1]).flatten()[:56]
-                abits = (g[1, :7] > g[0, 1:8])
-                hs.append(int((hbits.astype(np.uint64) << shifts).sum()))
-                vs.append(int((vbits.astype(np.uint64) << shifts).sum()))
-                ds.append(int((dbits.astype(np.uint64) << d_shifts).sum()
-                              + (abits.astype(np.uint64) << a_shifts).sum()))
-                ids.append(int(mid))
-            yield pd.DataFrame({"media_id": ids,
-                                "dhash_h": pd.array(hs, dtype="Int64"),
-                                "dhash_v": pd.array(vs, dtype="Int64"),
-                                "dhash_d": pd.array(ds, dtype="Int64")})
+                for col, limb in zip(cols, limbs):
+                    col.append(int((limb(g).astype(np.uint64) << shifts).sum()))
+            yield pd.DataFrame({"media_id": ids, **{
+                n: pd.array(col, dtype="Int64") for n, col in zip(names, cols)}})
 
     return (df.filter(F.col(id_col).isNotNull())
             .select(F.col(id_col).alias(id_col),
                     F.col(payload_col).alias(payload_col))
-            .mapInPandas(dh, schema="media_id long, dhash_h long, "
-                                    "dhash_v long, dhash_d long"))
-
-
-def image_dhash_qwide(df: DataFrame, *, id_col: str = "media_id",
-                      payload_col: str = "payload") -> DataFrame:
-    """252-bit FOUR-limb perceptual fingerprint ``(dhash_h, dhash_v,
-    dhash_d, dhash_a)`` — the final rung of the width ladder: four
-    63-bit limbs at max_hamming=6 give 7 × 36-bit bands, which by the
-    crossover rule (2^band_bits ≫ corpus/n_bands) carries banded
-    dedup into the 10⁹ LAION regime the PLANS.md ladder note names.
-    As with every rung, the pairing/probe/election machinery is the
-    SAME N-limb code (``hamming_band_pairs`` / ``hamming_band_probe``
-    / ``hamming_fp_dedup``) — this function is the only new code.
-
-    Limbs over the shared 9×8 area-mean grid: h, v, d exactly as
-    ``image_dhash_xwide``; the a-limb packs 56 ANTI-diagonal gradient
-    signs (bit r*8+c = cell (r+1, c) > cell (r, c+1), r∈0..6, c∈0..7)
-    plus 7 skip-one horizontal signs from the top row (bit 56+c =
-    cell (0, c+2) > cell (0, c), c∈0..6) — 63 used bits, no sign bit,
-    all invariant under monotone brightness shifts. Same quarantine
-    contract: undecodable / sub-9×8 payloads → all limbs NULL; NULL
-    ids dropped."""
-    import numpy as np
-
-    def dh(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        shifts = np.arange(63, dtype=np.uint64)
-        d_shifts = np.arange(56, dtype=np.uint64)
-        x_shifts = np.arange(56, 63, dtype=np.uint64)
-        for pdf in batches:
-            ids, hs, vs, ds, qs = [], [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                img = _decode_gray(bytes(payload)) if payload is not None else None
-                if img is None or img.shape[0] < DHASH_H or img.shape[1] < DHASH_W:
-                    ids.append(int(mid))
-                    hs.append(None); vs.append(None)
-                    ds.append(None); qs.append(None)
-                    continue
-                g = _area_resize(img, DHASH_H, DHASH_W)
-                hbits = (g[:, 1:] > g[:, :-1]).flatten()[:63]
-                vbits = (g[1:, :] > g[:-1, :]).flatten()[:63]
-                dbits = (g[1:, 1:] > g[:-1, :-1]).flatten()[:56]
-                abits = (g[1, :7] > g[0, 1:8])
-                qmain = (g[1:, :-1] > g[:-1, 1:]).flatten()[:56]
-                qextra = (g[0, 2:9] > g[0, 0:7])
-                hs.append(int((hbits.astype(np.uint64) << shifts).sum()))
-                vs.append(int((vbits.astype(np.uint64) << shifts).sum()))
-                ds.append(int((dbits.astype(np.uint64) << d_shifts).sum()
-                              + (abits.astype(np.uint64) << x_shifts).sum()))
-                qs.append(int((qmain.astype(np.uint64) << d_shifts).sum()
-                              + (qextra.astype(np.uint64) << x_shifts).sum()))
-                ids.append(int(mid))
-            yield pd.DataFrame({"media_id": ids,
-                                "dhash_h": pd.array(hs, dtype="Int64"),
-                                "dhash_v": pd.array(vs, dtype="Int64"),
-                                "dhash_d": pd.array(ds, dtype="Int64"),
-                                "dhash_a": pd.array(qs, dtype="Int64")})
-
-    return (df.filter(F.col(id_col).isNotNull())
-            .select(F.col(id_col).alias(id_col),
-                    F.col(payload_col).alias(payload_col))
-            .mapInPandas(dh, schema="media_id long, dhash_h long, "
-                                    "dhash_v long, dhash_d long, "
-                                    "dhash_a long"))
+            .mapInPandas(dh, schema=", ".join(
+                ["media_id long"] + [f"{n} long" for n in names])))
 
 
 def frame_sample_plan(df: DataFrame, *, every_ms: int = 1000,

@@ -847,7 +847,7 @@ def hamming_band_pairs(fp: DataFrame, *, id_col: str = "media_id",
                        n_bands: int | None = None) -> DataFrame:
     """Near-duplicate pairs by banded Hamming LSH over a fingerprint of
     one OR MORE 63-bit BIGINT limbs (``multimodal.media.image_dhash``:
-    one limb; ``image_dhash_wide``: ``(dhash_h, dhash_v)``), banded over
+    one limb, or ``(dhash_h, dhash_v)`` at ``n_limbs=2``), banded over
     the CONCATENATED bit space — the LAION-style image-dedup pairing
     stage. Output: (id_a < id_b, hamming) — verified pairs only.
 
@@ -983,19 +983,19 @@ def image_dedup(df: DataFrame, *, id_col: str = "media_id",
     from comix_etl_spark.multimodal.media import image_dhash
 
     fps = image_dhash(df, id_col=id_col, payload_col=payload_col)
-    return hamming_fp_dedup(fps, fp_col="dhash", max_hamming=max_hamming,
+    return hamming_fp_dedup(fps, fp_cols=["dhash"], max_hamming=max_hamming,
                             n_bands=n_bands)
 
 
-def hamming_fp_dedup(fps: DataFrame, *, fp_col: str | list[str],
+def hamming_fp_dedup(fps: DataFrame, *, fp_cols: list[str],
                      max_hamming: int = 2,
                      n_bands: int | None = None) -> DataFrame:
     """Generic Hamming-fingerprint dedup core shared by every
     perceptual modality (image dHash, audio energy contour, the wide
     126-bit two-limb image fingerprint, any future sketch):
     banded-Hamming pairing + greedy min-id keeper election over a
-    ``(media_id, <limbs...>)`` frame. ``fp_col`` is one column name
-    (63-bit fingerprint) or a LIST of limb columns banded over the
+    ``(media_id, <limbs...>)`` frame. ``fp_cols`` lists the 63-bit limb
+    columns — one for a 63-bit fingerprint — banded over the
     concatenated bit space (``hamming_band_pairs``). NULL fingerprints
     (undecodable payloads) are dropped — an item is dropped when ANY
     limb is NULL (limbs come from one decode, so partial NULLs only
@@ -1011,7 +1011,6 @@ def hamming_fp_dedup(fps: DataFrame, *, fp_col: str | list[str],
     pinned — read three times (keeper anti-join + both degree-union
     sides), bounded by the corpus's true near-dup volume.
     """
-    fp_cols = [fp_col] if isinstance(fp_col, str) else list(fp_col)
     fps = fps.filter(_all_limbs_present(fp_cols)).localCheckpoint(eager=True)
     pairs = hamming_band_pairs(fps, fp_cols=fp_cols,
                                max_hamming=max_hamming,
@@ -1462,7 +1461,7 @@ def video_dedup(frames: DataFrame, *, id_col: str = "media_id",
     frame_fps = image_dhash(frames, id_col=id_col, payload_col=payload_col)
     vfps = majority_fingerprint(frame_fps, id_col="media_id",
                                 fp_col="dhash").drop("n_parts")
-    return hamming_fp_dedup(vfps, fp_col="vfp", max_hamming=max_hamming,
+    return hamming_fp_dedup(vfps, fp_cols=["vfp"], max_hamming=max_hamming,
                             n_bands=n_bands)
 
 

@@ -15,6 +15,7 @@ value hash at sf=0.01):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -11228,34 +11229,43 @@ def _synthetic_images(d: DataFrame) -> DataFrame:
         F.unhex(F.concat(F.lit("5257381210"), px_hex)).alias("payload"))
 
 
-def q_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_image_dedup(spark: SparkSession, sf_dir: str, n_limbs: int = 1,
+                  max_hamming: int = 2) -> DataFrame:
     """Perceptual image dedup end-to-end: RAW8 payload bytes → real
-    header-parse + area-mean resize + 63-bit dHash (Arrow batch) →
-    banded Hamming LSH pairing (3 × 21-bit bands — the scale-optimal
-    minimum, see the operator's band-count sizing note) → greedy
-    min-id keeper election. The
-    fingerprints are plain BIGINTs, so the whole pipeline — including
-    the Arrow decode stage — gets a value-hash oracle gate: DuckDB
-    recomputes the dHash analytically from the pixel-generator formula
-    while Spark computes it from the actual payload bytes; any drift
-    in parse/resize/bit order breaks the hash match."""
-    from comix_etl_spark.operators.dedup import image_dedup
+    header-parse + area-mean resize + ``n_limbs``-limb dHash
+    (multimodal/media.py::image_dhash, Arrow batch) → banded Hamming
+    LSH pairing over the concatenated bit space → greedy min-id keeper
+    election (operators/dedup.py::hamming_fp_dedup). The registry runs
+    the width ladder at its equal-rate thresholds, each on the minimal
+    ``max_hamming + 1`` bands: 63 bits at Hamming ≤ 2 (3 × 21-bit
+    bands, the scale-optimal minimum — see hamming_band_pairs'
+    band-count sizing note), 126 at ≤ 4 (5 × 25-bit), 189 at ≤ 6
+    (7 × 27-bit) and 252 at ≤ 6 (7 × 36-bit); PLANS.md "r10
+    scale-evidence run" has the measured crossover per rung. Every
+    rung is the same code: only the limb count moves. The limbs are
+    plain BIGINTs, so the whole pipeline — including the Arrow decode
+    stage — gets a value-hash oracle gate: DuckDB recomputes every
+    limb analytically from the pixel-generator formula while Spark
+    computes it from the actual payload bytes; any drift in
+    parse/resize/bit order breaks the hash match."""
+    from comix_etl_spark.multimodal.media import image_dhash
+    from comix_etl_spark.operators.dedup import hamming_fp_dedup
 
     t = _t(spark, sf_dir, "documents")
-    out = image_dedup(_synthetic_images(t["documents"]), max_hamming=2)
+    fps = image_dhash(_synthetic_images(t["documents"]), n_limbs=n_limbs)
+    out = hamming_fp_dedup(fps, fp_cols=fps.columns[1:],
+                           max_hamming=max_hamming)
     return out.orderBy("media_id")
 
 
-# The oracle pairs with ALL-PAIRS Hamming <= 2, which equals the Spark
-# side's banded-LSH + verify EXACTLY: <= 2 flipped bits touch <= 2 of
-# the n_bands (= max_hamming + 1 = 3) bands, so every qualifying pair
-# keeps an intact band and is
-# guaranteed a candidate (pigeonhole recall — see
-# operators/dedup.py::hamming_band_pairs); candidates beyond the
+# The oracles pair with ALL-PAIRS Hamming <= max_h, which equals the
+# Spark side's banded-LSH + verify EXACTLY: <= max_h flipped bits touch
+# <= max_h of the n_bands (= max_h + 1) bands, so every qualifying pair
+# keeps an intact band and is guaranteed a candidate (pigeonhole recall
+# — see operators/dedup.py::hamming_band_pairs); candidates beyond the
 # Hamming cap are filtered by both engines.
 # shared analytic-dHash CTE chain (docs → block pixel values → bit
-# values → 63-bit hashes), composed by ORACLE_IMAGE_DEDUP and
-# ORACLE_IMAGE_DECONTAMINATE
+# values → 63-bit hashes), composed by every image oracle
 _IMG_HASH_CTES_TMPL = """docs AS (
   SELECT doc_id, doc_id // 5 AS g, doc_id % 5 AS v FROM {src}
 ), px AS (
@@ -11286,23 +11296,60 @@ def _img_hash_ctes(src: str = "documents") -> str:
 _IMG_HASH_CTES = _img_hash_ctes()
 
 
-ORACLE_IMAGE_DEDUP = f"""
-WITH {_IMG_HASH_CTES}, pairs AS (
+def _hamming_sql(a: str, b: str, cols: list[str]) -> str:
+    """Summed per-limb xor popcount between rows ``a`` and ``b``.
+    bit_count returns TINYINT — several 63-bit limbs can sum past 127 —
+    so every term widens before the addition."""
+    return " + ".join(f"CAST(bit_count(xor({a}.{c}, {b}.{c})) AS INT)"
+                      for c in cols)
+
+
+def _hamming_dedup_oracle(ctes: str, hashes: str, cols: list[str],
+                          max_h: int) -> str:
+    """The keeper-election oracle over the fingerprint CTE ``hashes``
+    (doc_id, *cols): all-pairs Hamming <= ``max_h`` → per-item degree →
+    keep every item that is never the larger id of a pair, mirroring
+    operators/dedup.py::hamming_fp_dedup."""
+    return f"""
+WITH {ctes}, pairs AS (
   SELECT a.doc_id AS ia, b2.doc_id AS ib
-  FROM hashes a JOIN hashes b2 ON a.doc_id < b2.doc_id
-  WHERE bit_count(xor(a.dhash, b2.dhash)) <= 2
+  FROM {hashes} a JOIN {hashes} b2 ON a.doc_id < b2.doc_id
+  WHERE {_hamming_sql("a", "b2", cols)} <= {max_h}
 ), deg AS (
   SELECT doc_id, CAST(count(*) AS BIGINT) AS n_near
   FROM (SELECT ia AS doc_id FROM pairs
         UNION ALL SELECT ib AS doc_id FROM pairs) u
   GROUP BY 1
 )
-SELECT h.doc_id AS media_id, h.dhash,
+SELECT h.doc_id AS media_id, {", ".join(f"h.{c}" for c in cols)},
        coalesce(d.n_near, 0::BIGINT) AS n_near
-FROM hashes h LEFT JOIN deg d USING (doc_id)
+FROM {hashes} h LEFT JOIN deg d USING (doc_id)
 WHERE h.doc_id NOT IN (SELECT ib FROM pairs)
 ORDER BY media_id
 """
+
+
+def _hamming_decontam_oracle(ctes: str, hashes: str, cols: list[str],
+                             max_h: int) -> str:
+    """The decontamination oracle over the fingerprint CTE ``hashes``:
+    every 50th document is the benchmark; per corpus item, its
+    benchmark matches within Hamming ``max_h`` and the closest
+    distance, mirroring ``_bench_hits`` over hamming_band_probe."""
+    return f"""
+WITH {ctes}, hits AS (
+  SELECT c.doc_id AS cid, p.doc_id AS pid,
+         {_hamming_sql("c", "p", cols)} AS h
+  FROM {hashes} c JOIN {hashes} p ON p.doc_id % 50 = 0
+  WHERE {_hamming_sql("c", "p", cols)} <= {max_h}
+)
+SELECT cid AS media_id, CAST(count(*) AS BIGINT) AS n_bench_hits,
+       CAST(min(h) AS BIGINT) AS min_hamming
+FROM hits GROUP BY 1 ORDER BY media_id
+"""
+
+
+ORACLE_IMAGE_DEDUP = _hamming_dedup_oracle(_IMG_HASH_CTES, "hashes",
+                                           ["dhash"], 2)
 
 
 def q_dedup_incremental_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11352,35 +11399,11 @@ ORDER BY id_a, id_b
 """
 
 
-def q_image_dedup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image dedup over the WIDE 126-bit two-limb
-    fingerprint (multimodal/media.py::image_dhash_wide — horizontal +
-    vertical dHash limbs over one shared 9×8 area-mean grid) through
-    the SAME banded machinery as q_image_dedup, banding the
-    concatenated bit space (operators/dedup.py::hamming_band_pairs:
-    5 × 25-bit bands for max_hamming=4, the equal-rate threshold of
-    63-bit/Hamming-2). This is the scale path past the measured ~10M-
-    item ceiling of 63-bit banding (r9 sweep, PLANS.md): doubling the
-    bit budget grows each band's value space from 2²¹ to 2²⁵, dividing
-    accidental candidates ~16× at equal corpus size. Both limbs stay
-    plain BIGINTs, so the wide decode+banding+election pipeline is
-    value-hash-gated end-to-end: DuckDB recomputes BOTH limbs
-    analytically from the pixel-generator formula."""
-    from comix_etl_spark.multimodal.media import image_dhash_wide
-    from comix_etl_spark.operators.dedup import hamming_fp_dedup
-
-    t = _t(spark, sf_dir, "documents")
-    fps = image_dhash_wide(_synthetic_images(t["documents"]))
-    out = hamming_fp_dedup(fps, fp_col=["dhash_h", "dhash_v"],
-                           max_hamming=4)
-    return out.orderBy("media_id")
-
-
-# all-pairs SUM of per-limb xor popcounts <= 4 == banded-LSH over the
-# concatenated 126-bit space + verify, by the same pigeonhole argument
-# (<= 4 flips touch <= 4 of the 5 bands). The v-limb bit layout is
-# r*9+c for r in 0..6 (7 comparison rows x 9 columns = 63 bits, max
-# index 62 — no sign-bit skip needed, unlike the h-limb's 8x8=64th).
+# The width ladder's limb CTEs, each extending the previous rung's
+# chain by one hand-written limb (layouts as in multimodal/media.py::
+# image_dhash). The v-limb bit layout is r*9+c for r in 0..6 (7
+# comparison rows x 9 columns = 63 bits, max index 62 — no sign-bit
+# skip needed, unlike the h-limb's 8x8=64th).
 _IMG_HASH_WIDE_CTES = _IMG_HASH_CTES + """, vbits AS (
   SELECT a.doc_id,
          CASE WHEN n.val > a.val
@@ -11396,24 +11419,66 @@ _IMG_HASH_WIDE_CTES = _IMG_HASH_CTES + """, vbits AS (
 )"""
 
 
-ORACLE_IMAGE_DEDUP_WIDE = f"""
-WITH {_IMG_HASH_WIDE_CTES}, pairs AS (
-  SELECT a.doc_id AS ia, b2.doc_id AS ib
-  FROM hashes_wide a JOIN hashes_wide b2 ON a.doc_id < b2.doc_id
-  WHERE bit_count(xor(a.dhash_h, b2.dhash_h))
-        + bit_count(xor(a.dhash_v, b2.dhash_v)) <= 4
-), deg AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_near
-  FROM (SELECT ia AS doc_id FROM pairs
-        UNION ALL SELECT ib AS doc_id FROM pairs) u
-  GROUP BY 1
-)
-SELECT h.doc_id AS media_id, h.dhash_h, h.dhash_v,
-       coalesce(d.n_near, 0::BIGINT) AS n_near
-FROM hashes_wide h LEFT JOIN deg d USING (doc_id)
-WHERE h.doc_id NOT IN (SELECT ib FROM pairs)
-ORDER BY media_id
-"""
+# d-limb layout: 56 main-diagonal bits (r*8+c, cell (r+1,c+1) vs
+# (r,c)) + 7 anti-diagonal bits (56+c, cell (1,c) vs (0,c+1))
+_IMG_HASH_XWIDE_CTES = _IMG_HASH_WIDE_CTES + """, dbits AS (
+  SELECT a.doc_id,
+         CASE WHEN n.val > a.val
+              THEN 1::BIGINT << CAST(a.r * 8 + a.c AS INT)
+              ELSE 0::BIGINT END AS bitval
+  FROM px a JOIN px n
+    ON n.doc_id = a.doc_id AND n.r = a.r + 1 AND n.c = a.c + 1
+  WHERE a.r < 7 AND a.c < 8
+  UNION ALL
+  SELECT a.doc_id,
+         CASE WHEN n.val > a.val
+              THEN 1::BIGINT << CAST(56 + a.c - 1 AS INT)
+              ELSE 0::BIGINT END AS bitval
+  FROM px a JOIN px n
+    ON n.doc_id = a.doc_id AND n.r = 1 AND a.r = 0 AND n.c = a.c - 1
+  WHERE a.c BETWEEN 1 AND 7
+), hashes_xwide AS (
+  SELECT w.doc_id, w.dhash_h, w.dhash_v, d.dhash_d
+  FROM hashes_wide w JOIN (SELECT doc_id, CAST(sum(bitval) AS BIGINT)
+                           AS dhash_d FROM dbits GROUP BY 1) d
+       USING (doc_id)
+)"""
+
+
+# a-limb layout: 56 anti-diagonal bits (r*8+c, cell (r+1,c) vs
+# (r,c+1)) + 7 skip-one horizontal bits from row 0 (56+c, cell
+# (0,c+2) vs (0,c))
+_IMG_HASH_QWIDE_CTES = _IMG_HASH_XWIDE_CTES + """, qbits AS (
+  SELECT a.doc_id,
+         CASE WHEN n.val > a.val
+              THEN 1::BIGINT << CAST(a.r * 8 + (a.c - 1) AS INT)
+              ELSE 0::BIGINT END AS bitval
+  FROM px a JOIN px n
+    ON n.doc_id = a.doc_id AND n.r = a.r + 1 AND n.c = a.c - 1
+  WHERE a.r < 7 AND a.c BETWEEN 1 AND 8
+  UNION ALL
+  SELECT a.doc_id,
+         CASE WHEN n.val > a.val
+              THEN 1::BIGINT << CAST(56 + a.c AS INT)
+              ELSE 0::BIGINT END AS bitval
+  FROM px a JOIN px n
+    ON n.doc_id = a.doc_id AND n.r = 0 AND a.r = 0 AND n.c = a.c + 2
+  WHERE a.c < 7
+), hashes_qwide AS (
+  SELECT x.doc_id, x.dhash_h, x.dhash_v, x.dhash_d, q.dhash_a
+  FROM hashes_xwide x JOIN (SELECT doc_id, CAST(sum(bitval) AS BIGINT)
+                            AS dhash_a FROM qbits GROUP BY 1) q
+       USING (doc_id)
+)"""
+
+
+_IMG_LIMBS = ["dhash_h", "dhash_v", "dhash_d", "dhash_a"]
+ORACLE_IMAGE_DEDUP_WIDE = _hamming_dedup_oracle(
+    _IMG_HASH_WIDE_CTES, "hashes_wide", _IMG_LIMBS[:2], 4)
+ORACLE_IMAGE_DEDUP_XWIDE = _hamming_dedup_oracle(
+    _IMG_HASH_XWIDE_CTES, "hashes_xwide", _IMG_LIMBS[:3], 6)
+ORACLE_IMAGE_DEDUP_QWIDE = _hamming_dedup_oracle(
+    _IMG_HASH_QWIDE_CTES, "hashes_qwide", _IMG_LIMBS, 6)
 
 
 # Deterministic synthetic VIDEOS: 3 RAW8 frames per document, the same
@@ -11472,12 +11537,10 @@ def q_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return video_dedup(frames, max_hamming=2).orderBy("media_id")
 
 
-# all-pairs Hamming <= 2 over the majority-vote fingerprints == the
-# Spark side's banded-LSH + verify (pigeonhole, 3 bands). fbits yields
-# one 0/1 row per (video, frame, bit); the strict-majority vote
-# (2*sum > n_frames, ties -> 0) mirrors majority_fingerprint exactly.
-ORACLE_VIDEO_DEDUP = """
-WITH docs AS (
+# fbits yields one 0/1 row per (video, frame, bit); the strict-majority
+# vote (2*sum > n_frames, ties -> 0) mirrors majority_fingerprint
+# exactly; vhash holds the per-video fingerprints
+_VID_HASH_CTES = """docs AS (
   SELECT doc_id, doc_id // 5 AS g, doc_id % 5 AS v FROM documents
 ), px AS (
   SELECT doc_id, f, r, c,
@@ -11502,22 +11565,9 @@ WITH docs AS (
   FROM fbits GROUP BY doc_id, b
 ), vhash AS (
   SELECT doc_id, CAST(sum(bitval) AS BIGINT) AS vfp FROM vote GROUP BY 1
-), pairs AS (
-  SELECT a.doc_id AS ia, b2.doc_id AS ib
-  FROM vhash a JOIN vhash b2 ON a.doc_id < b2.doc_id
-  WHERE bit_count(xor(a.vfp, b2.vfp)) <= 2
-), deg AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_near
-  FROM (SELECT ia AS doc_id FROM pairs
-        UNION ALL SELECT ib AS doc_id FROM pairs) u
-  GROUP BY 1
-)
-SELECT h.doc_id AS media_id, h.vfp,
-       coalesce(d.n_near, 0::BIGINT) AS n_near
-FROM vhash h LEFT JOIN deg d USING (doc_id)
-WHERE h.doc_id NOT IN (SELECT ib FROM pairs)
-ORDER BY media_id
-"""
+)"""
+ORACLE_VIDEO_DEDUP = _hamming_dedup_oracle(_VID_HASH_CTES, "vhash",
+                                           ["vfp"], 2)
 
 
 def _bench_hits(pairs: DataFrame) -> DataFrame:
@@ -11561,223 +11611,42 @@ def q_video_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bench_hits(pairs)
 
 
-# all-pairs Hamming <= 2 over majority fingerprints == banded cross-set
-# probe (pigeonhole); vhash CTE chain identical to ORACLE_VIDEO_DEDUP
-ORACLE_VIDEO_DECONTAMINATE = """
-WITH docs AS (
-  SELECT doc_id, doc_id // 5 AS g, doc_id % 5 AS v FROM documents
-), px AS (
-  SELECT doc_id, f, r, c,
-         CASE WHEN v = 4 AND f = 1 AND r = 3 AND c = 4
-              THEN 255 - (((g*(r+3)*(c+5) + g*g*7 + r*11 + c*13
-                            + f*(2*r + 3*c + g + 1)) % 244) + 3*v)
-              ELSE (((g*(r+3)*(c+5) + g*g*7 + r*11 + c*13
-                      + f*(2*r + 3*c + g + 1)) % 244) + 3*v)
-         END AS val
-  FROM docs, unnest(range(3)) AS tf(f),
-       unnest(range(8)) AS tr(r), unnest(range(9)) AS tc(c)
-), fbits AS (
-  SELECT a.doc_id, a.f, a.r * 8 + a.c AS b,
-         CASE WHEN n.val > a.val THEN 1 ELSE 0 END AS bit
-  FROM px a JOIN px n
-    ON n.doc_id = a.doc_id AND n.f = a.f AND n.r = a.r AND n.c = a.c + 1
-  WHERE a.c < 8 AND a.r * 8 + a.c < 63
-), vote AS (
-  SELECT doc_id, b,
-         CASE WHEN 2 * sum(bit) > count(*)
-              THEN 1::BIGINT << CAST(b AS INT) ELSE 0::BIGINT END AS bitval
-  FROM fbits GROUP BY doc_id, b
-), vhash AS (
-  SELECT doc_id, CAST(sum(bitval) AS BIGINT) AS vfp FROM vote GROUP BY 1
-), hits AS (
-  SELECT c.doc_id AS cid, p.doc_id AS pid,
-         bit_count(xor(c.vfp, p.vfp)) AS h
-  FROM vhash c JOIN vhash p ON p.doc_id % 50 = 0
-  WHERE bit_count(xor(c.vfp, p.vfp)) <= 2
-)
-SELECT cid AS media_id, CAST(count(*) AS BIGINT) AS n_bench_hits,
-       CAST(min(h) AS BIGINT) AS min_hamming
-FROM hits GROUP BY 1 ORDER BY media_id
-"""
+ORACLE_VIDEO_DECONTAMINATE = _hamming_decontam_oracle(
+    _VID_HASH_CTES, "vhash", ["vfp"], 2)
 
 
-def q_image_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_image_decontaminate(spark: SparkSession, sf_dir: str, n_limbs: int = 1,
+                          max_hamming: int = 2) -> DataFrame:
     """Image-side eval-set decontamination — the pixel-space sibling of
     q_embedding_decontaminate: every 50th document's image stands in as
     a benchmark suite, and the screen reports each corpus image with a
-    perceptual match (Hamming ≤ 2 over 63-bit dHash) to ANY benchmark
-    image, with its hit count and closest distance. The corpus side
-    never self-joins; the small benchmark band rows broadcast
-    (operators/dedup.py::hamming_band_probe)."""
+    perceptual match (summed Hamming ≤ ``max_hamming`` over the
+    ``n_limbs``-limb dHash) to ANY benchmark image, with its hit count
+    and closest distance. The registry runs 63 bits at Hamming ≤ 2,
+    126 at ≤ 4 and 252 at ≤ 8 — the equal-rate threshold of 2 per 63
+    bits, banded over the concatenated space (3 × 21-, 5 × 25- and
+    9 × 28-bit bands). The corpus side never self-joins; the small
+    benchmark band rows broadcast (operators/dedup.py::
+    hamming_band_probe)."""
     from comix_etl_spark.multimodal.media import image_dhash
     from comix_etl_spark.operators.dedup import hamming_band_probe
 
     t = _t(spark, sf_dir, "documents")
     d = t["documents"]
-    corpus = image_dhash(_synthetic_images(d))
-    probe = image_dhash(_synthetic_images(d.filter(F.col("doc_id") % 50 == 0)))
-    pairs = hamming_band_probe(corpus, probe, fp_cols=["dhash"],
-                               max_hamming=2)
+    corpus = image_dhash(_synthetic_images(d), n_limbs=n_limbs)
+    probe = image_dhash(_synthetic_images(d.filter(F.col("doc_id") % 50 == 0)),
+                        n_limbs=n_limbs)
+    pairs = hamming_band_probe(corpus, probe, fp_cols=corpus.columns[1:],
+                               max_hamming=max_hamming)
     return _bench_hits(pairs)
 
 
-# all-pairs Hamming <= 2 == banded-LSH + verify, by the same pigeonhole
-# recall argument as ORACLE_IMAGE_DEDUP
-ORACLE_IMAGE_DECONTAMINATE = f"""
-WITH {_IMG_HASH_CTES}, hits AS (
-  SELECT c.doc_id AS cid, p.doc_id AS pid,
-         bit_count(xor(c.dhash, p.dhash)) AS h
-  FROM hashes c JOIN hashes p ON p.doc_id % 50 = 0
-  WHERE bit_count(xor(c.dhash, p.dhash)) <= 2
-)
-SELECT cid AS media_id, CAST(count(*) AS BIGINT) AS n_bench_hits,
-       CAST(min(h) AS BIGINT) AS min_hamming
-FROM hits GROUP BY 1 ORDER BY media_id
-"""
-
-
-def q_image_dedup_xwide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image dedup over the 189-bit THREE-limb fingerprint
-    (multimodal/media.py::image_dhash_xwide — h + v + diagonal dHash
-    limbs, one shared grid) at the equal-rate threshold Hamming ≤ 6,
-    through the UNCHANGED N-limb banding machinery (7 × 27-bit bands
-    over the concatenated space). This rung exists to prove the
-    PLANS.md ladder claim in code: moving up the width ladder costs
-    ONE new fingerprint function and zero new pairing code, and each
-    rung multiplies the accidental-candidate crossover (~3M narrow,
-    ~30M wide, ~120M here — measured curve in PLANS.md "r10
-    scale-evidence run"). All three limbs stay
-    BIGINTs, so DuckDB recomputes them analytically and the whole
-    decode+banding+election pipeline is value-hash-gated."""
-    from comix_etl_spark.multimodal.media import image_dhash_xwide
-    from comix_etl_spark.operators.dedup import hamming_fp_dedup
-
-    t = _t(spark, sf_dir, "documents")
-    fps = image_dhash_xwide(_synthetic_images(t["documents"]))
-    out = hamming_fp_dedup(fps, fp_col=["dhash_h", "dhash_v", "dhash_d"],
-                           max_hamming=6)
-    return out.orderBy("media_id")
-
-
-# d-limb layout: 56 main-diagonal bits (r*8+c, cell (r+1,c+1) vs
-# (r,c)) + 7 anti-diagonal bits (56+c, cell (1,c) vs (0,c+1)); summed
-# three-limb Hamming <= 6 == 7-band concatenated-space LSH (pigeonhole)
-_IMG_HASH_XWIDE_CTES = _IMG_HASH_WIDE_CTES + """, dbits AS (
-  SELECT a.doc_id,
-         CASE WHEN n.val > a.val
-              THEN 1::BIGINT << CAST(a.r * 8 + a.c AS INT)
-              ELSE 0::BIGINT END AS bitval
-  FROM px a JOIN px n
-    ON n.doc_id = a.doc_id AND n.r = a.r + 1 AND n.c = a.c + 1
-  WHERE a.r < 7 AND a.c < 8
-  UNION ALL
-  SELECT a.doc_id,
-         CASE WHEN n.val > a.val
-              THEN 1::BIGINT << CAST(56 + a.c - 1 AS INT)
-              ELSE 0::BIGINT END AS bitval
-  FROM px a JOIN px n
-    ON n.doc_id = a.doc_id AND n.r = 1 AND a.r = 0 AND n.c = a.c - 1
-  WHERE a.c BETWEEN 1 AND 7
-), hashes_xwide AS (
-  SELECT w.doc_id, w.dhash_h, w.dhash_v, d.dhash_d
-  FROM hashes_wide w JOIN (SELECT doc_id, CAST(sum(bitval) AS BIGINT)
-                           AS dhash_d FROM dbits GROUP BY 1) d
-       USING (doc_id)
-)"""
-
-
-def q_image_dedup_qwide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image dedup over the 252-bit FOUR-limb fingerprint
-    (multimodal/media.py::image_dhash_qwide — h + v + diag + ANTI-diag
-    limbs, one shared grid) at Hamming ≤ 6 through the UNCHANGED
-    N-limb banding machinery (7 × 36-bit bands over the concatenated
-    space). The ladder's final rung: by the band-sizing rule
-    (2^36 ≫ corpus/7) this width carries banded perceptual dedup into
-    the 10⁹ LAION regime PLANS.md names — and as with every rung it
-    costs ONE fingerprint function and zero new pairing code. All four
-    limbs stay BIGINTs, so DuckDB recomputes the whole
-    decode+banding+election pipeline analytically."""
-    from comix_etl_spark.multimodal.media import image_dhash_qwide
-    from comix_etl_spark.operators.dedup import hamming_fp_dedup
-
-    t = _t(spark, sf_dir, "documents")
-    fps = image_dhash_qwide(_synthetic_images(t["documents"]))
-    out = hamming_fp_dedup(fps, fp_col=["dhash_h", "dhash_v",
-                                        "dhash_d", "dhash_a"],
-                           max_hamming=6)
-    return out.orderBy("media_id")
-
-
-# a-limb layout: 56 anti-diagonal bits (r*8+c, cell (r+1,c) vs
-# (r,c+1)) + 7 skip-one horizontal bits from row 0 (56+c, cell
-# (0,c+2) vs (0,c))
-_IMG_HASH_QWIDE_CTES = _IMG_HASH_XWIDE_CTES + """, qbits AS (
-  SELECT a.doc_id,
-         CASE WHEN n.val > a.val
-              THEN 1::BIGINT << CAST(a.r * 8 + (a.c - 1) AS INT)
-              ELSE 0::BIGINT END AS bitval
-  FROM px a JOIN px n
-    ON n.doc_id = a.doc_id AND n.r = a.r + 1 AND n.c = a.c - 1
-  WHERE a.r < 7 AND a.c BETWEEN 1 AND 8
-  UNION ALL
-  SELECT a.doc_id,
-         CASE WHEN n.val > a.val
-              THEN 1::BIGINT << CAST(56 + a.c AS INT)
-              ELSE 0::BIGINT END AS bitval
-  FROM px a JOIN px n
-    ON n.doc_id = a.doc_id AND n.r = 0 AND a.r = 0 AND n.c = a.c + 2
-  WHERE a.c < 7
-), hashes_qwide AS (
-  SELECT x.doc_id, x.dhash_h, x.dhash_v, x.dhash_d, q.dhash_a
-  FROM hashes_xwide x JOIN (SELECT doc_id, CAST(sum(bitval) AS BIGINT)
-                            AS dhash_a FROM qbits GROUP BY 1) q
-       USING (doc_id)
-)"""
-
-
-ORACLE_IMAGE_DEDUP_QWIDE = f"""
-WITH {_IMG_HASH_QWIDE_CTES}, pairs AS (
-  SELECT a.doc_id AS ia, b2.doc_id AS ib
-  FROM hashes_qwide a JOIN hashes_qwide b2 ON a.doc_id < b2.doc_id
-  WHERE CAST(bit_count(xor(a.dhash_h, b2.dhash_h)) AS INT)
-        + CAST(bit_count(xor(a.dhash_v, b2.dhash_v)) AS INT)
-        + CAST(bit_count(xor(a.dhash_d, b2.dhash_d)) AS INT)
-        + CAST(bit_count(xor(a.dhash_a, b2.dhash_a)) AS INT) <= 6
-), deg AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_near
-  FROM (SELECT ia AS doc_id FROM pairs
-        UNION ALL SELECT ib AS doc_id FROM pairs) u
-  GROUP BY 1
-)
-SELECT h.doc_id AS media_id, h.dhash_h, h.dhash_v, h.dhash_d, h.dhash_a,
-       coalesce(d.n_near, 0::BIGINT) AS n_near
-FROM hashes_qwide h LEFT JOIN deg d USING (doc_id)
-WHERE h.doc_id NOT IN (SELECT ib FROM pairs)
-ORDER BY media_id
-"""
-
-
-ORACLE_IMAGE_DEDUP_XWIDE = f"""
-WITH {_IMG_HASH_XWIDE_CTES}, pairs AS (
-  SELECT a.doc_id AS ia, b2.doc_id AS ib
-  FROM hashes_xwide a JOIN hashes_xwide b2 ON a.doc_id < b2.doc_id
-  -- bit_count returns TINYINT: three 63-bit limbs can sum past 127,
-  -- so each term is widened before the addition
-  WHERE CAST(bit_count(xor(a.dhash_h, b2.dhash_h)) AS INT)
-        + CAST(bit_count(xor(a.dhash_v, b2.dhash_v)) AS INT)
-        + CAST(bit_count(xor(a.dhash_d, b2.dhash_d)) AS INT) <= 6
-), deg AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_near
-  FROM (SELECT ia AS doc_id FROM pairs
-        UNION ALL SELECT ib AS doc_id FROM pairs) u
-  GROUP BY 1
-)
-SELECT h.doc_id AS media_id, h.dhash_h, h.dhash_v, h.dhash_d,
-       coalesce(d.n_near, 0::BIGINT) AS n_near
-FROM hashes_xwide h LEFT JOIN deg d USING (doc_id)
-WHERE h.doc_id NOT IN (SELECT ib FROM pairs)
-ORDER BY media_id
-"""
+ORACLE_IMAGE_DECONTAMINATE = _hamming_decontam_oracle(
+    _IMG_HASH_CTES, "hashes", ["dhash"], 2)
+ORACLE_IMAGE_DECONTAMINATE_WIDE = _hamming_decontam_oracle(
+    _IMG_HASH_WIDE_CTES, "hashes_wide", _IMG_LIMBS[:2], 4)
+ORACLE_IMAGE_DECONTAMINATE_QWIDE = _hamming_decontam_oracle(
+    _IMG_HASH_QWIDE_CTES, "hashes_qwide", _IMG_LIMBS, 8)
 
 
 def q_stream_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11989,96 +11858,6 @@ SELECT * FROM (
   SELECT 4, 'exact_dedup', n3, n4,
          CASE WHEN n3 = 0 THEN 0 ELSE (n3 - n4) * 1000000 // n3 END FROM a
 ) ORDER BY stage_idx
-"""
-
-
-def q_image_decontaminate_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-side eval-set decontamination over the WIDE 126-bit
-    two-limb fingerprint — q_image_decontaminate at the equal-rate
-    threshold (Hamming ≤ 4 over 126 bits ≡ 2/63), through the
-    multi-limb cross-set probe (operators/dedup.py::
-    hamming_band_probe: 5 × 25-bit bands over the concatenated space,
-    probe side broadcast, corpus never self-joins). Completes the wide
-    family: dedup (image_dedup_wide) AND decontamination both run past
-    the 63-bit ~10M-item ceiling with the same two BIGINT limbs."""
-    from comix_etl_spark.multimodal.media import image_dhash_wide
-    from comix_etl_spark.operators.dedup import hamming_band_probe
-
-    t = _t(spark, sf_dir, "documents")
-    d = t["documents"]
-    corpus = image_dhash_wide(_synthetic_images(d))
-    probe = image_dhash_wide(
-        _synthetic_images(d.filter(F.col("doc_id") % 50 == 0)))
-    pairs = hamming_band_probe(corpus, probe,
-                               fp_cols=["dhash_h", "dhash_v"],
-                               max_hamming=4)
-    return _bench_hits(pairs)
-
-
-# all-pairs summed-limb Hamming <= 4 == banded cross-set probe over the
-# concatenated 126-bit space (pigeonhole: <= 4 flips touch <= 4 of 5
-# bands); limb CTE chain shared with ORACLE_IMAGE_DEDUP_WIDE
-ORACLE_IMAGE_DECONTAMINATE_WIDE = f"""
-WITH {_IMG_HASH_WIDE_CTES}, hits AS (
-  SELECT c.doc_id AS cid, p.doc_id AS pid,
-         bit_count(xor(c.dhash_h, p.dhash_h))
-         + bit_count(xor(c.dhash_v, p.dhash_v)) AS h
-  FROM hashes_wide c JOIN hashes_wide p ON p.doc_id % 50 = 0
-  WHERE bit_count(xor(c.dhash_h, p.dhash_h))
-        + bit_count(xor(c.dhash_v, p.dhash_v)) <= 4
-)
-SELECT cid AS media_id, CAST(count(*) AS BIGINT) AS n_bench_hits,
-       CAST(min(h) AS BIGINT) AS min_hamming
-FROM hits GROUP BY 1 ORDER BY media_id
-"""
-
-
-def q_image_decontaminate_qwide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-side eval-set decontamination at the ladder's TOP rung:
-    the 252-bit four-limb fingerprint probed cross-set at the
-    equal-rate threshold (Hamming ≤ 8 over 252 bits ≡ 2/63 per limb)
-    through the SAME N-limb machinery (operators/dedup.py::
-    hamming_band_probe — 9 × 28-bit bands over the concatenated
-    space, probe side broadcast, corpus never self-joins). With
-    image_dedup_qwide this completes the modality×width matrix: both
-    dedup AND decontamination run at the 10⁹-regime width, and the
-    rung again costs zero new pairing/probe code."""
-    from comix_etl_spark.multimodal.media import image_dhash_qwide
-    from comix_etl_spark.operators.dedup import hamming_band_probe
-
-    t = _t(spark, sf_dir, "documents")
-    d = t["documents"]
-    corpus = image_dhash_qwide(_synthetic_images(d))
-    probe = image_dhash_qwide(
-        _synthetic_images(d.filter(F.col("doc_id") % 50 == 0)))
-    pairs = hamming_band_probe(corpus, probe,
-                               fp_cols=["dhash_h", "dhash_v",
-                                        "dhash_d", "dhash_a"],
-                               max_hamming=8)
-    return _bench_hits(pairs)
-
-
-# all-pairs summed-limb Hamming <= 8 == banded cross-set probe over
-# the concatenated 252-bit space (pigeonhole: <= 8 flips touch <= 8 of
-# 9 bands); limb CTE chain shared with ORACLE_IMAGE_DEDUP_QWIDE.
-# bit_count returns TINYINT — four 63-bit limbs can sum past 127, so
-# every term widens before the addition
-ORACLE_IMAGE_DECONTAMINATE_QWIDE = f"""
-WITH {_IMG_HASH_QWIDE_CTES}, hits AS (
-  SELECT c.doc_id AS cid, p.doc_id AS pid,
-         CAST(bit_count(xor(c.dhash_h, p.dhash_h)) AS INT)
-         + CAST(bit_count(xor(c.dhash_v, p.dhash_v)) AS INT)
-         + CAST(bit_count(xor(c.dhash_d, p.dhash_d)) AS INT)
-         + CAST(bit_count(xor(c.dhash_a, p.dhash_a)) AS INT) AS h
-  FROM hashes_qwide c JOIN hashes_qwide p ON p.doc_id % 50 = 0
-  WHERE CAST(bit_count(xor(c.dhash_h, p.dhash_h)) AS INT)
-        + CAST(bit_count(xor(c.dhash_v, p.dhash_v)) AS INT)
-        + CAST(bit_count(xor(c.dhash_d, p.dhash_d)) AS INT)
-        + CAST(bit_count(xor(c.dhash_a, p.dhash_a)) AS INT) <= 8
-)
-SELECT cid AS media_id, CAST(count(*) AS BIGINT) AS n_bench_hits,
-       CAST(min(h) AS BIGINT) AS min_hamming
-FROM hits GROUP BY 1 ORDER BY media_id
 """
 
 
@@ -12308,17 +12087,15 @@ def q_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _t(spark, sf_dir, "documents")
     fps = audio_energy_fingerprint(_synthetic_wavs(t["documents"]))
-    out = hamming_fp_dedup(fps.select("media_id", "afp"), fp_col="afp",
+    out = hamming_fp_dedup(fps.select("media_id", "afp"), fp_cols=["afp"],
                            max_hamming=2)
     return out.orderBy("media_id")
 
 
 # energy contour recomputed analytically from the generator's frame
 # magnitudes (the (v+1) gain cancels in every comparison — that IS the
-# volume-invariance contract); all-pairs Hamming <= 2 == banded LSH by
-# the pigeonhole recall guarantee (3 bands default)
-ORACLE_AUDIO_DEDUP = """
-WITH docs AS (
+# volume-invariance contract)
+_AUDIO_HASH_CTES = """docs AS (
   SELECT doc_id, doc_id // 5 AS g, doc_id % 5 AS v FROM documents
 ), mag AS (
   SELECT doc_id, f,
@@ -12334,22 +12111,9 @@ WITH docs AS (
   WHERE a.f < 63
 ), hashes AS (
   SELECT doc_id, CAST(sum(bitval) AS BIGINT) AS afp FROM bits GROUP BY 1
-), pairs AS (
-  SELECT a.doc_id AS ia, b2.doc_id AS ib
-  FROM hashes a JOIN hashes b2 ON a.doc_id < b2.doc_id
-  WHERE bit_count(xor(a.afp, b2.afp)) <= 2
-), deg AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_near
-  FROM (SELECT ia AS doc_id FROM pairs
-        UNION ALL SELECT ib AS doc_id FROM pairs) u
-  GROUP BY 1
-)
-SELECT h.doc_id AS media_id, h.afp,
-       coalesce(d.n_near, 0::BIGINT) AS n_near
-FROM hashes h LEFT JOIN deg d USING (doc_id)
-WHERE h.doc_id NOT IN (SELECT ib FROM pairs)
-ORDER BY media_id
-"""
+)"""
+ORACLE_AUDIO_DEDUP = _hamming_dedup_oracle(_AUDIO_HASH_CTES, "hashes",
+                                           ["afp"], 2)
 
 
 def q_audio_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12380,35 +12144,8 @@ def q_audio_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bench_hits(pairs)
 
 
-# contour CTE chain identical to ORACLE_AUDIO_DEDUP; all-pairs
-# Hamming <= 2 == banded cross-set probe (pigeonhole)
-ORACLE_AUDIO_DECONTAMINATE = """
-WITH docs AS (
-  SELECT doc_id, doc_id // 5 AS g, doc_id % 5 AS v FROM documents
-), mag AS (
-  SELECT doc_id, f,
-         ((g * (f + 7) + f * f * 3) % 97) + 1
-         + CASE WHEN v = 4 AND f = 30 THEN 50 ELSE 0 END AS m
-  FROM docs, unnest(range(64)) AS tf(f)
-), bits AS (
-  SELECT a.doc_id,
-         CASE WHEN n.m > a.m
-              THEN 1::BIGINT << CAST(a.f AS INT) ELSE 0::BIGINT END
-           AS bitval
-  FROM mag a JOIN mag n ON n.doc_id = a.doc_id AND n.f = a.f + 1
-  WHERE a.f < 63
-), hashes AS (
-  SELECT doc_id, CAST(sum(bitval) AS BIGINT) AS afp FROM bits GROUP BY 1
-), hits AS (
-  SELECT c.doc_id AS cid, p.doc_id AS pid,
-         bit_count(xor(c.afp, p.afp)) AS h
-  FROM hashes c JOIN hashes p ON p.doc_id % 50 = 0
-  WHERE bit_count(xor(c.afp, p.afp)) <= 2
-)
-SELECT cid AS media_id, CAST(count(*) AS BIGINT) AS n_bench_hits,
-       CAST(min(h) AS BIGINT) AS min_hamming
-FROM hits GROUP BY 1 ORDER BY media_id
-"""
+ORACLE_AUDIO_DECONTAMINATE = _hamming_decontam_oracle(
+    _AUDIO_HASH_CTES, "hashes", ["afp"], 2)
 
 
 def q_caption_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12449,15 +12186,8 @@ WITH gated AS (
            AS sw_ratio
           FROM documents))
   WHERE q >= 0.8
-), {_img_hash_ctes('gated')}, pairs AS (
-  SELECT a.doc_id AS ia, b2.doc_id AS ib
-  FROM hashes a JOIN hashes b2 ON a.doc_id < b2.doc_id
-  WHERE bit_count(xor(a.dhash, b2.dhash)) <= 2
-), deg AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_near
-  FROM (SELECT ia AS doc_id FROM pairs
-        UNION ALL SELECT ib AS doc_id FROM pairs) u
-  GROUP BY 1
+), kept AS (
+  {_hamming_dedup_oracle(_img_hash_ctes('gated'), "hashes", ["dhash"], 2)}
 ), tok AS (
   SELECT doc_id,
          CAST(CASE WHEN len(trim(text)) = 0 THEN 0
@@ -12465,10 +12195,8 @@ WITH gated AS (
                                    x -> x <> '')) END AS BIGINT) AS n_tokens
   FROM gated
 )
-SELECT h.doc_id, h.dhash, coalesce(d.n_near, 0::BIGINT) AS n_near,
-       t.n_tokens
-FROM hashes h LEFT JOIN deg d USING (doc_id) JOIN tok t USING (doc_id)
-WHERE h.doc_id NOT IN (SELECT ib FROM pairs)
+SELECT k.media_id AS doc_id, k.dhash, k.n_near, t.n_tokens
+FROM kept k JOIN tok t ON t.doc_id = k.media_id
 ORDER BY doc_id
 """
 
@@ -13385,26 +13113,31 @@ QUERIES: dict[str, Query] = {
         "corpus, append the new batch, pair old+new from the bucketed "
         "store with zero Exchange", ("documents",)),
     "image_dedup_wide": Query(
-        q_image_dedup_wide, ORACLE_IMAGE_DEDUP_WIDE,
+        partial(q_image_dedup, n_limbs=2, max_hamming=4),
+        ORACLE_IMAGE_DEDUP_WIDE,
         "Wide 126-bit two-limb perceptual image dedup (h+v dHash, "
         "concatenated-space banding) — the LAION-scale path past the "
         "63-bit ~10M-item ceiling", ("documents",)),
     "image_dedup_xwide": Query(
-        q_image_dedup_xwide, ORACLE_IMAGE_DEDUP_XWIDE,
+        partial(q_image_dedup, n_limbs=3, max_hamming=6),
+        ORACLE_IMAGE_DEDUP_XWIDE,
         "189-bit three-limb perceptual dedup (h+v+diag dHash) at "
         "Hamming 6 through the unchanged N-limb banding - the next "
         "width-ladder rung", ("documents",)),
     "image_dedup_qwide": Query(
-        q_image_dedup_qwide, ORACLE_IMAGE_DEDUP_QWIDE,
+        partial(q_image_dedup, n_limbs=4, max_hamming=6),
+        ORACLE_IMAGE_DEDUP_QWIDE,
         "252-bit four-limb perceptual dedup (h+v+diag+anti-diag) at "
         "Hamming 6 - the ladder's LAION-regime rung, zero new pairing "
         "code", ("documents",)),
     "image_decontaminate_qwide": Query(
-        q_image_decontaminate_qwide, ORACLE_IMAGE_DECONTAMINATE_QWIDE,
+        partial(q_image_decontaminate, n_limbs=4, max_hamming=8),
+        ORACLE_IMAGE_DECONTAMINATE_QWIDE,
         "four-limb eval-set decontamination: 9x28-bit cross-set probe "
         "at the ladder's top rung", ("documents",)),
     "image_decontaminate_wide": Query(
-        q_image_decontaminate_wide, ORACLE_IMAGE_DECONTAMINATE_WIDE,
+        partial(q_image_decontaminate, n_limbs=2, max_hamming=4),
+        ORACLE_IMAGE_DECONTAMINATE_WIDE,
         "wide-fingerprint eval-set decontamination: two-limb cross-set "
         "band probe at the equal-rate Hamming-4 threshold",
         ("documents",)),

@@ -359,7 +359,7 @@ def test_audio_fingerprint_null_ids_dropped(spark):
     assert len(out) == 1 and out[0].media_id == 1 and out[0].afp is None
 
 
-def test_image_near_dup_pairs_banding_recall(spark):
+def test_hamming_band_pairs_banding_recall(spark):
     """Pigeonhole guarantee: every pair within Hamming <= n_bands-1 is
     found through the band join; far fingerprints yield no pair."""
     from comix_etl_spark.operators.dedup import hamming_band_pairs
@@ -402,29 +402,37 @@ def test_image_dedup_keeper_election(spark):
 
 
 def test_image_dhash_wide_limbs_and_invariance(spark):
-    """Wide fingerprint: dhash_h equals the 63-bit image_dhash limb;
-    dhash_v is invariant under brightness shift and area resize like
-    the h-limb; sub-grid and undecodable payloads quarantine BOTH
-    limbs to NULL."""
+    """Wide fingerprint (n_limbs=2): dhash_h equals the 63-bit one-limb
+    dhash; dhash_v is invariant under brightness shift and area resize
+    like the h-limb; sub-grid and undecodable payloads quarantine BOTH
+    limbs to NULL; n_limbs outside 1-4 raises."""
     import random
 
-    from comix_etl_spark.multimodal.media import image_dhash, image_dhash_wide
+    import pytest as _pt
+
+    from comix_etl_spark.multimodal.media import image_dhash
 
     rng = random.Random(11)
     base = [[rng.randrange(0, 200) for _ in range(9)] for _ in range(8)]
     bright = [[v + 31 for v in row] for row in base]
     up4 = [[base[r // 4][c // 4] for c in range(36)] for r in range(32)]
+    sub_8x8 = [[(r * 7 + c) % 255 for c in range(8)] for r in range(8)]
     rows = [(0, _raw8(base)), (1, _raw8(bright)), (2, _raw8(up4)),
-            (3, b"junk"), (4, _raw8([[9]]))]
+            (3, b"junk"), (4, _raw8([[9]])), (5, _raw8(sub_8x8))]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
-    wide = {r.media_id: (r.dhash_h, r.dhash_v)
-            for r in image_dhash_wide(df).collect()}
+    fps = image_dhash(df, n_limbs=2)
+    assert fps.columns == ["media_id", "dhash_h", "dhash_v"], fps.columns
+    wide = {r.media_id: (r.dhash_h, r.dhash_v) for r in fps.collect()}
     narrow = {r.media_id: r.dhash for r in image_dhash(df).collect()}
     assert wide[0][0] == narrow[0], "h-limb must equal 63-bit dHash"
     assert wide[0][1] is not None and wide[0][1] >= 0
     assert wide[1] == wide[0], "brightness shift must not change limbs"
     assert wide[2] == wide[0], "area-mean downscale must agree"
-    assert wide[3] == (None, None) and wide[4] == (None, None)
+    for i in (3, 4, 5):
+        assert wide[i] == (None, None), f"quarantine of payload {i}"
+    for bad in (0, 5):
+        with _pt.raises(ValueError):
+            image_dhash(df, n_limbs=bad)
 
 
 def test_hamming_band_pairs_two_limb_pigeonhole(spark):
@@ -866,14 +874,13 @@ def test_store_props_quote_roundtrip(spark, sf_small):
 
 
 def test_image_dhash_xwide_three_limbs(spark):
-    """189-bit rung: h/v limbs equal the wide form bit-for-bit, the
-    d-limb is brightness-invariant like the others, quarantine covers
-    all three limbs, and the THREE-limb dedup runs through the same
-    hamming_fp_dedup with zero new pairing code."""
+    """189-bit rung (n_limbs=3): h/v limbs equal the two-limb form
+    bit-for-bit, the d-limb is brightness-invariant like the others,
+    quarantine covers all three limbs, and the THREE-limb dedup runs
+    through the same hamming_fp_dedup with zero new pairing code."""
     import random
 
-    from comix_etl_spark.multimodal.media import (
-        image_dhash_wide, image_dhash_xwide)
+    from comix_etl_spark.multimodal.media import image_dhash
     from comix_etl_spark.operators.dedup import hamming_fp_dedup
 
     rng = random.Random(31)
@@ -883,32 +890,33 @@ def test_image_dhash_xwide_three_limbs(spark):
     rows = [(0, _raw8(base)), (1, _raw8(bright)), (2, _raw8(other)),
             (3, b"junk")]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
+    fps = image_dhash(df, n_limbs=3)
+    assert fps.columns == ["media_id", "dhash_h", "dhash_v", "dhash_d"]
     x = {r.media_id: (r.dhash_h, r.dhash_v, r.dhash_d)
-         for r in image_dhash_xwide(df).collect()}
+         for r in fps.collect()}
     w = {r.media_id: (r.dhash_h, r.dhash_v)
-         for r in image_dhash_wide(df).collect()}
+         for r in image_dhash(df, n_limbs=2).collect()}
     assert (x[0][0], x[0][1]) == w[0], "h/v limbs must equal the wide form"
     assert x[0][2] is not None and x[0][2] >= 0
     assert x[1] == x[0], "brightness shift must not change any limb"
     assert x[3] == (None, None, None)
-    fps = image_dhash_xwide(df)
     kept = {r.media_id: r.n_near
             for r in hamming_fp_dedup(
-                fps, fp_col=["dhash_h", "dhash_v", "dhash_d"],
+                fps, fp_cols=["dhash_h", "dhash_v", "dhash_d"],
                 max_hamming=6).collect()}
     assert 0 in kept and 1 not in kept and kept[0] == 1
     assert 2 in kept and kept[2] == 0
 
 
 def test_image_dhash_qwide_four_limbs(spark):
-    """252-bit rung: h/v/d limbs equal the xwide form bit-for-bit, the
-    a-limb is brightness-invariant like the others, quarantine covers
-    all four, and the FOUR-limb dedup runs through the same
-    hamming_fp_dedup with zero new pairing code (7 × 36-bit bands)."""
+    """252-bit rung (n_limbs=4): h/v/d limbs equal the three-limb form
+    bit-for-bit, the a-limb is brightness-invariant like the others,
+    quarantine covers all four, and the FOUR-limb dedup runs through
+    the same hamming_fp_dedup with zero new pairing code (7 × 36-bit
+    bands)."""
     import random
 
-    from comix_etl_spark.multimodal.media import (
-        image_dhash_qwide, image_dhash_xwide)
+    from comix_etl_spark.multimodal.media import image_dhash
     from comix_etl_spark.operators.dedup import hamming_fp_dedup
 
     rng = random.Random(47)
@@ -918,18 +926,20 @@ def test_image_dhash_qwide_four_limbs(spark):
     rows = [(0, _raw8(base)), (1, _raw8(bright)), (2, _raw8(other)),
             (3, b"junk")]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
+    fps = image_dhash(df, n_limbs=4)
+    assert fps.columns == [
+        "media_id", "dhash_h", "dhash_v", "dhash_d", "dhash_a"]
     q = {r.media_id: (r.dhash_h, r.dhash_v, r.dhash_d, r.dhash_a)
-         for r in image_dhash_qwide(df).collect()}
+         for r in fps.collect()}
     x = {r.media_id: (r.dhash_h, r.dhash_v, r.dhash_d)
-         for r in image_dhash_xwide(df).collect()}
+         for r in image_dhash(df, n_limbs=3).collect()}
     assert q[0][:3] == x[0], "h/v/d limbs must equal the xwide form"
     assert q[0][3] is not None and q[0][3] >= 0
     assert q[1] == q[0], "brightness shift must not change any limb"
     assert q[3] == (None, None, None, None)
-    fps = image_dhash_qwide(df)
     kept = {r.media_id: r.n_near
             for r in hamming_fp_dedup(
-                fps, fp_col=["dhash_h", "dhash_v", "dhash_d", "dhash_a"],
+                fps, fp_cols=["dhash_h", "dhash_v", "dhash_d", "dhash_a"],
                 max_hamming=6).collect()}
     assert 0 in kept and 1 not in kept and kept[0] == 1
     assert 2 in kept and kept[2] == 0
@@ -976,7 +986,7 @@ def test_hamming_fp_dedup_wide_keeper_election(spark):
             (12, ~h0 & ((1 << 63) - 1), v0), (13, None, None)]
     df = spark.createDataFrame(rows, "media_id long, dhash_h long, dhash_v long")
     got = {r.media_id: r for r in
-           hamming_fp_dedup(df, fp_col=["dhash_h", "dhash_v"],
+           hamming_fp_dedup(df, fp_cols=["dhash_h", "dhash_v"],
                             max_hamming=4).collect()}
     assert set(got) == {10, 12}
     assert got[10].n_near == 1 and got[12].n_near == 0
@@ -1040,7 +1050,7 @@ def test_video_dedup_trim_offset_invariance(spark):
     assert got[13].n_near == 0
 
 
-def test_image_probe_pairs_cross_set(spark):
+def test_hamming_band_probe_cross_set(spark):
     """Corpus-vs-probe banded matches: near pairs found, far pairs and
     NULLs dropped, no corpus self-pairs, both orientations of closeness
     covered (probe id smaller AND larger than corpus id)."""
@@ -1062,7 +1072,7 @@ def test_image_probe_pairs_cross_set(spark):
     assert not any(c == 102 or c == 103 or p == 3 for c, p in got), got
 
 
-def test_image_probe_pairs_broadcasts_probe_side(spark):
+def test_hamming_band_probe_broadcasts_probe_side(spark):
     """The benchmark/probe band rows must BROADCAST onto the corpus
     band rows — a sort-merge here would shuffle the corpus side for a
     benchmark-sized table (the whole point of the screen is zero

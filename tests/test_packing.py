@@ -153,3 +153,25 @@ def test_zorder_key_bit_interleave(spark):
     got = [r.z for r in df.select(zorder_key("x", "y").alias("z"))
            .orderBy(F.col("z")).collect()]
     assert got == [1, 2, 39]
+
+
+def test_probe_num_partitions_cache_keyed_on_app_and_bounded(spark,
+                                                              monkeypatch):
+    """The partition-count memo keys on the SparkContext's application
+    id (a session's Python id is reused after collection), answers a
+    repeated probe from the cache, and evicts past its cap instead of
+    growing with every distinct plan probed."""
+    from comix_etl_spark.operators import partitioning as P
+
+    monkeypatch.setattr(P, "_NPARTS_CACHE", {})
+    monkeypatch.setattr(P, "_NPARTS_CACHE_MAX", 4)
+    app_id = spark.sparkContext.applicationId
+    df = spark.range(10).repartition(3)
+    assert P.probe_num_partitions(df) == 3
+    assert P._NPARTS_CACHE == {(app_id, df.semanticHash()): 3}
+    P._NPARTS_CACHE[(app_id, df.semanticHash())] = 99  # served from cache
+    assert P.probe_num_partitions(df) == 99
+    for n in range(1, 8):
+        P.probe_num_partitions(spark.range(n).repartition(n))
+        assert len(P._NPARTS_CACHE) <= 4
+    assert all(k[0] == app_id for k in P._NPARTS_CACHE)
