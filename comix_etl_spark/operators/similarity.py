@@ -163,9 +163,11 @@ def _collect_query_rows(q: DataFrame, query_id_col: str, vec_col: str,
             f"query side exceeds max_query_rows={max_query_rows}: top-k "
             f"probes collect the query frame driver-side to route lists "
             f"and build ADC LUTs, so a fat query frame becomes a driver "
-            f"OOM rather than a distributed job. Chunk the query frame "
-            f"(or the streaming micro-batch) or raise max_query_rows "
-            f"deliberately.")
+            f"OOM rather than a distributed job. Score bulk query sets "
+            f"with ivf_pq_topk_distributed (queries stay executor-side); "
+            f"for a stream, cap the source's per-trigger size "
+            f"(maxFilesPerTrigger / maxOffsetsPerTrigger) under "
+            f"max_query_rows; or raise max_query_rows deliberately.")
     return rows
 
 
@@ -623,19 +625,80 @@ def ivf_pq_encode(df: DataFrame, centers, codebooks, *,
             .withColumnRenamed("_id", id_col))
 
 
-def _probe_lists(qrows, ct, nprobe: int):
-    """Driver-side query routing: L2-normalize the (tiny-by-contract)
-    query vectors and rank coarse centroids by the x·c − ‖c‖²/2 L2
-    identity — stable argsort, so ties break to the lowest list index
-    (the rule every oracle reproduces). Returns (normalized queries,
-    per-query probe lists)."""
-    qx = np.array([r[1] for r in qrows], dtype=np.float64)
+def _route(qx, ct):
+    """Query routing math shared by the driver and executor paths:
+    L2-normalize the query rows (a zero row stays zero) and rank coarse
+    centroids by the x·c − ‖c‖²/2 L2 identity — stable argsort, so ties
+    break to the lowest list index (the rule every oracle reproduces).
+    Returns (normalized queries, nq × C list order, best first)."""
     qn = np.linalg.norm(qx, axis=1)
     qn[qn == 0] = 1.0
     qx = qx / qn[:, None]
     cscore = qx @ ct.T - (ct * ct).sum(axis=1) / 2.0        # nq × C
-    order = np.argsort(-cscore, axis=1, kind="stable")       # score desc, c asc on ties
+    return qx, np.argsort(-cscore, axis=1, kind="stable")
+
+
+def _probe_lists(qrows, ct, nprobe: int):
+    """Driver-side routing of collected (tiny-by-contract) query rows
+    through ``_route``. Returns (normalized queries, per-query probe
+    lists)."""
+    qx, order = _route(np.array([r[1] for r in qrows], dtype=np.float64), ct)
     return qx, [order[i, :nprobe].astype(np.int64) for i in range(len(qx))]
+
+
+def _ivf_pq_prelude(corpus: DataFrame, query: DataFrame, centers,
+                    codebooks, encoded: DataFrame | None, *, id_col: str,
+                    vec_col: str, n_centroids: int, m: int, n_codes: int,
+                    seed: int, query_id_col: str):
+    """Shared setup of both IVF-PQ query paths: train the coarse
+    centroids and residual codebooks when not given, rename the query
+    id column, and encode the corpus unless a pre-built ``encoded``
+    frame is injected. Returns (centers, codebooks, query frame, query
+    id type, encoded frame)."""
+    if centers is None:
+        # normalized training to match the normalized assignment —
+        # see train_ivf_centroids(normalize=) for the measured failure
+        centers = train_ivf_centroids(corpus, vec_col=vec_col,
+                                      n_centroids=n_centroids, seed=seed,
+                                      normalize=True)
+    ct = np.asarray(centers, dtype=np.float64)
+    if codebooks is None:
+        codebooks = train_residual_codebooks(corpus, ct, vec_col=vec_col,
+                                             m=m, k=n_codes, seed=seed)
+    books = np.asarray(codebooks, dtype=np.float64)
+    q = (query.withColumnRenamed(id_col, query_id_col)
+         if query_id_col not in query.columns else query)
+    if encoded is None:
+        encoded = ivf_pq_encode(
+            spread_small_scan(corpus.select(id_col, vec_col)),
+            ct, books, id_col=id_col, vec_col=vec_col)
+    return (ct, books, q, q.schema[query_id_col].dataType.simpleString(),
+            encoded)
+
+
+def _rerank_tail(batch_top: DataFrame, corpus: DataFrame, qv: DataFrame,
+                 *, id_col: str, vec_col: str, k: int,
+                 rerank: int) -> DataFrame:
+    """Shared tail of both IVF-PQ query paths. ``batch_top`` holds each
+    scoring unit's local top-``rerank`` ADC rows (query_id, _cid,
+    adc_score) with boundary ties kept; a per-query window takes the
+    global top-``rerank`` by (score desc, id), then exact cosine against
+    ``qv`` (query_id, _qv) re-ranks the survivors to the final k."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("adc_score"),
+                                               F.asc("_cid"))
+    cand = (batch_top.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= rerank).drop("_rn", "adc_score"))
+    cv = corpus.select(F.col(id_col).alias("_cid"),
+                       F.col(vec_col).alias("_cv"))
+    scored = (cand.join(cv, "_cid").join(qv, "query_id")
+              .select("query_id", F.col("_cid").alias(id_col),
+                      F.round(cosine("_cv", "_qv"), 6).alias("cosine_sim")))
+    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"),
+                                                F.asc(id_col))
+    return (scored.withColumn("_rn", F.row_number().over(w2))
+            .filter(F.col("_rn") <= k).drop("_rn"))
 
 
 def ivf_pq_topk(corpus: DataFrame, query: DataFrame, *, centers=None,
@@ -646,7 +709,6 @@ def ivf_pq_topk(corpus: DataFrame, query: DataFrame, *, centers=None,
                 query_id_col: str = "query_id",
                 encoded: DataFrame | None = None,
                 max_query_rows: int = 10_000,
-                chunk_queries: bool = False,
                 cleanup: list | None = None) -> DataFrame:
     """IVF-PQ approximate cosine top-k — the composed billion-scale ANN
     architecture (FAISS ``IVFx,PQm``-shaped, from the public Jégou et
@@ -668,125 +730,31 @@ def ivf_pq_topk(corpus: DataFrame, query: DataFrame, *, centers=None,
     re-ranks to the final k. The corpus never shuffles — only bounded
     candidate rows move, and unprobed lists are never scored.
 
+    The query side is collected driver-side, at most
+    ``max_query_rows`` rows (``_collect_query_rows`` raises beyond it).
+    Bulk query sets belong on ``ivf_pq_topk_distributed``, which routes
+    and scores queries executor-side with the same arithmetic.
+
     ``encoded`` injects a pre-built (id, centroid_id, pq_code) frame —
     the persisted-store path (ivf_pq_topk_from_store): the encode scan
     is skipped and scoring runs over whatever the caller pruned to.
 
-    ``chunk_queries=True`` (r13): a query frame FATTER than
-    ``max_query_rows`` no longer raises — it is pulled driver-side in
-    ``max_query_rows`` slices (``toLocalIterator``, one partition
-    resident at a time), each slice runs the full route→ADC→re-rank
-    pipeline, and the per-slice top-k frames union. Queries are
-    independent across slices (every window partitions by query_id),
-    so the union is EXACTLY the unchunked answer (pytest-locked);
-    driver memory stays bounded by one slice of LUTs. The encoded
-    frame is persisted (MEMORY_AND_DISK) and materialized once so the
-    encode scan isn't re-paid per slice.
-
-    ``cleanup`` (r14, ADVICE r13): pass a list and every pinned
-    resource the call creates — one (probe-set, LUT, constants)
-    broadcast per slice, plus the persisted encoded frame when
-    chunking — is appended to it; after the RESULT IS MATERIALIZED the
-    caller releases them deterministically via
+    ``cleanup`` (r14, ADVICE r13): pass a list and the one pinned
+    resource the call creates — its (probe-set, LUT, constants)
+    broadcast — is appended to it; after the RESULT IS MATERIALIZED the
+    caller releases it deterministically via
     ``release_search_resources``. Without it cleanup is GC/
     ContextCleaner-driven, which is fine for one-shot queries but lets
     block-manager and driver-temp state accumulate in long-running
     foreachBatch ingest loops for as long as Python references
     survive. Never release before an action has consumed the returned
-    DataFrame — the plan reads the broadcasts at execution time.
+    DataFrame — the plan reads the broadcast at execution time.
     """
-    if centers is None:
-        # normalized training to match the normalized assignment —
-        # see train_ivf_centroids(normalize=) for the measured failure
-        centers = train_ivf_centroids(corpus, vec_col=vec_col,
-                                      n_centroids=n_centroids, seed=seed,
-                                      normalize=True)
-    ct = np.asarray(centers, dtype=np.float64)
-    if codebooks is None:
-        codebooks = train_residual_codebooks(corpus, ct, vec_col=vec_col,
-                                             m=m, k=n_codes, seed=seed)
-    books = np.asarray(codebooks, dtype=np.float64)
-
-    q = (query.withColumnRenamed(id_col, query_id_col)
-         if query_id_col not in query.columns else query)
-    if encoded is None:
-        encoded = ivf_pq_encode(
-            spread_small_scan(corpus.select(id_col, vec_col)),
-            ct, books, id_col=id_col, vec_col=vec_col)
-    common = dict(id_col=id_col, vec_col=vec_col, k=k, nprobe=nprobe,
-                  rerank=rerank, query_id_col=query_id_col,
-                  qid_type=q.schema[query_id_col].dataType.simpleString(),
-                  cleanup=cleanup)
-    if not chunk_queries:
-        qrows = _collect_query_rows(q, query_id_col, vec_col,
-                                    max_query_rows)
-        return _ivf_pq_topk_rows(corpus, encoded, qrows, ct, books,
-                                 **common)
-    import itertools
-
-    it = iter(q.select(query_id_col, vec_col)
-              .toLocalIterator(prefetchPartitions=False))
-    first = list(itertools.islice(it, max_query_rows + 1))
-    if len(first) <= max_query_rows:
-        # fits in one slice — identical to the unchunked path, no
-        # materialization cost
-        return _ivf_pq_topk_rows(corpus, encoded, first, ct, books,
-                                 **common)
-    # materialize the encoded frame once so each slice's job reads the
-    # cached codes instead of re-running the encode scan. persist (not
-    # localCheckpoint): semantically identical here — the slices only
-    # re-read the frame — but a persisted frame is RELEASABLE
-    # (unpersist targets exactly these blocks; a localCheckpoint's RDD
-    # blocks can only be freed by the ContextCleaner after GC), which
-    # the cleanup contract needs for long-running ingest loops
-    from pyspark import StorageLevel
-
-    encoded = encoded.persist(StorageLevel.MEMORY_AND_DISK)
-    encoded.count()
-    if cleanup is not None:
-        cleanup.append(encoded)
-    outs = []
-    buf = first
-    while buf:
-        outs.append(_ivf_pq_topk_rows(corpus, encoded,
-                                      buf[:max_query_rows], ct, books,
-                                      **common))
-        rest = buf[max_query_rows:]
-        buf = rest + list(itertools.islice(it,
-                                           max_query_rows - len(rest)))
-    from functools import reduce
-
-    return reduce(DataFrame.unionByName, outs)
-
-
-def release_search_resources(resources: list) -> None:
-    """Deterministically release the pinned state an ``ivf_pq_topk``
-    call collected into its ``cleanup`` list: slice (probe-set, LUT,
-    constants) broadcasts are destroyed and the persisted encoded
-    frame's blocks unpersisted — both non-blocking. Call ONLY after an
-    action has fully consumed the returned DataFrame (the plan reads
-    the broadcasts at execution time). The long-running caller is
-    ``foreach_batch_ann_ingest`` (ADVICE r13): without this, cleanup
-    is GC/ContextCleaner-driven and block-manager + driver-temp state
-    accumulates across micro-batches for as long as Python references
-    survive. The list is emptied so a reused list never double-frees."""
-    while resources:
-        obj = resources.pop()
-        if hasattr(obj, "destroy"):          # Broadcast
-            obj.destroy(blocking=False)
-        elif hasattr(obj, "unpersist"):      # persisted DataFrame
-            obj.unpersist(blocking=False)
-
-
-def _ivf_pq_topk_rows(corpus: DataFrame, encoded: DataFrame, qrows,
-                      ct, books, *, id_col: str, vec_col: str, k: int,
-                      nprobe: int, rerank: int, query_id_col: str,
-                      qid_type: str, cleanup: list | None = None) -> DataFrame:
-    """The route→ADC→re-rank core of ``ivf_pq_topk`` for ONE
-    driver-resident slice of query rows (see the chunk_queries
-    contract there)."""
-    from pyspark.sql import Window
-
+    ct, books, q, qid_type, encoded = _ivf_pq_prelude(
+        corpus, query, centers, codebooks, encoded, id_col=id_col,
+        vec_col=vec_col, n_centroids=n_centroids, m=m, n_codes=n_codes,
+        seed=seed, query_id_col=query_id_col)
+    qrows = _collect_query_rows(q, query_id_col, vec_col, max_query_rows)
     mm, _, sub = books.shape
     qids = [r[0] for r in qrows]
     qx, probe_sets = _probe_lists(qrows, ct, nprobe)
@@ -859,19 +827,25 @@ def _ivf_pq_topk_rows(corpus: DataFrame, encoded: DataFrame, qrows,
                  .mapInPandas(score_batches,
                               schema=f"query_id {qid_type}, _cid {cid_type}, "
                                      "adc_score double"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("_cid"))
-    cand = (batch_top.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= rerank).drop("_rn", "adc_score"))
-    cv = corpus.select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv"))
     qv = spark.createDataFrame(
         [(r[0], list(map(float, r[1]))) for r in qrows],
         f"query_id {qid_type}, _qv array<double>")
-    scored = (cand.join(cv, "_cid").join(F.broadcast(qv), "query_id")
-              .select("query_id", F.col("_cid").alias(id_col),
-                      F.round(cosine("_cv", "_qv"), 6).alias("cosine_sim")))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (scored.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") <= k).drop("_rn"))
+    return _rerank_tail(batch_top, corpus, F.broadcast(qv), id_col=id_col,
+                        vec_col=vec_col, k=k, rerank=rerank)
+
+
+def release_search_resources(resources: list) -> None:
+    """Deterministically release the pinned state ``ivf_pq_topk`` calls
+    collected into their ``cleanup`` list: each (probe-set, LUT,
+    constants) broadcast is destroyed, non-blocking. Call ONLY after an
+    action has fully consumed the returned DataFrame (the plan reads
+    the broadcast at execution time). The long-running caller is
+    ``foreach_batch_ann_ingest`` (ADVICE r13): without this, cleanup
+    is GC/ContextCleaner-driven and block-manager + driver-temp state
+    accumulates across micro-batches for as long as Python references
+    survive. The list is emptied so a reused list never double-frees."""
+    while resources:
+        resources.pop().destroy(blocking=False)
 
 
 def ivf_pq_topk_distributed(corpus: DataFrame, query: DataFrame, *,
@@ -894,12 +868,11 @@ def ivf_pq_topk_distributed(corpus: DataFrame, query: DataFrame, *,
 
     Stage shape (all executor-side):
     1. ROUTE — one Arrow pass over the query frame (coarse centroids in
-       the task closure): normalize, rank lists by the x·c − ‖c‖²/2
-       identity with the same stable tie-break as ``_probe_lists``, and
-       emit ``nprobe`` rows per query carrying the per-list constant
-       ⟨q, center⟩ and the query's flattened ADC LUT (m·n_codes
-       doubles, computed ONCE per query with the exact ``einsum`` the
-       driver path uses).
+       the task closure): the shared ``_route`` math (normalize, rank
+       lists by x·c − ‖c‖²/2, stable tie-break), emitting ``nprobe``
+       rows per query carrying the per-list constant ⟨q, center⟩ and
+       the query's flattened ADC LUT (m·n_codes doubles, computed ONCE
+       per query with the exact ``einsum`` the driver path uses).
     2. GATHER + ADC — COGROUP the encoded corpus with the routed
        queries on ``centroid_id`` (``groupBy(...).cogroup(...)
        .applyInPandas``): each inverted list's codes meet the queries
@@ -908,9 +881,9 @@ def ivf_pq_topk_distributed(corpus: DataFrame, query: DataFrame, *,
        broadcast-join gather was measured pushing ~|list|·nq·LUT bytes
        through Arrow; the cogroup moves each side once). Per group the
        score is one vectorized take_along_axis+sum per query (the
-       identical arithmetic order as ``_ivf_pq_topk_rows``), emitting
-       the group-local top-``rerank`` per query with boundary ties
-       kept — the same superset contract, so the global window
+       identical arithmetic order as ``ivf_pq_topk``'s scoring pass),
+       emitting the group-local top-``rerank`` per query with boundary
+       ties kept — the same superset contract, so the global window
        resolves identically. Scoring streams one query at a time
        (never a Q×N score matrix), so a hot list probed by millions
        of queries stays memory-bounded at |list| + its own top rows.
@@ -924,9 +897,9 @@ def ivf_pq_topk_distributed(corpus: DataFrame, query: DataFrame, *,
        is unchanged (pytest-locked; the cost is n_salts× the routed
        LUT-row shuffle — tiny — and n_salts× the per-query kth
        partitions).
-    3. The unchanged tail: global per-query top-``rerank`` window, then
-       exact cosine re-rank to k — with the query side JOINED as a
-       DataFrame, not re-collected.
+    3. The shared ``_rerank_tail``: global per-query top-``rerank``
+       window, then exact cosine re-rank to k — with the query side
+       JOINED as a DataFrame, not re-collected.
 
     Shuffle economics vs the driver path: the driver path moves zero
     corpus bytes but serializes every query through one process; this
@@ -938,38 +911,19 @@ def ivf_pq_topk_distributed(corpus: DataFrame, query: DataFrame, *,
     function's contract; single queries and micro-batches should keep
     using ``ivf_pq_topk``.
     """
-    if centers is None:
-        centers = train_ivf_centroids(corpus, vec_col=vec_col,
-                                      n_centroids=n_centroids, seed=seed,
-                                      normalize=True)
-    ct = np.asarray(centers, dtype=np.float64)
-    if codebooks is None:
-        codebooks = train_residual_codebooks(corpus, ct, vec_col=vec_col,
-                                             m=m, k=n_codes, seed=seed)
-    books = np.asarray(codebooks, dtype=np.float64)
+    ct, books, q, qid_type, encoded = _ivf_pq_prelude(
+        corpus, query, centers, codebooks, encoded, id_col=id_col,
+        vec_col=vec_col, n_centroids=n_centroids, m=m, n_codes=n_codes,
+        seed=seed, query_id_col=query_id_col)
     mm, kk, sub = books.shape
-    chalf = (ct * ct).sum(axis=1) / 2.0
-
-    q = (query.withColumnRenamed(id_col, query_id_col)
-         if query_id_col not in query.columns else query)
-    qid_type = q.schema[query_id_col].dataType.simpleString()
-    if encoded is None:
-        encoded = ivf_pq_encode(
-            spread_small_scan(corpus.select(id_col, vec_col)),
-            ct, books, id_col=id_col, vec_col=vec_col)
 
     def route_batches(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            qx = np.vstack(pdf["_qv"].to_numpy()).astype(np.float64)
-            qn = np.linalg.norm(qx, axis=1)
-            qn[qn == 0] = 1.0
-            qx = qx / qn[:, None]
-            cscore = qx @ ct.T - chalf
-            # stable argsort — ties to the lowest list index, the rule
-            # _probe_lists uses and every det oracle reproduces
-            order = np.argsort(-cscore, axis=1, kind="stable")[:, :nprobe]
+            qx, order = _route(
+                np.vstack(pdf["_qv"].to_numpy()).astype(np.float64), ct)
+            order = order[:, :nprobe]
             consts = qx @ ct.T
             luts = np.einsum("qjs,jcs->qjc",
                              qx.reshape(len(qx), mm, sub), books)
@@ -1000,7 +954,7 @@ def ivf_pq_topk_distributed(corpus: DataFrame, query: DataFrame, *,
                                    routed_pdf["_cterm"].to_numpy(),
                                    routed_pdf["_lut"].to_numpy()):
             lut2 = np.asarray(lut, dtype=np.float64).reshape(mm, kk)
-            # the exact arithmetic order of _ivf_pq_topk_rows:
+            # the exact arithmetic order of ivf_pq_topk's scoring pass:
             # cterm + take_along_axis(lut, codes.T, 1).sum(axis=0)
             scores = cterm + np.take_along_axis(
                 lut2, codes.T, axis=1).sum(axis=0)
@@ -1033,23 +987,10 @@ def ivf_pq_topk_distributed(corpus: DataFrame, query: DataFrame, *,
                      lambda left, right: score_group(left, right),
                      schema=f"query_id {qid_type}, _cid {cid_type}, "
                             "adc_score double"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc_score"),
-                                               F.asc("_cid"))
-    cand = (batch_top.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= rerank).drop("_rn", "adc_score"))
-    cv = corpus.select(F.col(id_col).alias("_cid"),
-                       F.col(vec_col).alias("_cv"))
     qv = q.select(F.col(query_id_col).alias("query_id"),
                   F.col(vec_col).cast("array<double>").alias("_qv"))
-    scored = (cand.join(cv, "_cid").join(qv, "query_id")
-              .select("query_id", F.col("_cid").alias(id_col),
-                      F.round(cosine("_cv", "_qv"), 6).alias("cosine_sim")))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"),
-                                                F.asc(id_col))
-    return (scored.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") <= k).drop("_rn"))
+    return _rerank_tail(batch_top, corpus, qv, id_col=id_col,
+                        vec_col=vec_col, k=k, rerank=rerank)
 
 
 def ivf_pq_store_stats(spark, table: str) -> DataFrame:
@@ -1267,9 +1208,7 @@ def knn_join_lsh(corpus: DataFrame, *, dim: int, id_col: str = "vec_id",
 
 def kcenter_sample(df: DataFrame, *, id_col: str = "vec_id",
                    vec_col: str = "embedding", k: int = 8,
-                   cached: bool = False, batch: int = 1,
-                   adapt_batch: bool = False,
-                   _round_stats: list | None = None) -> DataFrame:
+                   batch: int = 1) -> DataFrame:
     """Greedy k-center / farthest-point diversity sampling (Gonzalez
     1985) over an embedding column — the coverage-maximizing SELECTION
     step of data curation (pick k maximally-diverse exemplars; the
@@ -1278,56 +1217,56 @@ def kcenter_sample(df: DataFrame, *, id_col: str = "vec_id",
     int64s and the sample is engine- and rerun-deterministic (the same
     6dp-rounded-cosine idiom the ANN oracles already prove).
 
-    Plan per round (k-1 rounds after the min-id seed): the chosen
-    centers ride INSIDE the expression as literal arrays (k·dim
-    doubles — broadcast-by-constant), one scan computes min distance to
-    the chosen set, and a TakeOrdered(1) picks the farthest point —
-    O(k) scans total, no pairwise shuffle, driver state bounded by k
-    vectors. Each round's scan re-evaluates ALL i chosen centers, so
-    total work is O(k²) center-distance evaluations per row — optimal
-    simplicity at small k (the curation-exemplar regime, k ≲ 32).
-
-    ``cached=True`` switches to the incremental variant for LARGE k
-    (real curation runs pick thousands of centers): a running ``_md``
-    column holds each row's min distance to the chosen set, each round
-    updates it against ONLY the newest center (``least(_md, dist)``)
-    and eagerly ``localCheckpoint``s to pin the value and truncate
-    lineage — O(k) total center-distance evaluations per row, the
-    k-means-loop shape. Output is IDENTICAL to the scans form
-    (pytest-asserted): int64 micro-unit distances make
+    One loop (after the min-id seed): a running ``_md`` column holds
+    each row's min distance to the chosen set. Each round lazily
+    ``localCheckpoint``s it (pinning the value and truncating lineage;
+    the round's TakeOrdered collect materializes the blocks, so no
+    separate count job — r15), excludes the chosen ids, fetches the
+    top-``batch`` rows by ``_md``, accepts them under the strict bound
+    below, and updates ``_md`` against ONLY the accepted centers — O(k)
+    center-distance evaluations per row in total, the k-means-loop
+    shape. The k-scans form it replaced re-evaluated every chosen
+    center on every row each round, O(k²): measured r9 at k=64 on sf0.1
+    embeddings, 189.3 s against 18.3 s for the running-min loop, with
+    identical output. int64 micro-unit distances make
     ``least(least(a,b),c) == least(a,b,c)`` exact, including the
-    NULL-skip for zero-norm vectors. Cost of the trade: one
-    checkpoint materialization of (id, vec, norm, mind) per round —
-    size the executor storage pool for one corpus copy; superseded
-    checkpoint blocks are released by Spark's ContextCleaner as the
-    previous frame goes unreferenced.
+    NULL-skip for zero-norm vectors, so the selection equals the
+    round-by-round oracle (``plans/queries.py::_kcenter_oracle_sql``,
+    pytest-locked). Cost of the trade: one checkpoint materialization
+    of (id, vec, norm, mind) per round — size the executor storage pool
+    for one corpus copy; superseded checkpoint blocks are released by
+    Spark's ContextCleaner as the previous frame goes unreferenced.
 
-    ``batch=m`` (m > 1) adds Gonzalez OVER-SELECTION on top of the
-    cached representation, for curation-scale k (hundreds-thousands)
-    where the job-per-round driver round-trip is the ceiling: each
-    round fetches the top-m farthest candidates in ONE TakeOrdered(m),
-    then accepts them greedily driver-side — candidate distances to
-    centers accepted EARLIER IN THE SAME BATCH are re-verified with
-    one tiny m-row Spark job built from the SAME quantized-distance
-    expression (so acceptance math is bit-identical to the scan
-    form), and acceptance stops the moment the best updated candidate
-    no longer STRICTLY beats the stale distance of the last fetched
-    candidate (an upper bound on every non-fetched point, whose
-    distances only shrink as centers are added — the pigeonhole of
-    this algorithm). Output is therefore IDENTICAL to ``cached=True``
-    / the scans form (pytest-asserted at k=64); only the round count
-    changes: k/⟨accepted per batch⟩ checkpoints + 2 jobs per round
-    instead of k of each. Worst case (adversarial ties) accepts 1 per
-    round — never worse than unbatched.
+    ``batch=m`` (m > 1) is Gonzalez OVER-SELECTION, for curation-scale
+    k (hundreds-thousands) where the job-per-round driver round-trip is
+    the ceiling: each round fetches the top-m farthest candidates in
+    ONE TakeOrdered(m), then accepts them greedily driver-side —
+    candidate distances to centers accepted EARLIER IN THE SAME BATCH
+    are re-verified with one tiny m-row Spark job built from the SAME
+    quantized-distance expression (so acceptance math is bit-identical
+    to the per-round update), and acceptance stops the moment the best
+    updated candidate no longer STRICTLY beats the stale distance of
+    the last fetched candidate (an upper bound on every non-fetched
+    point, whose distances only shrink as centers are added). Output is
+    therefore IDENTICAL for every ``batch`` (pytest-locked at k=64);
+    only the round count changes: k/⟨accepted per batch⟩ checkpoints +
+    2 jobs per round instead of k of each. Worst case (adversarial
+    ties) accepts 1 per round — never worse than ``batch=1``. Measured
+    r10 at k=512: ``batch=16`` 96.8 s against 148.9 s at ``batch=1``;
+    larger batches stopped helping (b32 103.2 s, b64 121.6 s) because
+    the strict bound flushes early once the distance field gets dense.
 
-    ``adapt_batch=True`` (r12) re-sizes each round's fetch to ~2× the
-    previous round's acceptance count (clamped to [8, max(2·batch,
-    128)]; ``batch`` is the initial width): early rounds, where
-    centers are far apart and whole batches are accepted, grow toward
-    the clamp; late rounds, where the strict bound flushes quickly,
-    shrink so fetch + m×m re-verify waste tracks the actual acceptance
-    rate. The schedule changes ONLY the grouping of fetches — the
-    accepted sequence is the unbatched greedy one for any schedule.
+    Centers enter the per-round expressions in one of two forms, chosen
+    from ``k`` (r12): at k ≤ 32 as literal arrays (the update is one
+    ``least(_md, dist(c₁), …)``, the exclusion an ``isin``); above it as
+    broadcast DATA bundles (a ``collect_list`` of (vector, norm) structs
+    folded by ``aggregate``, the exclusion a broadcast anti-join), so
+    the generated code is round-invariant and janino compiles once.
+    Profiled r12 at k=1024/b64: ~5.6 s/round of fresh-compile cost with
+    literals → 2.1 s/round with bundles, 112.5 → 54.6 s end to end; but
+    each bundle costs a couple of extra tiny jobs per round, which
+    dominated at serving k (the k=8 registry queries measured 1.8–3×
+    slower under always-bundle in the r12 run-A bench).
 
     Returns (sel_order, id, mindist_e6): selection order (0 = seed),
     point id, and its min cosine distance ×1e6 to the previously
@@ -1339,6 +1278,9 @@ def kcenter_sample(df: DataFrame, *, id_col: str = "vec_id",
 
     if k < 1:
         raise ValueError("k must be >= 1")
+    if batch < 1:
+        raise ValueError("batch must be >= 1")
+    spark = df.sparkSession
     # NULL ids (or ids that fail the long cast) are dropped: a NULL
     # seed would poison every round's ~isin filter (NULL comparisons
     # filter the whole corpus — every round came back empty), and the
@@ -1355,267 +1297,137 @@ def kcenter_sample(df: DataFrame, *, id_col: str = "vec_id",
     src = src.withColumn("_n", norm(F.col("_v")))
     seed = src.orderBy("_id").limit(1).collect()
     if not seed:
-        return df.sparkSession.createDataFrame(
+        return spark.createDataFrame(
             [], "sel_order int, id long, mindist_e6 long")
     chosen: list[tuple[int, list, int | None]] = [
         (seed[0]._id, list(seed[0]._v), None)]
 
-    def _dist(vec: list):
+    def _cnorm(vec: list) -> float:
         # plain left-to-right sum from 0.0 — the same IEEE fold order as
         # functions.vector.norm's aggregate and the oracle's
         # list_dot_product(v, v), so all three agree bit-for-bit
-        cn = math.sqrt(sum((x * x for x in vec), 0.0))
-        # F.lit(list) builds ONE ArrayType literal in a single py4j
-        # round-trip; the previous F.array(*[F.lit(x) ...]) form made
-        # dim+1 JVM calls per center, and the scans form calls _dist
-        # once per chosen center per round — measured r14 as multiple
-        # seconds of pure driver time at k=8/dim=64. Same values, same
-        # zip_with/aggregate fold, bit-identical distances.
-        cos = F.when((F.col("_n") > 0) & (F.lit(cn) > 0),
-                     dot(F.col("_v"), F.lit([float(x) for x in vec]))
-                     / (F.col("_n") * F.lit(cn)))
+        return math.sqrt(sum((x * x for x in vec), 0.0))
+
+    def _qdist(cv, cn):
+        # quantized cosine distance of every row to one center (cv =
+        # its vector, cn = its driver-computed norm), in micro-units;
+        # NULL when either norm is zero. Every update and re-verify
+        # goes through this one expression, so all forms agree
+        # bit-for-bit, and int64 least() is associative+commutative
+        # with NULL-skip, so neither the fold order nor collect_list's
+        # array order matters.
+        cos = F.when((F.col("_n") > 0) & (cn > 0),
+                     dot(F.col("_v"), cv) / (F.col("_n") * cn))
         return F.round((F.lit(1.0) - F.round(cos, 6)) * 1e6).cast("long")
 
-    def _center_step(acc, c):
-        # one fold step of the running-min update against a center
-        # struct (cv = vector, cn = its driver-computed norm): same
-        # dot() fold, same 6dp rounding as _dist, so the update is
-        # bit-identical to the scans form; int64 least() is
-        # associative+commutative with NULL-skip (zero-norm rows or
-        # centers yield NULL and are skipped — pytest-locked output
-        # equality with a zero-norm vector in the corpus), so neither
-        # the fold order nor collect_list's array order matters.
-        cos = F.when((F.col("_n") > 0) & (c["cn"] > 0),
-                     dot(F.col("_v"), c["cv"])
-                     / (F.col("_n") * c["cn"]))
-        return F.least(acc,
-                       F.round((F.lit(1.0) - F.round(cos, 6)) * 1e6)
-                       .cast("long"))
+    def _dist(vec: list):
+        # F.lit(list) builds ONE ArrayType literal in a single py4j
+        # round-trip; an F.array(*[F.lit(x) ...]) form makes dim+1 JVM
+        # calls per center — measured r14 as multiple seconds of pure
+        # driver time at k=8/dim=64
+        return _qdist(F.lit([float(x) for x in vec]), F.lit(_cnorm(vec)))
 
-    def _center_lits(vecs: list[list]):
-        # centers as a literal array-of-structs (vector + the same
-        # driver-side left-to-right sqrt-sum norm) — folded with the
-        # identical _center_step, so the two forms are bit-identical
-        # one ArrayType literal per center (single py4j call) instead
-        # of dim F.lit calls — same values, same fold, same distances
-        return F.array(*[
-            F.struct(
-                F.lit([float(x) for x in v]).alias("cv"),
-                F.lit(math.sqrt(sum((x * x for x in v), 0.0))).alias("cn"))
-            for v in vecs])
+    def _key(md, cid):
+        # TakeOrdered order: _md DESC NULLS LAST, _id ASC
+        return (md is None, -(md if md is not None else 0), cid)
 
-    # FORM SELECTION (r12): at curation k the per-round expressions ride
-    # the centers as broadcast DATA bundles, so generated code is
-    # round-invariant and janino compiles once (profiled k=1024/b64:
-    # ~5.6 s/round of fresh-compile cost with literals → 2.1 s/round
-    # with bundles; 112.5 → 54.6 s end-to-end). But each bundle costs a
-    # couple of extra tiny jobs per round, which DOMINATES at serving k
-    # (the k=8 registry queries measured 1.8–3× slower under
-    # always-bundle in the r12 run-A bench) — so small k keeps the
-    # literal forms, whose total compile cost is bounded by the few
-    # rounds, and large k switches to bundles.
     use_bundles = k > 32
+    cur = src.withColumn("_md", _dist(list(seed[0]._v)))
+    while len(chosen) < k:
+        cur = cur.localCheckpoint(eager=False)
+        if use_bundles:
+            # exclusion by broadcast ANTI-join, not isin: at curation k
+            # (1024+) the per-round isin rebuilt a k-literal In
+            # expression — the r11b anti-pattern
+            chosen_ids = spark.createDataFrame(
+                [(c[0],) for c in chosen], "_id long")
+            base_cand = cur.join(F.broadcast(chosen_ids), "_id", "anti")
+        else:
+            base_cand = cur.filter(
+                ~F.col("_id").isin([c[0] for c in chosen]))
+        cand = (base_cand
+                .orderBy(F.col("_md").desc(), F.col("_id").asc())
+                .limit(batch)
+                .select("_id", "_v", "_n", "_md").collect())
+        if not cand:  # k exceeds the corpus — return what exists
+            break
+        # fewer than `batch` rows ⇒ the whole remaining corpus is in
+        # hand and no outside point can outrank anything here
+        exhausted = len(cand) < batch
+        bound = None if exhausted else cand[-1]._md
+        # pairwise quantized distances among candidates (_qdist). At
+        # curation k the candidate set rides as DATA (a broadcast
+        # collect_list bundle) so the generated code is round-invariant
+        # (r12); the norms are the driver-collected _n of the same rows
+        # (norm() fold — the exact value _cnorm recomputes), so
+        # quantized distances are unchanged.
+        mat: dict[tuple[int, int], int | None] = {}
+        if len(cand) > 1:
+            cdf = spark.createDataFrame(
+                [(c._id, list(c._v), float(c._n)) for c in cand],
+                "_id long, _v array<double>, _n double")
 
-    if batch < 1:
-        raise ValueError("batch must be >= 1")
-    if batch > 1:
-        spark = df.sparkSession
+            def _dstruct(c):
+                return F.struct(c["ci"].alias("ci"),
+                                _qdist(c["cv"], c["cn"]).alias("d"))
 
-        def _key(md, cid):
-            # TakeOrdered order: _md DESC NULLS LAST, _id ASC
-            return (md is None, -(md if md is not None else 0), cid)
-
-        # r12 over-selection remedy (VERDICT r11 #4): the optimal batch
-        # is data-dependent — when the strict bound flushes a round
-        # early, most of the fetch and the m×m re-verify matrix is
-        # wasted (PLANS.md r11: k=1024 b128 130.6 s vs b64 112.5 s).
-        # With adapt_batch the NEXT round's fetch is sized to ~2× what
-        # this round actually accepted (clamped to [8, max(2·batch,
-        # 128)]), so the knob tracks the acceptance rate through the
-        # run instead of being fixed at a single compromise width.
-        # Output is IDENTICAL for ANY batch schedule — the acceptance
-        # bound admits exactly the unbatched greedy sequence regardless
-        # of how candidates are grouped into fetches (pytest-locked).
-        m = batch
-        m_hi = max(2 * batch, 128)
-        cur = src.withColumn("_md", _dist(list(seed[0]._v)))
-        while len(chosen) < k:
-            # LAZY checkpoint (r15): the round's TakeOrdered collect
-            # below materializes the blocks as a side effect, so the
-            # running representation stays pinned/incremental (O(k)
-            # center evaluations) at HALF the jobs per round — eager
-            # spent a separate count-style materialization job first
-            # (r14 verdict #6: per-round driver jobs dominate small k)
-            cur = cur.localCheckpoint(eager=False)
             if use_bundles:
-                # exclusion by broadcast ANTI-join, not isin: at
-                # curation k (1024+) the per-round isin rebuilt a
-                # k-literal In expression — the r11b anti-pattern
-                chosen_ids = spark.createDataFrame(
-                    [(c[0],) for c in chosen], "_id long")
-                base_cand = cur.join(F.broadcast(chosen_ids), "_id", "anti")
+                cents = cdf.agg(F.collect_list(F.struct(
+                    F.col("_id").alias("ci"), F.col("_v").alias("cv"),
+                    F.col("_n").alias("cn"))).alias("_cs"))
+                scored_rows = (cdf.crossJoin(F.broadcast(cents))
+                               .select("_id",
+                                       F.transform(F.col("_cs"), _dstruct)
+                                       .alias("_ds")))
             else:
-                base_cand = cur.filter(
-                    ~F.col("_id").isin([c[0] for c in chosen]))
-            cand = (base_cand
-                    .orderBy(F.col("_md").desc(), F.col("_id").asc())
-                    .limit(m)
-                    .select("_id", "_v", "_n", "_md").collect())
-            if not cand:  # k exceeds the corpus — return what exists
+                lits = F.array(*[
+                    F.struct(
+                        F.lit(c._id).alias("ci"),
+                        F.lit([float(x) for x in c._v]).alias("cv"),
+                        F.lit(float(c._n)).alias("cn"))
+                    for c in cand])
+                scored_rows = cdf.select(
+                    "_id", F.transform(lits, _dstruct).alias("_ds"))
+            for r in scored_rows.collect():
+                for e in r["_ds"]:
+                    mat[(r._id, e["ci"])] = e["d"]
+        upd = {c._id: c._md for c in cand}
+        vecs = {c._id: list(c._v) for c in cand}
+        pending = [c._id for c in cand]
+        accepted_vecs: list[list] = []
+        while pending and len(chosen) < k:
+            best = min(pending, key=lambda i: _key(upd[i], i))
+            # first pick of the round is the exact greedy argmax; later
+            # picks must STRICTLY beat the stale bound on every
+            # non-fetched point (ties could hide a smaller-id point
+            # outside the batch)
+            if accepted_vecs and not exhausted and not (
+                    upd[best] is not None and bound is not None
+                    and upd[best] > bound):
                 break
-            # fewer than `m` rows ⇒ the whole remaining corpus is
-            # in hand and no outside point can outrank anything here
-            exhausted = len(cand) < m
-            bound = None if exhausted else cand[-1]._md
-            # pairwise quantized distances among candidates — same
-            # dot/round math as _dist, but with the candidate set as
-            # DATA (a broadcast collect_list bundle), not literals: the
-            # r11 transform-over-literal-array form generated DIFFERENT
-            # code every round (the literals change), so janino compiled
-            # fresh per round — profiled r12 at k=1024/b64 as ~5.6 s of
-            # fixed per-round cost on a 2000-row corpus. With the
-            # centers riding in a crossJoin'd broadcast row, the
-            # generated code is round-invariant and the codegen cache
-            # hits from round 2 on. The norms are the driver-collected
-            # _n of the same rows (norm() fold — the exact value the
-            # literal form recomputed via math.sqrt of the same
-            # left-to-right sum), so quantized distances are unchanged.
-            mat: dict[tuple[int, int], int | None] = {}
-            if len(cand) > 1:
-                cdf = spark.createDataFrame(
-                    [(c._id, list(c._v), float(c._n)) for c in cand],
-                    "_id long, _v array<double>, _n double")
-
-                def _dstruct(c):
-                    cos = F.when((F.col("_n") > 0) & (c["cn"] > 0),
-                                 dot(F.col("_v"), c["cv"])
-                                 / (F.col("_n") * c["cn"]))
-                    return F.struct(
-                        c["ci"].alias("ci"),
-                        F.round((F.lit(1.0) - F.round(cos, 6)) * 1e6)
-                        .cast("long").alias("d"))
-
-                if use_bundles:
-                    cents = cdf.agg(F.collect_list(F.struct(
-                        F.col("_id").alias("ci"), F.col("_v").alias("cv"),
-                        F.col("_n").alias("cn"))).alias("_cs"))
-                    scored_rows = (cdf.crossJoin(F.broadcast(cents))
-                                   .select("_id",
-                                           F.transform(F.col("_cs"),
-                                                       _dstruct)
-                                           .alias("_ds")))
-                else:
-                    lits = F.array(*[
-                        F.struct(
-                            F.lit(c._id).alias("ci"),
-                            F.lit([float(x) for x in c._v]).alias("cv"),
-                            F.lit(float(c._n)).alias("cn"))
-                        for c in cand])
-                    scored_rows = cdf.select(
-                        "_id", F.transform(lits, _dstruct).alias("_ds"))
-                for r in scored_rows.collect():
-                    for e in r["_ds"]:
-                        mat[(r._id, e["ci"])] = e["d"]
-            upd = {c._id: c._md for c in cand}
-            vecs = {c._id: list(c._v) for c in cand}
-            pending = [c._id for c in cand]
-            accepted_vecs: list[list] = []
-            while pending and len(chosen) < k:
-                best = min(pending, key=lambda i: _key(upd[i], i))
-                # first pick of the round is the exact greedy argmax;
-                # later picks must STRICTLY beat the stale bound on
-                # every non-fetched point (ties could hide a
-                # smaller-id point outside the batch)
-                if accepted_vecs and not exhausted and not (
-                        upd[best] is not None and bound is not None
-                        and upd[best] > bound):
-                    break
-                chosen.append((best, vecs[best], upd[best]))
-                accepted_vecs.append(vecs[best])
-                pending.remove(best)
-                for i in pending:
-                    vals = [v for v in (upd[i], mat.get((i, best)))
-                            if v is not None]
-                    upd[i] = min(vals) if vals else None
-            # the running-min update: accepted centers as a broadcast
-            # data bundle (round-invariant codegen) at curation k,
-            # literals at serving k — identical _center_step fold in
-            # both forms
-            if use_bundles:
-                nc_df = spark.createDataFrame(
-                    [(v, math.sqrt(sum((x * x for x in v), 0.0)))
-                     for v in accepted_vecs], "cv array<double>, cn double")
-                nbundle = nc_df.agg(
-                    F.collect_list(F.struct("cv", "cn")).alias("_cs"))
-                cur = (cur.crossJoin(F.broadcast(nbundle))
-                       .withColumn("_md", F.aggregate(F.col("_cs"),
-                                                      F.col("_md"),
-                                                      _center_step))
-                       .drop("_cs"))
-            else:
-                cur = cur.withColumn(
-                    "_md", F.aggregate(_center_lits(accepted_vecs),
-                                       F.col("_md"), _center_step))
-            if _round_stats is not None:  # diagnostics (scripts only)
-                _round_stats.append((m, len(accepted_vecs)))
-            if adapt_batch:
-                m = max(8, min(m_hi, 2 * len(accepted_vecs)))
-    elif cached:
-        # same r12 form selection as the batch path: at curation k the
-        # newest center updates _md as a broadcast 1-struct bundle
-        # (identical _center_step math — least(_md, dist) IS the fold's
-        # single step) and exclusion is a broadcast anti-join; at
-        # serving k the literal forms stay (their total compile cost is
-        # bounded by the few rounds, and the bundle's extra per-round
-        # jobs would dominate)
-        spark = df.sparkSession
-        cur = src.withColumn("_md", _dist(list(seed[0]._v)))
-        for _ in range(1, k):
-            # LAZY checkpoint (r15): materialized by the round's
-            # TakeOrdered(1) collect — same pinned incremental _md,
-            # one job per round instead of two (r14 verdict #6)
-            cur = cur.localCheckpoint(eager=False)
-            if use_bundles:
-                chosen_ids = spark.createDataFrame(
-                    [(c[0],) for c in chosen], "_id long")
-                base_pick = cur.join(F.broadcast(chosen_ids), "_id", "anti")
-            else:
-                base_pick = cur.filter(
-                    ~F.col("_id").isin([c[0] for c in chosen]))
-            picked = (base_pick
-                      .orderBy(F.col("_md").desc(), F.col("_id").asc())
-                      .limit(1).collect())
-            if not picked:  # k exceeds the corpus — return what exists
-                break
-            chosen.append((picked[0]._id, list(picked[0]._v), picked[0]._md))
-            v = list(picked[0]._v)
-            if use_bundles:
-                nbundle = (spark.createDataFrame(
-                    [(v, math.sqrt(sum((x * x for x in v), 0.0)))],
-                    "cv array<double>, cn double")
-                    .agg(F.collect_list(F.struct("cv", "cn")).alias("_cs")))
-                cur = (cur.crossJoin(F.broadcast(nbundle))
-                       .withColumn("_md", F.aggregate(F.col("_cs"),
-                                                      F.col("_md"),
-                                                      _center_step))
-                       .drop("_cs"))
-            else:
-                # the exact r9 form: a plain least() beats a 1-element
-                # aggregate() fold at serving k (HOF lambdas codegen
-                # worse than the flat expression)
-                cur = cur.withColumn(
-                    "_md", F.least(F.col("_md"), _dist(v)))
-    else:
-        for _ in range(1, k):
-            dists = [_dist(vec) for (_cid, vec, _md) in chosen]
-            mind = F.least(*dists) if len(dists) > 1 else dists[0]
-            picked = (src.filter(~F.col("_id").isin([c[0] for c in chosen]))
-                      .select("_id", "_v", mind.alias("_md"))
-                      .orderBy(F.col("_md").desc(), F.col("_id").asc())
-                      .limit(1).collect())
-            if not picked:  # k exceeds the corpus — return what exists
-                break
-            chosen.append((picked[0]._id, list(picked[0]._v), picked[0]._md))
-    return df.sparkSession.createDataFrame(
+            chosen.append((best, vecs[best], upd[best]))
+            accepted_vecs.append(vecs[best])
+            pending.remove(best)
+            for i in pending:
+                vals = [v for v in (upd[i], mat.get((i, best)))
+                        if v is not None]
+                upd[i] = min(vals) if vals else None
+        if use_bundles:
+            nbundle = (spark.createDataFrame(
+                [(v, _cnorm(v)) for v in accepted_vecs],
+                "cv array<double>, cn double")
+                .agg(F.collect_list(F.struct("cv", "cn")).alias("_cs")))
+            cur = (cur.crossJoin(F.broadcast(nbundle))
+                   .withColumn("_md", F.aggregate(
+                       F.col("_cs"), F.col("_md"),
+                       lambda acc, c: F.least(acc, _qdist(c["cv"], c["cn"]))))
+                   .drop("_cs"))
+        else:
+            # the r9 form: a flat least() codegens better than an
+            # aggregate() fold over a literal array at serving k
+            cur = cur.withColumn(
+                "_md", F.least(F.col("_md"),
+                               *[_dist(v) for v in accepted_vecs]))
+    return spark.createDataFrame(
         [(i, cid, md) for i, (cid, _vec, md) in enumerate(chosen)],
         "sel_order int, id long, mindist_e6 long")

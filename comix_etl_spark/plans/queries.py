@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from functools import partial
+from pathlib import Path
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -2010,8 +2011,11 @@ ORDER BY doc_id
 # §2.1 — sources: CSV with rejects, nested JSON, REST pagination
 # ---------------------------------------------------------------------------
 
-_CSV_FIXTURE = "/root/repo/tests/data/static_issues.csv"
-_JSON_FIXTURE = "/root/repo/tests/data/marvel_comics.jsonl"
+# the checked-in reference fixtures, located from the package so the
+# builders and the oracle SQL read the same files in any checkout
+_FIXTURE_DIR = Path(__file__).resolve().parents[2] / "tests" / "data"
+_CSV_FIXTURE = str(_FIXTURE_DIR / "static_issues.csv")
+_JSON_FIXTURE = str(_FIXTURE_DIR / "marvel_comics.jsonl")
 
 
 def q_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2209,9 +2213,6 @@ SELECT CAST(250 AS BIGINT) AS n_first_run,
        CAST(250 AS BIGINT) AS n_second_run,
        CAST(0   AS BIGINT) AS n_missing_after
 """
-
-
-_CSV_FIXTURE = "/root/repo/tests/data/static_issues.csv"
 
 
 def q_cover_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12268,32 +12269,21 @@ LIMIT 20
 
 def q_kcenter_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy farthest-point diversity sample of 8 exemplars over the
-    embeddings table (operators/similarity.py::kcenter_sample) — the
+    embeddings table (operators/similarity.py::kcenter_sample: one
+    running min-distance column, lazily checkpointed per round) — the
     coverage-maximizing selection step of data curation. Distances are
     integer micro-units of 6dp-rounded cosine, so every argmax is an
     int64 comparison and both engines pick identical centers. Oracle =
     the 7 selection rounds unrolled as chained CTEs (generated below,
-    same idiom as ORACLE_PAGERANK)."""
+    same idiom as ORACLE_PAGERANK). Registered twice: as
+    ``kcenter_sample`` and as ``kcenter_cached``, the name the r9
+    cached-min-distance route was checked under before it became the
+    only route."""
     from comix_etl_spark.operators.similarity import kcenter_sample
 
     t = _t(spark, sf_dir, "embeddings")
     return (kcenter_sample(t["embeddings"], id_col="vec_id",
                            vec_col="embedding", k=8)
-            .orderBy("sel_order"))
-
-
-def q_kcenter_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r9 large-k variant of q_kcenter_sample: cached running
-    min-distance column + eager localCheckpoint per round (O(k) center
-    evaluations instead of O(k²); measured 10.3× at k=64, PLANS.md
-    r9). Output contract is IDENTICAL to the scans form — same oracle,
-    so the driver hash-checks the incremental code path itself, not
-    just its pytest equality to the scans form."""
-    from comix_etl_spark.operators.similarity import kcenter_sample
-
-    t = _t(spark, sf_dir, "embeddings")
-    return (kcenter_sample(t["embeddings"], id_col="vec_id",
-                           vec_col="embedding", k=8, cached=True)
             .orderBy("sel_order"))
 
 
@@ -12303,9 +12293,9 @@ def q_kcenter_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates in one TakeOrdered, re-verifies in-batch distances with
     the same quantized expression, and accepts under a strict bound
     (operators/similarity.py::kcenter_sample(batch=m); measured at
-    k=512 in PLANS.md r10). Output contract is IDENTICAL to the scans
-    and cached forms — same oracle, so the driver hash-checks the
-    batched acceptance logic itself, not just its pytest equality."""
+    k=512 in PLANS.md r10). Output contract is IDENTICAL to
+    ``batch=1`` — same oracle, so the driver hash-checks the batched
+    acceptance logic itself, not just its pytest equality."""
     from comix_etl_spark.operators.similarity import kcenter_sample
 
     t = _t(spark, sf_dir, "embeddings")
@@ -13188,7 +13178,7 @@ QUERIES: dict[str, Query] = {
         "greedy farthest-point k-center diversity sample (8 exemplars)",
         ("embeddings",)),
     "kcenter_cached": Query(
-        q_kcenter_cached, ORACLE_KCENTER_SAMPLE,
+        q_kcenter_sample, ORACLE_KCENTER_SAMPLE,
         "large-k k-center variant: cached running min-distance + "
         "per-round checkpoint (identical contract)", ("embeddings",)),
     "kcenter_batched": Query(

@@ -216,8 +216,7 @@ def foreach_batch_ann_ingest(root: str, centers, codebooks, *,
                              vec_col: str = "embedding",
                              sim_threshold: float = 0.98,
                              nprobe: int = 4, rerank: int = 50,
-                             max_query_rows: int = 10_000,
-                             chunk_queries: bool = False):
+                             max_query_rows: int = 10_000):
     """foreachBatch sink: the VECTOR-side continuous-ingest dedup loop —
     the embedding sibling of ``foreach_batch_dedup_ingest``. Every
     micro-batch of vectors (1) probes the landed IVF-PQ codes for its
@@ -238,10 +237,7 @@ def foreach_batch_ann_ingest(root: str, centers, codebooks, *,
     driver-bounded (ivf_pq_topk collects the query side) — ENFORCED:
     ``max_query_rows`` threads into the probe, so a fat micro-batch
     raises a clear ValueError instead of a driver OOM; size the
-    stream's ``maxFilesPerTrigger``/rate under it. r13:
-    ``chunk_queries=True`` threads through to the probe's chunked mode
-    — an oversized micro-batch is sliced in ``max_query_rows`` windows
-    (output identical, driver memory still bounded) instead of raised.
+    stream's ``maxFilesPerTrigger``/rate under it.
 
     Output matches: (``id_col``, match_id, cosine_sim) — each flagged
     batch vector's best landed neighbor at ≥ ``sim_threshold``."""
@@ -270,7 +266,6 @@ def foreach_batch_ann_ingest(root: str, centers, codebooks, *,
                               id_col=id_col, vec_col=vec_col, k=1,
                               nprobe=nprobe, rerank=rerank, encoded=codes,
                               max_query_rows=max_query_rows,
-                              chunk_queries=chunk_queries,
                               cleanup=resources)
             matches = (top.filter(F.col("cosine_sim") >= sim_threshold)
                        .select(F.col("query_id").alias(id_col),
@@ -284,13 +279,13 @@ def foreach_batch_ann_ingest(root: str, centers, codebooks, *,
         (matches.write.mode("overwrite")
          .parquet(os.path.join(root, "matches", f"batch_id={batch_id}")))
         # the matches write fully consumed the probe plan — release its
-        # slice broadcasts / persisted encoded frame NOW instead of
-        # leaving them to GC + ContextCleaner: on a long-running stream
-        # that deferred cleanup accumulates block-manager and
-        # driver-temp state for as long as Python references survive
-        # (ADVICE r13). batch/enc stay checkpointed until apply()
-        # returns (the two landing writes below still read them); those
-        # handles die with this frame, one micro-batch of lag at most.
+        # query broadcast NOW instead of leaving it to GC +
+        # ContextCleaner: on a long-running stream that deferred
+        # cleanup accumulates block-manager and driver-temp state for
+        # as long as Python references survive (ADVICE r13). batch/enc
+        # stay checkpointed until apply() returns (the two landing
+        # writes below still read them); those handles die with this
+        # frame, one micro-batch of lag at most.
         release_search_resources(resources)
         (batch.select(id_col, vec_col).write.mode("overwrite")
          .parquet(os.path.join(root, "vecs", f"batch_id={batch_id}")))

@@ -486,31 +486,52 @@ def test_kcenter_sample_drops_null_ids(spark):
     assert out[0].id == 1  # min NON-NULL id seeds
 
 
-def test_kcenter_cached_matches_scans_form(spark, sf_small):
-    """cached=True (running _md column + localCheckpoint per round) must
-    select the IDENTICAL ordered exemplar set with identical micro-unit
-    distances as the literal-array k-scans form — int64 distances make
-    least(least(a,b),c) == least(a,b,c) exact, including the NULL-skip
-    for zero-norm vectors."""
+def test_kcenter_sample_matches_oracle(spark, sf_small):
+    """Every batch width selects exactly the rows of the unrolled
+    round-by-round DuckDB oracle (plans/queries.py::_kcenter_oracle_sql)
+    over the same embeddings: k=8 runs the literal forms and k=40 the
+    broadcast-bundle forms (k > 32), each at batch 1 and 4."""
     from comix_etl_spark.operators.similarity import kcenter_sample
+    from comix_etl_spark.plans.queries import _kcenter_oracle_sql
+    from tests.oracle_diff import duck_connection
 
     emb = spark.read.parquet(f"{sf_small}/embeddings.parquet")
-    # append a zero-norm vector to exercise the NULL-distance path
-    dim = len(emb.select("embedding").first()[0])
-    zero = spark.createDataFrame(
-        [(999_999, [0.0] * dim)], "vec_id long, embedding array<double>")
-    src = emb.select("vec_id", "embedding").unionByName(zero)
-    scans = kcenter_sample(src, k=8).collect()
-    cached = kcenter_sample(src, k=8, cached=True).collect()
-    assert [tuple(r) for r in scans] == [tuple(r) for r in cached]
+    duck = duck_connection(sf_small)
+    for k in (8, 40):
+        want = [tuple(r) for r in duck.execute(_kcenter_oracle_sql(k)).fetchall()]
+        assert len(want) == k
+        for batch in (1, 4):
+            got = kcenter_sample(emb, k=k, batch=batch).collect()
+            assert [tuple(r) for r in got] == want, (k, batch)
+
+
+def test_kcenter_sample_validates_before_any_job(spark):
+    """k < 1 and batch < 1 raise ValueError before a Spark job runs (an
+    invalid batch used to surface only after the seed collect). The
+    input frame fails if any job evaluates it."""
+    import pytest as _pt
+    from pyspark.sql import functions as F
+
+    from comix_etl_spark.operators.similarity import kcenter_sample
+
+    @F.udf("array<double>")
+    def _job_ran(_):
+        raise RuntimeError("a Spark job evaluated the input")
+
+    df = spark.range(3).select(F.col("id").alias("vec_id"),
+                               _job_ran("id").alias("embedding"))
+    with _pt.raises(ValueError, match="k must be"):
+        kcenter_sample(df, k=0)
+    with _pt.raises(ValueError, match="batch must be"):
+        kcenter_sample(df, k=2, batch=0)
 
 
 def test_kcenter_batched_matches_cached_form(spark, sf_small):
     """batch=m (Gonzalez over-selection + strict-bound acceptance +
     same-expression re-verification) must select the IDENTICAL ordered
-    exemplar set with identical micro-unit distances as the cached
-    form at k=64 — the r9 verdict's 'batched over-selection at
-    identical output' contract — including when k exceeds the corpus
+    exemplar set with identical micro-unit distances as batch=1 at
+    k=64 — the r9 verdict's 'batched over-selection at identical
+    output' contract — including when k exceeds the corpus
     (exhausted-batch path) and with a zero-norm (NULL-distance) row."""
     from comix_etl_spark.operators.similarity import kcenter_sample
 
@@ -519,17 +540,17 @@ def test_kcenter_batched_matches_cached_form(spark, sf_small):
     zero = spark.createDataFrame(
         [(999_999, [0.0] * dim)], "vec_id long, embedding array<double>")
     src = emb.select("vec_id", "embedding").unionByName(zero)
-    cached = kcenter_sample(src, k=64, cached=True).collect()
+    base = kcenter_sample(src, k=64).collect()
     batched = kcenter_sample(src, k=64, batch=8).collect()
-    assert [tuple(r) for r in cached] == [tuple(r) for r in batched]
-    # batch=64: one fetch round at most — the broadcast-array
-    # aggregate() _md update (r11) folds all 63 post-seed acceptances
-    # in single-loop codegen; output must stay bit-identical
+    assert [tuple(r) for r in base] == [tuple(r) for r in batched]
+    # batch=64: one wide fetch per round — the broadcast-bundle
+    # aggregate() _md update folds every accepted center in one
+    # expression; output must stay bit-identical
     wide = kcenter_sample(src, k=64, batch=64).collect()
-    assert [tuple(r) for r in cached] == [tuple(r) for r in wide]
+    assert [tuple(r) for r in base] == [tuple(r) for r in wide]
     # k > corpus: both return every point, same order
     tiny = src.limit(5)
-    a = kcenter_sample(tiny, k=64, cached=True).collect()
+    a = kcenter_sample(tiny, k=64).collect()
     b = kcenter_sample(tiny, k=64, batch=4).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b] and len(a) == 5
 
@@ -538,8 +559,8 @@ def test_kcenter_batched_pathological_ties(spark):
     """Adversarial ties: many exact-duplicate vectors make every
     distance in a batch identical, so the strict acceptance bound
     flushes after one accept per round — the batched form must degrade
-    to per-round behavior, never mis-order. Identical output to the
-    cached form, including the id tie-breaks."""
+    to per-round behavior, never mis-order. Identical output to
+    batch=1, including the id tie-breaks."""
     from comix_etl_spark.operators.similarity import kcenter_sample
 
     rows = ([(i, [1.0, 0.0, 0.0]) for i in range(6)]      # 6 copies of A
@@ -547,9 +568,9 @@ def test_kcenter_batched_pathological_ties(spark):
             + [(20 + i, [0.0, 0.0, 1.0]) for i in range(6)]  # 6 of C
             + [(99, [0.5, 0.5, 0.0])])
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cached = kcenter_sample(df, k=10, cached=True).collect()
+    base = kcenter_sample(df, k=10).collect()
     batched = kcenter_sample(df, k=10, batch=5).collect()
-    assert [tuple(r) for r in cached] == [tuple(r) for r in batched]
+    assert [tuple(r) for r in base] == [tuple(r) for r in batched]
 
 
 def test_topk_query_side_guard(spark):
@@ -586,39 +607,6 @@ def test_topk_query_side_guard(spark):
         with _pt.raises(ValueError, match="max_query_rows"):
             call(4)
         assert call(5).count() > 0  # boundary: 5 rows at max 5 passes
-
-
-def test_ivf_pq_topk_chunked_queries_match_unchunked(spark):
-    """r13 (VERDICT r12 #6): ``chunk_queries=True`` completes a query
-    frame FATTER than ``max_query_rows`` by slicing it driver-side and
-    unioning per-slice top-k — output must be EXACTLY the unchunked
-    answer (queries are independent across slices), across slice
-    boundaries that don't divide nq evenly."""
-    import numpy as np
-
-    from comix_etl_spark.operators.similarity import (
-        ivf_pq_topk, train_ivf_centroids, train_residual_codebooks)
-
-    rng = np.random.default_rng(7)
-    corpus = spark.createDataFrame(
-        [(i, [float(x) for x in rng.normal(size=8)]) for i in range(60)],
-        "vec_id long, embedding array<double>")
-    query = spark.createDataFrame(
-        [(100 + i, [float(x) for x in rng.normal(size=8)])
-         for i in range(23)],
-        "query_id long, embedding array<double>")
-    centers = train_ivf_centroids(corpus, n_centroids=4, normalize=True)
-    books = train_residual_codebooks(corpus, centers, m=2, k=4)
-    common = dict(centers=centers, codebooks=books, k=3, nprobe=2,
-                  rerank=10)
-    full = sorted(map(tuple, ivf_pq_topk(
-        corpus, query, max_query_rows=100, **common).collect()))
-    assert len(full) > 0
-    for mx in (5, 10, 23):  # 5 slices (odd tail), 3 slices, exactly 1
-        chunked = sorted(map(tuple, ivf_pq_topk(
-            corpus, query, max_query_rows=mx, chunk_queries=True,
-            **common).collect()))
-        assert chunked == full, mx
 
 
 def test_ivf_pq_topk_distributed_matches_driver_path(spark):
@@ -700,13 +688,17 @@ def test_ivf_pq_topk_distributed_plan_is_cogroup_not_collect(spark):
     # the ADC output is bounded (rerank per query per list) before the
     # global window — no full-corpus rows reach it
     assert "CollectLimit" not in plan
-    """r14 (ADVICE r13): with a ``cleanup`` list, the chunked path
-    collects one broadcast per slice plus the persisted encoded frame;
-    ``release_search_resources`` destroys/unpersists them all and
-    empties the list — the deterministic-cleanup contract the
-    long-running ingest loop relies on."""
+
+
+def test_ivf_pq_topk_release_search_resources(spark):
+    """r14 (ADVICE r13): with a ``cleanup`` list, ``ivf_pq_topk``
+    collects the one (probe-set, LUT, constants) broadcast it creates;
+    ``release_search_resources`` destroys it and empties the list — the
+    deterministic-cleanup contract the long-running ingest loop relies
+    on."""
     import numpy as np
     import pytest as _pt
+    from pyspark import Broadcast
 
     from comix_etl_spark.operators.similarity import (
         ivf_pq_topk, release_search_resources, train_ivf_centroids,
@@ -724,74 +716,14 @@ def test_ivf_pq_topk_distributed_plan_is_cogroup_not_collect(spark):
     books = train_residual_codebooks(corpus, centers, m=2, k=4)
     resources: list = []
     out = ivf_pq_topk(corpus, query, centers=centers, codebooks=books,
-                      k=3, nprobe=2, rerank=10, max_query_rows=5,
-                      chunk_queries=True, cleanup=resources)
+                      k=3, nprobe=2, rerank=10, cleanup=resources)
     rows = out.collect()            # materialize BEFORE releasing
     assert len(rows) > 0
-    # 12 queries / 5 per slice = 3 slice broadcasts + 1 persisted frame
-    assert len(resources) == 4
-    frames = [r for r in resources if hasattr(r, "unpersist")
-              and not hasattr(r, "destroy")]
-    bcs = [r for r in resources if hasattr(r, "destroy")]
-    assert len(frames) == 1 and len(bcs) == 3
-    assert frames[0].is_cached
+    assert len(resources) == 1
+    bc = resources[0]
+    # not read before release: a driver-side read caches the value
+    assert isinstance(bc, Broadcast)
     release_search_resources(resources)
     assert resources == []          # emptied: reuse never double-frees
-    assert not frames[0].is_cached
     with _pt.raises(Exception):     # destroyed broadcast is unusable
-        bcs[0].value
-
-
-def test_ann_ingest_chunked_micro_batch_matches_unchunked(spark, tmp_path):
-    """The streaming ANN ingest loop with ``chunk_queries=True`` must
-    emit the same matches as the raise-guarded loop when micro-batches
-    exceed ``max_query_rows`` — the fat-batch path completes instead of
-    raising, with identical output."""
-    import numpy as np
-    import pytest as _pt
-
-    from comix_etl_spark.operators.similarity import (
-        train_ivf_centroids, train_residual_codebooks)
-    from comix_etl_spark.streaming.windowed import foreach_batch_ann_ingest
-
-    rng = np.random.default_rng(11)
-    base = [[float(x) for x in rng.normal(size=8)] for _ in range(30)]
-    b0 = spark.createDataFrame([(i, base[i]) for i in range(30)],
-                               "vec_id long, embedding array<double>")
-    # batch 1: 12 vectors, 3 of them exact copies of landed ones
-    b1_rows = ([(100 + i, [float(x) for x in rng.normal(size=8)])
-                for i in range(9)]
-               + [(200 + i, base[i]) for i in range(3)])
-    b1 = spark.createDataFrame(b1_rows,
-                               "vec_id long, embedding array<double>")
-    centers = train_ivf_centroids(b0, n_centroids=4, normalize=True)
-    books = train_residual_codebooks(b0, centers, m=2, k=4)
-
-    def run(root, **kw):
-        apply = foreach_batch_ann_ingest(str(root), centers, books,
-                                         nprobe=4, rerank=20, **kw)
-        apply(b0, 0)
-        apply(b1, 1)
-        return sorted(map(tuple, spark.read.parquet(
-            str(root) + "/matches").select(
-            "vec_id", "match_id", "cosine_sim").collect()))
-
-    want = run(tmp_path / "wide")                 # nq=12 under default cap
-    got = run(tmp_path / "chunked", max_query_rows=5, chunk_queries=True)
-    assert got == want and len(want) >= 3
-    with _pt.raises(Exception, match="max_query_rows"):
-        run(tmp_path / "guarded", max_query_rows=5)
-
-
-def test_kcenter_adaptive_batch_matches_cached(spark, sf_small):
-    """adapt_batch (r12): the adaptive fetch schedule must emit the
-    IDENTICAL selection to the cached form — the acceptance bound
-    admits exactly the unbatched greedy sequence regardless of how
-    candidates are grouped into fetches."""
-    from comix_etl_spark.operators.similarity import kcenter_sample
-
-    vecs = spark.read.parquet(f"{sf_small}/embeddings.parquet").limit(400)
-    cached = kcenter_sample(vecs, k=48, cached=True).collect()
-    adaptive = kcenter_sample(vecs, k=48, batch=8,
-                              adapt_batch=True).collect()
-    assert [tuple(r) for r in cached] == [tuple(r) for r in adaptive]
+        bc.value
