@@ -150,14 +150,6 @@ def clean_text(c: Column | str) -> Column:
     return F.nullif(F.trim(F.coalesce(_col(c), F.lit(""))), F.lit(""))
 
 
-def iso_date(c: Column | str) -> Column:
-    """F12 — date → 'yyyy-MM-dd' string, NULL-safe (reference rendered "").
-
-    Reference: app/api.py:144,187.
-    """
-    return F.date_format(_col(c), "yyyy-MM-dd")
-
-
 def cover_url_candidates(path: Column | str, static_prefix: str = "/static/covers/") -> Column:
     """F13 — static-prefix join + extension-swap candidate array.
 

@@ -12,14 +12,16 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from comix_etl_spark.operators.relational import orphan_rows
 
 
-def null_counts(df: DataFrame, columns: Sequence[str]) -> DataFrame:
-    """A2 — one row of [total_rows, null_<c>...] conditional counts."""
+def null_counts(columns: Sequence[str]) -> list[Column]:
+    """A2 — the [total_rows, null_<c>...] conditional counts as aggregate
+    Columns: one definition for ``df.agg`` and for ``df.observe`` (the
+    ETL pipeline counts them inside its write pass)."""
     aggs = [F.count(F.lit(1)).alias("total_rows")]
     for c in columns:
         # coalesce: SUM over zero rows is NULL — an EMPTY table must
@@ -27,7 +29,7 @@ def null_counts(df: DataFrame, columns: Sequence[str]) -> DataFrame:
         aggs.append(F.coalesce(
             F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)), F.lit(0))
             .cast("long").alias(f"null_{c}"))
-    return df.agg(*aggs)
+    return aggs
 
 
 def orphan_count(child: DataFrame, parent: DataFrame, key: str) -> DataFrame:

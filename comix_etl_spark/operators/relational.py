@@ -89,14 +89,6 @@ def exists_semi(child: DataFrame, parent: DataFrame, key: str) -> DataFrame:
     return child.join(parent, key, "left_semi")
 
 
-def point_lookup_join(fact: DataFrame, dim: DataFrame, key: str, how: str = "inner") -> DataFrame:
-    """J3 — FK lookup via broadcast hash join (kills the reference's N+1).
-
-    Reference: app.py:201-208 (fetch Issue then its Series by PK).
-    """
-    return fact.join(F.broadcast(dim), key, how)
-
-
 def sequence_within_group(df: DataFrame, part_by: Sequence[str], order_by: Sequence[Column | str],
                           out_col: str = "seq") -> DataFrame:
     """W1 — running 1..n position within a group (issue_order semantics).

@@ -642,7 +642,9 @@ def _probe_lists(qrows, ct, nprobe: int):
     """Driver-side routing of collected (tiny-by-contract) query rows
     through ``_route``. Returns (normalized queries, per-query probe
     lists)."""
-    qx, order = _route(np.array([r[1] for r in qrows], dtype=np.float64), ct)
+    # (-1, dim): an empty query frame routes as a 0 × dim matrix
+    qx, order = _route(np.array([r[1] for r in qrows], dtype=np.float64)
+                       .reshape(-1, ct.shape[1]), ct)
     return qx, [order[i, :nprobe].astype(np.int64) for i in range(len(qx))]
 
 
@@ -737,7 +739,8 @@ def ivf_pq_topk(corpus: DataFrame, query: DataFrame, *, centers=None,
 
     ``encoded`` injects a pre-built (id, centroid_id, pq_code) frame —
     the persisted-store path (ivf_pq_topk_from_store): the encode scan
-    is skipped and scoring runs over whatever the caller pruned to.
+    is skipped, and the probed-list filter on ``centroid_id`` prunes a
+    store partitioned by list to the probed directories.
 
     ``cleanup`` (r14, ADVICE r13): pass a list and the one pinned
     resource the call creates — its (probe-set, LUT, constants)
@@ -758,6 +761,10 @@ def ivf_pq_topk(corpus: DataFrame, query: DataFrame, *, centers=None,
     mm, _, sub = books.shape
     qids = [r[0] for r in qrows]
     qx, probe_sets = _probe_lists(qrows, ct, nprobe)
+    # score only the probed lists; on a persisted store the filter
+    # prunes the scan to the probed centroid_id= directories
+    encoded = encoded.filter(F.col("centroid_id").isin(
+        sorted({int(c) for s in probe_sets for c in s})))
     # shared residual LUT + per-list constant term
     luts = np.einsum("qjs,jcs->qjc", qx.reshape(len(qx), mm, sub), books)
     consts = qx @ ct.T                                       # nq × C: ⟨q, center⟩
@@ -1064,27 +1071,19 @@ def ivf_pq_topk_from_store(corpus: DataFrame, query: DataFrame,
                            nprobe: int = 4, rerank: int = 50,
                            query_id_col: str = "query_id",
                            max_query_rows: int = 10_000) -> DataFrame:
-    """IVF-PQ search over a persisted store: routes the queries
-    driver-side, scans ONLY the probed ``centroid_id=`` partitions
-    (partition pruning, plan-asserted in tests/test_similarity.py),
-    and reuses ivf_pq_topk's scoring tail. ``corpus`` supplies the raw
-    vectors for the bounded exact re-rank only — the store itself
+    """IVF-PQ search over a persisted store: ``ivf_pq_topk`` with the
+    store table as its encoded side. Its probed-list filter scans ONLY
+    the probed ``centroid_id=`` partitions (partition pruning,
+    plan-asserted in tests/test_similarity.py). ``corpus`` supplies the
+    raw vectors for the bounded exact re-rank only — the store itself
     holds m-byte codes."""
-    spark = corpus.sparkSession
-    ct = np.asarray(centers, dtype=np.float64)
-    q = (query.withColumnRenamed(id_col, query_id_col)
-         if query_id_col not in query.columns else query)
-    qrows = _collect_query_rows(q, query_id_col, vec_col, max_query_rows)
-    _, probe_sets = _probe_lists(qrows, ct, nprobe)
-    probed = sorted({int(c) for s in probe_sets for c in s})
-    encoded = (spark.table(table)
-               .filter(F.col("centroid_id").isin(probed)))
+    encoded = corpus.sparkSession.table(table)
     if id_col not in encoded.columns:
         raise ValueError(
             f"ivf_pq_topk_from_store: store {table!r} lacks id column "
             f"{id_col!r} — was it written by persist_ivf_pq_store with "
             f"a different id_col?")
-    return ivf_pq_topk(corpus, query, centers=ct, codebooks=codebooks,
+    return ivf_pq_topk(corpus, query, centers=centers, codebooks=codebooks,
                        id_col=id_col, vec_col=vec_col, k=k, nprobe=nprobe,
                        rerank=rerank, query_id_col=query_id_col,
                        encoded=encoded, max_query_rows=max_query_rows)

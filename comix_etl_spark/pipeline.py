@@ -1,16 +1,23 @@
 """The §3.1 end-to-end ETL DAG: extract → normalize → merge → quality →
 audit (reference comixcatalog_starter.zip!etl/etl.py:17-45).
 
-One driver function orchestrates lazy plans; the only actions are the
-guardrail count, the merge materialization, and the audit append —
-exactly the three points where the reference touched its database.
+One driver function orchestrates lazy plans. A run's actions are:
+
+1. the guardrail count, which also fills the batch cache;
+2. on a warm target, the schema read of the existing table;
+3. the staged write of the merged table, which observes the total and
+   NULL counts in flight (``df.observe``);
+4. the orphan-credit count over the cached batch;
+5. the audit append.
+
+The written table is never read back.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from comix_etl_spark.operators.audit import EtlRun
 from comix_etl_spark.operators.merge import upsert_selective
@@ -34,7 +41,7 @@ def run_marvel_batch(spark: SparkSession, raw: DataFrame, *, target_path: str,
 
     Mirrors the reference run loop: audit open (STARTED row semantics are
     folded into the single close append — one immutable row per run),
-    extract→transform→merge, quality probes, audit close; on failure the
+    extract→transform→merge, quality counters, audit close; on failure the
     audit row records FAILED + notes and the exception propagates
     (unlike the reference's error-swallowing search route, SURVEY §3.2).
     """
@@ -63,25 +70,23 @@ def run_marvel_batch(spark: SparkSession, raw: DataFrame, *, target_path: str,
         )
         # staging write + directory swap: the old table stays intact until
         # the new one is fully materialized (cache is not durability —
-        # see sinks.safe_overwrite_parquet)
-        safe_overwrite_parquet(merged, target_path)
+        # see sinks.safe_overwrite_parquet). The total and NULL counts
+        # ride the write itself (df.observe): no re-read of the table
+        observation = Observation()
+        safe_overwrite_parquet(
+            merged.observe(observation, *null_counts(["onsale_date", "cover_url"])),
+            target_path)
+        # orphans against the cached batch, not the written table: every
+        # credit's comic id comes from the same raw row as a batch key,
+        # the merge keeps every non-null batch key and a NULL key matches
+        # in neither — so both counts are equal
+        orphans = orphan_count(
+            explode_credits(raw).select("marvel_comic_id"),
+            issues.select("marvel_comic_id"), "marvel_comic_id",
+        ).collect()[0]["orphan_count"]
         issues.unpersist()
-
-        loaded = spark.read.parquet(target_path)
-        # ONE quality action: total+null conditional counts and the
-        # orphan-credit count are single-row aggregates — crossJoined
-        # they collect as one job (the r2 pipeline ran three)
-        credits = explode_credits(raw)
-        quality_row = (
-            null_counts(loaded, ["onsale_date", "cover_url"])
-            .crossJoin(orphan_count(
-                credits.select("marvel_comic_id"), loaded.select("marvel_comic_id"),
-                "marvel_comic_id"))
-            .collect()[0].asDict()
-        )
-        n_total = quality_row.pop("total_rows")
-        orphans = quality_row.pop("orphan_count")
-        nulls = quality_row
+        nulls = observation.get
+        n_total = nulls.pop("total_rows")
 
         run.records_loaded = n_total
         run.finish("SUCCESS")

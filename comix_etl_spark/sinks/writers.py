@@ -385,26 +385,3 @@ def bootstrap_tables(spark: SparkSession, ddl: dict[str, T.StructType]) -> None:
         cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
         spark.sql(f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING parquet")
 
-
-def write_with_metrics(df: DataFrame, path: str, *, metric_exprs: dict,
-                       mode: str = "overwrite",
-                       target_files: int | None = None) -> dict:
-    """Write a table while collecting data-quality counters IN-FLIGHT
-    via Spark's named Observation API (``df.observe``): the metric
-    expressions (counts, null tallies, sums — any aggregate) evaluate
-    inside the write job's own pass over the data, so auditing costs
-    ZERO extra scans — the difference between this and "write, then
-    re-read to count nulls" is a full extra pass at 100 TB.
-
-    ``metric_exprs`` maps metric name → aggregate Column. Returns the
-    observed values as a plain dict (available only after the write
-    action completes — observations are action-scoped by contract).
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    named = [expr.alias(name) for name, expr in metric_exprs.items()]
-    observed = df.observe(obs, *named)
-    out = observed.repartition(target_files) if target_files else observed
-    out.write.mode(mode).parquet(path)
-    return dict(obs.get)

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -28,3 +29,23 @@ def sf_small() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn`` under a fresh Spark job group and
+    returns (fn's result, the number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -313,7 +313,7 @@ def test_quality_probes_null_and_empty_edges(spark):
     )
 
     empty = spark.createDataFrame([], "a string, b long")
-    row = null_counts(empty, ["a", "b"]).collect()[0]
+    row = empty.agg(*null_counts(["a", "b"])).collect()[0]
     assert (row.total_rows, row.null_a, row.null_b) == (0, 0, 0)
 
     nk = spark.createDataFrame([(None, 1), (None, 2), (3, 3)],

@@ -256,6 +256,59 @@ def test_ivf_pq_store_partition_pruned_probe(spark, sf_small):
         spark.sql("DROP TABLE IF EXISTS ivfpq_store_t")
 
 
+def _ivf_pq_store_setup(spark, sf_small, table):
+    from comix_etl_spark.operators.similarity import (
+        persist_ivf_pq_store, train_ivf_centroids, train_residual_codebooks)
+    from comix_etl_spark.session import load_tables
+
+    emb = (load_tables(spark, sf_small, ("embeddings",))["embeddings"]
+           .filter(F.col("vec_id") < 40))
+    centers = train_ivf_centroids(emb, n_centroids=8, normalize=True)
+    books = train_residual_codebooks(emb, centers, m=8, k=16)
+    persist_ivf_pq_store(emb, centers, books, table)
+    qdf = (emb.filter(F.col("vec_id").isin(0, 1, 2))
+           .select(F.col("vec_id").alias("query_id"), "embedding"))
+    return emb, qdf, dict(centers=centers, codebooks=books, k=5, nprobe=3)
+
+
+def test_ivf_pq_empty_query_frame(spark, sf_small):
+    """An empty query frame returns no rows, with the schema of a
+    non-empty call, on the direct and the store path (an empty probe
+    set once raised numpy's AxisError in the routing)."""
+    from comix_etl_spark.operators.similarity import (
+        ivf_pq_topk, ivf_pq_topk_from_store)
+
+    try:
+        emb, qdf, kw = _ivf_pq_store_setup(spark, sf_small, "ivfpq_empty_t")
+        for search in (lambda q: ivf_pq_topk(emb, q, **kw),
+                       lambda q: ivf_pq_topk_from_store(
+                           emb, q, "ivfpq_empty_t", **kw)):
+            full, empty = search(qdf), search(qdf.limit(0))
+            assert empty.collect() == []
+            assert empty.schema == full.schema
+            assert full.count() == 15
+    finally:
+        spark.sql("DROP TABLE IF EXISTS ivfpq_empty_t")
+
+
+def test_ivf_pq_store_probe_collects_queries_once(spark, sf_small,
+                                                  count_jobs):
+    """Building a store probe's plan collects and routes the query frame
+    once, inside ivf_pq_topk: it runs as many jobs as the direct call
+    (2 against 1 here when the store path routed the queries itself)."""
+    from comix_etl_spark.operators.similarity import (
+        ivf_pq_topk, ivf_pq_topk_from_store)
+
+    try:
+        emb, qdf, kw = _ivf_pq_store_setup(spark, sf_small, "ivfpq_jobs_t")
+        _, direct = count_jobs(lambda: ivf_pq_topk(emb, qdf, **kw))
+        _, stored = count_jobs(lambda: ivf_pq_topk_from_store(
+            emb, qdf, "ivfpq_jobs_t", **kw))
+        assert stored == direct, (stored, direct)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS ivfpq_jobs_t")
+
+
 def test_ivf_pq_topk_distributed_over_persisted_store(spark, sf_small):
     """The bulk-scoring serving composition (r14): the distributed
     query path reading the PERSISTED inverted-list table as its

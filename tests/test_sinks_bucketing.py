@@ -95,29 +95,6 @@ def test_schema_evolution_merge_read(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_write_with_metrics_observes_in_flight(spark, tmp_path):
-    """The observed counters must match the written data exactly — and
-    they ride the write job itself (no second scan to audit)."""
-    from pyspark.sql import functions as F
-
-    from comix_etl_spark.sinks.writers import write_with_metrics
-
-    df = spark.createDataFrame(
-        [(1, None), (2, 5.0), (3, None), (4, 2.5)], "id long, v double")
-    target = str(tmp_path / "observed")
-    got = write_with_metrics(
-        df, target,
-        metric_exprs={
-            "n_rows": F.count(F.lit(1)),
-            "n_null_v": F.sum(F.when(F.col("v").isNull(), 1).otherwise(0)),
-            "sum_v": F.sum("v"),
-        })
-    assert got["n_rows"] == 4
-    assert got["n_null_v"] == 2
-    assert got["sum_v"] == 7.5
-    assert spark.read.parquet(target).count() == 4
-
-
 def test_write_table_orc_roundtrip_with_pushdown(spark, sf_small):
     """S8's fmt knob: an ORC write must round-trip content exactly and
     keep predicate pushdown at the ORC scan (searchArgument), so the

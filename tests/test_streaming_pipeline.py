@@ -16,7 +16,7 @@ from comix_etl_spark.multimodal.media import (
     frame_sample_plan,
 )
 from comix_etl_spark.operators.audit import read_audit
-from comix_etl_spark.pipeline import run_marvel_batch
+from comix_etl_spark.pipeline import RunResult, run_marvel_batch
 from comix_etl_spark.sinks import write_csv_report, write_table
 from comix_etl_spark.sources.json_source import read_marvel_comics
 from comix_etl_spark.streaming.windowed import foreach_batch_upsert
@@ -146,6 +146,57 @@ def test_pipeline_end_to_end_success_and_idempotent(spark, tmpdir):
     runs = read_audit(spark, audit)
     assert runs.count() == 2
     assert {r.status for r in runs.collect()} == {"SUCCESS"}
+
+
+def test_pipeline_warm_batch_job_count(spark, tmpdir, count_jobs):
+    """The load is one write pass: the total and NULL counts are observed
+    inside the staged write and the written table is never read back. A
+    warm-target batch runs 11 jobs (14 with the post-write re-scan)."""
+    raw = read_marvel_comics(spark, JSONL)
+    target = os.path.join(tmpdir, "issues")
+    audit = os.path.join(tmpdir, "audit")
+    run_marvel_batch(spark, raw, target_path=target, audit_path=audit)
+    r, jobs = count_jobs(lambda: run_marvel_batch(
+        spark, raw, target_path=target, audit_path=audit))
+    assert r.records_loaded == 40 == spark.read.parquet(target).count()
+    assert jobs <= 11, jobs
+
+
+def test_pipeline_empty_batch_cold_target(spark, tmpdir):
+    """An empty batch on a cold target lands an empty table and reports
+    zero counts, not NULLs."""
+    raw = read_marvel_comics(spark, JSONL).limit(0)
+    target = os.path.join(tmpdir, "issues")
+    audit = os.path.join(tmpdir, "audit")
+    r = run_marvel_batch(spark, raw, target_path=target, audit_path=audit)
+    assert r == RunResult(0, 0, "SUCCESS", {"null_onsale_date": 0,
+                                            "null_cover_url": 0,
+                                            "orphan_credits": 0})
+    assert spark.read.parquet(target).count() == 0
+    runs = read_audit(spark, audit).collect()
+    assert [(a.status, a.records_read, a.records_loaded) for a in runs] \
+        == [("SUCCESS", 0, 0)]
+
+
+def test_pipeline_null_ids_count_orphan_credits(spark, tmpdir):
+    """Every 7th comic id nulled: the merge drops the 5 NULL-key rows and
+    their 12 credits are orphans. The observed counts equal the written
+    table's."""
+    raw = read_marvel_comics(spark, JSONL).withColumn(
+        "id", F.when(F.col("id") % 7 == 0, None).otherwise(F.col("id")))
+    target = os.path.join(tmpdir, "issues")
+    audit = os.path.join(tmpdir, "audit")
+    r = run_marvel_batch(spark, raw, target_path=target, audit_path=audit)
+    assert r == RunResult(40, 35, "SUCCESS", {"null_onsale_date": 6,
+                                              "null_cover_url": 4,
+                                              "orphan_credits": 12})
+    written = spark.read.parquet(target)
+    assert written.count() == 35
+    assert written.filter(F.col("onsale_date").isNull()).count() == 6
+    assert written.filter(F.col("cover_url").isNull()).count() == 4
+    runs = read_audit(spark, audit).collect()
+    assert [(a.status, a.records_read, a.records_loaded) for a in runs] \
+        == [("SUCCESS", 40, 35)]
 
 
 def test_pipeline_guardrail_aborts_short_batch(spark, tmpdir):
