@@ -7,6 +7,8 @@ records_read/records_loaded, and closes with SUCCESS/FAILED + notes
 Here the audit table is an append-only parquet directory: each run
 appends exactly one immutable row at close (append-only keeps the write
 atomic per run — no read-modify-write races between concurrent runs).
+A SUCCESS row also carries the run's observed quality counters; they are
+NULL on a FAILED row and in rows written before the columns existed.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from comix_etl_spark.schemas import ETL_RUN
 
@@ -32,22 +35,37 @@ class EtlRun:
     records_loaded: int = 0
     status: str = "STARTED"
     notes: str | None = None
+    finished_at: dt.datetime | None = None
+    null_onsale_date: int | None = None
+    null_cover_url: int | None = None
+    orphan_credits: int | None = None
 
-    def finish(self, status: str = "SUCCESS", notes: str | None = None) -> "EtlRun":
+    def finish(self, status: str = "SUCCESS", notes: str | None = None, *,
+               null_onsale_date: int | None = None,
+               null_cover_url: int | None = None,
+               orphan_credits: int | None = None) -> "EtlRun":
         self.status = status
         self.notes = notes
+        self.null_onsale_date = null_onsale_date
+        self.null_cover_url = null_cover_url
+        self.orphan_credits = orphan_credits
         self.finished_at = dt.datetime.now(dt.timezone.utc)
         return self
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        finished = getattr(self, "finished_at", None)
-        row = (
+        """The row as literals over a one-partition range: one task in the
+        JVM. ``createDataFrame`` over a Python list would run a
+        Python-worker job (4 tasks) to write one row."""
+        values = (
             self.run_id, self.source_system,
             self.started_at.replace(tzinfo=None),
-            finished.replace(tzinfo=None) if finished else None,
+            self.finished_at.replace(tzinfo=None) if self.finished_at else None,
             self.records_read, self.records_loaded, self.status, self.notes,
+            self.null_onsale_date, self.null_cover_url, self.orphan_credits,
         )
-        return spark.createDataFrame([row], schema=ETL_RUN)
+        return spark.range(0, 1, 1, 1).select(*[
+            F.lit(v).cast(f.dataType).alias(f.name)
+            for v, f in zip(values, ETL_RUN.fields, strict=True)])
 
     def append_to(self, spark: SparkSession, path: str) -> None:
         self.to_df(spark).write.mode("append").parquet(path)

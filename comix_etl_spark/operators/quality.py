@@ -6,6 +6,8 @@ etl/etl.py:47-54) and its README documents an unimplemented guardrail
 ("abort load if batch < 80% of expected", README_TALKING_POINTS.md:9).
 Here each check is one aggregate plan; all null-rate metrics for a table
 share a single scan (map-side conditional counts, no per-metric rescan).
+The orphan probe (A3) is ``relational.orphan_rows``; the ETL pipeline
+counts its orphan credits inside its observed pre-pass instead.
 """
 
 from __future__ import annotations
@@ -14,8 +16,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from comix_etl_spark.operators.relational import orphan_rows
 
 
 def null_counts(columns: Sequence[str]) -> list[Column]:
@@ -30,11 +30,6 @@ def null_counts(columns: Sequence[str]) -> list[Column]:
             F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)), F.lit(0))
             .cast("long").alias(f"null_{c}"))
     return aggs
-
-
-def orphan_count(child: DataFrame, parent: DataFrame, key: str) -> DataFrame:
-    """A3 — count of children with no parent (left_anti aggregate)."""
-    return orphan_rows(child, parent, key).agg(F.count(F.lit(1)).alias("orphan_count"))
 
 
 def duplicate_key_count(df: DataFrame, key: Sequence[str]) -> DataFrame:
@@ -52,20 +47,18 @@ def duplicate_key_count(df: DataFrame, key: Sequence[str]) -> DataFrame:
     )
 
 
-def batch_guardrail(batch: DataFrame, expected: int, threshold: float = 0.8,
-                    *, n_rows: int | None = None) -> int:
+def batch_guardrail(n_rows: int, expected: int, threshold: float = 0.8) -> int:
     """The 80% rule: abort (raise) if the batch is short of expectations.
 
-    Driver-side gate before a merge — a deliberate action (count), run
-    once per batch, not per row. ``n_rows`` (r15) lets a caller that
-    already counted the batch in a wider aggregate pass the number in
-    instead of paying a second count job — the gate logic is unchanged
-    and a wrong precomputed count is the caller's contract violation.
+    Driver-side gate before a merge, run once per batch, not per row.
+    It takes the batch's row count rather than the batch: each caller
+    already counts it inside a wider pass (the pipeline's observed
+    pre-pass, ``q_audit_trail``'s one aggregate), so the gate launches
+    no Spark job of its own.
     """
-    n = n_rows if n_rows is not None else batch.count()
-    if expected > 0 and n < threshold * expected:
-        raise ValueError(f"guardrail: batch has {n} rows < {threshold:.0%} of expected {expected}")
-    return n
+    if expected > 0 and n_rows < threshold * expected:
+        raise ValueError(f"guardrail: batch has {n_rows} rows < {threshold:.0%} of expected {expected}")
+    return n_rows
 
 
 def guardrail_report(batches: DataFrame, batch_key: Sequence[str],

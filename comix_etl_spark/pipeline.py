@@ -3,27 +3,31 @@ audit (reference comixcatalog_starter.zip!etl/etl.py:17-45).
 
 One driver function orchestrates lazy plans. A run's actions are:
 
-1. the guardrail count, which also fills the batch cache;
-2. on a warm target, the schema read of the existing table;
-3. the staged write of the merged table, which observes the total and
-   NULL counts in flight (``df.observe``);
-4. the orphan-credit count over the cached batch;
-5. the audit append.
+1. the pre-pass: one scan of the raw batch into the ``noop`` sink that
+   observes the row count (for the guardrail) and the orphan-credit
+   count (``df.observe``), so a short batch raises before anything is
+   staged;
+2. the staged write of the merged table, which observes the total and
+   NULL counts in flight;
+3. the audit append.
 
-The written table is never read back.
+A warm target is read with the batch's schema pinned, so no footer
+inference job runs; its column names are checked from one parquet footer
+on the driver. The written table is never read back.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from comix_etl_spark.operators.audit import EtlRun
 from comix_etl_spark.operators.merge import upsert_selective
-from comix_etl_spark.operators.quality import batch_guardrail, null_counts, orphan_count
+from comix_etl_spark.operators.quality import batch_guardrail, null_counts
 from comix_etl_spark.sinks.writers import safe_overwrite_parquet
-from comix_etl_spark.sources.json_source import explode_credits, normalize_comics
+from comix_etl_spark.sources.json_source import normalize_comics
 
 
 @dataclass
@@ -32,6 +36,37 @@ class RunResult:
     records_loaded: int
     status: str
     quality: dict
+
+
+def _orphan_credits() -> Column:
+    """Credits with no issue row, as an aggregate over the RAW batch.
+
+    ``normalize_comics`` is a 1:1 projection with ``marvel_comic_id =
+    id``, so every credit of a non-NULL id has its batch key and the
+    merge keeps it; a NULL id matches no key. The orphans are thus the
+    credits ``explode_credits`` emits for NULL-id rows: ``size`` of a
+    non-NULL ``creators.items`` (explode skips a NULL array and keeps
+    NULL elements). ``coalesce``: an empty batch sums to NULL."""
+    items = F.col("creators.items")
+    return F.coalesce(
+        F.sum(F.when(F.col("id").isNull() & items.isNotNull(), F.size(items))
+              .otherwise(0)), F.lit(0)).cast("long").alias("orphan_credits")
+
+
+def _require_batch_columns(target_path: str, columns: list[str]) -> None:
+    """Raise unless the target's parquet footer has exactly the batch's
+    columns. The pinned-schema read would fill a missing column with
+    NULLs and drop an extra one; reading one footer on the driver
+    (``pyarrow.dataset`` skips ``_``/``.`` files, as Spark does) costs no
+    Spark job, and a corrupt footer raises here too."""
+    import pyarrow.dataset as ds
+
+    found = ds.dataset(target_path, format="parquet").schema.names
+    missing = [c for c in columns if c not in found]
+    extra = [c for c in found if c not in columns]
+    if missing or extra:
+        raise ValueError(f"target {target_path} does not match the batch schema: "
+                         f"missing columns {missing}, unexpected columns {extra}")
 
 
 def run_marvel_batch(spark: SparkSession, raw: DataFrame, *, target_path: str,
@@ -47,23 +82,28 @@ def run_marvel_batch(spark: SparkSession, raw: DataFrame, *, target_path: str,
     """
     run = EtlRun(source_system=source_system)
     try:
-        # cache the normalized batch: the guardrail count and the merge
-        # both consume it — one source scan, not two
-        issues = normalize_comics(raw).cache()
-        n_read = batch_guardrail(issues, expected_min)  # the 80% rule
-        run.records_read = n_read
+        # the pre-pass: one parallel scan, no exchange. Caching the batch
+        # for the write costs more jobs than parsing it twice at this size
+        pre = Observation()
+        (raw.observe(pre, F.count(F.lit(1)).alias("n_rows"), _orphan_credits())
+         .write.format("noop").mode("overwrite").save())
+        counts = pre.get
+        run.records_read = batch_guardrail(counts["n_rows"], expected_min)  # the 80% rule
 
+        issues = normalize_comics(raw)
         try:
-            existing = spark.read.parquet(target_path)
+            existing = spark.read.schema(issues.schema).parquet(target_path)
         except Exception as e:
             # ONLY a genuinely-absent target means cold start: any other
-            # read failure (transient FS error, permissions, corrupt
-            # footer) must abort — falling back to an empty frame would
-            # let the overwrite replace the whole table with one batch
+            # read failure (transient FS error, permissions) must abort —
+            # falling back to an empty frame would let the overwrite
+            # replace the whole table with one batch
             if not ("PATH_NOT_FOUND" in str(e)
                     or "Path does not exist" in str(e)):
                 raise
             existing = issues.limit(0)
+        else:
+            _require_batch_columns(target_path, issues.columns)
         merged = upsert_selective(
             existing, issues, ["marvel_comic_id"],
             update_cols=["price_cents", "isbn", "upc", "description", "cover_url"],
@@ -76,22 +116,13 @@ def run_marvel_batch(spark: SparkSession, raw: DataFrame, *, target_path: str,
         safe_overwrite_parquet(
             merged.observe(observation, *null_counts(["onsale_date", "cover_url"])),
             target_path)
-        # orphans against the cached batch, not the written table: every
-        # credit's comic id comes from the same raw row as a batch key,
-        # the merge keeps every non-null batch key and a NULL key matches
-        # in neither — so both counts are equal
-        orphans = orphan_count(
-            explode_credits(raw).select("marvel_comic_id"),
-            issues.select("marvel_comic_id"), "marvel_comic_id",
-        ).collect()[0]["orphan_count"]
-        issues.unpersist()
         nulls = observation.get
         n_total = nulls.pop("total_rows")
 
         run.records_loaded = n_total
-        run.finish("SUCCESS")
-        return_result = RunResult(n_read, n_total, "SUCCESS",
-                                  {**nulls, "orphan_credits": orphans})
+        quality = {**nulls, "orphan_credits": counts["orphan_credits"]}
+        run.finish("SUCCESS", **quality)
+        return_result = RunResult(run.records_read, n_total, "SUCCESS", quality)
     except Exception as e:
         run.finish("FAILED", notes=str(e)[:500])
         run.append_to(spark, audit_path)

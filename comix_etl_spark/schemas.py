@@ -72,6 +72,10 @@ ETL_RUN = T.StructType([
     T.StructField("records_loaded", T.LongType(), True),
     T.StructField("status", T.StringType(), True),  # STARTED|SUCCESS|FAILED
     T.StructField("notes", T.StringType(), True),
+    # the pipeline's observed quality counters; NULL on a FAILED row
+    T.StructField("null_onsale_date", T.LongType(), True),
+    T.StructField("null_cover_url", T.LongType(), True),
+    T.StructField("orphan_credits", T.LongType(), True),
 ])
 
 # Nested Marvel REST payload, as consumed by the reference's transform

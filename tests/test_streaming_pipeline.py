@@ -149,33 +149,41 @@ def test_pipeline_end_to_end_success_and_idempotent(spark, tmpdir):
 
 
 def test_pipeline_warm_batch_job_count(spark, tmpdir, count_jobs):
-    """The load is one write pass: the total and NULL counts are observed
-    inside the staged write and the written table is never read back. A
-    warm-target batch runs 11 jobs (14 with the post-write re-scan)."""
+    """A run is one observed pre-pass (1 job), the staged write and a
+    one-task audit append; the written table is never read back. The
+    staged write is 2 jobs on a cold target and 3 on a warm one (AQE runs
+    the merge join's shuffle stages as jobs of their own), so a cold
+    batch runs 4 jobs and a warm one 5."""
     raw = read_marvel_comics(spark, JSONL)
     target = os.path.join(tmpdir, "issues")
     audit = os.path.join(tmpdir, "audit")
-    run_marvel_batch(spark, raw, target_path=target, audit_path=audit)
-    r, jobs = count_jobs(lambda: run_marvel_batch(
+    r, cold = count_jobs(lambda: run_marvel_batch(
+        spark, raw, target_path=target, audit_path=audit))
+    assert r.records_loaded == 40
+    r, warm = count_jobs(lambda: run_marvel_batch(
         spark, raw, target_path=target, audit_path=audit))
     assert r.records_loaded == 40 == spark.read.parquet(target).count()
-    assert jobs <= 11, jobs
+    assert cold <= 4 and warm <= 5, (cold, warm)
 
 
-def test_pipeline_empty_batch_cold_target(spark, tmpdir):
+def test_pipeline_empty_batch_cold_target(spark, tmpdir, count_jobs):
     """An empty batch on a cold target lands an empty table and reports
-    zero counts, not NULLs."""
+    zero counts, not NULLs, in 3 jobs."""
     raw = read_marvel_comics(spark, JSONL).limit(0)
     target = os.path.join(tmpdir, "issues")
     audit = os.path.join(tmpdir, "audit")
-    r = run_marvel_batch(spark, raw, target_path=target, audit_path=audit)
+    r, jobs = count_jobs(lambda: run_marvel_batch(
+        spark, raw, target_path=target, audit_path=audit))
     assert r == RunResult(0, 0, "SUCCESS", {"null_onsale_date": 0,
                                             "null_cover_url": 0,
                                             "orphan_credits": 0})
+    assert jobs <= 3, jobs
     assert spark.read.parquet(target).count() == 0
     runs = read_audit(spark, audit).collect()
     assert [(a.status, a.records_read, a.records_loaded) for a in runs] \
         == [("SUCCESS", 0, 0)]
+    assert (runs[0].null_onsale_date, runs[0].null_cover_url,
+            runs[0].orphan_credits) == (0, 0, 0)
 
 
 def test_pipeline_null_ids_count_orphan_credits(spark, tmpdir):
@@ -195,19 +203,112 @@ def test_pipeline_null_ids_count_orphan_credits(spark, tmpdir):
     assert written.filter(F.col("onsale_date").isNull()).count() == 6
     assert written.filter(F.col("cover_url").isNull()).count() == 4
     runs = read_audit(spark, audit).collect()
-    assert [(a.status, a.records_read, a.records_loaded) for a in runs] \
-        == [("SUCCESS", 40, 35)]
+    assert [(a.status, a.records_read, a.records_loaded, a.null_onsale_date,
+             a.null_cover_url, a.orphan_credits) for a in runs] \
+        == [("SUCCESS", 40, 35, 6, 4, 12)]
+
+
+def _dir_bytes(path):
+    """{file name: content} of a table directory."""
+    out = {}
+    for name in sorted(os.listdir(path)):
+        with open(os.path.join(path, name), "rb") as fh:
+            out[name] = fh.read()
+    return out
 
 
 def test_pipeline_guardrail_aborts_short_batch(spark, tmpdir):
-    raw = read_marvel_comics(spark, JSONL).limit(5)
+    """A short batch raises before anything is staged: the warm target's
+    files stay byte-identical and the audit row is FAILED."""
     target = os.path.join(tmpdir, "issues")
     audit = os.path.join(tmpdir, "audit")
+    run_marvel_batch(spark, read_marvel_comics(spark, JSONL),
+                     target_path=target, audit_path=audit)
+    before = _dir_bytes(target)
+    raw = read_marvel_comics(spark, JSONL).limit(5)
     with pytest.raises(ValueError, match="guardrail"):
         run_marvel_batch(spark, raw, target_path=target, audit_path=audit, expected_min=40)
+    assert _dir_bytes(target) == before
+    assert [d for d in os.listdir(tmpdir) if "__staging_" in d] == []
+    runs = read_audit(spark, audit).orderBy("started_at").collect()
+    assert [(a.status, a.records_read, a.records_loaded) for a in runs] \
+        == [("SUCCESS", 40, 40), ("FAILED", 0, 0)]
+    assert "guardrail" in runs[1].notes
+    # the counters are NULL on a FAILED row
+    assert (runs[1].null_onsale_date, runs[1].null_cover_url,
+            runs[1].orphan_credits) == (None, None, None)
+
+
+def test_audit_row_round_trip(spark, tmpdir, count_jobs):
+    """SUCCESS, FAILED and NULL-notes rows read back equal to their
+    EtlRun fields, timestamps included; each append is one Spark job and
+    the files carry the ETL_RUN columns and types."""
+    from comix_etl_spark.operators.audit import EtlRun
+    from comix_etl_spark.schemas import ETL_RUN
+
+    path = os.path.join(tmpdir, "audit")
+    ok = EtlRun("marvel", records_read=40, records_loaded=38).finish(
+        "SUCCESS", notes="late partition", null_onsale_date=7,
+        null_cover_url=5, orphan_credits=0)
+    failed = EtlRun("comicvine", records_read=3).finish(
+        "FAILED", notes="guardrail: batch below 80% of expected")
+    bare = EtlRun("marvel", run_id=-(1 << 63)).finish("SUCCESS")
+    assert bare.notes is None
+    for run in (ok, failed, bare):
+        _, jobs = count_jobs(lambda run=run: run.append_to(spark, path))
+        assert jobs == 1, jobs
+    back = {r.run_id: r.asDict() for r in read_audit(spark, path).collect()}
+    for run in (ok, failed, bare):
+        want = {f.name: getattr(run, f.name) for f in ETL_RUN.fields}
+        want["started_at"] = run.started_at.replace(tzinfo=None)
+        want["finished_at"] = run.finished_at.replace(tzinfo=None)
+        assert back[run.run_id] == want
+    assert [(f.name, f.dataType) for f in spark.read.parquet(path).schema] \
+        == [(f.name, f.dataType) for f in ETL_RUN.fields]
+
+
+def test_read_audit_reads_rows_without_counter_columns(spark, tmpdir):
+    """An audit dir written before the quality counters existed still
+    reads: its rows carry NULL counters next to the new rows'."""
+    from comix_etl_spark.operators.audit import EtlRun
+    from comix_etl_spark.schemas import ETL_RUN
+
+    path = os.path.join(tmpdir, "audit")
+    old = [f for f in ETL_RUN.fields if f.name not in
+           ("null_onsale_date", "null_cover_url", "orphan_credits")]
+    EtlRun("marvel", run_id=1, records_read=4, records_loaded=4) \
+        .finish("SUCCESS").to_df(spark).select(*[f.name for f in old]) \
+        .write.parquet(path)
+    EtlRun("marvel", run_id=2, records_read=4, records_loaded=3) \
+        .finish("SUCCESS", null_onsale_date=1, null_cover_url=0,
+                orphan_credits=2).append_to(spark, path)
+    got = {r.run_id: (r.records_loaded, r.null_onsale_date, r.null_cover_url,
+                      r.orphan_credits)
+           for r in read_audit(spark, path).collect()}
+    assert got == {1: (4, None, None, None), 2: (3, 1, 0, 2)}
+
+
+@pytest.mark.parametrize("column", ["cover_url", "marvel_comic_id", "title", "+legacy"])
+def test_pipeline_warm_target_schema_mismatch_raises(spark, tmpdir, column):
+    """A warm target whose files lack a batch column (or carry one more,
+    ``+legacy``) fails the run loudly, names the column and leaves the
+    target as it was. A missing ``title`` would otherwise drop the
+    batch's titles from the merged table without an error."""
+    from comix_etl_spark.sources.json_source import normalize_comics
+
+    raw = read_marvel_comics(spark, JSONL)
+    target = os.path.join(tmpdir, "issues")
+    audit = os.path.join(tmpdir, "audit")
+    issues = normalize_comics(raw)
+    table = (issues.withColumn("legacy", F.lit(1)) if column == "+legacy"
+             else issues.drop(column))
+    table.write.parquet(target)
+    before = _dir_bytes(target)
+    with pytest.raises(Exception, match=column.lstrip("+")):
+        run_marvel_batch(spark, raw, target_path=target, audit_path=audit)
+    assert _dir_bytes(target) == before
     runs = read_audit(spark, audit).collect()
     assert len(runs) == 1 and runs[0].status == "FAILED"
-    assert "guardrail" in runs[0].notes
 
 
 def test_stream_cdc_foreachbatch_apply(spark):
