@@ -156,7 +156,8 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     "md5" (hex-string mins of ``md5("{i}_" + shingle)``) — ~4× more
     bytes per signature slot, but byte-identical to what any engine's
     md5 produces, so the FULL banding machinery becomes verifiable by
-    the DuckDB oracle (registry query ``minhash_lsh_det``)."""
+    the DuckDB oracle (registry query ``minhash_lsh_det``, which binds
+    ``q_minhash_lsh`` to 16 hashes × 4 bands and ``hash_fn="md5"``)."""
     posts = shingle_postings(df, id_col, text_col, n)
     if hash_fn == "xxhash64":
         aggs = [F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"mh_{i}")
@@ -596,9 +597,10 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
     ``hash_fn="md5"`` swaps the token hash for the low 60 bits of
     md5 (``conv(substring(md5(t),1,15),16,10)``) — slower, but byte-
     reproducible on any engine, so the registry's ``simhash_det`` query
-    can verify sketches/blocking/Hamming against a DuckDB oracle (bits
-    60–62 are then always 0: votes degenerate to −n_tokens, bit = 0 on
-    both engines).
+    (``q_simhash_pairs`` bound to ``hash_fn="md5"``) can verify
+    sketches/blocking/Hamming against a DuckDB oracle (bits 60–62 are
+    then always 0: votes degenerate to −n_tokens, bit = 0 on both
+    engines).
 
     Plan: token hashes are computed JVM-side (``transform`` + xxhash64 —
     identical values to the scalar form), kept as one ``array<long>`` per

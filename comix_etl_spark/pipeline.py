@@ -11,9 +11,10 @@ One driver function orchestrates lazy plans. A run's actions are:
    NULL counts in flight;
 3. the audit append.
 
-A warm target is read with the batch's schema pinned, so no footer
-inference job runs; its column names are checked from one parquet footer
-on the driver. The written table is never read back.
+The target's column names are checked from one parquet footer on the
+driver; an absent target is a cold start, which Spark never reads. A
+warm target is read with the batch's schema pinned, so no footer
+inference job runs. The written table is never read back.
 """
 
 from __future__ import annotations
@@ -58,7 +59,8 @@ def _require_batch_columns(target_path: str, columns: list[str]) -> None:
     columns. The pinned-schema read would fill a missing column with
     NULLs and drop an extra one; reading one footer on the driver
     (``pyarrow.dataset`` skips ``_``/``.`` files, as Spark does) costs no
-    Spark job, and a corrupt footer raises here too."""
+    Spark job, and a corrupt footer raises here too. An absent target
+    raises ``FileNotFoundError``."""
     import pyarrow.dataset as ds
 
     found = ds.dataset(target_path, format="parquet").schema.names
@@ -92,18 +94,15 @@ def run_marvel_batch(spark: SparkSession, raw: DataFrame, *, target_path: str,
 
         issues = normalize_comics(raw)
         try:
-            existing = spark.read.schema(issues.schema).parquet(target_path)
-        except Exception as e:
-            # ONLY a genuinely-absent target means cold start: any other
-            # read failure (transient FS error, permissions) must abort —
-            # falling back to an empty frame would let the overwrite
-            # replace the whole table with one batch
-            if not ("PATH_NOT_FOUND" in str(e)
-                    or "Path does not exist" in str(e)):
-                raise
+            _require_batch_columns(target_path, issues.columns)
+        except FileNotFoundError:
+            # ONLY an absent target means cold start: any other failure
+            # (corrupt footer, permissions) propagates — falling back to
+            # an empty frame would let the overwrite replace the whole
+            # table with one batch
             existing = issues.limit(0)
         else:
-            _require_batch_columns(target_path, issues.columns)
+            existing = spark.read.schema(issues.schema).parquet(target_path)
         merged = upsert_selective(
             existing, issues, ["marvel_comic_id"],
             update_cols=["price_cents", "isbn", "upc", "description", "cover_url"],

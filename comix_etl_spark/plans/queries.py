@@ -750,6 +750,177 @@ GROUP BY user_id
 # §7 extensions — deduplication over the documents corpus
 # ---------------------------------------------------------------------------
 
+# Oracle templates: the near-dup oracles are composed from one CTE
+# fragment or generator per stage, so a change to the engine's shingling,
+# banding or clustering is mirrored in one place.
+
+# toks/sh: lowercased whitespace tokens and each doc's distinct word
+# 3-shingles (docs under 3 tokens have none), as text.py::shingles
+_SHINGLE_CTES = """toks AS (
+  SELECT doc_id,
+         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x <> '') AS t
+  FROM documents
+), sh AS (
+  SELECT doc_id, unnest(list_distinct(
+           list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
+         )) AS shingle
+  FROM toks WHERE len(t) >= 3
+)"""
+
+# shc/sizes/inter: the df-capped shingle pair counts of
+# dedup.py::ngram_jaccard_pairs(df_cap=10)
+_CAPPED_PAIR_CTES = """shc AS (
+  SELECT doc_id, shingle FROM sh
+  WHERE shingle IN (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 10)
+), sizes AS (
+  -- sizes over the CAPPED shingle set: the score is the true Jaccard/
+  -- containment of what was compared (capped boilerplate must not
+  -- deflate it — two identical docs sharing a capped shingle score 1.0)
+  SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY doc_id
+), inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
+  FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)"""
+
+# edges/reach/comp: connected components of the undirected ``pairs``
+# graph by recursive transitive closure, each member labelled with its
+# component's min id (dedup.py::dup_clusters); ``_oracle`` emits
+# WITH RECURSIVE whenever this chain is included
+_COMPONENT_CTES = """edges AS (
+  SELECT id_a AS src, id_b AS dst FROM pairs
+  UNION
+  SELECT id_b AS src, id_a AS dst FROM pairs
+), reach AS (
+  SELECT src AS node, dst AS r FROM edges
+  UNION
+  SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src
+), comp AS (
+  SELECT node AS doc_id, least(node, min(r)) AS keeper_id
+  FROM reach GROUP BY node
+)"""
+
+_PAIR_SCORES = {
+    "jaccard": "CAST(n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE)",
+    "containment": "CAST(n_common AS DOUBLE) / least(sa.n_sh, sb.n_sh)",
+}
+
+
+def _oracle(*ctes: str, select: str) -> str:
+    """``WITH ctes select``; ``WITH RECURSIVE`` when the components
+    chain is among ``ctes``."""
+    recursive = " RECURSIVE" if _COMPONENT_CTES in ctes else ""
+    return f"\nWITH{recursive} {', '.join(ctes)}\n{select}\n"
+
+
+def _cte(name: str, select: str) -> str:
+    return f"{name} AS (\n{select}\n)"
+
+
+def _md5_minhash_ctes(num_hashes: int, *bands: int) -> str:
+    """mins/sigs: the md5-family MinHash signature over ``sh`` (slot i is
+    the min of md5(i || '_' || shingle)); then per band count a CTE of
+    (doc_id, b, bucket), the bucket being the md5 of the band's
+    '|'-joined slots, as dedup.py::minhash_lsh_pairs(hash_fn="md5").
+    One count names it ``bands``, several ``bands{count}``."""
+    ctes = [f"""mins AS (
+  SELECT doc_id, h.i, min(md5(h.i || '_' || shingle)) AS mh
+  FROM sh, range({num_hashes}) h(i) GROUP BY doc_id, h.i
+), sigs AS (
+  SELECT doc_id, list(mh ORDER BY i) AS sig FROM mins GROUP BY doc_id
+)"""]
+    for n in bands:
+        rows = num_hashes // n
+        slots = " || '|' || ".join(f"sig[b.b * {rows} + {k}]"
+                                   for k in range(1, rows + 1))
+        ctes.append(_cte("bands" if len(bands) == 1 else f"bands{n}",
+                         f"  SELECT doc_id, b.b, md5({slots}) AS bucket\n"
+                         f"  FROM sigs, range({n}) b(b)"))
+    return ", ".join(ctes)
+
+
+def _lsh_verify_ctes(pair_on: str = "a.doc_id < b2.doc_id") -> str:
+    """cand/sizes/inter: the (id_a, id_b) doc pairs that share a band
+    bucket and satisfy ``pair_on``, with the full shingle-set sizes and
+    common counts their exact verify needs."""
+    return f"""cand AS (
+  SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
+  FROM bands a JOIN bands b2 ON a.b = b2.b AND a.bucket = b2.bucket
+                             AND {pair_on}
+), sizes AS (
+  SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
+), inter AS (
+  SELECT c.id_a, c.id_b, count(*) AS n_common
+  FROM cand c
+  JOIN sh a ON a.doc_id = c.id_a
+  JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
+  GROUP BY c.id_a, c.id_b
+)"""
+
+
+def _scored_pairs(threshold: float, metric: str = "jaccard") -> str:
+    """The ``inter`` pairs whose ``metric`` over ``sizes`` reaches
+    ``threshold``, as (id_a, id_b, metric to 6 places)."""
+    score = _PAIR_SCORES[metric]
+    return f"""SELECT id_a, id_b, round({score}, 6) AS {metric}
+FROM inter
+JOIN sizes sa ON id_a = sa.doc_id
+JOIN sizes sb ON id_b = sb.doc_id
+WHERE {score} >= {threshold}"""
+
+
+def _hamming_sql(a: str, b: str, cols: list[str]) -> str:
+    """Summed per-limb xor popcount between rows ``a`` and ``b``.
+    bit_count returns TINYINT — several 63-bit limbs can sum past 127 —
+    so every term widens before the addition."""
+    return " + ".join(f"CAST(bit_count(xor({a}.{c}, {b}.{c})) AS INT)"
+                      for c in cols)
+
+
+def _hamming_dedup_oracle(ctes: str, hashes: str, cols: list[str],
+                          max_h: int) -> str:
+    """The keeper-election oracle over the fingerprint CTE ``hashes``
+    (doc_id, *cols): all-pairs Hamming <= ``max_h`` → per-item degree →
+    keep every item that is never the larger id of a pair, mirroring
+    operators/dedup.py::hamming_fp_dedup."""
+    return f"""
+WITH {ctes}, pairs AS (
+  SELECT a.doc_id AS ia, b2.doc_id AS ib
+  FROM {hashes} a JOIN {hashes} b2 ON a.doc_id < b2.doc_id
+  WHERE {_hamming_sql("a", "b2", cols)} <= {max_h}
+), deg AS (
+  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_near
+  FROM (SELECT ia AS doc_id FROM pairs
+        UNION ALL SELECT ib AS doc_id FROM pairs) u
+  GROUP BY 1
+)
+SELECT h.doc_id AS media_id, {", ".join(f"h.{c}" for c in cols)},
+       coalesce(d.n_near, 0::BIGINT) AS n_near
+FROM {hashes} h LEFT JOIN deg d USING (doc_id)
+WHERE h.doc_id NOT IN (SELECT ib FROM pairs)
+ORDER BY media_id
+"""
+
+
+def _hamming_decontam_oracle(ctes: str, hashes: str, cols: list[str],
+                             max_h: int) -> str:
+    """The decontamination oracle over the fingerprint CTE ``hashes``:
+    every 50th document is the benchmark; per corpus item, its
+    benchmark matches within Hamming ``max_h`` and the closest
+    distance, mirroring ``_bench_hits`` over hamming_band_probe."""
+    return f"""
+WITH {ctes}, hits AS (
+  SELECT c.doc_id AS cid, p.doc_id AS pid,
+         {_hamming_sql("c", "p", cols)} AS h
+  FROM {hashes} c JOIN {hashes} p ON p.doc_id % 50 = 0
+  WHERE {_hamming_sql("c", "p", cols)} <= {max_h}
+)
+SELECT cid AS media_id, CAST(count(*) AS BIGINT) AS n_bench_hits,
+       CAST(min(h) AS BIGINT) AS min_hamming
+FROM hits GROUP BY 1 ORDER BY media_id
+"""
+
+
 def q_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated-subquery pattern, decorrelated: customers whose total
     spend exceeds 2× their nation's average. The comparison is
@@ -1176,36 +1347,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  df_cap=10)
 
 
-ORACLE_NGRAM_JACCARD = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x <> '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-         )) AS shingle
-  FROM toks WHERE len(t) >= 3
-), shc AS (
-  SELECT doc_id, shingle FROM sh
-  WHERE shingle IN (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 10)
-), sizes AS (
-  -- sizes over the CAPPED shingle set: the score is the true Jaccard/
-  -- containment of what was compared (capped boilerplate must not
-  -- deflate it — two identical docs sharing a capped shingle score 1.0)
-  SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b,
-       round(CAST(n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON id_a = sa.doc_id
-JOIN sizes sb ON id_b = sb.doc_id
-WHERE CAST(n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.3
-"""
+ORACLE_NGRAM_JACCARD = _oracle(_SHINGLE_CTES, _CAPPED_PAIR_CTES,
+                               select=_scored_pairs(0.3))
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1221,59 +1364,29 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.dup_clusters(pairs).orderBy("doc_id")
 
 
-ORACLE_DEDUP_CLUSTERS = """
-WITH RECURSIVE toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x <> '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-         )) AS shingle
-  FROM toks WHERE len(t) >= 3
-), shc AS (
-  SELECT doc_id, shingle FROM sh
-  WHERE shingle IN (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 10)
-), sizes AS (
-  -- sizes over the CAPPED shingle set: the score is the true Jaccard/
-  -- containment of what was compared (capped boilerplate must not
-  -- deflate it — two identical docs sharing a capped shingle score 1.0)
-  SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT id_a, id_b
-  FROM inter
-  JOIN sizes sa ON id_a = sa.doc_id
-  JOIN sizes sb ON id_b = sb.doc_id
-  WHERE CAST(n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.3
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-), reach AS (
-  SELECT src AS node, dst AS r FROM edges
-  UNION
-  SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src
-)
-SELECT node AS doc_id, least(node, min(r)) AS keeper_id
-FROM reach GROUP BY node
-ORDER BY doc_id
-"""
+ORACLE_DEDUP_CLUSTERS = _oracle(
+    _SHINGLE_CTES, _CAPPED_PAIR_CTES, _cte("pairs", _scored_pairs(0.3)),
+    _COMPONENT_CTES, select="SELECT doc_id, keeper_id FROM comp ORDER BY doc_id")
 
 
-def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup candidates verified by exact Jaccard — the
-    100 TB dedup path (constant-size signatures, banded buckets).
-    Rows-only (seeded banded xxhash); recall vs the exact operator is
-    asserted in tests/test_dedup.py, and the md5-family sibling
-    `minhash_lsh_det` puts the identical banding code path under a
-    hash-checked DuckDB oracle."""
+def q_minhash_lsh(spark: SparkSession, sf_dir: str, num_hashes: int = 32,
+                  bands: int = 8, hash_fn: str = "xxhash64") -> DataFrame:
+    """MinHash+LSH near-dup candidates verified by exact Jaccard at 0.3 —
+    the 100 TB dedup path (constant-size signatures, banded buckets).
+    Rows-only as `minhash_lsh` (seeded banded xxhash64); recall vs the
+    exact operator is asserted in tests/test_dedup.py.
+
+    The registry's `minhash_lsh_det` binds 16 hashes × 4 bands with
+    ``hash_fn="md5"``: min-of-md5 signatures and md5 band buckets are
+    byte-identical on any engine, so the DuckDB oracle independently
+    recomputes every signature slot, every band bucket, the candidate
+    set, AND the verified output. It is the hash-checked anchor for
+    the xxhash64 path: the same code path with a different hash family
+    (banding recall is a property of (bands, rows) either way)."""
     t = _t(spark, sf_dir, "documents")
     return D.minhash_lsh_pairs(t["documents"], "doc_id", "text",
-                               num_hashes=32, bands=8, n=3, threshold=0.3)
+                               num_hashes=num_hashes, bands=bands, n=3,
+                               threshold=0.3, hash_fn=hash_fn)
 
 
 def q_ann_pq_det(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1352,87 +1465,14 @@ SELECT query_id, vec_id, cosine_sim FROM (
 """
 
 
-def q_dedup_clusters_lsh_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full 100 TB dedup COMPOSITION under a hash-checked oracle:
-    md5-family MinHash+LSH candidates (engine-reproducible banding) →
-    exact-Jaccard verify → large-star/small-star connected components →
-    (doc_id, keeper_id). The DuckDB oracle recomputes the pairs from
-    scratch and closes the transitive reachability with a recursive CTE
-    — so candidate generation, verification, AND clustering are all
-    independently recomputed. Det anchor for `dedup_clusters_lsh`."""
-    t = _t(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(t["documents"], "doc_id", "text",
-                                num_hashes=16, bands=4, n=3, threshold=0.3,
-                                hash_fn="md5")
-    return D.dup_clusters(pairs).orderBy("doc_id")
+# the oracle of `dedup_clusters_lsh_det`, q_dedup_clusters_lsh bound to md5
+ORACLE_DEDUP_CLUSTERS_LSH_DET = _oracle(
+    _SHINGLE_CTES, _md5_minhash_ctes(16, 4), _lsh_verify_ctes(),
+    _cte("pairs", _scored_pairs(0.3)), _COMPONENT_CTES,
+    select="SELECT doc_id, keeper_id FROM comp ORDER BY doc_id")
 
 
-ORACLE_DEDUP_CLUSTERS_LSH_DET = """
-WITH RECURSIVE toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x <> '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-         )) AS shingle
-  FROM toks WHERE len(t) >= 3
-), mins AS (
-  SELECT doc_id, h.i, min(md5(h.i || '_' || shingle)) AS mh
-  FROM sh, range(16) h(i) GROUP BY doc_id, h.i
-), sigs AS (
-  SELECT doc_id, list(mh ORDER BY i) AS sig FROM mins GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, b.b,
-         md5(sig[b.b * 4 + 1] || '|' || sig[b.b * 4 + 2] || '|'
-             || sig[b.b * 4 + 3] || '|' || sig[b.b * 4 + 4]) AS bucket
-  FROM sigs, range(4) b(b)
-), cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-  FROM bands a JOIN bands b2 ON a.b = b2.b AND a.bucket = b2.bucket
-                             AND a.doc_id < b2.doc_id
-), sizes AS (
-  SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT c.id_a, c.id_b, count(*) AS n_common
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.id_a
-  JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-  GROUP BY c.id_a, c.id_b
-), pairs AS (
-  SELECT id_a, id_b FROM inter
-  JOIN sizes sa ON id_a = sa.doc_id
-  JOIN sizes sb ON id_b = sb.doc_id
-  WHERE CAST(n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.3
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-), reach AS (
-  SELECT src AS node, dst AS r FROM edges
-  UNION
-  SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src
-)
-SELECT node AS doc_id, least(node, min(r)) AS keeper_id
-FROM reach GROUP BY node
-ORDER BY doc_id
-"""
-
-
-def q_simhash_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs with the md5 token-hash family (low 60
-    md5 bits per token) — the ENGINE-REPRODUCIBLE variant of
-    `simhash_pairs`: the DuckDB oracle recomputes every per-bit vote
-    tally, the packed 63-bit sketch, the 16-bit segment blocking, and
-    the Hamming filter. Hash-checked anchor for the xxhash64 production
-    sketch (identical code path — operators/dedup.py:simhash — only the
-    token hash differs)."""
-    t = _t(spark, sf_dir, "documents")
-    return (D.simhash_near_pairs(t["documents"], "doc_id", "text",
-                                 max_hamming=8, hash_fn="md5")
-            .orderBy("id_a", "id_b"))
-
-
+# the oracle of `simhash_det`, q_simhash_pairs bound to md5
 ORACLE_SIMHASH_DET = """
 WITH toks AS (
   SELECT doc_id,
@@ -1462,63 +1502,10 @@ SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 8 ORDER BY id_a, id_b
 """
 
 
-def q_minhash_lsh_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs with md5-string hashes (16 hashes ×
-    4 bands, exact-Jaccard verify at 0.3) — the ENGINE-REPRODUCIBLE
-    variant of `minhash_lsh`: min-of-md5 signatures and md5 band buckets
-    are byte-identical on any engine, so the DuckDB oracle independently
-    recomputes every signature slot, every band bucket, the candidate
-    set, AND the verified output. Hash-checked anchor for the seeded
-    xxhash64 production path (same code path, different hash family;
-    banding recall is a property of (bands, rows) either way)."""
-    t = _t(spark, sf_dir, "documents")
-    return (D.minhash_lsh_pairs(t["documents"], "doc_id", "text",
-                                num_hashes=16, bands=4, n=3, threshold=0.3,
-                                hash_fn="md5")
-            .orderBy("id_a", "id_b"))
-
-
-ORACLE_MINHASH_LSH_DET = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x <> '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-         )) AS shingle
-  FROM toks WHERE len(t) >= 3
-), mins AS (
-  SELECT doc_id, h.i, min(md5(h.i || '_' || shingle)) AS mh
-  FROM sh, range(16) h(i) GROUP BY doc_id, h.i
-), sigs AS (
-  SELECT doc_id, list(mh ORDER BY i) AS sig FROM mins GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, b.b,
-         md5(sig[b.b * 4 + 1] || '|' || sig[b.b * 4 + 2] || '|'
-             || sig[b.b * 4 + 3] || '|' || sig[b.b * 4 + 4]) AS bucket
-  FROM sigs, range(4) b(b)
-), cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b2.doc_id AS id_b
-  FROM bands a JOIN bands b2 ON a.b = b2.b AND a.bucket = b2.bucket
-                             AND a.doc_id < b2.doc_id
-), sizes AS (
-  SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT c.id_a, c.id_b, count(*) AS n_common
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.id_a
-  JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-  GROUP BY c.id_a, c.id_b
-)
-SELECT id_a, id_b,
-       round(CAST(n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON id_a = sa.doc_id
-JOIN sizes sb ON id_b = sb.doc_id
-WHERE CAST(n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.3
-ORDER BY id_a, id_b
-"""
+# the oracle of `minhash_lsh_det`, q_minhash_lsh bound to md5
+ORACLE_MINHASH_LSH_DET = _oracle(
+    _SHINGLE_CTES, _md5_minhash_ctes(16, 4), _lsh_verify_ctes(),
+    select=_scored_pairs(0.3) + "\nORDER BY id_a, id_b")
 
 
 def q_minhash_store_health(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1544,35 +1531,15 @@ def q_minhash_store_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_store_stats(spark, "comix_mh_health_store", top_n=20)
 
 
-ORACLE_MINHASH_STORE_HEALTH = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x <> '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-         )) AS shingle
-  FROM toks WHERE len(t) >= 3
-), mins AS (
-  SELECT doc_id, h.i, min(md5(h.i || '_' || shingle)) AS mh
-  FROM sh, range(16) h(i) GROUP BY doc_id, h.i
-), sigs AS (
-  SELECT doc_id, list(mh ORDER BY i) AS sig FROM mins GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, b.b AS band,
-         md5(sig[b.b * 4 + 1] || '|' || sig[b.b * 4 + 2] || '|'
-             || sig[b.b * 4 + 3] || '|' || sig[b.b * 4 + 4]) AS bucket
-  FROM sigs, range(4) b(b)
-), per_bucket AS (
-  SELECT band, bucket, CAST(count(*) AS BIGINT) AS n_members
-  FROM bands GROUP BY band, bucket
-)
+ORACLE_MINHASH_STORE_HEALTH = _oracle(
+    _SHINGLE_CTES, _md5_minhash_ctes(16, 4), """per_bucket AS (
+  SELECT b AS band, bucket, CAST(count(*) AS BIGINT) AS n_members
+  FROM bands GROUP BY b, bucket
+)""", select="""\
 SELECT CAST(row_number() OVER (ORDER BY n_members DESC, band, bucket) AS BIGINT) AS rank,
        CAST(band AS INTEGER) AS band, bucket, n_members,
        CAST(n_members * (n_members - 1) // 2 AS BIGINT) AS n_pairs
-FROM per_bucket ORDER BY n_members DESC, band, bucket LIMIT 20
-"""
+FROM per_bucket ORDER BY n_members DESC, band, bucket LIMIT 20""")
 
 
 def q_fp_store_health(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1626,28 +1593,45 @@ FROM per_bucket ORDER BY n_members DESC, band, bv LIMIT 20
 """
 
 
-def q_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_dedup_clusters_lsh(spark: SparkSession, sf_dir: str,
+                         num_hashes: int = 32, bands: int = 8,
+                         hash_fn: str = "xxhash64") -> DataFrame:
     """The 100 TB dedup composition end-to-end: connected components over
     MinHash+LSH candidate pairs (banded buckets, exact-Jaccard verify on
-    candidates only) — the scale path the quadratic `dedup_clusters`
-    verifies. Rows-only here (seeded banded xxhash); tests/test_dedup.py
+    candidates only) → (doc_id, keeper_id) — the scale path the
+    quadratic `dedup_clusters` verifies. Rows-only as
+    `dedup_clusters_lsh` (seeded banded xxhash64); tests/test_dedup.py
     asserts its clusters equal the exact composition's on seeded
-    corpora, and the md5-family sibling `dedup_clusters_lsh_det` puts
-    the identical candidates→verify→CC composition under a hash-checked
-    recursive-CTE oracle."""
+    corpora.
+
+    The registry's `dedup_clusters_lsh_det` binds 16 hashes × 4 bands
+    with ``hash_fn="md5"`` (engine-reproducible banding): its DuckDB
+    oracle recomputes the pairs from scratch and closes the transitive
+    reachability with a recursive CTE, so candidate generation,
+    verification, AND the large-star/small-star clustering are all
+    independently recomputed."""
     t = _t(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(t["documents"], "doc_id", "text",
-                                num_hashes=32, bands=8, n=3, threshold=0.3)
+                                num_hashes=num_hashes, bands=bands, n=3,
+                                threshold=0.3, hash_fn=hash_fn)
     return D.dup_clusters(pairs).orderBy("doc_id")
 
 
-def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash 64-bit sketches + segment-blocked Hamming pairs — the
-    constant-memory near-dup sketch. Rows-only (xxhash64 token hashes);
-    the md5-family sibling `simhash_det` puts the identical sketch /
-    blocking / Hamming code path under a hash-checked DuckDB oracle."""
+def q_simhash_pairs(spark: SparkSession, sf_dir: str,
+                    hash_fn: str = "xxhash64") -> DataFrame:
+    """SimHash 64-bit sketches + segment-blocked Hamming pairs (≤ 8) —
+    the constant-memory near-dup sketch. Rows-only as `simhash_pairs`
+    (xxhash64 token hashes).
+
+    The registry's `simhash_det` binds ``hash_fn="md5"`` (low 60 md5
+    bits per token), the engine-reproducible variant: its DuckDB oracle
+    recomputes every per-bit vote tally, the packed 63-bit sketch, the
+    16-bit segment blocking, and the Hamming filter. The code path
+    (operators/dedup.py:simhash) is the same; only the token hash
+    differs."""
     t = _t(spark, sf_dir, "documents")
-    return D.simhash_near_pairs(t["documents"], "doc_id", "text", max_hamming=8)
+    return D.simhash_near_pairs(t["documents"], "doc_id", "text",
+                                max_hamming=8, hash_fn=hash_fn)
 
 
 # ---------------------------------------------------------------------------
@@ -5496,35 +5480,9 @@ def q_minhash_pr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("recall_e6")).orderBy("bands")
 
 
-ORACLE_MINHASH_PR_EVAL = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x <> '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-         )) AS shingle
-  FROM toks WHERE len(t) >= 3
-), sz AS (
+ORACLE_MINHASH_PR_EVAL = _oracle(
+    _SHINGLE_CTES, _md5_minhash_ctes(16, 4, 8, 16), """sz AS (
   SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1
-), mins AS (
-  SELECT doc_id, h.i, min(md5(h.i || '_' || shingle)) AS mh
-  FROM sh, range(16) h(i) GROUP BY doc_id, h.i
-), sigs AS (
-  SELECT doc_id, list(mh ORDER BY i) AS sig FROM mins GROUP BY doc_id
-), bands4 AS (
-  SELECT doc_id, b.b,
-         md5(sig[b.b * 4 + 1] || '|' || sig[b.b * 4 + 2] || '|'
-             || sig[b.b * 4 + 3] || '|' || sig[b.b * 4 + 4]) AS bucket
-  FROM sigs, range(4) b(b)
-), bands8 AS (
-  SELECT doc_id, b.b,
-         md5(sig[b.b * 2 + 1] || '|' || sig[b.b * 2 + 2]) AS bucket
-  FROM sigs, range(8) b(b)
-), bands16 AS (
-  SELECT doc_id, b.b, md5(sig[b.b + 1]) AS bucket
-  FROM sigs, range(16) b(b)
 ), cand AS (
   SELECT 4 AS bands, a.doc_id AS id_a, c.doc_id AS id_b
   FROM bands4 a JOIN bands4 c
@@ -5555,7 +5513,7 @@ WITH toks AS (
   FROM cand JOIN truth USING (id_a, id_b) GROUP BY 1
 ), ncand AS (
   SELECT bands, CAST(count(*) AS BIGINT) AS n_cand FROM cand GROUP BY 1
-), ntruth AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
+), ntruth AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)""", select="""\
 SELECT nc.bands, CAST(16 / nc.bands AS INT) AS rows_per_band,
        nc.n_cand, nt.n_truth,
        CAST(coalesce(tp.n_tp, 0) AS BIGINT) AS n_tp,
@@ -5564,8 +5522,7 @@ SELECT nc.bands, CAST(16 / nc.bands AS INT) AS rows_per_band,
        CAST(CASE WHEN nt.n_truth = 0 THEN 0
                  ELSE coalesce(tp.n_tp, 0) * 1000000 // nt.n_truth END AS BIGINT) AS recall_e6
 FROM ncand nc LEFT JOIN ntp tp USING (bands) CROSS JOIN ntruth nt
-ORDER BY nc.bands
-"""
+ORDER BY nc.bands""")
 
 
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6192,59 +6149,22 @@ _SW_RATIO_SQL = """(CAST(len(list_filter(list_filter(regexp_split_to_array(lower
 
 _Q_EXPR_INLINE = _Q_EXPR.replace("sw_ratio", _SW_RATIO_SQL)
 
-ORACLE_DEDUP_KEEP_BEST = """
-WITH RECURSIVE toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x <> '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-         )) AS shingle
-  FROM toks WHERE len(t) >= 3
-), shc AS (
-  SELECT doc_id, shingle FROM sh
-  WHERE shingle IN (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 10)
-), sizes AS (
-  -- sizes over the CAPPED shingle set: the score is the true Jaccard/
-  -- containment of what was compared (capped boilerplate must not
-  -- deflate it — two identical docs sharing a capped shingle score 1.0)
-  SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), pairs AS (
-  SELECT id_a, id_b FROM inter
-  JOIN sizes sa ON id_a = sa.doc_id
-  JOIN sizes sb ON id_b = sb.doc_id
-  WHERE CAST(n_common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.3
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-), reach AS (
-  SELECT src AS node, dst AS r FROM edges
-  UNION
-  SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src
-), clusters AS (
-  SELECT node AS doc_id, least(node, min(r)) AS cluster_id
-  FROM reach GROUP BY node
-), quality AS (
-  SELECT doc_id, {q_expr} AS q FROM documents
+ORACLE_DEDUP_KEEP_BEST = _oracle(
+    _SHINGLE_CTES, _CAPPED_PAIR_CTES, _cte("pairs", _scored_pairs(0.3)),
+    _COMPONENT_CTES, f"""quality AS (
+  SELECT doc_id, {_Q_EXPR_INLINE} AS q FROM documents
 ), member AS (
-  SELECT c.doc_id, c.cluster_id, q.q
-  FROM clusters c JOIN quality q ON c.doc_id = q.doc_id
+  SELECT c.doc_id, c.keeper_id AS cluster_id, q.q
+  FROM comp c JOIN quality q ON c.doc_id = q.doc_id
 ), ranked AS (
   SELECT doc_id, cluster_id, q,
          row_number() OVER (PARTITION BY cluster_id
                             ORDER BY q DESC, doc_id ASC) AS rn
   FROM member
-)
+)""", select="""\
 SELECT doc_id, cluster_id, round(q, 4) AS quality, rn = 1 AS keep
 FROM ranked
-ORDER BY doc_id
-""".replace("{q_expr}", _Q_EXPR_INLINE)
+ORDER BY doc_id""")
 
 
 def q_order_count_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6446,36 +6366,8 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  metric="containment")
 
 
-ORACLE_CONTAINMENT_PAIRS = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x <> '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-         )) AS shingle
-  FROM toks WHERE len(t) >= 3
-), shc AS (
-  SELECT doc_id, shingle FROM sh
-  WHERE shingle IN (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= 10)
-), sizes AS (
-  -- sizes over the CAPPED shingle set: the score is the true Jaccard/
-  -- containment of what was compared (capped boilerplate must not
-  -- deflate it — two identical docs sharing a capped shingle score 1.0)
-  SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b,
-       round(CAST(n_common AS DOUBLE) / least(sa.n_sh, sb.n_sh), 6) AS containment
-FROM inter
-JOIN sizes sa ON id_a = sa.doc_id
-JOIN sizes sb ON id_b = sb.doc_id
-WHERE CAST(n_common AS DOUBLE) / least(sa.n_sh, sb.n_sh) >= 0.6
-"""
+ORACLE_CONTAINMENT_PAIRS = _oracle(_SHINGLE_CTES, _CAPPED_PAIR_CTES,
+                                   select=_scored_pairs(0.6, "containment"))
 
 
 def q_quantize_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10547,55 +10439,16 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-ORACLE_DEDUP_INCREMENTAL = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x <> '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id, unnest(list_distinct(
-           list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-         )) AS shingle
-  FROM toks WHERE len(t) >= 3
-), mins AS (
-  SELECT doc_id, h.i, min(md5(h.i || '_' || shingle)) AS mh
-  FROM sh, range(16) h(i) GROUP BY doc_id, h.i
-), sigs AS (
-  SELECT doc_id, list(mh ORDER BY i) AS sig FROM mins GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, b.b,
-         md5(sig[b.b * 4 + 1] || '|' || sig[b.b * 4 + 2] || '|'
-             || sig[b.b * 4 + 3] || '|' || sig[b.b * 4 + 4]) AS bucket
-  FROM sigs, range(4) b(b)
-), cand AS (
-  SELECT DISTINCT nb.doc_id AS id_new, ob.doc_id AS id_old
-  FROM bands nb JOIN bands ob
-    ON nb.b = ob.b AND nb.bucket = ob.bucket
-  WHERE nb.doc_id % 10 = 0 AND ob.doc_id % 10 <> 0
-), sizes AS (
-  SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT c.id_new, c.id_old, count(*) AS n_common
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.id_new
-  JOIN sh b ON b.doc_id = c.id_old AND b.shingle = a.shingle
-  GROUP BY c.id_new, c.id_old
-), verified AS (
-  SELECT id_new, id_old,
-         round(CAST(n_common AS DOUBLE)
-               / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE), 6) AS jaccard
-  FROM inter
-  JOIN sizes sa ON id_new = sa.doc_id
-  JOIN sizes sb ON id_old = sb.doc_id
-  WHERE CAST(n_common AS DOUBLE)
-        / CAST(sa.n_sh + sb.n_sh - n_common AS DOUBLE) >= 0.3
-)
-SELECT id_new AS doc_id, id_old AS match_id, jaccard FROM (
-  SELECT *, row_number() OVER (PARTITION BY id_new
-                               ORDER BY jaccard DESC, id_old) AS rn
+ORACLE_DEDUP_INCREMENTAL = _oracle(
+    _SHINGLE_CTES, _md5_minhash_ctes(16, 4),
+    # batch (doc_id % 10 = 0) x corpus collisions only
+    _lsh_verify_ctes("a.doc_id % 10 = 0 AND b2.doc_id % 10 <> 0"),
+    _cte("verified", _scored_pairs(0.3)), select="""\
+SELECT id_a AS doc_id, id_b AS match_id, jaccard FROM (
+  SELECT *, row_number() OVER (PARTITION BY id_a
+                               ORDER BY jaccard DESC, id_b) AS rn
   FROM verified
-) WHERE rn = 1 ORDER BY doc_id
-"""
+) WHERE rn = 1 ORDER BY doc_id""")
 
 
 def q_dedup_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10662,8 +10515,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-ORACLE_SEMANTIC_DEDUP = """
-WITH RECURSIVE pairs AS (
+ORACLE_SEMANTIC_DEDUP = _oracle("""pairs AS (
   SELECT id_a, id_b FROM (
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            round(list_dot_product(CAST(a.embedding AS DOUBLE[]),
@@ -10675,32 +10527,21 @@ WITH RECURSIVE pairs AS (
                  6) AS cosine_sim
     FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
   ) WHERE cosine_sim >= 0.4
-), edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-), reach AS (
-  SELECT src AS node, dst AS r FROM edges
-  UNION
-  SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src
-), comp AS (
-  SELECT node, least(node, min(r)) AS cluster_id FROM reach GROUP BY node
-), labeled AS (
-  SELECT c.node AS doc_id, c.cluster_id, d.n_chars
-  FROM comp c JOIN documents d ON c.node = d.doc_id
+)""", _COMPONENT_CTES, """labeled AS (
+  SELECT c.doc_id, c.keeper_id AS cluster_id, d.n_chars
+  FROM comp c JOIN documents d ON c.doc_id = d.doc_id
 ), elected AS (
   SELECT cluster_id, doc_id AS keeper_id,
          row_number() OVER (PARTITION BY cluster_id
                             ORDER BY n_chars DESC, doc_id) AS rn
   FROM labeled
-)
+)""", select="""\
 SELECT l.doc_id, l.cluster_id, e.keeper_id,
        CAST(CASE WHEN l.doc_id = e.keeper_id THEN 1 ELSE 0 END AS INT)
          AS is_kept
 FROM labeled l JOIN elected e
   ON l.cluster_id = e.cluster_id AND e.rn = 1
-ORDER BY l.doc_id
-"""
+ORDER BY l.doc_id""")
 
 
 def q_events_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11293,58 +11134,6 @@ def _img_hash_ctes(src: str = "documents") -> str:
 
 
 _IMG_HASH_CTES = _img_hash_ctes()
-
-
-def _hamming_sql(a: str, b: str, cols: list[str]) -> str:
-    """Summed per-limb xor popcount between rows ``a`` and ``b``.
-    bit_count returns TINYINT — several 63-bit limbs can sum past 127 —
-    so every term widens before the addition."""
-    return " + ".join(f"CAST(bit_count(xor({a}.{c}, {b}.{c})) AS INT)"
-                      for c in cols)
-
-
-def _hamming_dedup_oracle(ctes: str, hashes: str, cols: list[str],
-                          max_h: int) -> str:
-    """The keeper-election oracle over the fingerprint CTE ``hashes``
-    (doc_id, *cols): all-pairs Hamming <= ``max_h`` → per-item degree →
-    keep every item that is never the larger id of a pair, mirroring
-    operators/dedup.py::hamming_fp_dedup."""
-    return f"""
-WITH {ctes}, pairs AS (
-  SELECT a.doc_id AS ia, b2.doc_id AS ib
-  FROM {hashes} a JOIN {hashes} b2 ON a.doc_id < b2.doc_id
-  WHERE {_hamming_sql("a", "b2", cols)} <= {max_h}
-), deg AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_near
-  FROM (SELECT ia AS doc_id FROM pairs
-        UNION ALL SELECT ib AS doc_id FROM pairs) u
-  GROUP BY 1
-)
-SELECT h.doc_id AS media_id, {", ".join(f"h.{c}" for c in cols)},
-       coalesce(d.n_near, 0::BIGINT) AS n_near
-FROM {hashes} h LEFT JOIN deg d USING (doc_id)
-WHERE h.doc_id NOT IN (SELECT ib FROM pairs)
-ORDER BY media_id
-"""
-
-
-def _hamming_decontam_oracle(ctes: str, hashes: str, cols: list[str],
-                             max_h: int) -> str:
-    """The decontamination oracle over the fingerprint CTE ``hashes``:
-    every 50th document is the benchmark; per corpus item, its
-    benchmark matches within Hamming ``max_h`` and the closest
-    distance, mirroring ``_bench_hits`` over hamming_band_probe."""
-    return f"""
-WITH {ctes}, hits AS (
-  SELECT c.doc_id AS cid, p.doc_id AS pid,
-         {_hamming_sql("c", "p", cols)} AS h
-  FROM {hashes} c JOIN {hashes} p ON p.doc_id % 50 = 0
-  WHERE {_hamming_sql("c", "p", cols)} <= {max_h}
-)
-SELECT cid AS media_id, CAST(count(*) AS BIGINT) AS n_bench_hits,
-       CAST(min(h) AS BIGINT) AS min_hamming
-FROM hits GROUP BY 1 ORDER BY media_id
-"""
 
 
 ORACLE_IMAGE_DEDUP = _hamming_dedup_oracle(_IMG_HASH_CTES, "hashes",
@@ -12740,16 +12529,19 @@ QUERIES: dict[str, Query] = {
     "audit_trail": Query(q_audit_trail, ORACLE_AUDIT_TRAIL,
                          "A4 etl_run lifecycle through the parquet audit sink",
                          ("customer",)),
-    "minhash_lsh_det": Query(q_minhash_lsh_det, ORACLE_MINHASH_LSH_DET,
+    "minhash_lsh_det": Query(partial(q_minhash_lsh, num_hashes=16, bands=4,
+                                     hash_fn="md5"), ORACLE_MINHASH_LSH_DET,
                              "MinHash+LSH with md5 hash family — banding "
                              "machinery under a hash-checked oracle",
                              ("documents",)),
-    "simhash_det": Query(q_simhash_det, ORACLE_SIMHASH_DET,
+    "simhash_det": Query(partial(q_simhash_pairs, hash_fn="md5"),
+                         ORACLE_SIMHASH_DET,
                          "SimHash with md5 token hashes — sketch/blocking/"
                          "Hamming under a hash-checked oracle",
                          ("documents",)),
     "dedup_clusters_lsh_det": Query(
-        q_dedup_clusters_lsh_det, ORACLE_DEDUP_CLUSTERS_LSH_DET,
+        partial(q_dedup_clusters_lsh, num_hashes=16, bands=4, hash_fn="md5"),
+        ORACLE_DEDUP_CLUSTERS_LSH_DET,
         "LSH candidates -> verify -> star-contraction CC, all "
         "recomputed by a recursive-CTE oracle", ("documents",)),
     "ann_pq_det": Query(q_ann_pq_det, ORACLE_ANN_PQ_DET,

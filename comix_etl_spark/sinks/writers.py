@@ -40,7 +40,6 @@ def write_table(df: DataFrame, path: str, *, mode: str = "overwrite",
 
 
 def safe_overwrite_parquet(df: DataFrame, target_path: str,
-                           partition_by: list[str] | None = None,
                            extra_files: dict[str, str] | None = None) -> None:
     """Overwrite a parquet table that may be an INPUT of ``df``'s plan
     (the read-merge-overwrite upsert pattern) without a destruction
@@ -59,11 +58,8 @@ def safe_overwrite_parquet(df: DataFrame, target_path: str,
     instead — this function is the parquet-only stand-in for it.
     """
     staging = f"{target_path}__staging_{uuid.uuid4().hex[:8]}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
     try:
-        writer.parquet(staging)
+        df.write.mode("overwrite").parquet(staging)
         # sidecars (e.g. a replay-guard stamp) land INSIDE staging so
         # they install atomically with the data swap — written after
         # the swap they'd leave a crash window with data but no stamp

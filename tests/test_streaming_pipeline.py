@@ -1008,6 +1008,31 @@ def test_pipeline_cold_start_only_on_absent_target(spark, tmpdir):
         assert f.read() == b"not a parquet file"
 
 
+def test_pipeline_cold_start_never_reads_absent_target(spark, tmpdir,
+                                                       monkeypatch):
+    """Cold start is decided from the driver-side footer read: Spark is
+    never asked to read an absent target (a failed read logs a listener
+    error trace per run). A second run on the same target is warm and
+    reads it once."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        reads.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    raw = read_marvel_comics(spark, JSONL)
+    target = os.path.join(tmpdir, "issues")
+    audit = os.path.join(tmpdir, "audit")
+    r = run_marvel_batch(spark, raw, target_path=target, audit_path=audit)
+    assert r.records_loaded == 40 and target not in reads
+    r = run_marvel_batch(spark, raw, target_path=target, audit_path=audit)
+    assert r.records_loaded == 40 and reads.count(target) == 1
+
+
 def test_foreach_batch_upsert_null_partition_preserved(spark, tmpdir):
     """NULL IN (...) is never true: a batch touching the NULL partition
     must still merge against the existing NULL-partition rows instead
