@@ -921,6 +921,328 @@ FROM hits GROUP BY 1 ORDER BY media_id
 """
 
 
+# ---------------------------------------------------------------------------
+# §7 extensions — vector search: fixtures, builder helpers, oracle templates
+# ---------------------------------------------------------------------------
+
+# Fixed corpus vectors that stand in for trained artifacts, so DuckDB can
+# rebuild every bucket, list and code the engine computes from them
+_IVF_DET_CENTROID_IDS = tuple(range(5, 85, 5))  # 16 IVF centroids / PQ codewords
+_IVFPQ_DET_CENTER_IDS = (90, 190, 290, 390)  # 4 IVF-PQ coarse centroids
+_KMEANS_DET_CENTROID_IDS = tuple(range(7, 400, 50))  # 8 k-means centroids
+_ANN_QUERY_IDS = (0, 1, 2)
+_RECALL_QUERY_IDS = (0, 1, 2, 3, 4)
+_BM25_TERMS = ["spark", "merge", "window"]
+
+
+def _queries(emb: DataFrame, ids=_ANN_QUERY_IDS) -> DataFrame:
+    """The corpus rows ``ids`` as (query_id, embedding) query vectors."""
+    return (emb.filter(F.col("vec_id").isin(*ids))
+            .select(F.col("vec_id").alias("query_id"), "embedding"))
+
+
+def _fixed_vectors(emb: DataFrame, *id_groups, normalize: bool = False) -> list:
+    """Each group of fixed corpus ids' embeddings as a float64 matrix in
+    id order, rows L2-normalized when ``normalize``; a None group stays
+    None (the operator trains that artifact). All groups ride one isin
+    scan, one collect job, and split driver-side."""
+    import numpy as np
+
+    wanted = sorted(set().union(*filter(None, id_groups)))
+    rows = (dict(emb.filter(F.col("vec_id").isin(*wanted))
+                 .select("vec_id", "embedding").collect()) if wanted else {})
+
+    def matrix(ids):
+        x = np.array([rows[i] for i in sorted(ids)], dtype=np.float64)
+        return x / np.linalg.norm(x, axis=1)[:, None] if normalize else x
+
+    return [matrix(ids) if ids else None for ids in id_groups]
+
+
+def _codebooks(x):
+    """PQ codebooks from fixed vectors: codeword c of subspace j is the
+    j-th of 8 equal slices of vector c (m=8, len(x) codes)."""
+    return None if x is None else x.reshape(len(x), 8, -1).transpose(1, 0, 2)
+
+
+def _det_ivfpq_fixtures(emb: DataFrame):
+    """The fixed IVF-PQ (centers, codebooks) of `ann_ivf_pq_det` and the
+    store, stream, hybrid and recall queries built on it."""
+    c, x = _fixed_vectors(emb, _IVFPQ_DET_CENTER_IDS, _IVF_DET_CENTROID_IDS,
+                          normalize=True)
+    return c, _codebooks(x)
+
+
+def _recall_at_10(emb: DataFrame, queries: DataFrame,
+                  approx: DataFrame) -> DataFrame:
+    """recall@10 per query of the ``approx`` top-10 against brute-force
+    ground truth: (query_id, n_hits, recall_e6), 0 for a query with no
+    hit."""
+    brute = S.brute_force_topk(emb, queries, id_col="vec_id",
+                               vec_col="embedding", k=10,
+                               query_id_col="query_id")
+    hits = (approx.select("query_id", "vec_id")
+            .join(brute.select("query_id", "vec_id"), ["query_id", "vec_id"])
+            .groupBy("query_id")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_hits")))
+    n_hits = F.coalesce("n_hits", F.lit(0))
+    return (brute.select("query_id").distinct()
+            .join(hits, "query_id", "left")
+            .select("query_id", n_hits.cast("long").alias("n_hits"),
+                    (n_hits * 100_000).cast("long").alias("recall_e6"))
+            .orderBy("query_id"))
+
+
+def _rrf_fuse(lex_top: DataFrame, dense_top: DataFrame) -> DataFrame:
+    """Reciprocal Rank Fusion (Cormack et al. 2009: Σ 1/(60 + rank)) of a
+    lexical top list (doc_id, bm25) and a dense one (vec_id, cosine_sim)
+    into one top-20. Both lists are post-limit, so the single-partition
+    rank windows and the full-outer join stay bounded at any corpus
+    size; ranks use rounded scores with id tie-breaks, so the fused
+    output is engine-reproducible."""
+    wl = Window.orderBy(F.col("bm25").desc(), "doc_id")
+    lex = lex_top.select("doc_id", F.row_number().over(wl).alias("lex_rank"))
+    wd = Window.orderBy(F.col("cosine_sim").desc(), "vec_id")
+    dense = dense_top.select(F.col("vec_id").alias("doc_id"),
+                             F.row_number().over(wd).alias("dense_rank"))
+    rrf = F.round(
+        F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("lex_rank")), F.lit(0.0))
+        + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("dense_rank")),
+                     F.lit(0.0)),
+        6)
+    return (lex.join(dense, "doc_id", "full_outer")
+            .select("doc_id", "lex_rank", "dense_rank", rrf.alias("rrf_score"))
+            .orderBy(F.col("rrf_score").desc(), "doc_id").limit(20))
+
+
+# Oracle templates: the vector-search oracles are composed from one CTE
+# fragment or generator per stage of the query pipeline, so a change to
+# the engine's bucketing, routing, encoding or re-rank is mirrored in one
+# place.
+
+
+def _in(ids) -> str:
+    return ", ".join(map(str, ids))
+
+
+# vecs: every embedding as DOUBLE[]; nv: L2-normalized, as the PQ and
+# IVF-PQ paths encode them
+_VECS_CTE = _cte("vecs", "  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings")
+_NV_CTE = _cte("nv", "  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS v\n"
+                     "  FROM vecs")
+
+
+def _fixed_rows(name: str, ids, src: str = "vecs") -> str:
+    """``name``(c, v): the ``src`` vectors of fixed corpus ``ids``,
+    numbered from 0 in id order, as _fixed_vectors."""
+    return _cte(name, f"  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, v\n"
+                      f"  FROM {src} WHERE vec_id IN ({_in(ids)})")
+
+
+def _rademacher_planes(tables: int, bits: int) -> str:
+    """planes/buckets: the md5-parity ±1 hyperplanes of
+    similarity.rademacher_hyperplanes over 64 dims, and every vector's
+    bucket per table (bit b set when the vector is above plane b)."""
+    return f"""planes AS (
+  SELECT t.t, b.b,
+         list(CASE WHEN ascii(substring(md5('p' || t.t || '_' || b.b || '_' || d.d), 1, 1)) % 2 = 0
+                   THEN 1.0 ELSE -1.0 END ORDER BY d.d) AS w
+  FROM range({tables}) t(t), range({bits}) b(b), range(64) d(d)
+  GROUP BY t.t, b.b
+), buckets AS (
+  SELECT vec_id, t,
+         CAST(sum(CASE WHEN list_dot_product(v, w) > 0 THEN 1 << b ELSE 0 END) AS BIGINT) AS bucket
+  FROM vecs, planes GROUP BY vec_id, t
+)"""
+
+
+def _bucket_cand(pair_on: str) -> str:
+    """cand(query_id, vec_id): the pairs that share a bucket in some
+    table and satisfy ``pair_on`` (over query ``q`` and corpus ``c``)."""
+    return _cte("cand", f"""  SELECT DISTINCT q.vec_id AS query_id, c.vec_id
+  FROM buckets c JOIN buckets q ON c.t = q.t AND c.bucket = q.bucket
+  WHERE {pair_on}""")
+
+
+def _assigned(src: str) -> str:
+    """assigned(vec_id, cid, v, cv): each ``src`` vector's nearest
+    ``cents`` row, argmax(x·c − ‖c‖²/2) ≡ L2 argmin; ties break to the
+    lowest centroid index (numpy argmax picks the first maximum)."""
+    return _cte("assigned", f"""  SELECT vec_id, c AS cid, v, cv FROM (
+    SELECT x.vec_id, x.v, ct.c, ct.v AS cv,
+           row_number() OVER (PARTITION BY x.vec_id ORDER BY
+             list_dot_product(x.v, ct.v)
+             - list_dot_product(ct.v, ct.v) / 2.0 DESC, ct.c) AS rn
+    FROM {src} x, cents ct
+  ) WHERE rn = 1""")
+
+
+def _probes(src: str, query_ids, nprobe: int) -> str:
+    """probes(query_id, cid, cterm): each ``src`` query's ``nprobe``
+    nearest ``cents`` lists, with the per-list ADC constant ⟨q, c⟩."""
+    return _cte("probes", f"""  SELECT query_id, cid, cterm FROM (
+    SELECT q.vec_id AS query_id, ct.c AS cid,
+           list_dot_product(q.v, ct.v) AS cterm,
+           row_number() OVER (PARTITION BY q.vec_id ORDER BY
+             list_dot_product(q.v, ct.v)
+             - list_dot_product(ct.v, ct.v) / 2.0 DESC, ct.c) AS rn
+    FROM {src} q, cents ct WHERE q.vec_id IN ({_in(query_ids)})
+  ) WHERE rn <= {nprobe}""")
+
+
+# cand: the members of every list a query probes (similarity.ivf_topk)
+_IVF_CAND = _cte("cand", """  SELECT DISTINCT p.query_id, a.vec_id
+  FROM assigned a JOIN probes p ON a.cid = p.cid""")
+
+
+def _pq_ctes(src: str, query_ids) -> str:
+    """bvecs/books/codes/luts: the fixed PQ codebooks (m=8 slices of the
+    16 normalized ``_IVF_DET_CENTROID_IDS`` vectors, as _codebooks), the
+    per-subspace encode of ``src`` — argmax(x_j·b_jc − ‖b_jc‖²/2), ties
+    to the lowest c — and each normalized query's lookup table."""
+    return ", ".join([_fixed_rows("bvecs", _IVF_DET_CENTROID_IDS, "nv"), f"""books AS (
+  SELECT j.j, c, list_slice(v, j.j * 8 + 1, j.j * 8 + 8) AS bv
+  FROM bvecs, range(8) j(j)
+), codes AS (
+  SELECT vec_id, j, c FROM (
+    SELECT r.vec_id, b.j, b.c,
+           row_number() OVER (PARTITION BY r.vec_id, b.j ORDER BY
+             list_dot_product(list_slice(r.v, b.j * 8 + 1, b.j * 8 + 8), b.bv)
+             - list_dot_product(b.bv, b.bv) / 2.0 DESC, b.c) AS rn
+    FROM {src} r, books b
+  ) WHERE rn = 1
+), luts AS (
+  SELECT q.vec_id AS query_id, b.j, b.c,
+         list_dot_product(list_slice(q.v, b.j * 8 + 1, b.j * 8 + 8), b.bv) AS lut
+  FROM nv q, books b WHERE q.vec_id IN ({_in(query_ids)})
+)"""])
+
+
+def _ivf_pq_ctes(query_ids, nprobe: int) -> str:
+    """The fixed IVF-PQ pipeline of similarity.ivf_pq_topk up to
+    adc(query_id, vec_id, adc_score): nearest-center assignment of the
+    normalized vectors, residual encode, probe routing, and the IVFADC
+    score ⟨q, center⟩ + Σ_j lut[j, code_j] over the probed lists."""
+    return ", ".join([
+        _fixed_rows("cents", _IVFPQ_DET_CENTER_IDS, "nv"), _assigned("nv"),
+        _cte("resid", "  SELECT vec_id, cid,\n"
+                      "         list_transform(range(1, len(v) + 1), i -> v[i] - cv[i]) AS v\n"
+                      "  FROM assigned"),
+        _pq_ctes("resid", query_ids), _probes("nv", query_ids, nprobe),
+        _cte("adc", """  SELECT p.query_id, a.vec_id, p.cterm + sum(l.lut) AS adc_score
+  FROM assigned a
+  JOIN probes p ON p.cid = a.cid
+  JOIN codes cd ON cd.vec_id = a.vec_id
+  JOIN luts l ON l.query_id = p.query_id AND l.j = cd.j AND l.c = cd.c
+  GROUP BY p.query_id, a.vec_id, p.cterm""")])
+
+
+def _cand_window(rerank: int) -> str:
+    """cand: each query's top-``rerank`` vectors by ``adc`` score, ties to
+    the lowest id."""
+    return _cte("cand", f"""  SELECT query_id, vec_id FROM (
+    SELECT query_id, vec_id,
+           row_number() OVER (PARTITION BY query_id ORDER BY adc_score DESC, vec_id) AS rn
+    FROM adc
+  ) WHERE rn <= {rerank}""")
+
+
+# FROM clauses for _scored: the ``cand`` pairs, or every corpus vector
+_RERANK = "cand c JOIN vecs e ON e.vec_id = c.vec_id JOIN vecs q ON q.vec_id = c.query_id"
+
+
+def _brute(query_ids, corpus: str = "vecs") -> str:
+    return f"{corpus} e, vecs q WHERE q.vec_id IN ({_in(query_ids)})"
+
+
+def _scored(source: str, name: str = "scored") -> str:
+    """``name``(query_id, vec_id, cosine_sim): the exact cosine, to 6
+    places, of query ``q`` and vector ``e`` for each row of ``source``."""
+    return _cte(name, f"""  SELECT q.vec_id AS query_id, e.vec_id,
+         round(list_dot_product(e.v, q.v)
+               / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.v, q.v))), 6) AS cosine_sim
+  FROM {source}""")
+
+
+def _topk(k: int, cols: str = "query_id, vec_id, cosine_sim",
+          src: str = "scored") -> str:
+    """Each query's top-``k`` ``src`` rows by cosine, ties to the lowest
+    id."""
+    return f"""SELECT {cols} FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rn
+  FROM {src}
+) WHERE rn <= {k}"""
+
+
+def _recall_oracle(*ctes: str, query_ids=_RECALL_QUERY_IDS) -> str:
+    """recall@10 per query of the exact top-10 of the ``cand`` pairs
+    against brute-force ground truth, as _recall_at_10."""
+    return _oracle(*ctes, _scored(_RERANK), _cte("approx", _topk(10, "query_id, vec_id")),
+                   _scored(_brute(query_ids), "bscored"),
+                   _cte("brute", _topk(10, "query_id, vec_id", "bscored")),
+                   _cte("hits", """  SELECT b.query_id, CAST(count(a.vec_id) AS BIGINT) AS n_hits
+  FROM brute b LEFT JOIN approx a
+    ON b.query_id = a.query_id AND b.vec_id = a.vec_id
+  GROUP BY b.query_id"""),
+                   select="SELECT query_id, n_hits,\n"
+                          "       CAST(n_hits * 100000 AS BIGINT) AS recall_e6\n"
+                          "FROM hits ORDER BY query_id")
+
+
+def _bm25_ctes(terms) -> str:
+    """base/stats/bm: Okapi BM25 (k1 1.2, b 0.75) of every document for
+    ``terms`` over its lowercased whitespace tokens, to 6 places, as
+    textstats.bm25_scores."""
+    toks = "regexp_split_to_array(lower(trim(text)), '\\s+')"
+    tf = "".join(f",\n         len(list_filter({toks},\n"
+                 f"                         x -> x = '{t}')) AS tf{i}"
+                 for i, t in enumerate(terms))
+    df = "".join(f",\n         sum(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS df{i}"
+                 for i in range(len(terms)))
+    score = "\n    + ".join(
+        f"ln(1.0 + (CAST(n AS DOUBLE) - CAST(df{i} AS DOUBLE) + 0.5) / (CAST(df{i} AS DOUBLE) + 0.5))\n"
+        f"        * CAST(tf{i} AS DOUBLE) * (1.2 + 1)\n"
+        f"        / (CAST(tf{i} AS DOUBLE) + 1.2 * (1 - 0.75 + 0.75 * CAST(dl AS DOUBLE)\n"
+        f"             / (CAST(sum_dl AS DOUBLE) / CAST(n AS DOUBLE))))"
+        for i in range(len(terms)))
+    return f"""base AS (
+  SELECT doc_id,
+         len(list_filter({toks},
+                         x -> x <> '')) AS dl{tf}
+  FROM documents
+), stats AS (
+  SELECT count(*) AS n, sum(dl) AS sum_dl{df}
+  FROM base
+), bm AS (
+  SELECT doc_id, round(
+      {score}, 6) AS bm25
+  FROM base, stats
+)"""
+
+
+def _rrf_oracle(*ctes: str) -> str:
+    """lex/dense/fused: the RRF of the BM25 ``bm`` top-50 and the dense
+    ``scored`` top-50 into one top-20, as _rrf_fuse."""
+    return _oracle(*ctes, """lex AS (
+  SELECT doc_id, r_lex FROM (
+    SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r_lex
+    FROM bm WHERE bm25 > 0
+  ) WHERE r_lex <= 50
+), dense AS (
+  SELECT vec_id AS doc_id, r_dense FROM (
+    SELECT vec_id, row_number() OVER (ORDER BY cosine_sim DESC, vec_id) AS r_dense
+    FROM scored
+  ) WHERE r_dense <= 50
+), fused AS (
+  SELECT COALESCE(l.doc_id, d.doc_id) AS doc_id,
+         l.r_lex AS lex_rank, d.r_dense AS dense_rank,
+         round(COALESCE(1.0 / (60 + l.r_lex), 0)
+               + COALESCE(1.0 / (60 + d.r_dense), 0), 6) AS rrf_score
+  FROM lex l FULL OUTER JOIN dense d ON l.doc_id = d.doc_id
+)""", select="SELECT doc_id, lex_rank, dense_rank, rrf_score\n"
+             "FROM fused ORDER BY rrf_score DESC, doc_id LIMIT 20")
+
+
 def q_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated-subquery pattern, decorrelated: customers whose total
     spend exceeds 2× their nation's average. The comparison is
@@ -1389,80 +1711,13 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str, num_hashes: int = 32,
                                threshold=0.3, hash_fn=hash_fn)
 
 
-def q_ann_pq_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ ANN (ADC + exact re-rank) with FIXED codebooks — subspace
-    slices of 16 designated L2-normalized corpus vectors instead of
-    sampled k-means — so the DuckDB oracle independently recomputes the
-    per-subspace encode argmax, every query's ADC lookup table, the
-    top-100 ADC candidate window, and the exact-cosine top-10. Together
-    with the tie-keeping batch pruning in similarity.pq_topk this makes
-    the WHOLE PQ pipeline engine-reproducible. Det anchor for `ann_pq`
-    (same code path, different codebook source)."""
-    import numpy as np
-
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    cent_rows = (emb.filter(F.col("vec_id").isin(*_IVF_DET_CENTROID_IDS))
-                 .orderBy("vec_id").select("embedding").collect())
-    x = np.array([r[0] for r in cent_rows], dtype=np.float64)
-    x = x / np.linalg.norm(x, axis=1)[:, None]
-    # books[j][c] = subvector j of designated vector c  (m=8, k=16, sub=8)
-    books = x.reshape(16, 8, 8).transpose(1, 0, 2)
-    queries = (emb.filter(F.col("vec_id").isin(0, 1, 2))
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return S.pq_topk(emb, queries, codebooks=books, id_col="vec_id",
-                     vec_col="embedding", k=10, rerank=100)
-
-
-ORACLE_ANN_PQ_DET = """
-WITH vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), nv AS (
-  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nvv
-  FROM vecs
-), cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, nvv
-  FROM nv WHERE vec_id IN (5,10,15,20,25,30,35,40,45,50,55,60,65,70,75,80)
-), books AS (
-  SELECT j.j, c, list_slice(nvv, j.j * 8 + 1, j.j * 8 + 8) AS bv
-  FROM cents, range(8) j(j)
-), codes AS (
-  -- per-subspace encode: argmax(x_j . c_jc - |c_jc|^2/2), ties to lowest c
-  SELECT vec_id, j, c FROM (
-    SELECT s.vec_id, s.j, s.c,
-           row_number() OVER (PARTITION BY s.vec_id, s.j ORDER BY s.s DESC, s.c) AS rn
-    FROM (SELECT n.vec_id, b.j, b.c,
-                 list_dot_product(list_slice(n.nvv, b.j * 8 + 1, b.j * 8 + 8), b.bv)
-                 - list_dot_product(b.bv, b.bv) / 2.0 AS s
-          FROM nv n, books b) s
-  ) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS query_id, nvv AS qv FROM nv WHERE vec_id IN (0, 1, 2)
-), luts AS (
-  SELECT q.query_id, b.j, b.c,
-         list_dot_product(list_slice(q.qv, b.j * 8 + 1, b.j * 8 + 8), b.bv) AS lut
-  FROM q, books b
-), adc AS (
-  SELECT l.query_id, cd.vec_id, sum(l.lut) AS adc_score
+# the oracle of `ann_pq_det`, q_ann_pq bound to fixed codebooks
+ORACLE_ANN_PQ_DET = _oracle(
+    _VECS_CTE, _NV_CTE, _pq_ctes("nv", _ANN_QUERY_IDS),
+    _cte("adc", """  SELECT l.query_id, cd.vec_id, sum(l.lut) AS adc_score
   FROM codes cd JOIN luts l ON l.j = cd.j AND l.c = cd.c
-  GROUP BY 1, 2
-), cand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY adc_score DESC, vec_id) AS rn
-    FROM adc
-  ) WHERE rn <= 100
-), scored AS (
-  SELECT c.query_id, c.vec_id,
-         round(list_dot_product(e.v, qr.v)
-               / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(qr.v, qr.v))), 6) AS cosine_sim
-  FROM cand c JOIN vecs e ON e.vec_id = c.vec_id JOIN vecs qr ON qr.vec_id = c.query_id
-)
-SELECT query_id, vec_id, cosine_sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rn
-  FROM scored
-) WHERE rn <= 10
-"""
+  GROUP BY 1, 2"""),
+    _cand_window(100), _scored(_RERANK), select=_topk(10))
 
 
 # the oracle of `dedup_clusters_lsh_det`, q_dedup_clusters_lsh bound to md5
@@ -1642,64 +1897,61 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 per query (queries = vec_id 0,1,2),
     the exact ANN baseline: broadcast queries, one corpus scan, per-query
     window top-k. Similarity rounded to 6dp for cross-engine determinism."""
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id").isin(0, 1, 2)) \
-                 .select(F.col("vec_id").alias("query_id"), "embedding")
-    return S.brute_force_topk(emb, queries, id_col="vec_id", vec_col="embedding",
-                              k=10, query_id_col="query_id")
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
+    return S.brute_force_topk(emb, _queries(emb), id_col="vec_id",
+                              vec_col="embedding", k=10,
+                              query_id_col="query_id")
 
 
-ORACLE_ANN_COSINE_TOPK = """
-WITH q AS (
-  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-  FROM embeddings WHERE vec_id IN (0, 1, 2)
-), scored AS (
-  SELECT q.query_id, e.vec_id,
-         round(list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-               / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-                * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cosine_sim
-  FROM embeddings e, q
-)
-SELECT query_id, vec_id, cosine_sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rn
-  FROM scored
-) WHERE rn <= 10
-"""
+ORACLE_ANN_COSINE_TOPK = _oracle(_VECS_CTE, _scored(_brute(_ANN_QUERY_IDS)),
+                                 select=_topk(10))
 
 
-def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_ann_lsh(spark: SparkSession, sf_dir: str,
+              planes: str = "gaussian") -> DataFrame:
     """LSH-bucketed approximate cosine top-k (random hyperplanes, 8
     tables × 4 bits, exact re-rank of candidates) — the scale path.
     Few bits per table because this corpus's neighbors sit near cosine
     0.3 (random vectors): P(bit agree) ≈ 0.6, so 4 bits × 8 tables ≈
-    0.67 hit probability. Rows-only (seeded Gaussian planes); recall vs
-    brute force asserted in tests, and the Rademacher sibling
-    `ann_lsh_det` puts the identical bucket/re-rank code path under a
-    hash-checked DuckDB oracle."""
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id").isin(0, 1, 2)) \
-                 .select(F.col("vec_id").alias("query_id"), "embedding")
-    return S.lsh_bucketed_topk(emb, queries, dim=64, id_col="vec_id",
-                               vec_col="embedding", k=10, bits=4, tables=8)
+    0.67 hit probability. Rows-only with the seeded Gaussian planes;
+    recall vs brute force is asserted in tests.
+
+    ``planes="rademacher"`` is the `ann_lsh_det` binding: md5-parity ±1
+    planes (similarity.rademacher_hyperplanes) are SQL-expressible, so
+    its DuckDB oracle recomputes every bucket, the candidate set and the
+    re-ranked output. That makes it the hash-checked anchor for the
+    Gaussian path: the same bucket/re-rank code with another plane
+    source."""
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
+    fixed = (S.rademacher_hyperplanes(dim=64, bits=4, tables=8)
+             if planes == "rademacher" else None)
+    return S.lsh_bucketed_topk(emb, _queries(emb), dim=64, id_col="vec_id",
+                               vec_col="embedding", k=10, bits=4, tables=8,
+                               planes=fixed)
 
 
 # ---------------------------------------------------------------------------
 # §7 extensions — text analysis over the documents corpus
 # ---------------------------------------------------------------------------
 
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_ann_ivf(spark: SparkSession, sf_dir: str, centroid_ids=None,
+              nprobe: int = 6) -> DataFrame:
     """IVF approximate cosine top-k: seeded k-means coarse quantizer,
     nprobe inverted lists per query, exact re-rank — the corpus never
     shuffles (broadcast probe join). Candidate sets depend on the
     trained centroids, so rows-only; recall vs brute force is
-    pytest-asserted (tests/test_similarity.py)."""
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id").isin(0, 1, 2)) \
-                 .select(F.col("vec_id").alias("query_id"), "embedding")
-    return S.ivf_topk(emb, queries, k=10, n_centroids=16, nprobe=6)
+    pytest-asserted (tests/test_similarity.py).
+
+    ``centroid_ids`` pins the coarse centroids to those corpus vectors.
+    That is the `ann_ivf_det` binding (16 ids, ``nprobe=4``): the same
+    inverted-list plan (scan-local assignment, broadcast probe join,
+    exact re-rank) with data-derived centroids, so its DuckDB oracle
+    recomputes the assignment argmax, each query's probe set and the
+    re-ranked output."""
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
+    [centers] = _fixed_vectors(emb, centroid_ids)
+    return S.ivf_topk(emb, _queries(emb), centers=centers, k=10,
+                      n_centroids=16, nprobe=nprobe)
 
 
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2802,36 +3054,20 @@ def q_ann_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id 0,1,2): the 4×-compressed search path. Scale factors cancel
     in cosine, so scores are cosines of exact integer codes — fully
     engine-deterministic; recall vs the float baseline is pytest-gated."""
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id").isin(0, 1, 2)) \
-                 .select(F.col("vec_id").alias("query_id"), "embedding")
-    return S.quantized_brute_topk(emb, queries, id_col="vec_id",
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
+    return S.quantized_brute_topk(emb, _queries(emb), id_col="vec_id",
                                   vec_col="embedding", k=10)
 
 
-ORACLE_ANN_QUANTIZED = """
-WITH qz AS (
+ORACLE_ANN_QUANTIZED = _oracle("""qz AS (
   SELECT vec_id,
          CASE WHEN s > 0 THEN list_transform(v, x -> CAST(floor(x / s + 0.5) AS INT))
               ELSE list_transform(v, x -> 0) END AS q
   FROM (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) / 127.0 AS s
         FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings))
-), qq AS (
-  SELECT vec_id AS query_id, q AS qv FROM qz WHERE vec_id IN (0, 1, 2)
-), scored AS (
-  SELECT qq.query_id, e.vec_id,
-         round(list_dot_product(CAST(e.q AS DOUBLE[]), CAST(qq.qv AS DOUBLE[]))
-               / (sqrt(list_dot_product(CAST(e.q AS DOUBLE[]), CAST(e.q AS DOUBLE[])))
-                * sqrt(list_dot_product(CAST(qq.qv AS DOUBLE[]), CAST(qq.qv AS DOUBLE[])))), 6)
-           AS cosine_sim
-  FROM qz e, qq
-)
-SELECT query_id, vec_id, cosine_sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rn
-  FROM scored
-) WHERE rn <= 10
-"""
+), vecs AS (
+  SELECT vec_id, CAST(q AS DOUBLE[]) AS v FROM qz
+)""", _scored(_brute(_ANN_QUERY_IDS)), select=_topk(10))
 
 
 def q_corpus_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4994,19 +5230,27 @@ def q_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("l_returnflag"))
 
 
-def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_ann_pq(spark: SparkSession, sf_dir: str,
+             codebook_ids=None) -> DataFrame:
     """Product-quantization ANN (ADC + exact re-rank) — the
     memory-bandwidth scale path beyond int8: m-byte codes per vector,
     scores are m table lookups, the (corpus × queries) score matrix
     never materializes (batch-local top-R inside mapInPandas). Rows-only
-    (seeded k-means codebooks aren't SQL-expressible); recall vs brute
-    force is pytest-gated (tests/test_similarity.py)."""
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    queries = (emb.filter(F.col("vec_id").isin(0, 1, 2))
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return S.pq_topk(emb, queries, id_col="vec_id", vec_col="embedding",
-                     k=10, m=8, n_codes=16, rerank=100)
+    with sampled k-means codebooks (not SQL-expressible); recall vs
+    brute force is pytest-gated (tests/test_similarity.py).
+
+    ``codebook_ids`` replaces the trained codebooks with subspace slices
+    of those L2-normalized corpus vectors (_codebooks). That is the
+    `ann_pq_det` binding (16 ids): its DuckDB oracle recomputes the
+    per-subspace encode argmax, every query's ADC lookup table, the
+    top-100 ADC candidate window and the exact-cosine top-10. With the
+    tie-keeping batch pruning in similarity.pq_topk, the whole PQ
+    pipeline is engine-reproducible."""
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
+    [x] = _fixed_vectors(emb, codebook_ids, normalize=True)
+    return S.pq_topk(emb, _queries(emb), codebooks=_codebooks(x),
+                     id_col="vec_id", vec_col="embedding", k=10, m=8,
+                     n_codes=16, rerank=100)
 
 
 def q_revenue_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6538,53 +6782,12 @@ FROM degrees GROUP BY degree ORDER BY degree
 # hash-checked oracle (not just rows-only + recall pytests)
 # ---------------------------------------------------------------------------
 
-def q_ann_lsh_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH cosine top-10 with REPRODUCIBLE ±1 hyperplanes (md5-parity
-    Rademacher signs, similarity.rademacher_hyperplanes) — same plan as
-    `ann_lsh` (8 tables × 4 bits, bucket-collision candidates, exact
-    re-rank), but the plane derivation is SQL-expressible, so the DuckDB
-    oracle independently recomputes every bucket, the candidate set, AND
-    the re-ranked output. This is the hash-checked correctness anchor
-    for the seeded-Gaussian `ann_lsh` (identical code path, different
-    plane source)."""
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id").isin(0, 1, 2)) \
-                 .select(F.col("vec_id").alias("query_id"), "embedding")
-    planes = S.rademacher_hyperplanes(dim=64, bits=4, tables=8)
-    return S.lsh_bucketed_topk(emb, queries, dim=64, id_col="vec_id",
-                               vec_col="embedding", k=10, planes=planes)
 
-
-ORACLE_ANN_LSH_DET = """
-WITH planes AS (
-  SELECT t.t, b.b,
-         list(CASE WHEN ascii(substring(md5('p' || t.t || '_' || b.b || '_' || d.d), 1, 1)) % 2 = 0
-                   THEN 1.0 ELSE -1.0 END ORDER BY d.d) AS w
-  FROM range(8) t(t), range(4) b(b), range(64) d(d)
-  GROUP BY t.t, b.b
-), vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), buckets AS (
-  SELECT vec_id, t,
-         CAST(sum(CASE WHEN list_dot_product(v, w) > 0 THEN 1 << b ELSE 0 END) AS BIGINT) AS bucket
-  FROM vecs, planes GROUP BY vec_id, t
-), qb AS (
-  SELECT vec_id AS query_id, t, bucket FROM buckets WHERE vec_id IN (0, 1, 2)
-), cand AS (
-  SELECT DISTINCT qb.query_id, cb.vec_id
-  FROM buckets cb JOIN qb ON cb.t = qb.t AND cb.bucket = qb.bucket
-), scored AS (
-  SELECT c.query_id, c.vec_id,
-         round(list_dot_product(e.v, q.v)
-               / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.v, q.v))), 6) AS cosine_sim
-  FROM cand c JOIN vecs e ON e.vec_id = c.vec_id JOIN vecs q ON q.vec_id = c.query_id
-)
-SELECT query_id, vec_id, cosine_sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rn
-  FROM scored
-) WHERE rn <= 10
-"""
+# the oracle of `ann_lsh_det`, q_ann_lsh bound to Rademacher planes
+ORACLE_ANN_LSH_DET = _oracle(
+    _VECS_CTE, _rademacher_planes(8, 4),
+    _bucket_cand(f"q.vec_id IN ({_in(_ANN_QUERY_IDS)})"), _scored(_RERANK),
+    select=_topk(10))
 
 
 def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6596,86 +6799,17 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties broken by vec_id), so the oracle recomputes ground truth, the
     bucketed candidates AND the recall join. Output:
     (query_id, n_hits, recall_e6)."""
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    queries = (emb.filter(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
+    queries = _queries(emb, _RECALL_QUERY_IDS)
     planes = S.rademacher_hyperplanes(dim=64, bits=4, tables=8)
-    lsh = S.lsh_bucketed_topk(emb, queries, dim=64, id_col="vec_id",
-                              vec_col="embedding", k=10, planes=planes)
-    brute = S.brute_force_topk(emb, queries, id_col="vec_id",
-                               vec_col="embedding", k=10,
-                               query_id_col="query_id")
-    hits = (lsh.select("query_id", "vec_id")
-            .join(brute.select("query_id", "vec_id"),
-                  ["query_id", "vec_id"])
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_hits")))
-    return (brute.select("query_id").distinct()
-            .join(hits, "query_id", "left")
-            .select("query_id",
-                    F.coalesce("n_hits", F.lit(0)).cast("long")
-                    .alias("n_hits"),
-                    (F.coalesce("n_hits", F.lit(0)) * 100_000)
-                    .cast("long").alias("recall_e6"))
-            .orderBy("query_id"))
+    return _recall_at_10(emb, queries, S.lsh_bucketed_topk(
+        emb, queries, dim=64, id_col="vec_id", vec_col="embedding", k=10,
+        planes=planes))
 
 
-ORACLE_ANN_RECALL_EVAL = """
-WITH planes AS (
-  SELECT t.t, b.b,
-         list(CASE WHEN ascii(substring(md5('p' || t.t || '_' || b.b || '_' || d.d), 1, 1)) % 2 = 0
-                   THEN 1.0 ELSE -1.0 END ORDER BY d.d) AS w
-  FROM range(8) t(t), range(4) b(b), range(64) d(d)
-  GROUP BY t.t, b.b
-), vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), buckets AS (
-  SELECT vec_id, t,
-         CAST(sum(CASE WHEN list_dot_product(v, w) > 0 THEN 1 << b ELSE 0 END) AS BIGINT) AS bucket
-  FROM vecs, planes GROUP BY vec_id, t
-), qb AS (
-  SELECT vec_id AS query_id, t, bucket FROM buckets
-  WHERE vec_id IN (0, 1, 2, 3, 4)
-), cand AS (
-  SELECT DISTINCT qb.query_id, cb.vec_id
-  FROM buckets cb JOIN qb ON cb.t = qb.t AND cb.bucket = qb.bucket
-), lsh AS (
-  SELECT query_id, vec_id FROM (
-    SELECT c.query_id, c.vec_id,
-           round(list_dot_product(e.v, q.v)
-                 / (sqrt(list_dot_product(e.v, e.v))
-                    * sqrt(list_dot_product(q.v, q.v))), 6) AS cs,
-           row_number() OVER (
-             PARTITION BY c.query_id
-             ORDER BY round(list_dot_product(e.v, q.v)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(q.v, q.v))), 6) DESC,
-               c.vec_id) AS rn
-    FROM cand c JOIN vecs e ON e.vec_id = c.vec_id
-                JOIN vecs q ON q.vec_id = c.query_id
-  ) WHERE rn <= 10
-), brute AS (
-  SELECT query_id, vec_id FROM (
-    SELECT q.vec_id AS query_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY round(list_dot_product(e.v, q.v)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(q.v, q.v))), 6) DESC,
-               e.vec_id) AS rn
-    FROM vecs e, vecs q WHERE q.vec_id IN (0, 1, 2, 3, 4)
-  ) WHERE rn <= 10
-), hits AS (
-  SELECT b.query_id, CAST(count(l.vec_id) AS BIGINT) AS n_hits
-  FROM brute b LEFT JOIN lsh l
-    ON b.query_id = l.query_id AND b.vec_id = l.vec_id
-  GROUP BY b.query_id
-)
-SELECT query_id, n_hits,
-       CAST(n_hits * 100000 AS BIGINT) AS recall_e6
-FROM hits ORDER BY query_id
-"""
+ORACLE_ANN_RECALL_EVAL = _recall_oracle(
+    _VECS_CTE, _rademacher_planes(8, 4),
+    _bucket_cand(f"q.vec_id IN ({_in(_RECALL_QUERY_IDS)})"))
 
 
 def q_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6686,222 +6820,49 @@ def q_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic end to end (data-derived centroids, 6dp cosine, id
     tie-breaks), so the oracle recomputes assignment argmax, probe
     sets, ground truth and the recall join."""
-    import numpy as np
-
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    cent_rows = (emb.filter(F.col("vec_id").isin(*_IVF_DET_CENTROID_IDS))
-                 .orderBy("vec_id").select("embedding").collect())
-    centers = np.array([r[0] for r in cent_rows], dtype=np.float64)
-    queries = (emb.filter(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    ivf = S.ivf_topk(emb, queries, centers=centers, k=10, nprobe=4)
-    brute = S.brute_force_topk(emb, queries, id_col="vec_id",
-                               vec_col="embedding", k=10,
-                               query_id_col="query_id")
-    hits = (ivf.select("query_id", "vec_id")
-            .join(brute.select("query_id", "vec_id"),
-                  ["query_id", "vec_id"])
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_hits")))
-    return (brute.select("query_id").distinct()
-            .join(hits, "query_id", "left")
-            .select("query_id",
-                    F.coalesce("n_hits", F.lit(0)).cast("long")
-                    .alias("n_hits"),
-                    (F.coalesce("n_hits", F.lit(0)) * 100_000)
-                    .cast("long").alias("recall_e6"))
-            .orderBy("query_id"))
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
+    [centers] = _fixed_vectors(emb, _IVF_DET_CENTROID_IDS)
+    queries = _queries(emb, _RECALL_QUERY_IDS)
+    return _recall_at_10(emb, queries, S.ivf_topk(emb, queries, centers=centers,
+                                                  k=10, nprobe=4))
 
 
-ORACLE_IVF_RECALL_EVAL = """
-WITH vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
-  FROM vecs WHERE vec_id IN (5,10,15,20,25,30,35,40,45,50,55,60,65,70,75,80)
-), assigned AS (
-  SELECT vec_id, c AS centroid_id FROM (
-    SELECT s.vec_id, s.c,
-           row_number() OVER (PARTITION BY s.vec_id ORDER BY s.score DESC, s.c) AS rn
-    FROM (SELECT vecs.vec_id, cents.c,
-                 list_dot_product(vecs.v, cents.cv)
-                 - list_dot_product(cents.cv, cents.cv) / 2.0 AS score
-          FROM vecs, cents) s
-  ) WHERE rn = 1
-), probes AS (
-  SELECT query_id, c AS centroid_id FROM (
-    SELECT q.vec_id AS query_id, cents.c,
-           row_number() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY list_dot_product(cents.cv, cents.cv)
-                      - 2 * list_dot_product(q.v, cents.cv), cents.c) AS rn
-    FROM vecs q, cents WHERE q.vec_id IN (0, 1, 2, 3, 4)
-  ) WHERE rn <= 4
-), cand AS (
-  SELECT DISTINCT p.query_id, a.vec_id
-  FROM assigned a JOIN probes p ON a.centroid_id = p.centroid_id
-), ivf AS (
-  SELECT query_id, vec_id FROM (
-    SELECT c.query_id, c.vec_id,
-           row_number() OVER (
-             PARTITION BY c.query_id
-             ORDER BY round(list_dot_product(e.v, q.v)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(q.v, q.v))), 6) DESC,
-               c.vec_id) AS rn
-    FROM cand c JOIN vecs e ON e.vec_id = c.vec_id
-                JOIN vecs q ON q.vec_id = c.query_id
-  ) WHERE rn <= 10
-), brute AS (
-  SELECT query_id, vec_id FROM (
-    SELECT q.vec_id AS query_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY round(list_dot_product(e.v, q.v)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(q.v, q.v))), 6) DESC,
-               e.vec_id) AS rn
-    FROM vecs e, vecs q WHERE q.vec_id IN (0, 1, 2, 3, 4)
-  ) WHERE rn <= 10
-), hits AS (
-  SELECT b.query_id, CAST(count(i.vec_id) AS BIGINT) AS n_hits
-  FROM brute b LEFT JOIN ivf i
-    ON b.query_id = i.query_id AND b.vec_id = i.vec_id
-  GROUP BY b.query_id
-)
-SELECT query_id, n_hits,
-       CAST(n_hits * 100000 AS BIGINT) AS recall_e6
-FROM hits ORDER BY query_id
-"""
+ORACLE_IVF_RECALL_EVAL = _recall_oracle(
+    _VECS_CTE, _fixed_rows("cents", _IVF_DET_CENTROID_IDS), _assigned("vecs"),
+    _probes("vecs", _RECALL_QUERY_IDS, 4), _IVF_CAND)
 
 
-_IVF_DET_CENTROID_IDS = tuple(range(5, 85, 5))  # 16 fixed corpus vectors
+# the oracle of `ann_ivf_det`, q_ann_ivf bound to fixed centroids
+ORACLE_ANN_IVF_DET = _oracle(
+    _VECS_CTE, _fixed_rows("cents", _IVF_DET_CENTROID_IDS), _assigned("vecs"),
+    _probes("vecs", _ANN_QUERY_IDS, 4), _IVF_CAND, _scored(_RERANK),
+    select=_topk(10))
 
 
-def q_ann_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF cosine top-10 with FIXED coarse centroids (16 designated
-    corpus vectors instead of seeded k-means) — same inverted-list plan
-    as `ann_ivf` (scan-local assignment, broadcast probe join, exact
-    re-rank), but centroid identity is data-derived, so the DuckDB
-    oracle recomputes the assignment argmax, the per-query probe set,
-    and the re-ranked output. Hash-checked anchor for `ann_ivf`."""
-    import numpy as np
-
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    cent_rows = (emb.filter(F.col("vec_id").isin(*_IVF_DET_CENTROID_IDS))
-                 .orderBy("vec_id").select("embedding").collect())
-    centers = np.array([r[0] for r in cent_rows], dtype=np.float64)
-    queries = emb.filter(F.col("vec_id").isin(0, 1, 2)) \
-                 .select(F.col("vec_id").alias("query_id"), "embedding")
-    return S.ivf_topk(emb, queries, centers=centers, k=10, nprobe=4)
-
-
-ORACLE_ANN_IVF_DET = """
-WITH vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
-  FROM vecs WHERE vec_id IN (5,10,15,20,25,30,35,40,45,50,55,60,65,70,75,80)
-), assigned AS (
-  -- argmax(x·c − ‖c‖²/2) ≡ nearest centroid; ties break to the lowest
-  -- centroid index (numpy argmax picks the first maximum)
-  SELECT vec_id, c AS centroid_id FROM (
-    SELECT s.vec_id, s.c,
-           row_number() OVER (PARTITION BY s.vec_id ORDER BY s.score DESC, s.c) AS rn
-    FROM (SELECT vecs.vec_id, cents.c,
-                 list_dot_product(vecs.v, cents.cv)
-                 - list_dot_product(cents.cv, cents.cv) / 2.0 AS score
-          FROM vecs, cents) s
-  ) WHERE rn = 1
-), probes AS (
-  -- each query probes its 4 nearest lists by squared distance
-  SELECT query_id, c AS centroid_id FROM (
-    SELECT q.vec_id AS query_id, cents.c,
-           row_number() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY list_dot_product(cents.cv, cents.cv)
-                      - 2 * list_dot_product(q.v, cents.cv), cents.c) AS rn
-    FROM vecs q, cents WHERE q.vec_id IN (0, 1, 2)
-  ) WHERE rn <= 4
-), cand AS (
-  SELECT DISTINCT p.query_id, a.vec_id
-  FROM assigned a JOIN probes p ON a.centroid_id = p.centroid_id
-), scored AS (
-  SELECT c.query_id, c.vec_id,
-         round(list_dot_product(e.v, q.v)
-               / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.v, q.v))), 6) AS cosine_sim
-  FROM cand c JOIN vecs e ON e.vec_id = c.vec_id JOIN vecs q ON q.vec_id = c.query_id
-)
-SELECT query_id, vec_id, cosine_sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rn
-  FROM scored
-) WHERE rn <= 10
-"""
-
-
-_IVFPQ_DET_CENTER_IDS = (90, 190, 290, 390)  # 4 fixed coarse centroids
-
-
-def _det_ivfpq_fixtures(emb: DataFrame):
-    """Det IVF-PQ fixtures — normalized coarse centers + residual
-    codebooks — in ONE collect job (r15, r14 verdict #5): the center
-    and codebook source rows ride a single isin scan instead of two
-    back-to-back driver jobs, then split driver-side. Row order and
-    arithmetic are identical to the former two collects (each was
-    orderBy(vec_id) over a disjoint id set)."""
-    import numpy as np
-
-    ids = sorted(set(_IVFPQ_DET_CENTER_IDS) | set(_IVF_DET_CENTROID_IDS))
-    rows = (emb.filter(F.col("vec_id").isin(*ids))
-            .select("vec_id", "embedding").collect())
-    by_id = {r[0]: r[1] for r in rows}
-    c = np.array([by_id[i] for i in sorted(_IVFPQ_DET_CENTER_IDS)],
-                 dtype=np.float64)
-    c = c / np.linalg.norm(c, axis=1)[:, None]
-    b = np.array([by_id[i] for i in sorted(_IVF_DET_CENTROID_IDS)],
-                 dtype=np.float64)
-    b = b / np.linalg.norm(b, axis=1)[:, None]
-    books = b.reshape(16, 8, 8).transpose(1, 0, 2)  # m=8, k=16, sub=8
-    return c, books
-
-
-def q_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_ann_ivf_pq(spark: SparkSession, sf_dir: str, center_ids=None,
+                 codebook_ids=None, nprobe: int = 4) -> DataFrame:
     """IVF-PQ ANN (similarity.py::ivf_pq_topk) — the COMPOSED
     billion-scale architecture: trained coarse centroids route each
     query to nprobe inverted lists, PQ codes of the residuals give
     m-byte vectors and m-lookup ADC scores, exact cosine re-ranks.
-    Rows-only (seeded k-means training isn't SQL-expressible); the
-    whole routing+encode+ADC pipeline is hash-checked by its det anchor
-    `ann_ivf_pq_det`, and recall vs brute force is pytest-gated."""
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    queries = (emb.filter(F.col("vec_id").isin(0, 1, 2))
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return S.ivf_pq_topk(emb, queries, id_col="vec_id", vec_col="embedding",
-                         k=10, nprobe=4, n_centroids=16, m=8, n_codes=16,
-                         rerank=100)
+    Rows-only with trained centers and codebooks (seeded k-means
+    training isn't SQL-expressible); recall vs brute force is
+    pytest-gated.
 
-
-def q_ann_ivf_pq_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ ANN with FIXED coarse centroids (4 designated normalized
-    corpus vectors) and FIXED residual codebooks (subspace slices of the
-    16 ann_pq_det vectors), so the DuckDB oracle independently
-    recomputes the ENTIRE composed pipeline: nearest-centroid
-    assignment, residual, per-subspace encode argmax, per-query probe
-    routing, the ⟨q,center⟩ + Σ lut ADC decomposition, the top-100
-    candidate window, and the exact-cosine top-10. Det anchor for
-    `ann_ivf_pq` (same code path, different center/codebook source)."""
-
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    c, books = _det_ivfpq_fixtures(emb)  # m=8, k=16, sub=8
-    queries = (emb.filter(F.col("vec_id").isin(0, 1, 2))
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return S.ivf_pq_topk(emb, queries, centers=c, codebooks=books,
-                         id_col="vec_id", vec_col="embedding", k=10,
-                         nprobe=2, rerank=100)
+    ``center_ids`` and ``codebook_ids`` pin the coarse centers and the
+    residual codebooks to L2-normalized corpus vectors. That is the
+    `ann_ivf_pq_det` binding (4 centers, the 16 `ann_pq_det` codebook
+    vectors, ``nprobe=2``): its DuckDB oracle recomputes the entire
+    composed pipeline — nearest-center assignment, residual,
+    per-subspace encode argmax, probe routing, the ⟨q,center⟩ + Σ lut
+    ADC decomposition, the top-100 candidate window and the
+    exact-cosine top-10."""
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
+    centers, x = _fixed_vectors(emb, center_ids, codebook_ids, normalize=True)
+    return S.ivf_pq_topk(emb, _queries(emb), centers=centers,
+                         codebooks=_codebooks(x), id_col="vec_id",
+                         vec_col="embedding", k=10, nprobe=nprobe,
+                         n_centroids=16, m=8, n_codes=16, rerank=100)
 
 
 def q_ann_ivf_pq_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6920,12 +6881,9 @@ def q_ann_ivf_pq_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytic oracle recomputing the entire route→encode→ADC→re-rank
     pipeline."""
 
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    c, books = _det_ivfpq_fixtures(emb)  # m=8, k=16, sub=8
-    queries = (emb.filter(F.col("vec_id").isin(0, 1, 2))
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return S.ivf_pq_topk_distributed(emb, queries, centers=c,
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
+    c, books = _det_ivfpq_fixtures(emb)
+    return S.ivf_pq_topk_distributed(emb, _queries(emb), centers=c,
                                      codebooks=books, id_col="vec_id",
                                      vec_col="embedding", k=10,
                                      nprobe=2, rerank=100)
@@ -6942,14 +6900,11 @@ def q_ann_ivf_pq_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, so the same analytic oracle hash-checks the whole
     store round-trip (write → prune → ADC → re-rank)."""
 
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
     c, books = _det_ivfpq_fixtures(emb)
-    queries = (emb.filter(F.col("vec_id").isin(0, 1, 2))
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
     S.persist_ivf_pq_store(emb, c, books, "comix_ivfpq_store",
                            id_col="vec_id", vec_col="embedding")
-    return S.ivf_pq_topk_from_store(emb, queries, "comix_ivfpq_store",
+    return S.ivf_pq_topk_from_store(emb, _queries(emb), "comix_ivfpq_store",
                                     centers=c, codebooks=books,
                                     id_col="vec_id", vec_col="embedding",
                                     k=10, nprobe=2, rerank=100)
@@ -6967,8 +6922,7 @@ def q_ivfpq_store_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes every vector's nearest-centroid assignment and the
     per-list tallies."""
 
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
     c, books = _det_ivfpq_fixtures(emb)
     S.persist_ivf_pq_store(emb, c, books, "comix_ivfpq_stats_store",
                            id_col="vec_id", vec_col="embedding")
@@ -6976,31 +6930,14 @@ def q_ivfpq_store_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("centroid_id"))
 
 
-ORACLE_IVFPQ_STORE_STATS = """
-WITH vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), nv AS (
-  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nvv
-  FROM vecs
-), cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, nvv AS cv
-  FROM nv WHERE vec_id IN (90, 190, 290, 390)
-), assigned AS (
-  SELECT vec_id, c AS cid FROM (
-    SELECT n.vec_id, ct.c,
-           row_number() OVER (PARTITION BY n.vec_id ORDER BY
-             list_dot_product(n.nvv, ct.cv)
-             - list_dot_product(ct.cv, ct.cv) / 2.0 DESC, ct.c) AS rn
-    FROM nv n, cents ct
-  ) WHERE rn = 1
-), per_list AS (
-  SELECT cid AS centroid_id, CAST(count(*) AS BIGINT) AS n_codes
-  FROM assigned GROUP BY cid
-)
-SELECT centroid_id, n_codes,
+ORACLE_IVFPQ_STORE_STATS = _oracle(
+    _VECS_CTE, _NV_CTE, _fixed_rows("cents", _IVFPQ_DET_CENTER_IDS, "nv"),
+    _assigned("nv"),
+    _cte("per_list", "  SELECT cid AS centroid_id, CAST(count(*) AS BIGINT) AS n_codes\n"
+                     "  FROM assigned GROUP BY cid"),
+    select="""SELECT centroid_id, n_codes,
        CAST(n_codes * 1000000 // sum(n_codes) OVER () AS BIGINT) AS share_e6
-FROM per_list ORDER BY centroid_id
-"""
+FROM per_list ORDER BY centroid_id""")
 
 
 def q_bm25_store_health(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7065,8 +7002,7 @@ def q_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from comix_etl_spark.streaming.windowed import run_stream_foreach_batch
 
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
     c, books = _det_ivfpq_fixtures(emb)
     S.persist_ivf_pq_store(emb, c, books, "comix_ivfpq_store_stream",
                            id_col="vec_id", vec_col="embedding")
@@ -7080,8 +7016,7 @@ def q_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     results = os.path.join(base, "results")
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        qb = (batch.filter(F.col("vec_id").isin(0, 1, 2))
-              .select(F.col("vec_id").alias("query_id"), "embedding"))
+        qb = _queries(batch)
         if qb.isEmpty():
             return
         out = S.ivf_pq_topk_from_store(
@@ -7111,208 +7046,23 @@ def q_ivf_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     end to end, so the oracle recomputes routing, residual encode,
     IVFADC, both top-10 sets, and the recall join."""
 
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
     c, books = _det_ivfpq_fixtures(emb)
-    queries = (emb.filter(F.col("vec_id").isin(0, 1, 2, 3, 4))
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    ivfpq = S.ivf_pq_topk(emb, queries, centers=c, codebooks=books,
-                          id_col="vec_id", vec_col="embedding", k=10,
-                          nprobe=2, rerank=100)
-    brute = S.brute_force_topk(emb, queries, id_col="vec_id",
-                               vec_col="embedding", k=10,
-                               query_id_col="query_id")
-    hits = (ivfpq.select("query_id", "vec_id")
-            .join(brute.select("query_id", "vec_id"),
-                  ["query_id", "vec_id"])
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_hits")))
-    return (brute.select("query_id").distinct()
-            .join(hits, "query_id", "left")
-            .select("query_id",
-                    F.coalesce("n_hits", F.lit(0)).cast("long")
-                    .alias("n_hits"),
-                    (F.coalesce("n_hits", F.lit(0)) * 100_000)
-                    .cast("long").alias("recall_e6"))
-            .orderBy("query_id"))
+    queries = _queries(emb, _RECALL_QUERY_IDS)
+    return _recall_at_10(emb, queries, S.ivf_pq_topk(
+        emb, queries, centers=c, codebooks=books, id_col="vec_id",
+        vec_col="embedding", k=10, nprobe=2, rerank=100))
 
 
-ORACLE_IVF_PQ_RECALL_EVAL = """
-WITH vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), nv AS (
-  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nvv
-  FROM vecs
-), cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, nvv AS cv
-  FROM nv WHERE vec_id IN (90, 190, 290, 390)
-), bvecs AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS bc, nvv
-  FROM nv WHERE vec_id IN (5,10,15,20,25,30,35,40,45,50,55,60,65,70,75,80)
-), books AS (
-  SELECT j.j, bc AS c, list_slice(nvv, j.j * 8 + 1, j.j * 8 + 8) AS bv
-  FROM bvecs, range(8) j(j)
-), assigned AS (
-  SELECT vec_id, c AS cid, cv FROM (
-    SELECT n.vec_id, ct.c, ct.cv,
-           row_number() OVER (PARTITION BY n.vec_id ORDER BY
-             list_dot_product(n.nvv, ct.cv)
-             - list_dot_product(ct.cv, ct.cv) / 2.0 DESC, ct.c) AS rn
-    FROM nv n, cents ct
-  ) WHERE rn = 1
-), resid AS (
-  SELECT a.vec_id, a.cid,
-         list_transform(range(1, len(n.nvv) + 1), i -> n.nvv[i] - a.cv[i]) AS rv
-  FROM assigned a JOIN nv n USING (vec_id)
-), codes AS (
-  SELECT vec_id, j, c FROM (
-    SELECT r.vec_id, b.j, b.c,
-           row_number() OVER (PARTITION BY r.vec_id, b.j ORDER BY
-             list_dot_product(list_slice(r.rv, b.j * 8 + 1, b.j * 8 + 8), b.bv)
-             - list_dot_product(b.bv, b.bv) / 2.0 DESC, b.c) AS rn
-    FROM resid r, books b
-  ) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS query_id, nvv AS qv FROM nv WHERE vec_id IN (0, 1, 2, 3, 4)
-), probes AS (
-  SELECT query_id, cid, cterm FROM (
-    SELECT q.query_id, ct.c AS cid,
-           list_dot_product(q.qv, ct.cv) AS cterm,
-           row_number() OVER (PARTITION BY q.query_id ORDER BY
-             list_dot_product(q.qv, ct.cv)
-             - list_dot_product(ct.cv, ct.cv) / 2.0 DESC, ct.c) AS rn
-    FROM q, cents ct
-  ) WHERE rn <= 2
-), luts AS (
-  SELECT q.query_id, b.j, b.c,
-         list_dot_product(list_slice(q.qv, b.j * 8 + 1, b.j * 8 + 8), b.bv) AS lut
-  FROM q, books b
-), adc AS (
-  SELECT p.query_id, a.vec_id, p.cterm + sum(l.lut) AS adc_score
-  FROM assigned a
-  JOIN probes p ON p.cid = a.cid
-  JOIN codes cd ON cd.vec_id = a.vec_id
-  JOIN luts l ON l.query_id = p.query_id AND l.j = cd.j AND l.c = cd.c
-  GROUP BY p.query_id, a.vec_id, p.cterm
-), cand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY adc_score DESC, vec_id) AS rn
-    FROM adc
-  ) WHERE rn <= 100
-), ivfpq AS (
-  SELECT query_id, vec_id FROM (
-    SELECT c.query_id, c.vec_id,
-           row_number() OVER (PARTITION BY c.query_id ORDER BY
-             round(list_dot_product(e.v, qr.v)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(qr.v, qr.v))), 6) DESC,
-             c.vec_id) AS rn
-    FROM cand c JOIN vecs e ON e.vec_id = c.vec_id
-                JOIN vecs qr ON qr.vec_id = c.query_id
-  ) WHERE rn <= 10
-), brute AS (
-  SELECT query_id, vec_id FROM (
-    SELECT q.vec_id AS query_id, e.vec_id,
-           row_number() OVER (PARTITION BY q.vec_id ORDER BY
-             round(list_dot_product(e.v, q.v)
-                   / (sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(q.v, q.v))), 6) DESC,
-             e.vec_id) AS rn
-    FROM vecs e, vecs q WHERE q.vec_id IN (0, 1, 2, 3, 4)
-  ) WHERE rn <= 10
-), hits AS (
-  SELECT b.query_id, CAST(count(i.vec_id) AS BIGINT) AS n_hits
-  FROM brute b LEFT JOIN ivfpq i
-    ON b.query_id = i.query_id AND b.vec_id = i.vec_id
-  GROUP BY b.query_id
-)
-SELECT query_id, n_hits,
-       CAST(n_hits * 100000 AS BIGINT) AS recall_e6
-FROM hits ORDER BY query_id
-"""
+ORACLE_IVF_PQ_RECALL_EVAL = _recall_oracle(
+    _VECS_CTE, _NV_CTE, _ivf_pq_ctes(_RECALL_QUERY_IDS, 2), _cand_window(100))
 
 
-ORACLE_ANN_IVF_PQ_DET = """
-WITH vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), nv AS (
-  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nvv
-  FROM vecs
-), cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, nvv AS cv
-  FROM nv WHERE vec_id IN (90, 190, 290, 390)
-), bvecs AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS bc, nvv
-  FROM nv WHERE vec_id IN (5,10,15,20,25,30,35,40,45,50,55,60,65,70,75,80)
-), books AS (
-  SELECT j.j, bc AS c, list_slice(nvv, j.j * 8 + 1, j.j * 8 + 8) AS bv
-  FROM bvecs, range(8) j(j)
-), assigned AS (
-  -- nearest coarse centroid on the NORMALIZED vector:
-  -- argmax(x·c − ‖c‖²/2) ≡ L2 argmin; ties to the lowest index
-  SELECT vec_id, c AS cid, cv FROM (
-    SELECT n.vec_id, ct.c, ct.cv,
-           row_number() OVER (PARTITION BY n.vec_id ORDER BY
-             list_dot_product(n.nvv, ct.cv)
-             - list_dot_product(ct.cv, ct.cv) / 2.0 DESC, ct.c) AS rn
-    FROM nv n, cents ct
-  ) WHERE rn = 1
-), resid AS (
-  SELECT a.vec_id, a.cid,
-         list_transform(range(1, len(n.nvv) + 1), i -> n.nvv[i] - a.cv[i]) AS rv
-  FROM assigned a JOIN nv n USING (vec_id)
-), codes AS (
-  -- per-subspace residual encode: argmax(r_j·b_jc − ‖b_jc‖²/2)
-  SELECT vec_id, j, c FROM (
-    SELECT r.vec_id, b.j, b.c,
-           row_number() OVER (PARTITION BY r.vec_id, b.j ORDER BY
-             list_dot_product(list_slice(r.rv, b.j * 8 + 1, b.j * 8 + 8), b.bv)
-             - list_dot_product(b.bv, b.bv) / 2.0 DESC, b.c) AS rn
-    FROM resid r, books b
-  ) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS query_id, nvv AS qv FROM nv WHERE vec_id IN (0, 1, 2)
-), probes AS (
-  -- each query probes its 2 nearest lists; the per-list ADC constant
-  -- term is carried along
-  SELECT query_id, cid, cterm FROM (
-    SELECT q.query_id, ct.c AS cid,
-           list_dot_product(q.qv, ct.cv) AS cterm,
-           row_number() OVER (PARTITION BY q.query_id ORDER BY
-             list_dot_product(q.qv, ct.cv)
-             - list_dot_product(ct.cv, ct.cv) / 2.0 DESC, ct.c) AS rn
-    FROM q, cents ct
-  ) WHERE rn <= 2
-), luts AS (
-  SELECT q.query_id, b.j, b.c,
-         list_dot_product(list_slice(q.qv, b.j * 8 + 1, b.j * 8 + 8), b.bv) AS lut
-  FROM q, books b
-), adc AS (
-  -- IVFADC: score = <q, center> + Σ_j lut[j, code_j], only over probed lists
-  SELECT p.query_id, a.vec_id, p.cterm + sum(l.lut) AS adc_score
-  FROM assigned a
-  JOIN probes p ON p.cid = a.cid
-  JOIN codes cd ON cd.vec_id = a.vec_id
-  JOIN luts l ON l.query_id = p.query_id AND l.j = cd.j AND l.c = cd.c
-  GROUP BY p.query_id, a.vec_id, p.cterm
-), cand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY adc_score DESC, vec_id) AS rn
-    FROM adc
-  ) WHERE rn <= 100
-), scored AS (
-  SELECT c.query_id, c.vec_id,
-         round(list_dot_product(e.v, qr.v)
-               / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(qr.v, qr.v))), 6) AS cosine_sim
-  FROM cand c JOIN vecs e ON e.vec_id = c.vec_id JOIN vecs qr ON qr.vec_id = c.query_id
-)
-SELECT query_id, vec_id, cosine_sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, vec_id) AS rn
-  FROM scored
-) WHERE rn <= 10
-"""
+# the oracle of `ann_ivf_pq_det`, q_ann_ivf_pq bound to fixed centers and
+# codebooks, and of the dist, store and stream paths built on them
+ORACLE_ANN_IVF_PQ_DET = _oracle(
+    _VECS_CTE, _NV_CTE, _ivf_pq_ctes(_ANN_QUERY_IDS, 2), _cand_window(100),
+    _scored(_RERANK), select=_topk(10))
 
 
 # ---------------------------------------------------------------------------
@@ -8015,48 +7765,14 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _t(spark, sf_dir, "documents")
     return (TS.bm25_scores(t["documents"], "doc_id", "text",
-                           ["spark", "merge", "window"])
+                           _BM25_TERMS)
             .orderBy(F.col("bm25").desc(), F.col("doc_id"))
             .limit(20))
 
 
-ORACLE_BM25_SEARCH = """
-WITH base AS (
-  SELECT doc_id,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x <> '')) AS dl,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x = 'spark'))  AS tf0,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x = 'merge'))  AS tf1,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x = 'window')) AS tf2
-  FROM documents
-), stats AS (
-  SELECT count(*) AS n, sum(dl) AS sum_dl,
-         sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-         sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-         sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-  FROM base
-), scored AS (
-  SELECT doc_id, round(
-      ln(1.0 + (CAST(n AS DOUBLE) - CAST(df0 AS DOUBLE) + 0.5) / (CAST(df0 AS DOUBLE) + 0.5))
-        * CAST(tf0 AS DOUBLE) * (1.2 + 1)
-        / (CAST(tf0 AS DOUBLE) + 1.2 * (1 - 0.75 + 0.75 * CAST(dl AS DOUBLE)
-             / (CAST(sum_dl AS DOUBLE) / CAST(n AS DOUBLE))))
-    + ln(1.0 + (CAST(n AS DOUBLE) - CAST(df1 AS DOUBLE) + 0.5) / (CAST(df1 AS DOUBLE) + 0.5))
-        * CAST(tf1 AS DOUBLE) * (1.2 + 1)
-        / (CAST(tf1 AS DOUBLE) + 1.2 * (1 - 0.75 + 0.75 * CAST(dl AS DOUBLE)
-             / (CAST(sum_dl AS DOUBLE) / CAST(n AS DOUBLE))))
-    + ln(1.0 + (CAST(n AS DOUBLE) - CAST(df2 AS DOUBLE) + 0.5) / (CAST(df2 AS DOUBLE) + 0.5))
-        * CAST(tf2 AS DOUBLE) * (1.2 + 1)
-        / (CAST(tf2 AS DOUBLE) + 1.2 * (1 - 0.75 + 0.75 * CAST(dl AS DOUBLE)
-             / (CAST(sum_dl AS DOUBLE) / CAST(n AS DOUBLE)))), 6) AS bm25
-  FROM base, stats
-)
-SELECT doc_id, bm25 FROM scored WHERE bm25 > 0
-ORDER BY bm25 DESC, doc_id LIMIT 20
-"""
+ORACLE_BM25_SEARCH = _oracle(
+    _bm25_ctes(_BM25_TERMS),
+    select="SELECT doc_id, bm25 FROM bm WHERE bm25 > 0\nORDER BY bm25 DESC, doc_id LIMIT 20")
 
 
 def q_bm25_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8076,7 +7792,7 @@ def q_bm25_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     TS.persist_bm25_store(t["documents"], "comix_bm25_store",
                           id_col="doc_id", text_col="text")
     return (TS.bm25_scores_from_store(spark, "comix_bm25_store",
-                                      ["spark", "merge", "window"])
+                                      _BM25_TERMS)
             .orderBy(F.col("bm25").desc(), F.col("doc_id"))
             .limit(20))
 
@@ -8106,7 +7822,7 @@ def q_bm25_store_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                           "comix_bm25_append_store",
                           id_col="doc_id", text_col="text", mode="append")
     return (TS.bm25_scores_from_store(spark, "comix_bm25_append_store",
-                                      ["spark", "merge", "window"])
+                                      _BM25_TERMS)
             .orderBy(F.col("bm25").desc(), F.col("doc_id"))
             .limit(20))
 
@@ -8119,33 +7835,15 @@ def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard lexical+dense serving pattern for RAG corpora.
 
     Scale shape: each arm is corpus-scan → TakeOrdered(50) (no global
-    sort, no corpus shuffle); the rank windows and the full-outer fusion
-    join run over ≤100 rows BY CONSTRUCTION (post-limit), so the
-    single-partition windows are bounded at any corpus size. Ranks are
-    assigned on ROUNDED scores with id tie-breaks, so the fused output
-    is engine-reproducible."""
+    sort, no corpus shuffle), and _rrf_fuse ranks and joins ≤100 rows."""
     from comix_etl_spark.operators import textstats as TS
 
     t = _t(spark, sf_dir, "documents", "embeddings")
-    lex_top = (TS.bm25_scores(t["documents"], "doc_id", "text",
-                              ["spark", "merge", "window"])
+    lex_top = (TS.bm25_scores(t["documents"], "doc_id", "text", _BM25_TERMS)
                .filter(F.col("bm25") > 0)
                .orderBy(F.col("bm25").desc(), "doc_id").limit(50))
-    wl = Window.orderBy(F.col("bm25").desc(), "doc_id")
-    lex = lex_top.select("doc_id", F.row_number().over(wl).alias("lex_rank"))
     qvec = t["embeddings"].filter(F.col("vec_id") == 7).select("embedding")
-    dense_top = S.brute_force_topk(t["embeddings"], qvec, k=50)
-    wd = Window.orderBy(F.col("cosine_sim").desc(), "vec_id")
-    dense = dense_top.select(F.col("vec_id").alias("doc_id"),
-                             F.row_number().over(wd).alias("dense_rank"))
-    fused = lex.join(dense, "doc_id", "full_outer")
-    rrf = F.round(
-        F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("lex_rank")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("dense_rank")), F.lit(0.0)),
-        6)
-    return (fused.select("doc_id", "lex_rank", "dense_rank",
-                         rrf.alias("rrf_score"))
-            .orderBy(F.col("rrf_score").desc(), "doc_id").limit(20))
+    return _rrf_fuse(lex_top, S.brute_force_topk(t["embeddings"], qvec, k=50))
 
 
 def q_hybrid_store_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8170,226 +7868,30 @@ def q_hybrid_store_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir, "documents", "embeddings")
     TS.persist_bm25_store(t["documents"], "comix_hybrid_bm25_store",
                           id_col="doc_id", text_col="text")
-    lex_top = (TS.bm25_scores_from_store(
-        spark, "comix_hybrid_bm25_store", ["spark", "merge", "window"])
-        .orderBy(F.col("bm25").desc(), "doc_id").limit(50))
-    wl = Window.orderBy(F.col("bm25").desc(), "doc_id")
-    lex = lex_top.select("doc_id", F.row_number().over(wl).alias("lex_rank"))
-
+    lex_top = (TS.bm25_scores_from_store(spark, "comix_hybrid_bm25_store",
+                                         _BM25_TERMS)
+               .orderBy(F.col("bm25").desc(), "doc_id").limit(50))
     emb = t["embeddings"]
     c, books = _det_ivfpq_fixtures(emb)
-    queries = (emb.filter(F.col("vec_id") == 7)
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
     S.persist_ivf_pq_store(emb, c, books, "comix_hybrid_ivfpq_store",
                            id_col="vec_id", vec_col="embedding")
     dense_top = S.ivf_pq_topk_from_store(
-        emb, queries, "comix_hybrid_ivfpq_store", centers=c,
+        emb, _queries(emb, (7,)), "comix_hybrid_ivfpq_store", centers=c,
         codebooks=books, id_col="vec_id", vec_col="embedding",
         k=50, nprobe=2, rerank=100)
-    wd = Window.orderBy(F.col("cosine_sim").desc(), "vec_id")
-    dense = dense_top.select(F.col("vec_id").alias("doc_id"),
-                             F.row_number().over(wd).alias("dense_rank"))
-    fused = lex.join(dense, "doc_id", "full_outer")
-    rrf = F.round(
-        F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("lex_rank")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("dense_rank")),
-                     F.lit(0.0)),
-        6)
-    return (fused.select("doc_id", "lex_rank", "dense_rank",
-                         rrf.alias("rrf_score"))
-            .orderBy(F.col("rrf_score").desc(), "doc_id").limit(20))
+    return _rrf_fuse(lex_top, dense_top)
 
 
-ORACLE_HYBRID_SEARCH_RRF = """
-WITH base AS (
-  SELECT doc_id,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x <> '')) AS dl,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x = 'spark'))  AS tf0,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x = 'merge'))  AS tf1,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x = 'window')) AS tf2
-  FROM documents
-), stats AS (
-  SELECT count(*) AS n, sum(dl) AS sum_dl,
-         sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-         sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-         sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-  FROM base
-), bm AS (
-  SELECT doc_id, round(
-      ln(1.0 + (CAST(n AS DOUBLE) - CAST(df0 AS DOUBLE) + 0.5) / (CAST(df0 AS DOUBLE) + 0.5))
-        * CAST(tf0 AS DOUBLE) * (1.2 + 1)
-        / (CAST(tf0 AS DOUBLE) + 1.2 * (1 - 0.75 + 0.75 * CAST(dl AS DOUBLE)
-             / (CAST(sum_dl AS DOUBLE) / CAST(n AS DOUBLE))))
-    + ln(1.0 + (CAST(n AS DOUBLE) - CAST(df1 AS DOUBLE) + 0.5) / (CAST(df1 AS DOUBLE) + 0.5))
-        * CAST(tf1 AS DOUBLE) * (1.2 + 1)
-        / (CAST(tf1 AS DOUBLE) + 1.2 * (1 - 0.75 + 0.75 * CAST(dl AS DOUBLE)
-             / (CAST(sum_dl AS DOUBLE) / CAST(n AS DOUBLE))))
-    + ln(1.0 + (CAST(n AS DOUBLE) - CAST(df2 AS DOUBLE) + 0.5) / (CAST(df2 AS DOUBLE) + 0.5))
-        * CAST(tf2 AS DOUBLE) * (1.2 + 1)
-        / (CAST(tf2 AS DOUBLE) + 1.2 * (1 - 0.75 + 0.75 * CAST(dl AS DOUBLE)
-             / (CAST(sum_dl AS DOUBLE) / CAST(n AS DOUBLE)))), 6) AS bm25
-  FROM base, stats
-), lex AS (
-  SELECT doc_id, r_lex FROM (
-    SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r_lex
-    FROM bm WHERE bm25 > 0
-  ) WHERE r_lex <= 50
-), vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), qv AS (
-  SELECT v FROM vecs WHERE vec_id = 7
-), dsc AS (
-  SELECT e.vec_id AS doc_id,
-         round(list_dot_product(e.v, q.v)
-               / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.v, q.v))), 6) AS cs
-  FROM vecs e, qv q
-), dense AS (
-  SELECT doc_id, r_dense FROM (
-    SELECT doc_id, row_number() OVER (ORDER BY cs DESC, doc_id) AS r_dense
-    FROM dsc
-  ) WHERE r_dense <= 50
-), fused AS (
-  SELECT COALESCE(l.doc_id, d.doc_id) AS doc_id,
-         l.r_lex AS lex_rank, d.r_dense AS dense_rank,
-         round(COALESCE(1.0 / (60 + l.r_lex), 0)
-               + COALESCE(1.0 / (60 + d.r_dense), 0), 6) AS rrf_score
-  FROM lex l FULL OUTER JOIN dense d ON l.doc_id = d.doc_id
-)
-SELECT doc_id, lex_rank, dense_rank, rrf_score
-FROM fused ORDER BY rrf_score DESC, doc_id LIMIT 20
-"""
+ORACLE_HYBRID_SEARCH_RRF = _rrf_oracle(_bm25_ctes(_BM25_TERMS), _VECS_CTE,
+                                       _scored(_brute((7,))))
 
 
-# hybrid_store_rrf: the lexical arm is the SAME BM25 math as
-# ORACLE_BM25_SEARCH (the store probe is bit-identical to the direct
-# scorer by construction), and the dense arm recomputes the ENTIRE det
-# IVF-PQ pipeline of ORACLE_ANN_IVF_PQ_DET for query vec_id 7 (assign →
-# residual encode → probe routing → ADC → top-100 candidates → exact
-# cosine top-50); RRF fuses the two rank lists.
-ORACLE_HYBRID_STORE_RRF = """
-WITH base AS (
-  SELECT doc_id,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x <> '')) AS dl,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x = 'spark'))  AS tf0,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x = 'merge'))  AS tf1,
-         len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                         x -> x = 'window')) AS tf2
-  FROM documents
-), stats AS (
-  SELECT count(*) AS n, sum(dl) AS sum_dl,
-         sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-         sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-         sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-  FROM base
-), bm AS (
-  SELECT doc_id, round(
-      ln(1.0 + (CAST(n AS DOUBLE) - CAST(df0 AS DOUBLE) + 0.5) / (CAST(df0 AS DOUBLE) + 0.5))
-        * CAST(tf0 AS DOUBLE) * (1.2 + 1)
-        / (CAST(tf0 AS DOUBLE) + 1.2 * (1 - 0.75 + 0.75 * CAST(dl AS DOUBLE)
-             / (CAST(sum_dl AS DOUBLE) / CAST(n AS DOUBLE))))
-    + ln(1.0 + (CAST(n AS DOUBLE) - CAST(df1 AS DOUBLE) + 0.5) / (CAST(df1 AS DOUBLE) + 0.5))
-        * CAST(tf1 AS DOUBLE) * (1.2 + 1)
-        / (CAST(tf1 AS DOUBLE) + 1.2 * (1 - 0.75 + 0.75 * CAST(dl AS DOUBLE)
-             / (CAST(sum_dl AS DOUBLE) / CAST(n AS DOUBLE))))
-    + ln(1.0 + (CAST(n AS DOUBLE) - CAST(df2 AS DOUBLE) + 0.5) / (CAST(df2 AS DOUBLE) + 0.5))
-        * CAST(tf2 AS DOUBLE) * (1.2 + 1)
-        / (CAST(tf2 AS DOUBLE) + 1.2 * (1 - 0.75 + 0.75 * CAST(dl AS DOUBLE)
-             / (CAST(sum_dl AS DOUBLE) / CAST(n AS DOUBLE)))), 6) AS bm25
-  FROM base, stats
-), lex AS (
-  SELECT doc_id, r_lex FROM (
-    SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r_lex
-    FROM bm WHERE bm25 > 0
-  ) WHERE r_lex <= 50
-), vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), nv AS (
-  SELECT vec_id, list_transform(v, x -> x / sqrt(list_dot_product(v, v))) AS nvv
-  FROM vecs
-), cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, nvv AS cv
-  FROM nv WHERE vec_id IN (90, 190, 290, 390)
-), bvecs AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS bc, nvv
-  FROM nv WHERE vec_id IN (5,10,15,20,25,30,35,40,45,50,55,60,65,70,75,80)
-), books AS (
-  SELECT j.j, bc AS c, list_slice(nvv, j.j * 8 + 1, j.j * 8 + 8) AS bv
-  FROM bvecs, range(8) j(j)
-), assigned AS (
-  SELECT vec_id, c AS cid, cv FROM (
-    SELECT n.vec_id, ct.c, ct.cv,
-           row_number() OVER (PARTITION BY n.vec_id ORDER BY
-             list_dot_product(n.nvv, ct.cv)
-             - list_dot_product(ct.cv, ct.cv) / 2.0 DESC, ct.c) AS rn
-    FROM nv n, cents ct
-  ) WHERE rn = 1
-), resid AS (
-  SELECT a.vec_id, a.cid,
-         list_transform(range(1, len(n.nvv) + 1), i -> n.nvv[i] - a.cv[i]) AS rv
-  FROM assigned a JOIN nv n USING (vec_id)
-), codes AS (
-  SELECT vec_id, j, c FROM (
-    SELECT r.vec_id, b.j, b.c,
-           row_number() OVER (PARTITION BY r.vec_id, b.j ORDER BY
-             list_dot_product(list_slice(r.rv, b.j * 8 + 1, b.j * 8 + 8), b.bv)
-             - list_dot_product(b.bv, b.bv) / 2.0 DESC, b.c) AS rn
-    FROM resid r, books b
-  ) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS query_id, nvv AS qv FROM nv WHERE vec_id = 7
-), probes AS (
-  SELECT query_id, cid, cterm FROM (
-    SELECT q.query_id, ct.c AS cid,
-           list_dot_product(q.qv, ct.cv) AS cterm,
-           row_number() OVER (PARTITION BY q.query_id ORDER BY
-             list_dot_product(q.qv, ct.cv)
-             - list_dot_product(ct.cv, ct.cv) / 2.0 DESC, ct.c) AS rn
-    FROM q, cents ct
-  ) WHERE rn <= 2
-), luts AS (
-  SELECT q.query_id, b.j, b.c,
-         list_dot_product(list_slice(q.qv, b.j * 8 + 1, b.j * 8 + 8), b.bv) AS lut
-  FROM q, books b
-), adc AS (
-  SELECT p.query_id, a.vec_id, p.cterm + sum(l.lut) AS adc_score
-  FROM assigned a
-  JOIN probes p ON p.cid = a.cid
-  JOIN codes cd ON cd.vec_id = a.vec_id
-  JOIN luts l ON l.query_id = p.query_id AND l.j = cd.j AND l.c = cd.c
-  GROUP BY p.query_id, a.vec_id, p.cterm
-), cand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY adc_score DESC, vec_id) AS rn
-    FROM adc
-  ) WHERE rn <= 100
-), rescored AS (
-  SELECT c.query_id, c.vec_id,
-         round(list_dot_product(e.v, qr.v)
-               / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(qr.v, qr.v))), 6) AS cs
-  FROM cand c JOIN vecs e ON e.vec_id = c.vec_id JOIN vecs qr ON qr.vec_id = c.query_id
-), dense AS (
-  SELECT vec_id AS doc_id, r_dense FROM (
-    SELECT vec_id, row_number() OVER (ORDER BY cs DESC, vec_id) AS r_dense
-    FROM rescored
-  ) WHERE r_dense <= 50
-), fused AS (
-  SELECT COALESCE(l.doc_id, d.doc_id) AS doc_id,
-         l.r_lex AS lex_rank, d.r_dense AS dense_rank,
-         round(COALESCE(1.0 / (60 + l.r_lex), 0)
-               + COALESCE(1.0 / (60 + d.r_dense), 0), 6) AS rrf_score
-  FROM lex l FULL OUTER JOIN dense d ON l.doc_id = d.doc_id
-)
-SELECT doc_id, lex_rank, dense_rank, rrf_score
-FROM fused ORDER BY rrf_score DESC, doc_id LIMIT 20
-"""
+# hybrid_store_rrf: the BM25 arm of ORACLE_BM25_SEARCH (the store probe is
+# bit-identical to the direct scorer) and the IVF-PQ arm of
+# ORACLE_ANN_IVF_PQ_DET for query vec_id 7, fused by RRF
+ORACLE_HYBRID_STORE_RRF = _rrf_oracle(
+    _bm25_ctes(_BM25_TERMS), _VECS_CTE, _NV_CTE, _ivf_pq_ctes((7,), 2),
+    _cand_window(100), _scored(_RERANK))
 
 
 def q_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8987,9 +8489,6 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
 
-_KMEANS_DET_CENTROID_IDS = tuple(range(7, 400, 50))  # 8 fixed corpus vectors
-
-
 def q_kmeans_assign_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-checked anchor for `kmeans_clusters`: ONE
     Lloyd assignment step with FIXED data-derived centroids (8
@@ -9000,15 +8499,10 @@ def q_kmeans_assign_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the argmin assignment and inertia from the same
     8 vectors, so the assignment machinery itself is hash-verified;
     the seeded full fit stays rows-only with pytest inertia bounds."""
-    import numpy as np
-
     from comix_etl_spark.functions.vector import dot
 
-    t = _t(spark, sf_dir, "embeddings")
-    emb = t["embeddings"]
-    cent_rows = (emb.filter(F.col("vec_id").isin(*_KMEANS_DET_CENTROID_IDS))
-                 .orderBy("vec_id").select("embedding").collect())
-    centers = np.array([r[0] for r in cent_rows], dtype=np.float64)
+    emb = _t(spark, sf_dir, "embeddings")["embeddings"]
+    [centers] = _fixed_vectors(emb, _KMEANS_DET_CENTROID_IDS)
     assigned = S.assign_ivf_centroid(
         S.spread_small_scan(emb.select("vec_id", "embedding")), centers,
         out_col="cluster_id")
@@ -9025,34 +8519,14 @@ def q_kmeans_assign_det(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("cluster_id"))
 
 
-ORACLE_KMEANS_ASSIGN_DET = """
-WITH vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), cents AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, v AS cv
-  FROM vecs WHERE vec_id IN (7,57,107,157,207,257,307,357)
-), assigned AS (
-  -- argmax(x·c − ‖c‖²/2) ≡ nearest centroid; ties break to the lowest
-  -- centroid index (numpy argmax picks the first maximum)
-  SELECT vec_id, c AS cluster_id,
-         list_dot_product(v, v) - 2 * list_dot_product(v, cv)
-         + list_dot_product(cv, cv) AS d2
-  FROM (
-    SELECT vecs.vec_id, vecs.v, cents.c, cents.cv,
-           row_number() OVER (
-             PARTITION BY vecs.vec_id
-             ORDER BY list_dot_product(vecs.v, cents.cv)
-                      - list_dot_product(cents.cv, cents.cv) / 2.0 DESC,
-                      cents.c) AS rn
-    FROM vecs, cents
-  ) WHERE rn = 1
-)
-SELECT cluster_id,
+ORACLE_KMEANS_ASSIGN_DET = _oracle(
+    _VECS_CTE, _fixed_rows("cents", _KMEANS_DET_CENTROID_IDS), _assigned("vecs"),
+    select="""SELECT cid AS cluster_id,
        CAST(count(*) AS BIGINT) AS n_members,
        CAST(sum(vec_id) AS BIGINT) AS sum_vec_ids,
-       round(sum(d2), 2) AS inertia
-FROM assigned GROUP BY cluster_id ORDER BY cluster_id
-"""
+       round(sum(list_dot_product(v, v) - 2 * list_dot_product(v, cv)
+                 + list_dot_product(cv, cv)), 2) AS inertia
+FROM assigned GROUP BY cid ORDER BY cluster_id""")
 
 
 def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9828,36 +9302,11 @@ def q_knn_join_det(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id_a", "id_b"))
 
 
-ORACLE_KNN_JOIN_DET = """
-WITH planes AS (
-  SELECT t.t, b.b,
-         list(CASE WHEN ascii(substring(md5('p' || t.t || '_' || b.b || '_' || d.d), 1, 1)) % 2 = 0
-                   THEN 1.0 ELSE -1.0 END ORDER BY d.d) AS w
-  FROM range(6) t(t), range(6) b(b), range(64) d(d)
-  GROUP BY t.t, b.b
-), vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), buckets AS (
-  SELECT vec_id, t,
-         CAST(sum(CASE WHEN list_dot_product(v, w) > 0 THEN 1 << b ELSE 0 END) AS BIGINT) AS bucket
-  FROM vecs, planes GROUP BY vec_id, t
-), cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM buckets a JOIN buckets b ON a.t = b.t AND a.bucket = b.bucket
-  WHERE a.vec_id <> b.vec_id
-), scored AS (
-  SELECT c.id_a, c.id_b,
-         round(list_dot_product(x.v, y.v)
-               / (sqrt(list_dot_product(x.v, x.v))
-                  * sqrt(list_dot_product(y.v, y.v))), 6) AS cosine_sim
-  FROM cand c JOIN vecs x ON x.vec_id = c.id_a JOIN vecs y ON y.vec_id = c.id_b
-)
-SELECT id_a, id_b, cosine_sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY id_a
-                               ORDER BY cosine_sim DESC, id_b) AS rn
-  FROM scored
-) WHERE rn <= 3 ORDER BY id_a, id_b
-"""
+ORACLE_KNN_JOIN_DET = _oracle(
+    _VECS_CTE, _rademacher_planes(6, 6), _bucket_cand("c.vec_id <> q.vec_id"),
+    _scored(_RERANK),
+    select=_topk(3, "query_id AS id_a, vec_id AS id_b, cosine_sim")
+    + "\nORDER BY id_a, id_b")
 
 
 def q_subtree_value_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -10188,32 +9637,18 @@ def q_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .filter((F.col("lang") == "en") & (F.col("n_chars") > 200))
                 .select(F.col("doc_id").alias("vec_id")))
     corpus = t["embeddings"].join(eligible, "vec_id")
-    queries = (t["embeddings"].filter(F.col("vec_id").isin(0, 1))
-               .select(F.col("vec_id").alias("query_id"), "embedding"))
-    return (S.brute_force_topk(corpus, queries, k=5, query_id_col="query_id")
+    return (S.brute_force_topk(corpus, _queries(t["embeddings"], (0, 1)), k=5,
+                               query_id_col="query_id")
             .orderBy("query_id", "vec_id"))
 
 
-ORACLE_FILTERED_ANN = """
-WITH vecs AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), eligible AS (
-  SELECT e.vec_id, e.v
+ORACLE_FILTERED_ANN = _oracle(
+    _VECS_CTE,
+    _cte("eligible", """  SELECT e.vec_id, e.v
   FROM vecs e JOIN documents d ON d.doc_id = e.vec_id
-  WHERE d.lang = 'en' AND d.n_chars > 200
-), scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id,
-         round(list_dot_product(c.v, q.v)
-               / (sqrt(list_dot_product(c.v, c.v))
-                  * sqrt(list_dot_product(q.v, q.v))), 6) AS cosine_sim
-  FROM eligible c, vecs q WHERE q.vec_id IN (0, 1)
-)
-SELECT query_id, vec_id, cosine_sim FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine_sim DESC, vec_id) AS rn
-  FROM scored
-) WHERE rn <= 5 ORDER BY query_id, vec_id
-"""
+  WHERE d.lang = 'en' AND d.n_chars > 200"""),
+    _scored(_brute((0, 1), "eligible")),
+    select=_topk(5) + "\nORDER BY query_id, vec_id")
 
 
 def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12515,11 +11950,13 @@ QUERIES: dict[str, Query] = {
     "graph_degrees": Query(q_graph_degrees, ORACLE_GRAPH_DEGREES,
                            "co-supply graph degree distribution",
                            ("lineitem",)),
-    "ann_lsh_det": Query(q_ann_lsh_det, ORACLE_ANN_LSH_DET,
+    "ann_lsh_det": Query(partial(q_ann_lsh, planes="rademacher"),
+                         ORACLE_ANN_LSH_DET,
                          "LSH ANN with SQL-reproducible Rademacher planes "
                          "(hash-checked bucket machinery)",
                          ("embeddings",)),
-    "ann_ivf_det": Query(q_ann_ivf_det, ORACLE_ANN_IVF_DET,
+    "ann_ivf_det": Query(partial(q_ann_ivf, centroid_ids=_IVF_DET_CENTROID_IDS,
+                                 nprobe=4), ORACLE_ANN_IVF_DET,
                          "IVF ANN with fixed data-derived centroids "
                          "(hash-checked assignment + probes)",
                          ("embeddings",)),
@@ -12544,14 +11981,18 @@ QUERIES: dict[str, Query] = {
         ORACLE_DEDUP_CLUSTERS_LSH_DET,
         "LSH candidates -> verify -> star-contraction CC, all "
         "recomputed by a recursive-CTE oracle", ("documents",)),
-    "ann_pq_det": Query(q_ann_pq_det, ORACLE_ANN_PQ_DET,
+    "ann_pq_det": Query(partial(q_ann_pq, codebook_ids=_IVF_DET_CENTROID_IDS),
+                        ORACLE_ANN_PQ_DET,
                         "PQ ANN with fixed codebooks — encode/ADC/re-rank "
                         "under a hash-checked oracle", ("embeddings",)),
     "ann_ivf_pq": Query(q_ann_ivf_pq, None,
                         "IVF-PQ ANN (trained route + residual ADC + re-rank) "
                         "— the composed billion-scale layout",
                         ("embeddings",)),
-    "ann_ivf_pq_det": Query(q_ann_ivf_pq_det, ORACLE_ANN_IVF_PQ_DET,
+    "ann_ivf_pq_det": Query(partial(q_ann_ivf_pq,
+                                    center_ids=_IVFPQ_DET_CENTER_IDS,
+                                    codebook_ids=_IVF_DET_CENTROID_IDS,
+                                    nprobe=2), ORACLE_ANN_IVF_PQ_DET,
                             "IVF-PQ with fixed centers/codebooks — routing, "
                             "residual encode, IVFADC and re-rank all "
                             "recomputed by the oracle", ("embeddings",)),

@@ -25,7 +25,8 @@ from comix_etl_spark.sources.enrichment import (
     resolve_volumes,
 )
 
-CSV_OK = "/root/repo/tests/data/static_issues.csv"
+DATA = os.path.join(os.path.dirname(__file__), "data")
+CSV_OK = os.path.join(DATA, "static_issues.csv")
 HEADER = ["series", "publisher", "issue_number", "issue_title", "cover_path", "notes"]
 
 

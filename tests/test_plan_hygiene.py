@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import io
 from contextlib import redirect_stdout
+from functools import partial
 
 import pytest
 
@@ -284,3 +285,21 @@ def test_bm25_store_probe_bucket_pruned_scan(spark, sf_small):
     s = plan_summary(df)
     assert s.n_sort_merge_joins == 0, s
     assert s.n_broadcast_hash_joins == 1, s
+
+
+# Each hash-checked `*_det` twin is its rows-only sibling's builder bound
+# to a deterministic fixture (hash family, planes, centroids, codebooks),
+# so the oracle-checked path is the sibling's own code.
+TWINS = {
+    "ann_lsh": "ann_lsh_det", "ann_ivf": "ann_ivf_det",
+    "ann_pq": "ann_pq_det", "ann_ivf_pq": "ann_ivf_pq_det",
+    "minhash_lsh": "minhash_lsh_det", "simhash_pairs": "simhash_det",
+    "dedup_clusters_lsh": "dedup_clusters_lsh_det",
+}
+
+
+@pytest.mark.parametrize("sibling", TWINS)
+def test_det_twin_binds_its_sibling_builder(sibling):
+    twin = QUERIES[TWINS[sibling]].builder
+    assert isinstance(twin, partial), f"{TWINS[sibling]} is not a binding"
+    assert twin.func is QUERIES[sibling].builder, twin.func

@@ -3,6 +3,8 @@ with retry/backoff."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,9 +21,10 @@ from comix_etl_spark.sources.rest_source import (
     retrying,
 )
 
-CSV_OK = "/root/repo/tests/data/static_issues.csv"
-CSV_CORRUPT = "/root/repo/tests/data/static_issues_corrupt.csv"
-JSONL = "/root/repo/tests/data/marvel_comics.jsonl"
+DATA = os.path.join(os.path.dirname(__file__), "data")
+CSV_OK = os.path.join(DATA, "static_issues.csv")
+CSV_CORRUPT = os.path.join(DATA, "static_issues_corrupt.csv")
+JSONL = os.path.join(DATA, "marvel_comics.jsonl")
 HEADER = ["series", "publisher", "issue_number", "issue_title", "cover_path", "notes"]
 
 

@@ -21,7 +21,8 @@ from comix_etl_spark.sinks import write_csv_report, write_table
 from comix_etl_spark.sources.json_source import read_marvel_comics
 from comix_etl_spark.streaming.windowed import foreach_batch_upsert
 
-JSONL = "/root/repo/tests/data/marvel_comics.jsonl"
+DATA = os.path.join(os.path.dirname(__file__), "data")
+JSONL = os.path.join(DATA, "marvel_comics.jsonl")
 
 
 @pytest.fixture()
