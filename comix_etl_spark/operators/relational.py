@@ -34,24 +34,21 @@ def search_substring(df: DataFrame, column: str, q: str, order_by: Sequence[str]
     )
 
 
-def multi_field_search(df: DataFrame, q: str, columns: Sequence[str]) -> DataFrame:
-    """P6 — OR of case-insensitive substring predicates across columns.
-
-    Reference: app/templates/search.html:257-265 (client-side JS filter).
-    """
-    pred = F.lit(False)
-    for c in columns:
-        pred = pred | F.lower(F.coalesce(F.col(c), F.lit(""))).contains(q.lower())
-    return df.filter(pred)
-
-
 def keyed_scan(df: DataFrame, key_col: str, key_value, order_by: Sequence[str]) -> DataFrame:
     """P2 + O1 — equality filter + ordered scan (the /series/<id>/issues shape).
 
-    Reference: app/api.py:117-154. The equality predicate partition-prunes
-    when the table is partitioned by the key.
+    Reference: app/api.py:117-154. The equality predicate pushes into the
+    parquet scan. After it, ``key_col`` holds one value in every surviving
+    row (a NULL key keeps no rows), so ordering by it is a no-op — one
+    that Catalyst keeps, since constant propagation rewrites filters, not
+    sort orders. Every ``order_by`` entry equal to ``key_col`` is dropped:
+    a global sort costs a range-sampling job and a shuffle before its
+    result job. With no order key left the lookup is one scan job; the
+    remaining keys (say, the issue number) are still sorted globally.
     """
-    return df.filter(F.col(key_col) == key_value).orderBy(*order_by)
+    hits = df.filter(F.col(key_col) == key_value)
+    rest = [c for c in order_by if c != key_col]
+    return hits.orderBy(*rest) if rest else hits
 
 
 def group_count_topk(fact: DataFrame, dim: DataFrame, join_key: str, label_col: str, k: int) -> DataFrame:
@@ -563,34 +560,6 @@ def gaps_in_sequence(df: DataFrame, key_col: str,
             .select((F.col("_k") + 1).alias("gap_start"),
                     (F.col("_next") - 1).alias("gap_end"),
                     (F.col("_next") - F.col("_k") - 1).alias("gap_len")))
-
-
-def detect_hot_keys(df: DataFrame, key: Sequence[str], *,
-                    threshold: float = 0.05, sample_fraction: float = 0.01,
-                    seed: int = 42) -> list:
-    """Skew probe for join/agg planning: the keys holding more than
-    ``threshold`` of a deterministic row sample — the input that decides
-    between a plain and a salted plan (`salted_join` / `salted_agg`)
-    when AQE's runtime stats aren't available (first run, no history) or
-    the skew sits inside an already-bucketed exchange AQE can't resplit.
-
-    Bounded BY CONSTRUCTION: at most ``1/threshold`` keys can each hold
-    more than ``threshold`` of the sample, so the collect returns ≤ 20
-    rows at the 5 % default no matter how large the input — this is a
-    planning probe, not a data movement. One sampled scan + one
-    aggregate; seeded sampling keeps re-planning deterministic."""
-    kl = list(key)
-    sampled = df.select(*kl).sample(fraction=sample_fraction, seed=seed)
-    total = sampled.count()
-    if total == 0:
-        return []
-    rows = (sampled.groupBy(*kl)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > threshold * total)
-            .collect())
-    if len(kl) == 1:
-        return [r[0] for r in rows]
-    return [tuple(r[:-1]) for r in rows]
 
 
 def mg_trim(counters: dict, capacity: int):

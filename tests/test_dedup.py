@@ -176,6 +176,43 @@ def test_ngram_df_cap_equivalent_to_dropping_hot_shingles(spark):
     assert capped < uncapped     # boilerplate-only pairs are gone
 
 
+def test_text_near_dup_registry_threshold_binds(spark, tmp_path):
+    """The registry's ngram_jaccard and dedup_clusters queries and their
+    oracles all cut the 3-gram Jaccard at 0.3. Three doc pairs of 22
+    tokens (20 shingles each) share a k-token prefix, so (k-2) shingles:
+    Jaccard 7/33 ≈ 0.21, 11/29 ≈ 0.38 and 19/21 ≈ 0.90. Only the two
+    upper pairs pass; a threshold moved to 0.5 on either side drops the
+    0.38 pair there and fails the diff."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from comix_etl_spark.plans.queries import QUERIES
+    from tests.oracle_diff import compare
+
+    ids, texts = [], []
+    for pair, shared in ((1, 21), (3, 13), (5, 9)):
+        for side in (0, 1):
+            toks = [f"p{pair}w{i}" for i in range(shared)]
+            toks += [f"p{pair}s{side}x{i}" for i in range(22 - shared)]
+            ids.append(pair + side)
+            texts.append(" ".join(toks))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(pa.table({"doc_id": pa.array(ids, pa.int64()), "text": texts}),
+                   sf / "documents.parquet")
+    pairs = QUERIES["ngram_jaccard"].builder(spark, str(sf))
+    clusters = QUERIES["dedup_clusters"].builder(spark, str(sf))
+    with duckdb.connect() as duck:
+        duck.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')")
+        compare(pairs, duck, QUERIES["ngram_jaccard"].oracle)
+        compare(clusters, duck, QUERIES["dedup_clusters"].oracle)
+    got = {(r.id_a, r.id_b): r.jaccard for r in pairs.collect()}
+    assert set(got) == {(1, 2), (3, 4)}, got
+    assert abs(got[(3, 4)] - 11 / 29) < 1e-4
+    assert sorted(tuple(r) for r in clusters.collect()) == [(1, 1), (2, 1), (3, 3), (4, 3)]
+
+
 def test_dedup_against_corpus_finds_planted_matches(spark):
     """Batch docs: one exact copy of a corpus doc, one half-overlap
     near-dup, one unique. The screen must return the copy (jaccard 1.0)

@@ -5,7 +5,12 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from comix_etl_spark.operators.relational import global_rank, multi_field_search
+from comix_etl_spark.operators.relational import (
+    global_rank,
+    group_count_topk,
+    keyed_scan,
+    search_substring,
+)
 
 
 def test_global_rank_matches_global_window(spark):
@@ -45,14 +50,63 @@ def test_salted_join_matches_plain_join(spark):
         salted_join(left, right, ["k"], how="full_outer")
 
 
-def test_multi_field_search_or_semantics(spark):
-    df = spark.createDataFrame(
-        [(1, "Uncanny Tales", "great gambit intro"),
-         (2, "Plain Series", "nothing here"),
-         (3, "gambit solo", None)],
-        "id int, title string, notes string")
-    out = multi_field_search(df, "gambit", ["title", "notes"])
-    assert {r.id for r in out.collect()} == {1, 3}
+def _catalog(spark, tmp_path):
+    """A 4-file parquet catalog: key ``k`` (5 values, each spread over
+    every file), a distinct ``other`` out of id order, a title and a
+    label."""
+    path = str(tmp_path / "catalog")
+    (spark.range(0, 200, 1, 4)
+     .select((F.col("id") % 5).alias("k"),
+             ((F.col("id") * 7919) % 1009).alias("other"),
+             F.concat(F.lit("title "), F.col("id").cast("string")).alias("title"),
+             F.concat(F.lit("c"), (F.col("id") % 7).cast("string")).alias("label"))
+     .write.parquet(path))
+    return spark.read.parquet(path)
+
+
+def _plan_text(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_serve_ops_job_counts(spark, tmp_path, count_jobs):
+    """Each serve shape's Spark jobs per call. A lookup ordered by its
+    own key is one scan job, hit or miss: the global sort it used to
+    run added a range-sampling job and a shuffle-map job. Top-k is a
+    ceiling at its current count."""
+    cat = _catalog(spark, tmp_path)
+    for key, n in ((3, 40), (99, 0)):
+        rows, jobs = count_jobs(lambda: keyed_scan(cat, "k", key, ["k"]).collect())
+        assert (len(rows), jobs) == (n, 1), (key, len(rows), jobs)
+    rows, jobs = count_jobs(
+        lambda: search_substring(cat, "title", "TITLE 1", ["title", "k"]).collect())
+    assert len(rows) == 50 and jobs == 1, (len(rows), jobs)
+    dim = cat.filter(F.col("other") < 500).select("other")
+    rows, jobs = count_jobs(
+        lambda: group_count_topk(cat, dim, "other", "label", 3).collect())
+    assert len(rows) == 3 and jobs <= 3, (len(rows), jobs)
+
+
+def test_keyed_scan_drops_pinned_order_keys(spark, tmp_path):
+    """Ordering by the filtered key is dropped wherever it sits in
+    ``order_by``; the remaining keys still sort globally over rows read
+    from several input partitions, and a NULL key returns no rows."""
+    cat = _catalog(spark, tmp_path)
+    assert cat.rdd.getNumPartitions() >= 2
+    want = sorted(((r.k, r.other, r.title) for r in cat.collect() if r.k == 3),
+                  key=lambda r: r[1])
+    for order in (["k", "other"], ["other", "k"]):
+        df = keyed_scan(cat, "k", 3, order)
+        assert [(r.k, r.other, r.title) for r in df.select("k", "other", "title").collect()] == want
+        assert "Exchange rangepartitioning" in _plan_text(df), order
+
+    pinned = keyed_scan(cat, "k", 3, ["k"])
+    assert "Exchange rangepartitioning" not in _plan_text(pinned)
+    assert sorted((r.k, r.other, r.title) for r in pinned.select("k", "other", "title").collect()) \
+        == sorted(want)
+
+    none = keyed_scan(cat, "k", None, ["k", "other"])
+    assert none.schema == cat.schema
+    assert none.collect() == []
 
 
 def test_hash_split_partitioning_invariant(spark):
@@ -201,43 +255,6 @@ def test_salted_paths_under_genuine_skew(spark):
         fact.groupBy("k").agg(F.sum("v"), F.count(F.lit(1)))).n_exchanges
     salted_x = plan_summary(salted_agg(fact, ["k"], "v", salts=16)).n_exchanges
     assert plain_x == 1 and salted_x == 2, (plain_x, salted_x)
-
-
-def test_detect_hot_keys_probe_and_adaptive_composition(spark):
-    """The skew probe finds the hot key on a skewed input, returns
-    nothing on a uniform one, and composes with salted_join into the
-    adaptive plan (salt only when skew detected) without changing
-    results."""
-    from comix_etl_spark.operators.relational import (
-        detect_hot_keys,
-        salted_join,
-    )
-
-    skewed = spark.range(10_000).select(
-        F.when(F.col("id") < 4_000, F.lit("hot"))
-         .otherwise(F.concat(F.lit("k"), (F.col("id") % 500).cast("string")))
-         .alias("k"),
-        F.col("id").alias("rid"))
-    uniform = spark.range(10_000).select(
-        F.concat(F.lit("k"), (F.col("id") % 500).cast("string")).alias("k"),
-        F.col("id").alias("rid"))
-    assert detect_hot_keys(skewed, ["k"], sample_fraction=0.2) == ["hot"]
-    assert detect_hot_keys(uniform, ["k"], sample_fraction=0.2) == []
-
-    dim = spark.createDataFrame(
-        [("hot", "H")] + [(f"k{i}", f"d{i}") for i in range(0, 500, 5)],
-        "k string, name string")
-
-    def adaptive_join(left, right, key):
-        hot = detect_hot_keys(left, key, sample_fraction=0.2)
-        return (salted_join(left, right, key, salts=8) if hot
-                else left.join(right, list(key)))
-
-    got = sorted((r.k, r.rid, r.name)
-                 for r in adaptive_join(skewed, dim, ["k"]).collect())
-    want = sorted((r.k, r.rid, r.name)
-                  for r in skewed.join(dim, ["k"]).collect())
-    assert got == want
 
 
 def test_heavy_hitters_exact_adversarial_capacity(spark):
