@@ -7,18 +7,21 @@ records_read/records_loaded, and closes with SUCCESS/FAILED + notes
 Here the audit table is an append-only parquet directory: each run
 appends exactly one immutable row at close (append-only keeps the write
 atomic per run — no read-modify-write races between concurrent runs).
-A SUCCESS row also carries the run's observed quality counters; they are
-NULL on a FAILED row and in rows written before the columns existed.
+The driver already holds the row, so it writes the file itself with
+pyarrow: no Spark job. A SUCCESS row also carries the run's observed
+quality counters; they are NULL on a FAILED row and in rows written
+before the columns existed.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from comix_etl_spark.schemas import ETL_RUN
 
@@ -52,23 +55,33 @@ class EtlRun:
         self.finished_at = dt.datetime.now(dt.timezone.utc)
         return self
 
-    def to_df(self, spark: SparkSession) -> DataFrame:
-        """The row as literals over a one-partition range: one task in the
-        JVM. ``createDataFrame`` over a Python list would run a
-        Python-worker job (4 tasks) to write one row."""
-        values = (
-            self.run_id, self.source_system,
-            self.started_at.replace(tzinfo=None),
-            self.finished_at.replace(tzinfo=None) if self.finished_at else None,
-            self.records_read, self.records_loaded, self.status, self.notes,
-            self.null_onsale_date, self.null_cover_url, self.orphan_credits,
-        )
-        return spark.range(0, 1, 1, 1).select(*[
-            F.lit(v).cast(f.dataType).alias(f.name)
-            for v, f in zip(values, ETL_RUN.fields, strict=True)])
-
     def append_to(self, spark: SparkSession, path: str) -> None:
-        self.to_df(spark).write.mode("append").parquet(path)
+        """Append the row to the audit dir ``path`` as one parquet file,
+        written on the driver: no Spark job. The arrow schema derives from
+        ``ETL_RUN`` (timestamps as ``timestamp[us, tz=UTC]``).
+
+        The file lands under a hidden temp name and is renamed into place,
+        so a reader sees the whole row or none of it (Spark and pyarrow
+        skip ``.``/``_`` names, and a crash leaves only a hidden
+        ``.part-…tmp``), and a fresh uuid per file keeps concurrent runs
+        from sharing a name. ``path`` must be a directory the driver can
+        see, the contract ``sinks.safe_overwrite_parquet``'s rename and the
+        pipeline's footer check already hold to. ``spark`` is unused."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        table = pa.table({f.name: [getattr(self, f.name)] for f in ETL_RUN.fields},
+                         schema=to_arrow_schema(ETL_RUN))
+        os.makedirs(path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(path, f".{name}.tmp")
+        try:
+            pq.write_table(table, tmp)
+            os.replace(tmp, os.path.join(path, name))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
 
 
 def read_audit(spark: SparkSession, path: str) -> DataFrame:

@@ -7,7 +7,7 @@ etl/etl.py:47-54) and its README documents an unimplemented guardrail
 Here each check is one aggregate plan; all null-rate metrics for a table
 share a single scan (map-side conditional counts, no per-metric rescan).
 The orphan probe (A3) is ``relational.orphan_rows``; the ETL pipeline
-counts its orphan credits inside its observed pre-pass instead.
+counts its orphan credits inside its observed staged write instead.
 """
 
 from __future__ import annotations
@@ -53,8 +53,8 @@ def batch_guardrail(n_rows: int, expected: int, threshold: float = 0.8) -> int:
     Driver-side gate before a merge, run once per batch, not per row.
     It takes the batch's row count rather than the batch: each caller
     already counts it inside a wider pass (the pipeline's observed
-    pre-pass, ``q_audit_trail``'s one aggregate), so the gate launches
-    no Spark job of its own.
+    pre-pass, run only when a guardrail is set; ``q_audit_trail``'s one
+    aggregate), so the gate launches no Spark job of its own.
     """
     if expected > 0 and n_rows < threshold * expected:
         raise ValueError(f"guardrail: batch has {n_rows} rows < {threshold:.0%} of expected {expected}")

@@ -1,15 +1,17 @@
 """The §3.1 end-to-end ETL DAG: extract → normalize → merge → quality →
 audit (reference comixcatalog_starter.zip!etl/etl.py:17-45).
 
-One driver function orchestrates lazy plans. A run's actions are:
+One driver function orchestrates lazy plans. A run's Spark actions are:
 
-1. the pre-pass: one scan of the raw batch into the ``noop`` sink that
-   observes the row count (for the guardrail) and the orphan-credit
-   count (``df.observe``), so a short batch raises before anything is
-   staged;
-2. the staged write of the merged table, which observes the total and
-   NULL counts in flight;
-3. the audit append.
+1. only when ``expected_min > 0``, the gate pre-pass: one scan of the
+   raw batch into the ``noop`` sink that observes its row count, so a
+   short batch raises before anything is staged;
+2. the staged write of the merged table, which observes (``df.observe``)
+   the batch's row and orphan-credit counts on the raw batch and the
+   merged table's total and NULL counts, all in flight.
+
+The audit row is written on the driver (``EtlRun.append_to``), with no
+Spark job.
 
 The target's column names are checked from one parquet footer on the
 driver; an absent target is a cold start, which Spark never reads. A
@@ -84,15 +86,20 @@ def run_marvel_batch(spark: SparkSession, raw: DataFrame, *, target_path: str,
     """
     run = EtlRun(source_system=source_system)
     try:
-        # the pre-pass: one parallel scan, no exchange. Caching the batch
-        # for the write costs more jobs than parsing it twice at this size
-        pre = Observation()
-        (raw.observe(pre, F.count(F.lit(1)).alias("n_rows"), _orphan_credits())
-         .write.format("noop").mode("overwrite").save())
-        counts = pre.get
-        run.records_read = batch_guardrail(counts["n_rows"], expected_min)  # the 80% rule
+        if expected_min > 0:
+            # the gate pre-pass: one parallel scan, no exchange. Caching
+            # the batch for the write costs more jobs than parsing it twice
+            gate = Observation()
+            (raw.observe(gate, F.count(F.lit(1)).alias("n_rows"))
+             .write.format("noop").mode("overwrite").save())
+            batch_guardrail(gate.get["n_rows"], expected_min)  # the 80% rule
 
-        issues = normalize_comics(raw)
+        # the batch's counts ride the staged write, observed on the raw
+        # batch below normalize_comics; the cold-start frame derives from
+        # the UNOBSERVED batch so the observed node is in the plan once
+        counted = Observation()
+        issues = normalize_comics(raw.observe(
+            counted, F.count(F.lit(1)).alias("n_rows"), _orphan_credits()))
         try:
             _require_batch_columns(target_path, issues.columns)
         except FileNotFoundError:
@@ -100,7 +107,7 @@ def run_marvel_batch(spark: SparkSession, raw: DataFrame, *, target_path: str,
             # (corrupt footer, permissions) propagates — falling back to
             # an empty frame would let the overwrite replace the whole
             # table with one batch
-            existing = issues.limit(0)
+            existing = normalize_comics(raw).limit(0)
         else:
             existing = spark.read.schema(issues.schema).parquet(target_path)
         merged = upsert_selective(
@@ -117,7 +124,9 @@ def run_marvel_batch(spark: SparkSession, raw: DataFrame, *, target_path: str,
             target_path)
         nulls = observation.get
         n_total = nulls.pop("total_rows")
+        counts = counted.get
 
+        run.records_read = counts["n_rows"]
         run.records_loaded = n_total
         quality = {**nulls, "orphan_credits": counts["orphan_credits"]}
         run.finish("SUCCESS", **quality)

@@ -6,9 +6,11 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import threading
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from comix_etl_spark.multimodal.media import (
     attach_binary_metadata,
@@ -150,11 +152,11 @@ def test_pipeline_end_to_end_success_and_idempotent(spark, tmpdir):
 
 
 def test_pipeline_warm_batch_job_count(spark, tmpdir, count_jobs):
-    """A run is one observed pre-pass (1 job), the staged write and a
-    one-task audit append; the written table is never read back. The
-    staged write is 2 jobs on a cold target and 3 on a warm one (AQE runs
-    the merge join's shuffle stages as jobs of their own), so a cold
-    batch runs 4 jobs and a warm one 5."""
+    """An unguarded run is the staged write alone: the batch's counts ride
+    it, the audit row is written on the driver and the written table is
+    never read back. The staged write is 2 jobs on a cold target and 3 on
+    a warm one (AQE runs the merge join's shuffle stages as jobs of their
+    own). A guardrail (``expected_min > 0``) adds its one pre-pass job."""
     raw = read_marvel_comics(spark, JSONL)
     target = os.path.join(tmpdir, "issues")
     audit = os.path.join(tmpdir, "audit")
@@ -164,12 +166,15 @@ def test_pipeline_warm_batch_job_count(spark, tmpdir, count_jobs):
     r, warm = count_jobs(lambda: run_marvel_batch(
         spark, raw, target_path=target, audit_path=audit))
     assert r.records_loaded == 40 == spark.read.parquet(target).count()
-    assert cold <= 4 and warm <= 5, (cold, warm)
+    r, guarded = count_jobs(lambda: run_marvel_batch(
+        spark, raw, target_path=target, audit_path=audit, expected_min=30))
+    assert r.records_loaded == 40
+    assert cold <= 2 and warm <= 3 and guarded <= 4, (cold, warm, guarded)
 
 
 def test_pipeline_empty_batch_cold_target(spark, tmpdir, count_jobs):
     """An empty batch on a cold target lands an empty table and reports
-    zero counts, not NULLs, in 3 jobs."""
+    zero counts, not NULLs, in one job: the staged write."""
     raw = read_marvel_comics(spark, JSONL).limit(0)
     target = os.path.join(tmpdir, "issues")
     audit = os.path.join(tmpdir, "audit")
@@ -178,13 +183,69 @@ def test_pipeline_empty_batch_cold_target(spark, tmpdir, count_jobs):
     assert r == RunResult(0, 0, "SUCCESS", {"null_onsale_date": 0,
                                             "null_cover_url": 0,
                                             "orphan_credits": 0})
-    assert jobs <= 3, jobs
+    assert jobs <= 1, jobs
     assert spark.read.parquet(target).count() == 0
     runs = read_audit(spark, audit).collect()
     assert [(a.status, a.records_read, a.records_loaded) for a in runs] \
         == [("SUCCESS", 0, 0)]
     assert (runs[0].null_onsale_date, runs[0].null_cover_url,
             runs[0].orphan_credits) == (0, 0, 0)
+
+
+def _within(seconds, fn):
+    """``fn()``, failing the test if it has not returned in ``seconds``:
+    an observation whose node the optimizer pruned would block
+    ``Observation.get`` forever. The worker thread is a daemon, so a hung
+    call does not hold up the interpreter's exit."""
+    out = {}
+
+    def call():
+        try:
+            out["value"] = fn()
+        except BaseException as e:  # re-raised on the test's thread
+            out["error"] = e
+
+    t = threading.Thread(target=call, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"no result within {seconds} s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+@pytest.mark.parametrize("empty", [
+    lambda raw: raw.limit(0),
+    lambda raw: raw.filter(F.lit(False)),
+    lambda raw: raw.filter(F.col("id") < 0),
+], ids=["limit0", "filtered_at_plan", "filtered_at_run"])
+def test_pipeline_empty_batch_warm_target_reports_zero_read(spark, tmpdir, empty):
+    """An empty batch on a warm target, whether the optimizer sees it is
+    empty (``limit(0)``, a false filter) or only the scan finds out,
+    still delivers the counts observed inside the staged write: 0 rows
+    read, and the target's own counts loaded."""
+    target = os.path.join(tmpdir, "issues")
+    audit = os.path.join(tmpdir, "audit")
+    raw = read_marvel_comics(spark, JSONL)
+    first = run_marvel_batch(spark, raw, target_path=target, audit_path=audit)
+    r = _within(120, lambda: run_marvel_batch(
+        spark, empty(raw), target_path=target, audit_path=audit))
+    assert r == RunResult(0, 40, "SUCCESS", {**first.quality, "orphan_credits": 0})
+    assert spark.read.parquet(target).count() == 40
+
+
+def test_pipeline_guarded_batch_reads_its_rows(spark, tmpdir):
+    """With a guardrail set, ``records_read`` still comes from the staged
+    write's observation, and equals the batch's row count."""
+    raw = read_marvel_comics(spark, JSONL)
+    n = raw.count()
+    target = os.path.join(tmpdir, "issues")
+    audit = os.path.join(tmpdir, "audit")
+    r = _within(120, lambda: run_marvel_batch(
+        spark, raw, target_path=target, audit_path=audit, expected_min=n))
+    assert (r.status, r.records_read, r.records_loaded) == ("SUCCESS", n, 40)
+    runs = read_audit(spark, audit).collect()
+    assert [(a.status, a.records_read) for a in runs] == [("SUCCESS", n)]
 
 
 def test_pipeline_null_ids_count_orphan_credits(spark, tmpdir):
@@ -242,8 +303,9 @@ def test_pipeline_guardrail_aborts_short_batch(spark, tmpdir):
 
 def test_audit_row_round_trip(spark, tmpdir, count_jobs):
     """SUCCESS, FAILED and NULL-notes rows read back equal to their
-    EtlRun fields, timestamps included; each append is one Spark job and
-    the files carry the ETL_RUN columns and types."""
+    EtlRun fields, timestamps included; each append is written on the
+    driver (no Spark job) and the files carry the ETL_RUN columns and
+    types."""
     from comix_etl_spark.operators.audit import EtlRun
     from comix_etl_spark.schemas import ETL_RUN
 
@@ -257,7 +319,7 @@ def test_audit_row_round_trip(spark, tmpdir, count_jobs):
     assert bare.notes is None
     for run in (ok, failed, bare):
         _, jobs = count_jobs(lambda run=run: run.append_to(spark, path))
-        assert jobs == 1, jobs
+        assert jobs == 0, jobs
     back = {r.run_id: r.asDict() for r in read_audit(spark, path).collect()}
     for run in (ok, failed, bare):
         want = {f.name: getattr(run, f.name) for f in ETL_RUN.fields}
@@ -269,24 +331,40 @@ def test_audit_row_round_trip(spark, tmpdir, count_jobs):
 
 
 def test_read_audit_reads_rows_without_counter_columns(spark, tmpdir):
-    """An audit dir written before the quality counters existed still
-    reads: its rows carry NULL counters next to the new rows'."""
+    """An audit dir holding a Spark-written row from before the quality
+    counters existed, next to driver-written rows, still reads: the old
+    row carries NULL counters. A hidden temp file that an interrupted
+    append left behind is not read."""
+    import datetime as dt
+
     from comix_etl_spark.operators.audit import EtlRun
     from comix_etl_spark.schemas import ETL_RUN
 
     path = os.path.join(tmpdir, "audit")
-    old = [f for f in ETL_RUN.fields if f.name not in
-           ("null_onsale_date", "null_cover_url", "orphan_credits")]
-    EtlRun("marvel", run_id=1, records_read=4, records_loaded=4) \
-        .finish("SUCCESS").to_df(spark).select(*[f.name for f in old]) \
+    old = T.StructType([f for f in ETL_RUN.fields if f.name not in
+                        ("null_onsale_date", "null_cover_url", "orphan_credits")])
+    t0 = dt.datetime(2024, 1, 2, 3, 4, 5)
+    spark.createDataFrame([(1, "marvel", t0, t0, 4, 4, "SUCCESS", None)], old) \
         .write.parquet(path)
-    EtlRun("marvel", run_id=2, records_read=4, records_loaded=3) \
-        .finish("SUCCESS", null_onsale_date=1, null_cover_url=0,
-                orphan_credits=2).append_to(spark, path)
-    got = {r.run_id: (r.records_loaded, r.null_onsale_date, r.null_cover_url,
+    new = EtlRun("marvel", run_id=2, records_read=4, records_loaded=3).finish(
+        "SUCCESS", null_onsale_date=1, null_cover_url=0, orphan_credits=2)
+    failed = EtlRun("comicvine", run_id=3, records_read=5).finish("FAILED", notes="boom")
+    for run in (new, failed):
+        run.append_to(spark, path)
+    # an append interrupted between its write and its rename
+    interrupted = os.path.join(tmpdir, "interrupted")
+    EtlRun("marvel", run_id=4).finish("SUCCESS").append_to(spark, interrupted)
+    (name,) = os.listdir(interrupted)
+    shutil.move(os.path.join(interrupted, name), os.path.join(path, f".{name}.tmp"))
+    got = {r.run_id: (r.source_system, r.started_at, r.status, r.records_read,
+                      r.records_loaded, r.null_onsale_date, r.null_cover_url,
                       r.orphan_credits)
            for r in read_audit(spark, path).collect()}
-    assert got == {1: (4, None, None, None), 2: (3, 1, 0, 2)}
+    assert got == {1: ("marvel", t0, "SUCCESS", 4, 4, None, None, None),
+                   2: ("marvel", new.started_at.replace(tzinfo=None), "SUCCESS",
+                       4, 3, 1, 0, 2),
+                   3: ("comicvine", failed.started_at.replace(tzinfo=None), "FAILED",
+                       5, 0, None, None, None)}
 
 
 @pytest.mark.parametrize("column", ["cover_url", "marvel_comic_id", "title", "+legacy"])
