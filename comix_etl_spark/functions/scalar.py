@@ -4,7 +4,9 @@ The reference applies these row-at-a-time in Python during transform
 (comixcatalog_starter.zip!etl/transform.py, etl/seed/seed_from_marvel.py,
 app/api.py, app/static/js/cart.js). Here each is a vectorized Column
 expression — Catalyst folds constants, pushes derived predicates, and the
-whole transform stage stays inside WholeStageCodegen.
+whole transform stage stays inside WholeStageCodegen. F13 (cover URL
+candidates, a presenter concern) and F15 (the Marvel auth digest, a
+transport concern) have no engine caller and are not here.
 """
 
 from __future__ import annotations
@@ -148,25 +150,6 @@ def clean_text(c: Column | str) -> Column:
     Reference: seed_from_csv.py:60-63 (``(x or '').strip() or None``).
     """
     return F.nullif(F.trim(F.coalesce(_col(c), F.lit(""))), F.lit(""))
-
-
-def cover_url_candidates(path: Column | str, static_prefix: str = "/static/covers/") -> Column:
-    """F13 — static-prefix join + extension-swap candidate array.
-
-    Reference: app/templates/search.html:90-131 (JS builds [png,jpg,webp]
-    candidate URLs from a base path).
-    """
-    base = F.regexp_replace(_col(path), r"\.(png|jpe?g|webp)$", "")
-    return F.array(*[F.concat(F.lit(static_prefix), base, F.lit(ext)) for ext in (".png", ".jpg", ".webp")])
-
-
-def md5_auth_digest(ts: Column | str, private_key: Column | str, public_key: Column | str) -> Column:
-    """F15 — md5(ts + private + public) hex digest.
-
-    Reference: etl/utils.py:13-29. Also the seed of the exact-dup
-    content-hash in operators/dedup.py.
-    """
-    return F.md5(F.concat(_col(ts).cast("string"), _col(private_key), _col(public_key)))
 
 
 def issue_number_sort_key(c: Column | str) -> Column:

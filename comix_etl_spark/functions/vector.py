@@ -66,7 +66,7 @@ def random_hyperplane_bits(a: Column | str, planes: list[list[float]]) -> Column
     sign(a · planes[k]) — the LSH bucket key for approximate cosine search.
 
     Pure-Column formulation; fine for a handful of planes. For many
-    planes × many tables use ``hyperplane_bits_pandas`` (one numpy
+    planes × many tables use ``hyperplane_buckets_pandas`` (one numpy
     matmul per Arrow batch) — measured much faster because per-plane
     ``aggregate`` folds don't codegen.
     """
@@ -76,26 +76,6 @@ def random_hyperplane_bits(a: Column | str, planes: list[list[float]]) -> Column
         bit = F.when(dot(a, p) > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
         bits = bits + (bit * F.lit(2**k).cast("long"))
     return bits
-
-
-def hyperplane_bits_pandas(vec_col: Column | str, planes_matrix: list[list[float]]):
-    """All hyperplane sign-bits at once as a vectorized Pandas UDF.
-
-    ``planes_matrix`` is (n_planes × dim); each Arrow batch computes one
-    (batch × dim) @ (dim × n_planes) matmul and packs sign bits into a
-    long. The planes ship inside the UDF closure (broadcast by pickling)
-    — at 100 TB this is the scan-local, BLAS-backed hot path.
-    """
-    mat = np.asarray(planes_matrix, dtype=np.float64).T  # dim × n_planes
-    weights = (1 << np.arange(mat.shape[1], dtype=np.int64))
-
-    @pandas_udf("long")
-    def _bits(v: pd.Series) -> pd.Series:
-        x = np.vstack(v.to_numpy())          # batch × dim
-        signs = (x @ mat) > 0                # batch × n_planes
-        return pd.Series(signs @ weights)
-
-    return _bits(_col(vec_col))
 
 
 def hyperplane_buckets_pandas(vec_col: Column | str, planes: list[list[list[float]]]):

@@ -55,7 +55,7 @@ class EtlRun:
         self.finished_at = dt.datetime.now(dt.timezone.utc)
         return self
 
-    def append_to(self, spark: SparkSession, path: str) -> None:
+    def append_to(self, path: str) -> None:
         """Append the row to the audit dir ``path`` as one parquet file,
         written on the driver: no Spark job. The arrow schema derives from
         ``ETL_RUN`` (timestamps as ``timestamp[us, tz=UTC]``).
@@ -66,7 +66,7 @@ class EtlRun:
         ``.part-…tmp``), and a fresh uuid per file keeps concurrent runs
         from sharing a name. ``path`` must be a directory the driver can
         see, the contract ``sinks.safe_overwrite_parquet``'s rename and the
-        pipeline's footer check already hold to. ``spark`` is unused."""
+        pipeline's footer check already hold to."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 

@@ -782,9 +782,9 @@ def url_dedup(df: DataFrame, *, url_col: str, id_col: str,
     slower (PLANS.md "url_dedup host cap"). The window never carries
     text (id + host + score only). Contrast exact_substring_dedup's
     ownership filter (``_rn > 1`` keeps the COMPLEMENT of a top-k, so
-    WindowGroupLimit cannot prune it — that operator's agg_join route
-    remains necessary). Extends the reference's single-site F13 path
-    normalization (app/templates/search.html:90-131) to the open web.
+    WindowGroupLimit cannot prune it). Extends the reference's
+    single-site F13 path normalization (app/templates/search.html:90-131)
+    to the open web.
     """
     from pyspark.sql import Window
 

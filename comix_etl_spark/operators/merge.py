@@ -11,9 +11,9 @@ At 100 TB that's N round trips; here every upsert is one distributed plan:
   in tests/test_merge.py).
 
 Surrogate ids: a distributed engine can't mint gap-free auto-increments
-without serializing through the driver. ``synthetic_id`` derives a stable
-64-bit id from the natural key (xxhash64) — deterministic, collision-
-checked at load by the quality layer. Documented deviation (SURVEY §7).
+without serializing through the driver, so merges key on the source's
+natural ids. A table without one takes ``F.xxhash64`` of its natural key
+columns. Documented deviation (SURVEY §7).
 """
 
 from __future__ import annotations
@@ -22,11 +22,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def synthetic_id(cols: Sequence[str], out_col: str = "id"):
-    """Stable surrogate id from the natural key (xxhash64)."""
-    return F.xxhash64(*[F.col(c) for c in cols]).alias(out_col)
 
 
 def dedup_batch(batch: DataFrame, key: Sequence[str], order_by: Sequence[str] | None = None) -> DataFrame:

@@ -166,34 +166,6 @@ def union_prefix_crawl(df: DataFrame, column: str, prefixes: Sequence[str], dedu
     return out.dropDuplicates([dedup_key])
 
 
-def salted_join(left: DataFrame, right: DataFrame, key: Sequence[str], *,
-                salts: int = 8, how: str = "inner") -> DataFrame:
-    """Skew-mitigating equi-join: identical results to ``left.join(right,
-    key, how)`` for a hot-keyed LEFT side and a modest RIGHT side.
-
-    A hot join key funnels its rows into one shuffle partition. AQE's
-    skew-join splitting usually handles this; salting is the explicit
-    fallback when it can't (disabled AQE, skew inside an already-bucketed
-    exchange, or a hot key crossing a single reducer's memory). Left rows
-    get a DETERMINISTIC salt — hash of the whole row, so the same plan
-    re-executes identically — spreading each hot key over ``salts``
-    partitions; the right side replicates once per salt (size ×salts —
-    keep it the small side), and the join key becomes (key, salt).
-
-    Supported ``how``: inner / left joins (semantics preserved per left
-    row). Right/full-outer would duplicate right-side non-matches per
-    salt — rejected loudly.
-    """
-    if how not in ("inner", "left", "left_outer"):
-        raise ValueError(f"salted_join supports inner/left joins, not {how!r}")
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salts)).cast("int")
-    left_s = left.withColumn("_salt", salt)
-    right_s = right.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1))))
-    out = left_s.join(right_s, [*key, "_salt"], how)
-    return out.drop("_salt")
-
-
 def bloom_prefiltered_join(probe: DataFrame, build: DataFrame, key: str, *,
                            how: str = "inner", bits: int = 1 << 20) -> DataFrame:
     """Large-large equi-join with a broadcast bloom prefilter on the

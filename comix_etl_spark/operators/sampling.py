@@ -90,23 +90,6 @@ def balance_downsample(df: DataFrame, key_col: str, group_col: str, *,
             .drop("_rate_e6"))
 
 
-def stratified_hash_sample(df: DataFrame, key_col: str, strata_col: str,
-                           fractions: dict[str, float], *, salt: str = "") -> DataFrame:
-    """Per-stratum deterministic sample: keep a row iff its key bucket
-    falls under its stratum's fraction (unknown strata drop). The
-    deterministic analogue of ``sampleBy`` — same keys survive on every
-    rerun, so downstream caches and joins stay consistent."""
-    b = hash_bucket(key_col, buckets=10_000, salt=salt)
-    pred = F.lit(False)
-    for stratum, frac in fractions.items():
-        # round, not int(): float truncation (int(0.57*10000) == 5699)
-        # would silently exclude one bucket and diverge from any engine
-        # computing the cutoff exactly
-        pred = pred | ((F.col(strata_col) == stratum)
-                       & (b < int(round(frac * 10_000))))
-    return df.filter(pred)
-
-
 def temperature_downsample(df: DataFrame, key_col: str, group_col: str, *,
                            alpha: float = 0.5, salt: str = "") -> DataFrame:
     """Temperature-scaled mixture downsampling (the T5/mT5 multilingual

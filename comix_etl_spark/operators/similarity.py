@@ -1090,8 +1090,7 @@ def ivf_pq_topk_from_store(corpus: DataFrame, query: DataFrame,
 
 
 def group_centroid_cosine(df: DataFrame, group_col: str, id_col: str,
-                          vec_col: str = "embedding",
-                          broadcast_centroid: bool = True) -> DataFrame:
+                          vec_col: str = "embedding") -> DataFrame:
     """Per-group embedding-cluster cohesion: the mean vector (centroid)
     of each group and every member's cosine to it, reduced to a
     per-group profile (n_vecs, avg/min cosine, 6dp) — the cluster-
@@ -1104,8 +1103,7 @@ def group_centroid_cosine(df: DataFrame, group_col: str, id_col: str,
     (groups × width rows) BROADCASTS back to the exploded members —
     joining co-partitioned would avoid the exchange but still sort the
     big exploded side (a sort-merge join the r6 fleet audit flagged);
-    the broadcast removes that sort. Pass ``broadcast_centroid=False``
-    for unbounded group cardinality. The per-member dot/norm reduce
+    the broadcast removes that sort. The per-member dot/norm reduce
     keys on the member id, and the final rollup is bounded by group
     count. The raw vectors never shuffle — only their exploded
     (group, dim) partials. Zero-norm members emit NULL cosine
@@ -1115,9 +1113,7 @@ def group_centroid_cosine(df: DataFrame, group_col: str, id_col: str,
                    F.posexplode(vec_col).alias("_d", "_x"))
     ex = ex.withColumn("_x", F.col("_x").cast("double"))
     cent = ex.groupBy("_g", "_d").agg(F.avg("_x").alias("_c"))
-    if broadcast_centroid:
-        cent = F.broadcast(cent)
-    joined = ex.join(cent, ["_g", "_d"])
+    joined = ex.join(F.broadcast(cent), ["_g", "_d"])
     per_member = (joined.groupBy("_g", "_id")
                   .agg(F.sum(F.col("_x") * F.col("_c")).alias("_dot"),
                        F.sum(F.col("_x") * F.col("_x")).alias("_n2"),

@@ -222,19 +222,9 @@ def dedup_spans(df: DataFrame, id_col: str, text_col: str, *,
     aggregation state is bounded by the document's own span list —
     the same bound the scan already held.
 
-    VIRAL-SPAN CEILING + ESCAPE HATCH: like
-    ``exact_substring_dedup(ownership="window")``, the min-owner window
-    puts ONE span text's entire occurrence list in one task — a viral
-    boilerplate span (billions of occurrences at 100 TB) is a
-    single-task ceiling that AQE cannot split. The escape is the same
-    ``agg_join`` rewrite measured there (PLANS.md "r8 scale evidence"):
-    resolve the owner as ``groupBy("chunk_text").agg(F.min(F.struct(
-    id, chunk_id)))`` — map-side partials bound the hot span's reduce
-    input by #map-tasks — and join it back (the join IS
-    AQE-skew-splittable). This operator keeps window-only because its
-    aligned fixed chunks are far less collision-prone than any-offset
-    shingles and no measurement has shown the ceiling here; apply the
-    rewrite when a corpus's top span count approaches a task's memory.
+    VIRAL-SPAN CEILING: the min-owner window puts one span text's
+    occurrence list in one task, the ceiling PLANS.md "r8 scale
+    evidence" measured for ``exact_substring_dedup``'s shingles.
     """
     spans = chunk_documents(df, id_col, text_col, chunk_size=chunk_size)
     w = Window.partitionBy("chunk_text")
@@ -261,8 +251,7 @@ def dedup_spans(df: DataFrame, id_col: str, text_col: str, *,
 
 
 def exact_substring_dedup(df: DataFrame, id_col: str, text_col: str, *,
-                          k: int = 8,
-                          ownership: str = "window") -> DataFrame:
+                          k: int = 8) -> DataFrame:
     """Cross-document EXACT SUBSTRING dedup at anchor granularity — the
     suffix-array-style pass of "Deduplicating Training Data Makes
     Language Models Better" (Lee et al. 2021, ExactSubstr), re-expressed
@@ -298,22 +287,11 @@ def exact_substring_dedup(df: DataFrame, id_col: str, text_col: str, *,
     by the document itself. Nothing is ever all-pairs and nothing
     leaves the cluster.
 
-    OWNERSHIP ROUTING (``ownership=``, r8 — PLANS.md "r8 scale
-    evidence"): ``"window"`` (default) resolves owners with one
-    row_number window — one exchange, bench-fastest, but a window
-    partition holds one shingle's ENTIRE occurrence list in one task,
-    which a viral boilerplate shingle (billions of occurrences at
-    100 TB) breaks. ``"agg_join"`` resolves the owner as a min-struct
-    groupBy (partial-aggregates map-side ⇒ the hot shingle's reduce
-    input is ≤ #map-tasks rows, not #occurrences) and joins it back —
-    the join IS AQE-skew-splittable where a window is not (measured,
-    hotkey_join experiment). Identical output (pytest-asserted); route
-    by corpus: window until a shingle's occurrence count can exceed a
-    task's memory, agg_join beyond.
+    VIRAL-SHINGLE CEILING: a window partition holds one shingle's
+    ENTIRE occurrence list in one task, and AQE cannot split a window.
+    PLANS.md "r8 scale evidence" measured it harmless at bench scale,
+    up to boilerplate planted in half the documents.
     """
-    if ownership not in ("window", "agg_join"):
-        raise ValueError(
-            f"ownership must be window|agg_join, not {ownership!r}")
     toks = df.select(F.col(id_col), tokens(text_col).alias("_tk"))
     n_starts = F.size("_tk") - (k - 1)
     anchors = (toks.filter(F.size("_tk") >= k)
@@ -322,21 +300,11 @@ def exact_substring_dedup(df: DataFrame, id_col: str, text_col: str, *,
                            F.sequence(F.lit(1), n_starts),
                            lambda s: F.array_join(F.slice("_tk", s, k), " ")))
                        .alias("_p", "_g")))
-    if ownership == "window":
-        w_ord = Window.partitionBy("_g").orderBy(F.col(id_col), F.col("_p"))
-        # rn > 1 ⟺ the shingle text occurs more than once AND this is
-        # not the owner occurrence — one window, one shuffle, no count
-        marked = anchors.withColumn("_rn", F.row_number().over(w_ord))
-        dup_occ = marked.filter(F.col("_rn") > 1)
-    else:
-        owners = (anchors.groupBy("_g")
-                  .agg(F.min(F.struct(F.col(id_col), F.col("_p")))
-                       .alias("_own"),
-                       F.count(F.lit(1)).alias("_cnt")))
-        dup_occ = (anchors.join(owners, "_g")
-                   .filter((F.col("_cnt") > 1)
-                           & ~((F.col(id_col) == F.col(f"_own.{id_col}"))
-                               & (F.col("_p") == F.col("_own._p")))))
+    w_ord = Window.partitionBy("_g").orderBy(F.col(id_col), F.col("_p"))
+    # rn > 1 ⟺ the shingle text occurs more than once AND this is not
+    # the owner occurrence — one window, one shuffle, no count
+    dup_occ = (anchors.withColumn("_rn", F.row_number().over(w_ord))
+               .filter(F.col("_rn") > 1))
     removed_pos = (dup_occ
                    .select(F.col(id_col),
                            F.explode(F.sequence(

@@ -133,7 +133,7 @@ def run_marvel_batch(spark: SparkSession, raw: DataFrame, *, target_path: str,
         return_result = RunResult(run.records_read, n_total, "SUCCESS", quality)
     except Exception as e:
         run.finish("FAILED", notes=str(e)[:500])
-        run.append_to(spark, audit_path)
+        run.append_to(audit_path)
         raise
-    run.append_to(spark, audit_path)
+    run.append_to(audit_path)
     return return_result

@@ -3803,8 +3803,9 @@ GROUP BY 1 ORDER BY day
 
 def q_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 hottest join keys with ppm share of the fact table — the
-    diagnostic run before choosing a salted join (operators/relational
-    .py::salted_join). Per-key counts partial-aggregate map-side; the
+    diagnostic run before choosing a skew remedy: AQE's skew-join split
+    for joins, operators/relational.py::salted_agg for aggregation
+    state (PLANS.md r8). Per-key counts partial-aggregate map-side; the
     grand total re-aggregates the per-key frame (tree reduce, never a
     single-task window over the keys); top-k is TakeOrdered."""
     t = _t(spark, sf_dir, "lineitem")
@@ -7144,13 +7145,13 @@ def q_audit_trail(spark: SparkSession, sf_dir: str) -> DataFrame:
     run1 = EtlRun("marvel", run_id=1)
     run1.records_read = n_cust
     run1.records_loaded = n_cust
-    run1.finish("SUCCESS", notes=None).append_to(spark, path)
+    run1.finish("SUCCESS", notes=None).append_to(path)
 
     run2 = EtlRun("marvel", run_id=2)
     run2.records_read = n_cust
     run2.records_loaded = n_pos
     run2.finish("FAILED", notes="validation: negative balances rejected") \
-        .append_to(spark, path)
+        .append_to(path)
 
     run3 = EtlRun("comicvine", run_id=3)
     try:
@@ -7159,7 +7160,7 @@ def q_audit_trail(spark: SparkSession, sf_dir: str) -> DataFrame:
     except ValueError:
         run3.records_read = n_short
         run3.finish("FAILED", notes="guardrail: batch below 80% of expected")
-    run3.append_to(spark, path)
+    run3.append_to(path)
 
     trail = read_audit(spark, path)
     return (trail.groupBy("source_system")

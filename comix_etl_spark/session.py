@@ -10,6 +10,12 @@ cluster — every knob here is chosen to be correct for both:
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   (and match the DuckDB oracle, whose timestamps are UTC-naive).
 - Arrow enabled: every pandas_udf / toPandas hop is vectorized.
+- Streaming state stays in the default (HDFS-backed) provider, which
+  keeps every key in executor heap. Stream-stream join and sessionizer
+  state at 100× volume belongs in the RocksDB provider: set
+  ``spark.sql.streaming.stateStore.providerClass`` to
+  ``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``
+  in the Spark conf.
 """
 
 from __future__ import annotations
@@ -24,13 +30,12 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def get_spark(app_name: str = "comix_etl_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "comix_etl_spark") -> SparkSession:
     cores = default_parallelism()
-    shuffle = shuffle_partitions or cores
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -45,19 +50,8 @@ def get_spark(app_name: str = "comix_etl_spark", *, shuffle_partitions: int | No
         # Parquet TIMESTAMP(NANOS) (events.ts) is unreadable by Spark's
         # vectorized reader; read as long nanos and convert at load.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .getOrCreate()
     )
-    # Streaming state store: the default (HDFS-backed) provider keeps
-    # every key in executor heap — fine locally, but stream-stream join
-    # and sessionizer state at 100× volume belongs in the RocksDB
-    # provider (spill-to-disk, incremental checkpoint). Off by default
-    # so local test runs keep zero native-lib dependence; production
-    # sets SPARK_GRAFT_ROCKSDB_STATE=1 (or passes the config directly).
-    if os.environ.get("SPARK_GRAFT_ROCKSDB_STATE", "") not in ("", "0"):
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -5,10 +5,10 @@ The reference's sinks: ORM upsert-commit (S8), binary cover download
 Engine-side equivalents; the HTML layer (S12) is a presenter concern and
 deliberately out of engine scope (SURVEY §2.1).
 
-Scale notes: parquet partitioned by the natural pruning key; writers
-take a target partition count so a 100 TB write doesn't produce either
-32 huge files or 2M tiny ones. Report sinks coalesce(1) only when the
-result is driver-small by contract (a report, not a dataset).
+Scale notes: bucketed store writes repartition by their bucket columns,
+so a write lands one file per bucket rather than one per task and
+bucket. Report sinks coalesce(1) only when the result is driver-small by
+contract (a report, not a dataset).
 """
 
 from __future__ import annotations
@@ -22,21 +22,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def write_table(df: DataFrame, path: str, *, mode: str = "overwrite",
-                partition_by: list[str] | None = None,
-                target_files: int | None = None,
-                fmt: str = "parquet") -> None:
-    """S8 — columnar table sink. Combine with operators/merge.py for
-    upsert semantics (read → merge → overwrite), the parquet MERGE
-    pattern; Delta/Iceberg swap in transparently when their jars exist.
-    ``fmt``: any Spark-native format — "parquet" (default) or "orc"
-    (both columnar + predicate-pushdown capable; ORC interoperates with
-    Hive-era estates), or "json"/"csv" for interchange exports."""
-    out = df.repartition(target_files) if target_files else df
-    writer = out.write.mode(mode).format(fmt)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+def write_table(df: DataFrame, path: str) -> None:
+    """S8 — columnar table sink: overwrite ``path`` with parquet. Combine
+    with operators/merge.py for upsert semantics (read → merge →
+    overwrite), the parquet MERGE pattern."""
+    df.write.mode("overwrite").parquet(path)
 
 
 def safe_overwrite_parquet(df: DataFrame, target_path: str,
@@ -144,32 +134,6 @@ def write_binary_payloads(df: DataFrame, dest_root: str, *,
     df.select(path_col, payload_col).foreachPartition(write_partition)
 
 
-def compact_table(spark: SparkSession, path: str, *, cluster_by: str | None = None,
-                  target_files: int = 8) -> dict:
-    """Lakehouse maintenance: rewrite a parquet table into
-    ``target_files`` balanced files, optionally RANGE-CLUSTERED on
-    ``cluster_by`` so each file owns a disjoint key range.
-
-    Why it matters at 100 TB: streaming/incremental writers leave
-    thousands of small files (listing + open overhead dominates scans),
-    and unclustered files force every file to be read for a point/range
-    predicate. After a clustered compaction, parquet min/max footer
-    stats let the reader SKIP every file whose range can't match —
-    turning O(files) scans into O(matching files).
-
-    Uses the staged swap (``safe_overwrite_parquet``) — the table stays
-    readable during the rewrite. Returns before/after file counts.
-    """
-    before = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-    df = spark.read.parquet(path)
-    out = (df.repartitionByRange(target_files, F.col(cluster_by))
-           .sortWithinPartitions(cluster_by) if cluster_by
-           else df.repartition(target_files))
-    safe_overwrite_parquet(out, path)
-    after = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-    return {"files_before": before, "files_after": after}
-
-
 def save_as_table(df: DataFrame, name: str, *, mode: str = "overwrite",
                   partition_by: list[str] | None = None) -> None:
     """S13 — catalog-table sink: the managed-table counterpart of
@@ -184,8 +148,7 @@ def save_as_table(df: DataFrame, name: str, *, mode: str = "overwrite",
 
 def save_bucketed_table(df: DataFrame, name: str, bucket_cols: list[str],
                         n_buckets: int, *, mode: str = "overwrite",
-                        sort_cols: list[str] | None = None,
-                        files_per_bucket: int = 1) -> None:
+                        sort_cols: list[str] | None = None) -> None:
     """Bucketed managed table: rows hash-partitioned into ``n_buckets``
     files by ``bucket_cols`` AT WRITE TIME.
 
@@ -208,24 +171,11 @@ def save_bucketed_table(df: DataFrame, name: str, bucket_cols: list[str],
     probe paid the listing/open cost) — the small-files trap the
     optimization guide calls out for bucketed writes.
 
-    CAVEAT (r14 advice + verdict #8): the pre-shuffle CAPS write
-    parallelism at ``files_per_bucket × n_buckets`` tasks, and with
-    the default 1 a skewed bucket column funnels its hot bucket
-    through one task. Fine for bounded store batches; for a LARGE
-    build whose n_buckets is sized to the join (not the cluster), set
-    ``files_per_bucket = k`` — ``repartition(k·n, cols)`` keeps the
-    same Murmur3 hash family, and because n divides k·n every output
-    partition still holds rows of exactly ONE bucket (``h mod k·n ≡ h
-    mod n  (mod n)``), so each bucket lands as ≤ k files written by k
-    parallel tasks and bucketed-join pruning is untouched (locked by
-    tests/test_sinks_bucketing.py::
-    test_bucketed_write_files_per_bucket_factor).
+    CAVEAT: the pre-shuffle caps write parallelism at ``n_buckets``
+    tasks, so a skewed bucket column funnels its hot bucket through one
+    task. Every store writer lands bounded batches, where that is fine.
     """
-    if files_per_bucket < 1:
-        raise ValueError(f"files_per_bucket must be >= 1, "
-                         f"got {files_per_bucket}")
-    writer = (df.repartition(files_per_bucket * n_buckets,
-                             *[F.col(c) for c in bucket_cols])
+    writer = (df.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
               .write.mode(mode).format("parquet")
               .bucketBy(n_buckets, *bucket_cols))
     if sort_cols:

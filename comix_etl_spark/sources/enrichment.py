@@ -9,7 +9,7 @@ DataFrame stage:
     issues ──▶ distinct titles ──anti-join cache──▶ volume search (mapInPandas)
            ──▶ broadcast join volumes back ──▶ issue-image lookup (mapInPandas)
            ──▶ status column (saved | skipped | no_volume | no_image)
-           ──▶ missing report (write_csv_report) / download stage / S9 sink
+           ──▶ missing report (write_csv_report) / S9 sink
 
 Scale notes:
 - volume resolution is dedup-before-fetch: one search per DISTINCT title,
@@ -26,17 +26,14 @@ Scale notes:
 
 from __future__ import annotations
 
-import json
 import re
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from comix_etl_spark.sources.rest_source import Fetcher
-
-Downloader = Callable[[str], bytes | None]
 
 
 def resolve_volumes(spark: SparkSession, titles: DataFrame, *, fetcher: Fetcher,
@@ -155,27 +152,6 @@ def cover_enrichment(spark: SparkSession, issues: DataFrame, *, fetcher: Fetcher
                            "img_url", status.alias("status")).unionByName(skipped)
 
 
-def download_binaries(df: DataFrame, *, downloader: Downloader,
-                      url_col: str = "img_url",
-                      max_concurrency: int = 8) -> DataFrame:
-    """Download stage: adds a ``payload`` binary column (NULL url or
-    failed download → NULL payload). Bytes live only in executor Arrow
-    batches; pair with sinks.write_binary_payloads (S9) or keep the
-    column and write parquet — both never route payloads via the driver."""
-    cols = df.columns
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [downloader(u) if u is not None else None for u in pdf[url_col]]
-            out = pdf.copy()
-            out["payload"] = pd.Series(payloads, dtype="object")
-            yield out
-
-    return df.repartition(max_concurrency).mapInPandas(
-        fetch, schema=f"{schema}, payload binary")
-
-
 # ---------------------------------------------------------------------------
 # Deterministic fakes (tests + registry; no network in the engine)
 # ---------------------------------------------------------------------------
@@ -200,9 +176,3 @@ def fake_comicvine_fetcher(volumes: dict[str, int] | None = None) -> Fetcher:
         return []
 
     return fetch
-
-
-def fake_image_downloader(url: str) -> bytes | None:
-    """Deterministic bytes for a URL; PNG magic first so the S9 metadata
-    deriver mime-sniffs image/png."""
-    return b"\x89PNG\r\n\x1a\n" + json.dumps({"src": url}).encode()

@@ -1,4 +1,5 @@
-"""S1–S5 — REST-paginated source as a distributed Spark read.
+"""S1, S2, S4, S5 — REST-paginated source as a distributed Spark read.
+(S3, the prefix crawl, is ``operators/relational.py:union_prefix_crawl``.)
 
 The reference pulls pages sequentially on one machine with offset loops,
 retry/backoff, politeness sleeps, and a file cache
@@ -181,31 +182,6 @@ def incremental_paginated_read(spark: SparkSession, url: str, *, total: int,
     return spark.read.parquet(bronze_path)
 
 
-def prefix_crawl_read(spark: SparkSession, url: str, prefixes: list[str], *,
-                      fetcher: Fetcher, key_field: str = "id",
-                      max_concurrency: int = 8) -> DataFrame:
-    """S3 — crawl by title prefix (A–Z…) in parallel tasks, then dedup by
-    key: the reference's seen_ids set (marvel_extract.py:95-119) becomes
-    a distributed dropDuplicates."""
-    pf = spark.createDataFrame([(p,) for p in prefixes], "prefix string") \
-              .repartition(min(max_concurrency, max(len(prefixes), 1)))
-
-    def fetch_prefixes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for prefix in pdf["prefix"]:
-                for rec in fetcher(url, {"titleStartsWith": prefix}):
-                    out.append({
-                        "prefix": prefix,
-                        "key": str(rec.get(key_field)),
-                        "payload": json.dumps(rec, sort_keys=True),
-                    })
-            yield pd.DataFrame(out, columns=["prefix", "key", "payload"])
-
-    fetched = pf.mapInPandas(fetch_prefixes, schema="prefix string, key string, payload string")
-    return fetched.dropDuplicates(["key"])
-
-
 def fake_marvel_fetcher(n_records: int = 500, page_size_cap: int = 100) -> Fetcher:
     """Deterministic stand-in for the Marvel API (no network): generates
     the same records for the same (offset, limit) forever. Used by tests
@@ -227,13 +203,6 @@ def fake_marvel_fetcher(n_records: int = 500, page_size_cap: int = 100) -> Fetch
             return [{"id": 5_000_000 + i, "title": f"Issue {i}",
                      "issueNumber": float(i % 40),
                      "prices": [{"type": "printPrice", "price": round(1.99 + (i % 5), 2)}]}]
-        if "titleStartsWith" in params:
-            p = params["titleStartsWith"].lower()
-            return [
-                {"id": 10_000 + (ord(p[0]) - ord("a")) * 50 + i,
-                 "title": f"{p.upper()}-Series {i}", "comics_available": (i * 7) % 40}
-                for i in range(5)
-            ]
         offset = int(params.get("offset", 0))
         limit = min(int(params.get("limit", page_size_cap)), page_size_cap)
         hi = min(offset + limit, n_records)

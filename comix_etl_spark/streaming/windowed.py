@@ -631,136 +631,3 @@ def foreach_batch_cms(sketch_path: str, *, key_col: str = "value",
             extra_files={"_last_batch_id": str(int(batch_id))})
 
     return apply
-
-
-def foreach_batch_dedup_screen(corpus_path: str, matches_path: str, *,
-                               id_col: str = "doc_id",
-                               text_col: str = "text",
-                               threshold: float = 0.5,
-                               num_hashes: int = 32, bands: int = 8,
-                               n: int = 3):
-    """foreachBatch sink: STREAMING INGEST DEDUP — each micro-batch of
-    documents is screened against the already-landed corpus
-    (operators/dedup.py::dedup_against_corpus, cross-side MinHash LSH +
-    exact-Jaccard verify) and only NOVEL documents append to the
-    corpus; duplicates append (doc_id, match_id, jaccard, batch_id) to
-    ``matches_path``. Exact within-batch copies collapse first (min id
-    survives), so a batch can't land the same text twice.
-
-    This closes the loop the batch operators open: a 24/7 crawl feed
-    lands a deduplicated bronze layer INCREMENTALLY — the corpus is
-    probed, never self-joined, and each batch's cost scales with the
-    batch (plus the corpus band rows, which production persists
-    bucketed — see dedup_against_corpus's scale note).
-
-    TWO screening tiers, because LSH alone has a blind spot: a doc
-    shorter than the shingle width (< ``n`` tokens) produces ZERO
-    shingles, so near-dup banding can never see it. Tier 1 joins the
-    batch's content fingerprints (md5 of normalized text) against the
-    ``_fp`` column landed WITH the corpus — an exact screen that
-    catches every re-crawled or replayed copy at any length, reading
-    one pruned column instead of re-hashing corpus text. Tier 2 runs
-    the LSH near-dup screen over the tier-1 survivors only.
-
-    Restart safety: foreachBatch may replay a batch after a crash;
-    replayed docs hit their own landed fingerprints and are screened
-    out, so the corpus stays duplicate-free at the content level —
-    INCLUDING short docs the old LSH-only screen would re-land. Replay
-    self-matches (doc_id == match_id) are screened from the corpus but
-    NOT logged as duplicate events, and the log writes to
-    ``matches_path/batch_id=N`` with overwrite, so a replayed batch
-    rewrites its own log slice instead of appending it twice.
-    """
-    from pyspark.sql import Window
-
-    from comix_etl_spark.operators.dedup import dedup_against_corpus
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        if not batch_df.take(1):
-            return
-        from comix_etl_spark.functions.text import fingerprint
-
-        spark = batch_df.sparkSession
-        fp = fingerprint(text_col)  # canonical: lower+collapse+trim+md5
-        w = Window.partitionBy(fp).orderBy(F.col(id_col))
-        batch = (batch_df.withColumn("_rn", F.row_number().over(w))
-                 .filter(F.col("_rn") == 1).drop("_rn")
-                 .withColumn("_fp", fp)
-                 .localCheckpoint(eager=True))
-        if os.path.isdir(corpus_path):
-            corpus = spark.read.parquet(corpus_path)
-            # tier 1 — exact content screen against the landed _fp
-            # column (computed on the fly for corpora predating it)
-            if "_fp" not in corpus.columns:
-                corpus = corpus.withColumn("_fp", fingerprint(text_col))
-            else:
-                # mixed-schema corpus: rows from files predating _fp
-                # read back NULL once newer files carry the column —
-                # they must still participate in the exact screen
-                corpus = corpus.withColumn(
-                    "_fp", F.coalesce(F.col("_fp"), fingerprint(text_col)))
-            cfp = (corpus.groupBy("_fp")
-                   .agg(F.min(id_col).alias("match_id")))
-            exact = (batch.select(id_col, "_fp").join(cfp, "_fp")
-                     .select(id_col, "match_id",
-                             F.lit(1.0).alias("jaccard")))
-            rest = batch.join(exact.select(id_col), id_col, "left_anti")
-            # tier 2 — near-dup LSH screen over tier-1 survivors
-            near = dedup_against_corpus(
-                rest, corpus, id_col, text_col, threshold=threshold,
-                num_hashes=num_hashes, bands=bands, n=n)
-            # bounded by the batch; checkpoint cuts the lineage to the
-            # corpus files we're about to append to
-            dups = exact.unionByName(near).localCheckpoint(eager=True)
-            (dups.filter(F.col(id_col) != F.col("match_id"))
-             .write.mode("overwrite")
-             .parquet(f"{matches_path}/batch_id={int(batch_id)}"))
-            novel = batch.join(dups.select(id_col), id_col, "left_anti")
-        else:
-            novel = batch
-        novel.write.mode("append").parquet(corpus_path)
-
-    return apply
-
-
-def foreach_batch_with_dlq(inner, dlq_path: str, *,
-                           errors_path: str | None = None):
-    """Wrap a foreachBatch sink with a DEAD-LETTER QUEUE: if ``inner``
-    raises on a micro-batch, the batch's ROWS land under
-    ``dlq_path/batch_id=N`` and one (batch_id, error, ts) record
-    appends to ``errors_path`` (default ``dlq_path + "_errors"``) —
-    the stream keeps running instead of dying on one poison batch.
-
-    24/7 contract: a transient sink failure (lock contention, schema
-    drift in one feed slice, a full disk elsewhere) must not take down
-    ingestion for every OTHER batch; the DLQ preserves the failed
-    batch byte-for-byte for replay (`spark.read.parquet(dlq)` →
-    re-apply ``inner`` after the fix). If the DLQ write ITSELF fails,
-    the original error re-raises — data is never silently dropped.
-    """
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            inner(batch_df, batch_id)
-        except Exception as e:  # noqa: BLE001 — quarantine any sink failure
-            err_path = errors_path or dlq_path + "_errors"
-            try:
-                (batch_df.write.mode("overwrite")
-                 .parquet(f"{dlq_path}/batch_id={int(batch_id)}"))
-                spark = batch_df.sparkSession
-                # per-batch partition + overwrite (the module's replay
-                # convention): a crash-replayed poison batch REWRITES
-                # its error row instead of double-counting in monitoring
-                (spark.createDataFrame(
-                    [(f"{type(e).__name__}: {e}"[:2000],)],
-                    "error string")
-                 .withColumn("quarantined_at", F.current_timestamp())
-                 .write.mode("overwrite")
-                 .parquet(f"{err_path}/batch_id={int(batch_id)}"))
-            except Exception:
-                raise e  # DLQ landing failed: surface the ORIGINAL error
-            return
-
-    return apply

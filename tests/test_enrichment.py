@@ -1,5 +1,5 @@
 """Second-API enrichment flow (cv_fetch_covers analogue): volume cache,
-status semantics, missing report, binary download → S9 sink round-trip,
+status semantics, missing report, binary payload → S9 sink round-trip,
 and the S13 catalog-table path."""
 
 from __future__ import annotations
@@ -19,9 +19,7 @@ from comix_etl_spark.sinks.writers import (
 from comix_etl_spark.sources.csv_source import read_csv_with_rejects, split_rejects
 from comix_etl_spark.sources.enrichment import (
     cover_enrichment,
-    download_binaries,
     fake_comicvine_fetcher,
-    fake_image_downloader,
     resolve_volumes,
 )
 
@@ -78,53 +76,22 @@ def test_missing_report_written(spark, tmp_path):
 
 
 def test_download_and_binary_sink_round_trip(spark, tmp_path):
-    """saved rows → download (mapInPandas) → S9 foreachPartition sink →
+    """saved rows + payload column → S9 foreachPartition sink →
     binaryFile re-ingest: content and mime survive the round trip."""
     out = cover_enrichment(spark, _issues(spark), fetcher=fake_comicvine_fetcher())
-    saved = out.filter(F.col("status") == "saved")
-    with_payload = download_binaries(saved, downloader=fake_image_downloader)
-    assert with_payload.filter(F.col("payload").isNull()).count() == 0
+    png = b"\x89PNG\r\n\x1a\n"  # PNG magic first, so the mime sniff sees image/png
+    with_payload = (out.filter(F.col("status") == "saved")
+                    .withColumn("payload", F.concat(F.lit(png),
+                                                    F.encode("img_url", "UTF-8"))))
 
     dest_root = str(tmp_path / "covers_root")
     write_binary_payloads(with_payload, dest_root)
     files = read_binary_files(spark, f"{dest_root}/covers/*.jpg")
     assert files.count() == 3
     meta = attach_binary_metadata(files, payload_col="content")
-    assert {r.meta.mime for r in meta.collect()} == {"image/png"}  # fake bytes are PNG-magic
+    assert {r.meta.mime for r in meta.collect()} == {"image/png"}
     one = files.filter(F.col("path").endswith("aa1.jpg")).collect()[0]
-    assert bytes(one.content) == fake_image_downloader("http://img.example/cv/901/1.jpg")
-
-
-def test_compact_table_clusters_files(spark, tmp_path):
-    """Many small files → target_files range-clustered files whose
-    key ranges are disjoint (the property that enables footer-stat
-    file skipping)."""
-    from comix_etl_spark.sinks.writers import compact_table
-
-    path = str(tmp_path / "fragmented")
-    df = spark.range(0, 10_000).select(F.col("id").alias("k"),
-                                       (F.col("id") % 7).alias("v"))
-    df.repartition(64).write.parquet(path)  # fragmented, unclustered
-
-    stats = compact_table(spark, path, cluster_by="k", target_files=4)
-    assert stats["files_before"] == 64
-    assert stats["files_after"] == 4
-    back = spark.read.parquet(path)
-    assert back.count() == 10_000
-    # per-file ranges must be disjoint after range clustering
-    import pyarrow.parquet as pq
-    ranges = []
-    for f in sorted(os.listdir(path)):
-        if f.endswith(".parquet"):
-            md = pq.read_metadata(os.path.join(path, f))
-            cols = {md.schema.column(i).name: i for i in range(md.schema.names.__len__())}
-            ki = cols["k"]
-            mins = min(md.row_group(g).column(ki).statistics.min for g in range(md.num_row_groups))
-            maxs = max(md.row_group(g).column(ki).statistics.max for g in range(md.num_row_groups))
-            ranges.append((mins, maxs))
-    ranges.sort()
-    for (a_lo, a_hi), (b_lo, b_hi) in zip(ranges, ranges[1:]):
-        assert a_hi < b_lo  # disjoint
+    assert bytes(one.content) == png + b"http://img.example/cv/901/1.jpg"
 
 
 def test_save_as_table_and_bootstrap(spark):

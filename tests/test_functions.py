@@ -112,20 +112,6 @@ def test_tokens_empty_and_multispace(spark):
     assert score == 0
 
 
-def test_cover_url_candidates(spark):
-    out = _one(spark, scalar.cover_url_candidates(F.lit("aa1.png")), x=("int", 0))
-    assert out == ["/static/covers/aa1.png", "/static/covers/aa1.jpg", "/static/covers/aa1.webp"]
-    out2 = _one(spark, scalar.cover_url_candidates(F.lit("noext")), x=("int", 0))
-    assert out2[1] == "/static/covers/noext.jpg"
-
-
-def test_md5_auth_digest_matches_hashlib(spark):
-    import hashlib
-    got = _one(spark, scalar.md5_auth_digest(F.lit("1"), F.lit("priv"), F.lit("pub")),
-               x=("int", 0))
-    assert got == hashlib.md5(b"1privpub").hexdigest()  # reference etl/utils.py:13-29
-
-
 def test_split_rejects_partial_header_row_with_null(spark, tmp_path):
     """A row with some header-named cells and a NULL elsewhere must land
     in exactly one of (good, rejects) — never silently vanish."""

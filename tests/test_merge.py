@@ -4,8 +4,6 @@ selective-update semantics."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from comix_etl_spark.operators import merge as M
 
 
@@ -62,12 +60,6 @@ def test_backfill_if_null(spark):
     patch = spark.createDataFrame([(1, 10), (2, 99)], "k int, fk int")
     out = {r.k: r.fk for r in M.backfill_if_null(existing, patch, ["k"], "fk").collect()}
     assert out == {1: 10, 2: 20}  # only the NULL was filled
-
-
-def test_synthetic_id_deterministic(spark):
-    df = spark.createDataFrame([("marvel", "123"), ("marvel", "123")], "src string, key string")
-    ids = [r.id for r in df.select(M.synthetic_id(["src", "key"])).collect()]
-    assert ids[0] == ids[1]
 
 
 def test_dedup_batch_last_writer_wins(spark):

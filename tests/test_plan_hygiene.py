@@ -10,7 +10,10 @@ threshold at any SF; scan-local ops have no join at all).
 
 from __future__ import annotations
 
+import ast
 import io
+import pathlib
+import re
 from contextlib import redirect_stdout
 from functools import partial
 
@@ -83,11 +86,9 @@ def test_partitioned_write_prunes_partitions(spark, sf_small, tmp_path):
     # on the scan, and non-matching partitions are never listed as data
     # filters (nothing to evaluate row-side). This is the layout that
     # turns a 100 TB full scan into a single-partition read.
-    from comix_etl_spark.sinks.writers import write_table
-
     docs = spark.read.parquet(f"{sf_small}/documents.parquet")
     target = str(tmp_path / "docs_by_lang")
-    write_table(docs, target, partition_by=["lang"])
+    docs.write.partitionBy("lang").parquet(target)
     got = spark.read.parquet(target).filter("lang = 'en'")
     plan = _plan(got)
     pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
@@ -303,3 +304,78 @@ def test_det_twin_binds_its_sibling_builder(sibling):
     twin = QUERIES[TWINS[sibling]].builder
     assert isinstance(twin, partial), f"{TWINS[sibling]} is not a binding"
     assert twin.func is QUERIES[sibling].builder, twin.func
+
+
+REPO = pathlib.Path(__file__).resolve().parent.parent
+ENGINE = REPO / "comix_etl_spark"
+_DOTTED = re.compile(r"[A-Za-z_][\w.]*")
+
+# Public engine functions that nothing in the program calls, kept on
+# purpose. Every other one needs a caller outside tests.
+NO_CALLER_OK = {
+    "plan_summary": "plan introspection API; tests read plan shapes with it",
+    **{f"foreach_batch_{k}": "streaming sink of the continuous-ingest loop "
+       "(ROADMAP #1), driven by the streaming tests until the loop lands"
+       for k in ("dedup_ingest", "ann_ingest", "upsert", "drift",
+                 "heavy_hitters", "cms")},
+    "write_csv_report": "S10 sink: the missing-covers CSV report",
+    "write_json_records": "S11 sink: JSON-lines records",
+    "write_binary_payloads": "S9 sink: cover bytes written per partition",
+    "read_binary_files": "S9 re-ingest of the binary sink's files",
+    "bootstrap_tables": "S13 sink: idempotent DDL bootstrap",
+    "hamming_probe_from_store": "the persisted fingerprint store's "
+        "cross-set probe; no registry query probes that store yet",
+}
+
+
+def _engine_functions() -> dict[str, str]:
+    """Top-level public ``def``s under comix_etl_spark/, less the
+    registry's ``q_*`` builders: {name: module path}."""
+    out = {}
+    for path in sorted(ENGINE.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and not node.name.startswith(("_", "q_"))):
+                out[node.name] = str(path.relative_to(REPO))
+    return out
+
+
+def _program_references() -> set[str]:
+    """Every name the program uses: loaded names, attribute names and
+    dotted string constants (perfbench/trace.py names its targets as
+    strings). Imports bind rather than use, package ``__init__``s only
+    re-export, tests are not callers, and a top-level function's
+    references to its own name do not count."""
+    paths = [REPO / "bench.py",
+             *(p for root in ("comix_etl_spark", "perfbench", "scripts")
+               for p in (REPO / root).rglob("*.py")
+               if p.name != "__init__.py" and "tests" not in p.parts)]
+    used: set[str] = set()
+    for path in paths:
+        for top in ast.parse(path.read_text()).body:
+            own = getattr(top, "name", None)
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    names = {node.id}
+                elif isinstance(node, ast.Attribute):
+                    names = {node.attr}
+                elif (isinstance(node, ast.Constant)
+                      and isinstance(node.value, str)
+                      and _DOTTED.fullmatch(node.value)):
+                    names = set(node.value.split("."))
+                else:
+                    continue
+                used |= names - {own}
+    return used
+
+
+def test_every_public_engine_function_has_a_caller():
+    """An engine function only tests call is code the program does not
+    need: give it a caller, delete it, or allowlist it with a reason."""
+    functions, used = _engine_functions(), _program_references()
+    orphans = {n: m for n, m in functions.items()
+               if n not in used and n not in NO_CALLER_OK}
+    assert not orphans, f"no caller outside tests: {orphans}"
+    stale = sorted(n for n in NO_CALLER_OK
+                   if n not in functions or n in used)
+    assert not stale, f"allowlisted but gone or now called: {stale}"

@@ -31,25 +31,6 @@ def test_global_rank_single_partition_and_empty(spark):
     assert global_rank(empty, "k").count() == 0
 
 
-def test_salted_join_matches_plain_join(spark):
-    """Salting must not change results — hot key 'h' spread over salts,
-    right side replicated; inner and left both equal the plain join."""
-    from comix_etl_spark.operators.relational import salted_join
-
-    left = spark.createDataFrame(
-        [("h", i) for i in range(500)] + [("c", 1), ("m", 2)], "k string, v int")
-    right = spark.createDataFrame(
-        [("h", "hot"), ("c", "cold")], "k string, name string")
-    for how in ("inner", "left"):
-        plain = sorted((r.k, r.v, r.name) for r in left.join(right, ["k"], how).collect())
-        salted = sorted((r.k, r.v, r.name) for r in
-                        salted_join(left, right, ["k"], salts=4, how=how).collect())
-        assert salted == plain, how
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        salted_join(left, right, ["k"], how="full_outer")
-
-
 def _catalog(spark, tmp_path):
     """A 4-file parquet catalog: key ``k`` (5 values, each spread over
     every file), a distinct ``other`` out of id order, a title and a
@@ -122,20 +103,6 @@ def test_hash_split_partitioning_invariant(spark):
     assert 0.05 < frac < 0.15  # ~10%
 
 
-def test_stratified_hash_sample_deterministic(spark):
-    from comix_etl_spark.operators.sampling import stratified_hash_sample
-
-    df = spark.createDataFrame(
-        [(i, "a" if i % 2 else "b") for i in range(1000)], "k long, s string")
-    s1 = {r.k for r in stratified_hash_sample(df, "k", "s", {"a": 0.2, "b": 0.5}).collect()}
-    s2 = {r.k for r in stratified_hash_sample(df.repartition(9), "k", "s",
-                                              {"a": 0.2, "b": 0.5}).collect()}
-    assert s1 == s2
-    a_frac = sum(1 for k in s1 if k % 2) / 500
-    b_frac = sum(1 for k in s1 if not k % 2) / 500
-    assert 0.1 < a_frac < 0.3 and 0.4 < b_frac < 0.6
-
-
 def test_group_hash_sample_exact_n_and_partitioning_invariant(spark):
     from comix_etl_spark.operators.sampling import group_hash_sample
 
@@ -201,14 +168,14 @@ def test_gaps_in_sequence_hand_graded(spark):
 
 
 def test_salted_paths_under_genuine_skew(spark):
-    """Skew stress for the salted fallbacks: one key holds 30% of a
-    20k-row fact. Asserts (1) salted_join == plain join and
-    salted_agg == plain agg under real skew, (2) the documented
-    whole-row salt genuinely fans the hot key out over most of the
-    salt space (a salt keyed only on the join key would collapse to 1
-    and this fails), (3) the two-phase agg plan shape: two exchanges
-    (partial + merge) where the plain agg has one."""
-    from comix_etl_spark.operators.relational import salted_agg, salted_join
+    """Skew stress for the salted aggregate: one key holds 30% of a
+    20k-row fact. Asserts (1) salted_agg == plain agg under real skew,
+    (2) the documented whole-row salt genuinely fans the hot key out
+    over most of the salt space (a salt keyed only on the group key
+    would collapse to 1 and this fails), (3) the two-phase agg plan
+    shape: two exchanges (partial + merge) where the plain agg has
+    one."""
+    from comix_etl_spark.operators.relational import salted_agg
     from comix_etl_spark.plans.introspect import plan_summary
 
     n, hot_share = 20_000, 0.3
@@ -219,20 +186,7 @@ def test_salted_paths_under_genuine_skew(spark):
          .alias("k"),
         (F.col("id") % 97).cast("double").alias("v"),
         F.col("id").alias("rid"))
-    dim = spark.createDataFrame(
-        [("hot", "H")] + [(f"k{i}", f"d{i}") for i in range(0, 700, 7)],
-        "k string, name string")
-
-    # (1a) join equality, inner and left, per-row multiset
-    for how in ("inner", "left"):
-        plain = sorted((r.k, r.rid, r.name)
-                       for r in fact.join(dim, ["k"], how).collect())
-        salted = sorted((r.k, r.rid, r.name)
-                        for r in salted_join(fact, dim, ["k"], salts=8,
-                                             how=how).collect())
-        assert salted == plain, how
-
-    # (1b) agg equality
+    # (1) agg equality
     plain_agg = {r.k: (r.s, r.c) for r in
                  fact.groupBy("k").agg(F.sum("v").alias("s"),
                                        F.count(F.lit(1)).alias("c")).collect()}

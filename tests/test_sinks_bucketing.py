@@ -95,40 +95,6 @@ def test_schema_evolution_merge_read(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_write_table_orc_roundtrip_with_pushdown(spark, sf_small):
-    """S8's fmt knob: an ORC write must round-trip content exactly and
-    keep predicate pushdown at the ORC scan (searchArgument), so the
-    Hive-era interchange path costs no plan quality."""
-    import shutil
-    import tempfile
-
-    from comix_etl_spark.sinks.writers import write_table
-
-    src = (spark.read.parquet(f"{sf_small}/nation.parquet")
-           .select("n_nationkey", "n_name", "n_regionkey"))
-    tmp = tempfile.mkdtemp(prefix="orc_rt_")
-    try:
-        write_table(src, f"{tmp}/nation_orc", fmt="orc",
-                    partition_by=["n_regionkey"])
-        back = spark.read.orc(f"{tmp}/nation_orc")
-        assert sorted(map(tuple, src.collect())) \
-            == sorted((r.n_nationkey, r.n_name, r.n_regionkey)
-                      for r in back.collect())
-        plan = back.filter(F.col("n_nationkey") == 7) \
-                   ._jdf.queryExecution().executedPlan().toString()
-        # the PREDICATE must be in the pushed list — 'PushedFilters: []'
-        # (pushdown regressed) must fail, not just the label's presence
-        assert "EqualTo(n_nationkey,7)" in plan, plan
-        # partition pruning: the regionkey predicate must reach the scan
-        # as a partition filter, not a post-scan filter
-        pruned = back.filter(F.col("n_regionkey") == 2)
-        ptxt = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "(n_regionkey#" in ptxt and "PartitionFilters: [" in ptxt \
-            and "= 2)" in ptxt.split("PartitionFilters: [", 1)[1][:120], ptxt
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_safe_overwrite_preserves_copies_when_swap_and_rollback_fail(spark, monkeypatch):
     """Data-loss guard: if the staging->target rename fails AND the
     rollback fails, BOTH the old table (trash) and the new one
@@ -210,39 +176,3 @@ def test_bucketed_write_lands_one_file_per_bucket(spark):
         assert spark.table("bt_onefile").count() == 5_000
     finally:
         spark.sql("DROP TABLE IF EXISTS bt_onefile")
-
-
-def test_bucketed_write_files_per_bucket_factor(spark):
-    """r15 skew guard (r14 verdict #8): files_per_bucket=k widens the
-    pre-shuffle to k*n_buckets tasks while every output partition still
-    holds rows of exactly one bucket (n divides k*n, so h % k*n and
-    h % n agree mod n) — the store lands as <= k*n_buckets data files,
-    more than n_buckets (parallelism restored), and reads back intact."""
-    import glob
-    import os
-
-    from comix_etl_spark.sinks.writers import clear_orphan_table_dir
-
-    clear_orphan_table_dir(spark, "bt_kfiles", "overwrite")
-    rows = spark.range(0, 5_000).repartition(16).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("v"))
-    try:
-        save_bucketed_table(rows, "bt_kfiles", ["k"], 4, sort_cols=["k"],
-                            files_per_bucket=3)
-        loc = (spark.sql("DESCRIBE TABLE EXTENDED bt_kfiles")
-               .filter(F.col("col_name") == "Location")
-               .first().data_type)
-        files = glob.glob(os.path.join(loc.replace("file:", ""), "*.parquet"))
-        # <= because an empty shuffle partition writes no file; > n_buckets
-        # proves the parallelism ceiling actually lifted
-        assert 4 < len(files) <= 12, sorted(os.path.basename(f) for f in files)
-        # spark bucket filenames encode the bucket id as _0000N; every
-        # file must carry exactly one bucket id and each bucket <= 3 files
-        import collections
-        per_bucket = collections.Counter(
-            os.path.basename(f).split("_")[-1].split(".")[0][:6]
-            for f in files)
-        assert all(c <= 3 for c in per_bucket.values()), per_bucket
-        assert spark.table("bt_kfiles").count() == 5_000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bt_kfiles")

@@ -17,7 +17,6 @@ from comix_etl_spark.sources.rest_source import (
     keyed_lookup_read,
     missing_pages,
     paginated_read,
-    prefix_crawl_read,
     retrying,
 )
 
@@ -86,13 +85,6 @@ def test_paginated_read_covers_all_offsets(spark):
     ids = [F and r for r in rows]  # noqa: F841
     parsed = df.select(F.get_json_object("payload", "$.id").cast("long").alias("id"))
     assert parsed.distinct().count() == 250
-
-
-def test_prefix_crawl_dedups_by_key(spark):
-    # overlapping prefixes return overlapping ids; dedup keeps one each
-    df = prefix_crawl_read(spark, "http://x", ["a", "a", "b"],
-                           fetcher=fake_marvel_fetcher())
-    assert df.count() == 10  # 5 per distinct prefix
 
 
 def test_keyed_lookup_hit_and_miss(spark):

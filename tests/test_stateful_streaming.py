@@ -77,8 +77,9 @@ def test_batch_order_within_group_is_sorted(spark, tmp_path):
 
 
 def test_rocksdb_state_store_provider(spark, tmp_path):
-    """The production state-store switch (session.py,
-    SPARK_GRAFT_ROCKSDB_STATE): run a stateful windowed count with the
+    """The production state store (session.py: set
+    spark.sql.streaming.stateStore.providerClass in the Spark conf):
+    run a stateful windowed count with the
     RocksDB provider active and assert (a) results are identical to
     what the default provider computes, (b) the provider actually
     engaged (RocksDB custom metrics appear in the query progress).

@@ -68,7 +68,7 @@ def test_foreach_batch_upsert_partition_scoped(spark, tmpdir):
 def test_write_table_and_csv_report_roundtrip(spark, tmpdir):
     df = spark.createDataFrame([(1, "x"), (2, "y")], "id int, name string")
     p = os.path.join(tmpdir, "t")
-    write_table(df, p, target_files=1)
+    write_table(df, p)
     assert spark.read.parquet(p).count() == 2
     c = os.path.join(tmpdir, "report")
     write_csv_report(df, c)
@@ -318,7 +318,7 @@ def test_audit_row_round_trip(spark, tmpdir, count_jobs):
     bare = EtlRun("marvel", run_id=-(1 << 63)).finish("SUCCESS")
     assert bare.notes is None
     for run in (ok, failed, bare):
-        _, jobs = count_jobs(lambda run=run: run.append_to(spark, path))
+        _, jobs = count_jobs(lambda run=run: run.append_to(path))
         assert jobs == 0, jobs
     back = {r.run_id: r.asDict() for r in read_audit(spark, path).collect()}
     for run in (ok, failed, bare):
@@ -350,10 +350,10 @@ def test_read_audit_reads_rows_without_counter_columns(spark, tmpdir):
         "SUCCESS", null_onsale_date=1, null_cover_url=0, orphan_credits=2)
     failed = EtlRun("comicvine", run_id=3, records_read=5).finish("FAILED", notes="boom")
     for run in (new, failed):
-        run.append_to(spark, path)
+        run.append_to(path)
     # an append interrupted between its write and its rename
     interrupted = os.path.join(tmpdir, "interrupted")
-    EtlRun("marvel", run_id=4).finish("SUCCESS").append_to(spark, interrupted)
+    EtlRun("marvel", run_id=4).finish("SUCCESS").append_to(interrupted)
     (name,) = os.listdir(interrupted)
     shutil.move(os.path.join(interrupted, name), os.path.join(path, f".{name}.tmp"))
     got = {r.run_id: (r.source_system, r.started_at, r.status, r.records_read,
@@ -855,122 +855,6 @@ def test_foreach_batch_heavy_hitters_merged_summary(spark, tmpdir):
             for r in spark.read.parquet(summary).collect()} == got
 
 
-def test_foreach_batch_dedup_screen_lands_only_novel_docs(spark, tmpdir):
-    """Streaming ingest dedup: batch 1 seeds the corpus; batch 2 brings
-    one exact copy, one near-dup and one novel doc — only the novel doc
-    (and nothing else) lands, and the matches log names the duplicates
-    with their corpus matches. A within-batch exact copy collapses
-    before screening."""
-    import glob as _glob
-
-    from comix_etl_spark.streaming.windowed import foreach_batch_dedup_screen
-
-    src = os.path.join(tmpdir, "ingest_src")
-    corpus = os.path.join(tmpdir, "ingest_corpus")
-    matches = os.path.join(tmpdir, "ingest_matches")
-    os.makedirs(src)
-
-    def write_file(name, rows):
-        tmp = tempfile.mkdtemp(prefix="ids_")
-        spark.createDataFrame(rows, "doc_id long, text string") \
-            .coalesce(1).write.mode("overwrite").parquet(f"{tmp}/d")
-        shutil.move(_glob.glob(f"{tmp}/d/part-*.parquet")[0],
-                    os.path.join(src, name))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    write_file("b1.parquet", [
-        (1, base),
-        (2, "one two three four five six seven eight nine ten"),
-        (3, "tiny doc"),       # < n tokens: zero shingles, LSH-blind
-    ])
-    write_file("b2.parquet", [
-        (10, base),                                  # exact copy of 1
-        (11, f"{base.rsplit(' ', 1)[0]} nope1"),     # near-dup of 1
-        (12, "completely novel words that overlap nothing at all"),
-        (13, "completely novel words that overlap nothing at all"),
-        (14, "  Tiny   DOC "),  # short-doc copy of 3 (normalized) —
-                                # only the exact fingerprint tier can
-                                # catch it across batches
-    ])  # 12/13: within-batch exact copies — min id (12) survives
-
-    q = (spark.readStream.schema("doc_id long, text string")
-         .option("maxFilesPerTrigger", 1).parquet(src)
-         .writeStream.foreachBatch(foreach_batch_dedup_screen(
-             corpus, matches, threshold=0.2, num_hashes=16, bands=16, n=3))
-         .option("checkpointLocation", os.path.join(tmpdir, "ingest_ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    landed = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    assert landed == {1, 2, 3, 12}
-    logged = {(r.doc_id, r.match_id) for r in
-              spark.read.parquet(matches).collect()}
-    assert logged == {(10, 1), (11, 1), (14, 3)}
-
-    # replay idempotence: foreachBatch re-delivers the FULL batch after
-    # a crash — it must not re-land any doc (short docs included), must
-    # not log self-matches for its own landed copies, and rewrites its
-    # batch_id log slice instead of appending a second copy
-    from comix_etl_spark.streaming.windowed import foreach_batch_dedup_screen as fbds
-    replay = spark.createDataFrame(
-        [(10, base),
-         (11, f"{base.rsplit(' ', 1)[0]} nope1"),
-         (12, "completely novel words that overlap nothing at all"),
-         (13, "completely novel words that overlap nothing at all"),
-         (14, "  Tiny   DOC ")], "doc_id long, text string")
-    fbds(corpus, matches, threshold=0.2, num_hashes=16, bands=16, n=3)(
-        replay, 1)
-    assert {r.doc_id for r in spark.read.parquet(corpus).collect()} \
-        == {1, 2, 3, 12}
-    assert {(r.doc_id, r.match_id) for r in
-            spark.read.parquet(matches).collect()} \
-        == {(10, 1), (11, 1), (14, 3)}
-
-
-def test_foreach_batch_with_dlq_quarantines_poison_batch(spark, tmpdir):
-    """A sink that raises on one batch must not kill the stream: the
-    poison batch lands in the DLQ byte-for-byte, an error record is
-    logged, and every other batch processes normally."""
-    import glob as _glob
-
-    from comix_etl_spark.streaming.windowed import foreach_batch_with_dlq
-
-    src = os.path.join(tmpdir, "dlq_src")
-    sunk = os.path.join(tmpdir, "dlq_sunk")
-    dlq = os.path.join(tmpdir, "dlq_quarantine")
-    os.makedirs(src)
-
-    def write_file(name, lo, hi):
-        tmp = tempfile.mkdtemp(prefix="dlq_")
-        spark.range(lo, hi).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/d")
-        shutil.move(_glob.glob(f"{tmp}/d/part-*.parquet")[0],
-                    os.path.join(src, name))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    write_file("b0.parquet", 0, 10)
-    write_file("b1.parquet", 100, 120)   # the poison range
-    write_file("b2.parquet", 200, 230)
-
-    def inner(batch_df, batch_id):
-        if batch_df.filter(F.col("id").between(100, 199)).take(1):
-            raise RuntimeError("poison batch")
-        batch_df.write.mode("append").parquet(sunk)
-
-    q = (spark.readStream.schema("id long")
-         .option("maxFilesPerTrigger", 1).parquet(src)
-         .writeStream.foreachBatch(foreach_batch_with_dlq(inner, dlq))
-         .option("checkpointLocation", os.path.join(tmpdir, "dlq_ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()  # must NOT raise
-
-    assert spark.read.parquet(sunk).count() == 40           # batches 0 + 2
-    quarantined = spark.read.parquet(dlq)
-    assert sorted(r.id for r in quarantined.collect()) == list(range(100, 120))
-    (err,) = spark.read.parquet(dlq + "_errors").collect()
-    assert "poison batch" in err.error and err.batch_id is not None
-
-
 def test_foreach_batch_cms_merges_exactly(spark, tmpdir):
     """The cross-batch CMS sketch must be bit-identical to one built
     over the concatenated stream (cell-wise merge is exact), and point
@@ -1141,21 +1025,6 @@ def test_foreach_batch_upsert_aborts_on_unreadable_target(spark, tmpdir):
         sink(b, 0)      # present-but-unreadable: abort, don't overwrite
     with open(os.path.join(target, "part-00000.parquet"), "rb") as f:
         assert f.read() == b"garbage"
-
-
-def test_dlq_error_log_idempotent_on_replay(spark, tmpdir):
-    from comix_etl_spark.streaming.windowed import foreach_batch_with_dlq
-
-    def poison(batch_df, batch_id):
-        raise RuntimeError("boom")
-
-    dlq = os.path.join(tmpdir, "dlq")
-    sink = foreach_batch_with_dlq(poison, dlq)
-    b = spark.createDataFrame([(1,)], "k int")
-    sink(b, 7)
-    sink(b, 7)    # crash-replay of the same poison batch
-    errs = spark.read.parquet(dlq + "_errors").collect()
-    assert len(errs) == 1 and errs[0].batch_id == 7
 
 
 def test_rest_datasource_rejects_short_pages(spark):

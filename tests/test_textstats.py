@@ -437,32 +437,6 @@ def test_chunk_documents_rejects_zero_stride(spark):
         chunk_documents(df, "doc_id", "text", chunk_size=4, stride=0)
 
 
-def test_substring_dedup_agg_join_mode_matches_window(spark):
-    """The agg_join ownership route (100 TB hot-shingle path) must be
-    output-identical to the default window route — same owners, same
-    removals, same reconstruction."""
-    from comix_etl_spark.operators.textstats import exact_substring_dedup
-
-    boiler = " ".join(f"b{i}" for i in range(12))
-    rows = [
-        (1, boiler + " unique one tail words here now ok"),
-        (2, "prefix words " + boiler),                  # shares the run
-        (3, boiler),                                    # fully duplicated
-        (4, "totally distinct text with enough tokens to pass the bar"),
-        (5, "short"),                                   # < k tokens
-        (6, boiler + " " + boiler),                     # within-doc repeat
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple, exact_substring_dedup(
-        df, "doc_id", "text", k=8, ownership="window").collect()))
-    b = sorted(map(tuple, exact_substring_dedup(
-        df, "doc_id", "text", k=8, ownership="agg_join").collect()))
-    assert a == b
-    import pytest
-    with pytest.raises(ValueError, match="ownership"):
-        exact_substring_dedup(df, "doc_id", "text", ownership="nope")
-
-
 def test_bm25_store_probe_matches_direct(spark, sf_small):
     """The persisted BM25 store (r12): probing the landed postings must
     return EXACTLY bm25_scores' output on the same corpus — same docs,
